@@ -1542,8 +1542,10 @@ class IndexBuilder:
             "stages": stages,
             "metrics": self.metrics,
         }
-        with open(self.path("manifest.json"), "w") as f:
-            json.dump(manifest, f, indent=2)
+        # tmp + rename, like every other commit: a failed write leaves
+        # the previous manifest (or none), never a truncated one
+        from .upsert import _write_manifest
+        _write_manifest(self.out, manifest)
         if self.spelling:
             # after the commit: the fragment table derives from the
             # committed dictionary and publishes via its own atomic

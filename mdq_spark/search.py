@@ -3,21 +3,37 @@
 Physical strategy (SURVEY.md §3.3 lifecycle):
 
 1. walk the plan for needed terms / wildcard patterns;
-2. one *metadata* lookup against ``dict/`` (parquet scan with ``term IN``
-   + ``bucket IN`` pushdown — bucket is the partition dir, so Catalyst
-   prunes partitions) -> termweights computed driver-side;
-3. per-leaf ``postings/`` scans pruned the same way, decoded in an
-   Arrow mapInPandas kernel (delta+varint -> doc_id/wdf/doclen columns);
-4. BM25 sumpart as a *native Spark column expression* (JVM, whole-stage
-   codegen — doclen is denormalized into the posting block so scoring
-   needs no join);
-5. boolean algebra as joins (AND=inner, AND_NOT=left_anti, FILTER=
-   left_semi, AND_MAYBE=left+coalesce, XOR=full_outer, OR=union+groupBy);
+2. one *metadata* lookup against ``dict/``: a driver-side pyarrow read
+   of only the terms' first-byte ``tpfx=`` partitions with ``term IN`` /
+   prefix + committed-gen predicates, ``dict_delta`` folded in the same
+   way -> termweights computed driver-side.  A Spark scan of the
+   dictionary runs only for lookups the probe cannot answer and for
+   the distributed escalation of a hot prefix;
+3. the plan compiles into ONE block-local operator-tree spec
+   (``_tree_block_fn``) over the pruned ``postings/bucket=*/`` rows.
+   When the dictionary proves the posting volume small (Σ df <=
+   ``Searcher.LOCAL_EVAL_ROWS``) the driver reads those fragments with
+   pyarrow and runs the per-block function itself — no Spark job.
+   Above it, the rows take one hash exchange on the doc-range block and
+   the same function runs inside a mapInPandas kernel;
+4. BM25 sumparts are computed inside that function (doclen is
+   denormalized into the posting block so scoring needs no join); lone
+   terms above the volume check score as a *native Spark column
+   expression* over an Arrow decode kernel;
+5. plans the spec cannot express (MatchAll, SYNONYM/ELITE under other
+   operators) fall back to boolean algebra as joins (AND=inner,
+   AND_NOT=left_anti, FILTER=left_semi, AND_MAYBE=left+coalesce,
+   XOR=full_outer, OR=union+groupBy) over the evaluated children;
 6. metadata predicates (tag/date/lang...) restrict doc_ids *before*
-   scoring via a semi-join at every leaf (north-rule pushdown);
-7. top-k = orderBy(score desc, doc_id asc).limit(k) — Spark compiles
-   this to TakeOrderedAndProject (per-partition heaps + driver merge);
-8. winners -> broadcast join back to ``docs/`` for payload (S5).
+   ranking via a semi-join (north-rule pushdown);
+7. top-k: a driver-evaluated plan takes the ``(-score, doc_id)`` top-k
+   in numpy and returns it as an Arrow-backed local DataFrame (a
+   ``LocalRelation``: collecting it runs no job); everything else uses
+   orderBy(score desc, doc_id asc).limit(k), which Spark compiles to
+   TakeOrderedAndProject (per-partition heaps + driver merge);
+8. winners -> collected (k rows) and probed in ``docs/`` with pyarrow
+   (``doc_id IN winners``, committed gens only), returned as a local
+   DataFrame (S5).
 
 Block-max pruning (O3): before decoding, posting *block metadata*
 (first_doc/last_doc/block_max_part — tiny columns, the binary payload is
@@ -30,11 +46,17 @@ changes results — verified by tests running both paths.
 
 from __future__ import annotations
 
+import glob
 import json
 import os
+import urllib.parse
 from typing import Iterator, Optional
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as pads
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (
@@ -63,6 +85,39 @@ _DECODED_SCHEMA = StructType([
 _DECODED_POS_SCHEMA = StructType(
     _DECODED_SCHEMA.fields + [
         StructField("positions", ArrayType(IntegerType()), True)])
+
+_WEIGHTS_SCHEMA = StructType([StructField("doc_id", LongType()),
+                              StructField("weight", DoubleType())])
+_TAGGED_SCHEMA = StructType([StructField("query_id", StringType())]
+                            + _WEIGHTS_SCHEMA.fields)
+_SCORES_SCHEMA = StructType([StructField("doc_id", LongType()),
+                             StructField("score", DoubleType())])
+
+
+def _any_of(conds: list):
+    """OR of Spark columns or pyarrow expressions as a balanced tree.
+    A left-deep chain of a few hundred ORs (one per prefix of a
+    batch_search log) overflows the JVM stack when Catalyst walks it;
+    a balanced tree is log2(n) deep."""
+    while len(conds) > 1:
+        conds = [conds[i] | conds[i + 1] if i + 1 < len(conds)
+                 else conds[i] for i in range(0, len(conds), 2)]
+    return conds[0]
+
+
+def _top_k(w: pd.DataFrame, k: int) -> pd.DataFrame:
+    """The top-k (doc_id, score) rows of kernel output (doc_id, weight)
+    in the order ``orderBy(desc(score), asc(doc_id)).limit(k)``
+    returns.  A partition pass cuts the candidates to those tied with
+    or above the k-th weight before the exact lexsort."""
+    ids = w["doc_id"].to_numpy()
+    weights = w["weight"].to_numpy()
+    if len(ids) > k > 0:
+        kth = -np.partition(-weights, k - 1)[k - 1]
+        keep = weights >= kth
+        ids, weights = ids[keep], weights[keep]
+    top = np.lexsort((ids, -weights))[:max(k, 0)]
+    return pd.DataFrame({"doc_id": ids[top], "score": weights[top]})
 
 
 def _decode_kernel(with_positions: bool):
@@ -237,15 +292,25 @@ def _carry_block_stream(one_block):
 
 def _tree_kernel(spec_items: list, distinct: list, lf: float,
                  pos_terms: Optional[frozenset] = None):
-    """Arrow kernel for the block-local OPERATOR TREE path (VERDICT r03
-    #5, r04 #5): evaluates a compiled operator tree per doc-range
-    block.  A doc lives in exactly one block, so EVERY boolean function
-    of term membership — and every positional predicate, since
-    positions live with the postings — is block-locally decidable and
-    the whole tree runs in the single encoded-row exchange, replacing
-    per-operator DataFrame joins (the reference evaluates these as one
-    PostList merge per query too: Xapian's multimatch over
-    AndNotPostList / NearPostList etc.).
+    """mapInPandas kernel of the block exchange: ``_tree_block_fn`` over
+    a block-sorted partition stream."""
+    return _carry_block_stream(
+        _tree_block_fn(spec_items, distinct, lf, pos_terms))
+
+
+def _tree_block_fn(spec_items: list, distinct: list, lf: float,
+                   pos_terms: Optional[frozenset] = None):
+    """Per-block evaluator of the block-local OPERATOR TREE path
+    (VERDICT r03 #5, r04 #5): ``one_block(rows)`` evaluates a compiled
+    operator tree over one doc-range block's encoded posting rows.  A
+    doc lives in exactly one block, so EVERY boolean function of term
+    membership — and every positional predicate, since positions live
+    with the postings — is block-locally decidable and the whole tree
+    runs per block, replacing per-operator DataFrame joins (the
+    reference evaluates these as one PostList merge per query too:
+    Xapian's multimatch over AndNotPostList / NearPostList etc.).  The
+    same function runs inside the block exchange (``_tree_kernel``) and
+    on the driver (``Searcher._driver_eval``).
 
     ``spec`` grammar (plain picklable tuples):
 
@@ -269,7 +334,7 @@ def _tree_kernel(spec_items: list, distinct: list, lf: float,
     indices by ``_survivor_keys``).
 
     ``spec_items`` is a list of ``(query_id, spec)``: a WHOLE QUERY LOG
-    evaluates in one kernel over one exchange — posting decode, term
+    evaluates in one pass over the postings — posting decode, term
     membership, and BM25 denominators are computed once per block and
     shared by every query's tree (the batch_search replay path).  A
     single ``(None, spec)`` item emits plain (doc_id, weight) rows;
@@ -449,7 +514,7 @@ def _tree_kernel(spec_items: list, distinct: list, lf: float,
         return frames[0] if len(frames) == 1 else \
             pd.concat(frames, ignore_index=True)
 
-    return _carry_block_stream(one_block)
+    return one_block
 
 
 class Searcher:
@@ -521,26 +586,73 @@ class Searcher:
         # can be evaluated under the CURRENT 1/avgdl — stored bounds go
         # stale when an upsert shifts avg_doclen (ADVICE r01)
         self.prune_capable = "block_min_doclen" in self.postings.columns
+        # parquet file lists for the driver-side pyarrow reads, listed
+        # once per Searcher like Spark's file index (rows of gens
+        # committed later are invisible to this Searcher anyway)
+        self._file_lists: dict = {}
         # upsert artifacts (mdq_spark.upsert): tombstoned docs are
-        # filtered after decode; dict deltas keep df/cf exact
-        tomb_path = os.path.join(self.dir, "tombstones")
+        # filtered after decode; dict deltas keep df/cf exact.  Whether
+        # any tombstone is visible is a pyarrow row count (parquet
+        # footers only), not a Spark job.
         self.tombstones = None
-        if os.path.exists(tomb_path):
-            t = vis(spark.read.parquet(tomb_path)) \
+        tomb_files = self._files("tombstones")
+        if tomb_files and pads.dataset(tomb_files, format="parquet") \
+                .count_rows(filter=self._visible()):
+            self.tombstones = vis(spark.read.parquet(
+                os.path.join(self.dir, "tombstones"))) \
                 .select("doc_id").distinct()
-            self.tombstones = t if t.limit(1).count() else None
         delta_path = os.path.join(self.dir, "dict_delta")
         self.dict_delta = (vis(spark.read.parquet(delta_path))
                            if os.path.exists(delta_path) else None)
-        if self.dict_delta is not None:
-            # deltas already baked into a folded dictionary must not be
-            # applied twice (a crash between fold's manifest commit and
-            # its delta-dir cleanup leaves them on disk — ADVICE r02)
-            folded = [int(g) for g in
-                      self.manifest.get("delta_folded_gens", [])]
-            if folded:
-                self.dict_delta = self.dict_delta.filter(
-                    ~F.col("gen").isin(folded))
+        # deltas already baked into a folded dictionary must not be
+        # applied twice (a crash between fold's manifest commit and its
+        # delta-dir cleanup leaves them on disk — ADVICE r02)
+        self._delta_folded = [int(g) for g in
+                              self.manifest.get("delta_folded_gens", [])]
+        if self.dict_delta is not None and self._delta_folded:
+            self.dict_delta = self.dict_delta.filter(
+                ~F.col("gen").isin(self._delta_folded))
+
+    # -- driver-side reads (pyarrow) -----------------------------------------
+
+    def _files(self, rel: str) -> list[str]:
+        """The parquet files directly under ``<index>/<rel>``."""
+        files = self._file_lists.get(rel)
+        if files is None:
+            files = sorted(glob.glob(os.path.join(
+                glob.escape(os.path.join(self.dir, rel)), "*.parquet")))
+            self._file_lists[rel] = files
+        return files
+
+    def _visible(self, expr=None):
+        """``expr`` restricted to committed gens (MVCC, as ``vis``)."""
+        if self.committed is None:
+            return expr
+        g = pc.field("gen").isin(self.committed)
+        return g if expr is None else expr & g
+
+    def _arrow_read(self, files: list[str], columns: list[str], expr,
+                    limit: Optional[int] = None) -> pa.Table:
+        """Pushed-down pyarrow read of the committed rows of ``files``
+        matching ``expr``: parquet row-group statistics prune on the
+        sorted key columns, only ``columns`` are decoded."""
+        dset = pads.dataset(files, format="parquet")
+        expr = self._visible(expr)
+        if limit is not None:
+            return dset.head(limit, columns=columns, filter=expr)
+        return dset.to_table(columns=columns, filter=expr)
+
+    def _local_df(self, pdf: Optional[pd.DataFrame],
+                  schema: StructType) -> DataFrame:
+        """An Arrow-backed local DataFrame (a ``LocalRelation``: Spark
+        collects it without running a job)."""
+        if pdf is None:
+            tbl = pa.table({f.name: pa.array([], pa.null())
+                            for f in schema.fields})
+        else:
+            tbl = pa.Table.from_pandas(pdf[schema.fieldNames()],
+                                       preserve_index=False)
+        return self.spark.createDataFrame(tbl, schema=schema)
 
     # -- dictionary access -------------------------------------------------
 
@@ -563,9 +675,7 @@ class Searcher:
             conds.append(F.col("term").startswith(p))
         if not conds:
             return None
-        cond = conds[0]
-        for c in conds[1:]:
-            cond = cond | c
+        cond = _any_of(conds)
         if "tpfx" in self.dict.columns:
             chars = sorted({t[0] for t in terms if t}
                            | {p[0] for p in patterns if p})
@@ -583,56 +693,50 @@ class Searcher:
         dominated by fixed cost, not work); the pyarrow path is 3-10 ms
         against the same files with the same term/gen predicates and
         row-group pruning off the sorted term column.  Returns a list
-        of plain row dicts, or None when this path cannot serve the
-        lookup faithfully (no hive-partitioned dict on local disk,
-        empty term/pattern strings) — the caller then falls back to the
-        Spark collect, and the hot-prefix DISTRIBUTED escalation is
-        untouched (``margin`` has the same overflow semantics)."""
-        if os.environ.get("MDQ_ARROW_DICT", "1") != "1":
-            return None
+        of plain row dicts, or None when the lookup names an empty
+        term or pattern (no first byte to partition on) or the
+        dictionary is not first-byte partitioned; the caller then
+        collects the Spark scan.  ``margin`` bounds the rows read, with
+        the caller's overflow semantics."""
         if any(not t for t in terms) or any(not p for p in patterns):
             return None
-        dict_dir = os.path.join(
-            self.dir, self.manifest.get("dict_dir", "dict"))
-        try:
-            import glob
-            import urllib.parse
-            import pyarrow.compute as pc
-            import pyarrow.dataset as pads
-            subdirs = [d for d in os.listdir(dict_dir)
-                       if d.startswith("tpfx=")]
-            if not subdirs:
-                return None  # not a v4+ first-byte-partitioned dict
-            want = {t[0] for t in terms} | {p[0] for p in patterns}
-            files = []
-            for d in subdirs:
-                if urllib.parse.unquote(d[5:]) in want:
-                    files.extend(glob.glob(
-                        os.path.join(dict_dir, d, "*.parquet")))
-            if not files:
-                return []
-            conds = []
-            if terms:
-                conds.append(pc.field("term").isin(terms))
-            for p in patterns:
-                conds.append(pc.starts_with(pads.field("term"), p))
-            expr = conds[0]
-            for c in conds[1:]:
-                expr = expr | c
-            if self.committed is not None:
-                expr = expr & pads.field("gen").isin(self.committed)
-            cols = ["term", "bucket", "df", "cf", "wdf_max"]
-            dset = pads.dataset(files, format="parquet")
-            if margin is not None:
-                tbl = dset.head(margin, filter=expr, columns=cols)
-            else:
-                tbl = dset.to_table(filter=expr, columns=cols)
-            return tbl.to_pylist()
-        except Exception:
-            return None  # any surprise -> the Spark path is the oracle
+        dict_rel = self.manifest.get("dict_dir", "dict")
+        parts = [d for d in os.listdir(os.path.join(self.dir, dict_rel))
+                 if d.startswith("tpfx=")]
+        if not parts:
+            return None  # not a v4+ first-byte-partitioned dict
+        want = {t[0] for t in terms} | {p[0] for p in patterns}
+        files = [f for d in parts if urllib.parse.unquote(d[5:]) in want
+                 for f in self._files(os.path.join(dict_rel, d))]
+        if not files:
+            return []
+        conds = []
+        if terms:
+            conds.append(pc.field("term").isin(terms))
+        for p in patterns:
+            conds.append(pc.starts_with(pc.field("term"), p))
+        tbl = self._arrow_read(files, ["term", "bucket", "df", "cf",
+                                       "wdf_max"], _any_of(conds), margin)
+        return tbl.to_pylist()
+
+    def _delta_sums(self, terms: list[str]) -> dict:
+        """{term: (Σ ddf, Σ dcf)} over the committed, unfolded
+        ``dict_delta`` rows of ``terms`` — a pyarrow read and
+        group_by on the driver."""
+        files = self._files("dict_delta")
+        if not files:
+            return {}
+        expr = pc.field("term").isin(terms)
+        if self._delta_folded:
+            expr = expr & ~pc.field("gen").isin(self._delta_folded)
+        g = self._arrow_read(files, ["term", "ddf", "dcf"], expr) \
+            .group_by("term").aggregate([("ddf", "sum"), ("dcf", "sum")])
+        return {t: (int(a), int(c)) for t, a, c in zip(
+            g["term"].to_pylist(), g["ddf_sum"].to_pylist(),
+            g["dcf_sum"].to_pylist())}
 
     def _dict_lookup(self, terms: list[str], patterns: list[str]) -> dict:
-        """One pruned dict scan for all exact terms + prefix patterns.
+        """One pruned dict lookup for all exact terms + prefix patterns.
         Returns {'exact': {term: row}, 'expansions': {pattern: [terms]}}.
 
         The driver never receives more than ``len(terms) +
@@ -640,14 +744,14 @@ class Searcher:
         previous code collected the full expansion and only then
         truncated).  Adaptive two-phase: the common case reads the
         pruned fragment driver-side via pyarrow (``_dict_rows_arrow``;
-        the Spark CollectLimit is the fallback with identical
-        semantics) and, when the margin is NOT hit, the result set is
-        complete and the driver-side aggregation applies.  Only when a
-        genuinely hot prefix overflows the bound does the lookup
-        escalate to a fully distributed pass where gen aggregation,
-        delta folding, and the most-frequent cap all run scan-side."""
-        scan = self._dict_scan(terms, patterns)
-        if scan is None:
+        the Spark CollectLimit serves the lookups it cannot, with
+        identical semantics) and, when the margin is NOT hit, the
+        result set is complete and the driver-side aggregation applies.
+        Only when a genuinely hot prefix overflows the bound does the
+        lookup escalate to a fully distributed pass where gen
+        aggregation, delta folding, and the most-frequent cap all run
+        scan-side."""
+        if not terms and not patterns:
             return {"exact": {}, "expansions": {}, "all": {}}
         cap = self.wildcard_limit
         margin: Optional[int] = None
@@ -663,13 +767,13 @@ class Searcher:
             margin = (len(terms) + cap * len(patterns)) * n_gens + 1
         raw = self._dict_rows_arrow(terms, patterns, margin)
         if raw is None:
-            if margin is not None:
-                raw = scan.limit(margin).collect()
-            else:
-                # exact-only, or explicit unlimited expansion
-                raw = scan.collect()
+            scan = self._dict_scan(terms, patterns)
+            # exact-only, or explicit unlimited expansion, when no margin
+            raw = (scan.limit(margin) if margin is not None
+                   else scan).collect()
         if margin is not None and len(raw) >= margin:
-            return self._dict_lookup_distributed(scan, terms, patterns)
+            return self._dict_lookup_distributed(
+                self._dict_scan(terms, patterns), terms, patterns)
         self._last_dict_rows_collected = len(raw)
         # a term may have several dict rows (one per upsert
         # generation): aggregate, then apply tombstone deltas so
@@ -683,14 +787,9 @@ class Searcher:
             d["cf"] += int(r["cf"])
             d["wdf_max"] = max(d["wdf_max"], int(r["wdf_max"]))
         if self.dict_delta is not None and agg:
-            dcond = F.col("term").isin(list(agg))
-            for r in self.dict_delta.filter(dcond) \
-                    .groupBy("term").agg(F.sum("ddf").alias("ddf"),
-                                         F.sum("dcf").alias("dcf")) \
-                    .collect():
-                if r["term"] in agg:
-                    agg[r["term"]]["df"] += int(r["ddf"])
-                    agg[r["term"]]["cf"] += int(r["dcf"])
+            for t, (ddf, dcf) in self._delta_sums(list(agg)).items():
+                agg[t]["df"] += ddf
+                agg[t]["cf"] += dcf
         agg = {t: d for t, d in agg.items() if d["df"] > 0}
         tset = set(terms)
         exact = {t: d for t, d in agg.items() if t in tset}
@@ -831,12 +930,18 @@ class Searcher:
     # -- node evaluation -----------------------------------------------------
 
     def _empty(self) -> DataFrame:
-        return self.spark.createDataFrame(
-            [], "doc_id bigint, weight double")
+        return self._local_df(None, _WEIGHTS_SCHEMA)
 
     def _eval(self, node: Node, ctx: dict) -> DataFrame:
         if isinstance(node, MatchNothing) or isinstance(node, ValueRange):
             return self._empty()
+        plan = self._driver_plan(node, ctx)
+        if plan is not None:
+            out = self._local_df(self._driver_eval(*plan, ctx),
+                                 _WEIGHTS_SCHEMA)
+            if ctx["allowed"] is not None:
+                out = out.join(ctx["allowed"], "doc_id", "left_semi")
+            return out
         if isinstance(node, MatchAll):
             # the forward store, not docstats: a doc that emitted zero
             # terms (impossible today — U/D field terms are
@@ -1035,7 +1140,8 @@ class Searcher:
         encoded posting rows of every referenced term, shuffle once on
         the doc-range block key, fold the whole operator tree inside
         the Arrow kernel.  Returns None when the tree isn't compilable
-        (caller falls back to per-operator joins)."""
+        (caller falls back to per-operator joins).  Reached only above
+        the volume check: ``_eval`` runs smaller plans on the driver."""
         spec = self._compile_block_spec(node, ctx)
         if spec is None:
             return None
@@ -1057,7 +1163,7 @@ class Searcher:
             # a positional node needs it (and is decoded only at AND-
             # survivor indices inside the kernel)
             cols.append("positions")
-        enc = self._block_grouped(blocks.select(*cols), terms, ctx)
+        enc = self._block_exchange(blocks.select(*cols))
         out = enc.mapInPandas(
             _tree_kernel([(None, spec)], sorted(terms), self.lf,
                          frozenset(pos_terms)),
@@ -1068,26 +1174,90 @@ class Searcher:
             out = out.join(ctx["allowed"], "doc_id", "left_semi")
         return out
 
-    # below this estimated posting volume (Σ df over the scan's terms,
-    # read off the dictionary rows already in hand) the tree kernel's
-    # block exchange is skipped: the whole pruned scan collapses into
-    # ONE task (coalesce + local sort), because shuffling ~a megabyte
-    # across the cluster costs more scheduling than one core's decode.
-    # Volume-driven, so it self-disables at scale: hot terms at 10^9+
-    # docs blow past the bound and keep the parallel exchange.
+    # below this estimated posting volume (Σ df over the plan's terms,
+    # read off the dictionary rows already in hand) a compiled plan is
+    # evaluated on the DRIVER (``_driver_eval``): pyarrow reads the
+    # pruned posting fragments and the tree kernel's per-block function
+    # runs in-process, so the query runs no Spark job at all — per-job
+    # scheduling and Catalyst planning cost far more than one core's
+    # decode of a few megabytes.  Volume-driven, so it self-disables at
+    # scale: hot terms at 10^9+ docs blow past the bound and keep the
+    # parallel block exchange.
     LOCAL_EVAL_ROWS = 2_000_000
 
-    def _block_grouped(self, enc: DataFrame, terms, ctx: dict) -> DataFrame:
-        """Group encoded posting rows by doc-range block for the tree
-        kernel: a hash exchange on ``block`` in general, a single-task
-        local sort when the dictionary proves the volume is tiny
-        (guide §2.4 — remove shuffles outright when they don't pay)."""
+    def _on_driver(self, terms, ctx: dict) -> bool:
+        """The volume check choosing the driver over the block
+        exchange.  A kept-block set too large for the driver
+        (``blocks_df``) keeps the exchange."""
+        if ctx.get("blocks_df") is not None:
+            return False
         known = ctx["dict"]["all"]
         vol = sum(int(known[t]["df"]) for t in terms if t in known)
-        cap = int(os.environ.get("MDQ_LOCAL_EVAL_ROWS",
-                                 str(self.LOCAL_EVAL_ROWS)))
-        if vol <= cap:
-            return enc.coalesce(1).sortWithinPartitions("block")
+        return vol <= self.LOCAL_EVAL_ROWS
+
+    def _driver_plan(self, node: Node, ctx: dict):
+        """``(spec_items, terms, pos_terms)`` for ``_driver_eval`` when
+        ``node`` compiles and passes the volume check, else None."""
+        spec = self._compile_block_spec(node, ctx)
+        if spec is None:
+            return None
+        terms: set = set()
+        pos_terms: set = set()
+        self._spec_terms(spec, terms, pos_terms)
+        if not self._on_driver(terms, ctx):
+            return None
+        return [(None, spec)], terms, pos_terms
+
+    def _driver_eval(self, spec_items: list, terms, pos_terms,
+                     ctx: dict) -> Optional[pd.DataFrame]:
+        """Evaluate compiled specs on the driver with the exchange
+        kernel's per-block function: a pyarrow read of the committed
+        rows of the terms' ``postings/bucket=*/`` fragments (term IN,
+        and ``ctx['blocks']`` when pruning seeded it), grouped by
+        block, then tombstoned docs dropped.  Returns the kernel's rows
+        ((query_id,) doc_id, weight) — identical to the exchange path's
+        — or None when nothing matches."""
+        buckets = sorted({term_bucket(t, self.n_buckets) for t in terms})
+        files = [f for b in buckets
+                 for f in self._files(f"postings/bucket={b}")]
+        if not files:
+            return None
+        expr = pc.field("term").isin(sorted(terms))
+        if ctx.get("blocks") is not None:
+            expr = expr & pc.field("block").isin(
+                [int(b) for b in ctx["blocks"]])
+        cols = ["block", "term", "n", "doc_gaps", "wdfs", "doclens"]
+        if pos_terms:
+            cols.append("positions")
+        tbl = self._arrow_read(files, cols, expr).sort_by("block")
+        if tbl.num_rows == 0:
+            return None
+        one_block = _tree_block_fn(spec_items, sorted(terms), self.lf,
+                                   frozenset(pos_terms))
+        blk = tbl.column("block").to_numpy()
+        cuts = [0, *(np.flatnonzero(np.diff(blk)) + 1), len(blk)]
+        frames = []
+        for a, b in zip(cuts[:-1], cuts[1:]):
+            out = one_block(tbl.slice(a, b - a).to_pylist())
+            if out is not None:
+                frames.append(out)
+        if not frames:
+            return None
+        out = pd.concat(frames, ignore_index=True)
+        if self.tombstones is not None:
+            ids = out["doc_id"].to_numpy()
+            dead = self._arrow_read(
+                self._files("tombstones"), ["doc_id"],
+                pc.field("doc_id").isin(pa.array(np.unique(ids))))
+            if dead.num_rows:
+                out = out[~np.isin(ids, dead["doc_id"].to_numpy())]
+        return out if len(out) else None
+
+    @staticmethod
+    def _block_exchange(enc: DataFrame) -> DataFrame:
+        """Group encoded posting rows by doc-range block for the tree
+        kernel: one hash exchange on ``block``, sorted within each
+        partition so ``_carry_block_stream`` sees whole blocks."""
         return enc.repartition("block").sortWithinPartitions("block")
 
     def _positional(self, node: Positional, ctx: dict) -> DataFrame:
@@ -1133,20 +1303,11 @@ class Searcher:
             if not kids:
                 return self._empty()
             # the kept-children set is decided driver-side; their union
-            # (weights summed — OR semantics) then folds into the SAME
-            # single tree-kernel exchange as any other boolean tree
+            # (weights summed — OR semantics) then evaluates as any
+            # other boolean tree: one tree-kernel pass when it compiles
             # (VERDICT r05 #6: previously each kept child ran its own
             # _eval + union, N exchanges for N distinct-shape children)
-            merged = self._block_eval_tree(Bool("OR", tuple(kids)), ctx)
-            if merged is not None:
-                return merged
-            out = None
-            for c in kids:
-                d = self._eval(c, ctx)
-                out = d if out is None else out.unionByName(d)
-            return out.groupBy("doc_id").agg(
-                F.sum("weight").alias("weight")) if out is not None \
-                else self._empty()
+            return self._eval(Bool("OR", tuple(kids)), ctx)
         if op in ("AND", "OR", "AND_NOT", "AND_MAYBE", "FILTER", "XOR"):
             # block-local operator tree: the WHOLE tree (not just
             # AND/pure-OR) folds inside one encoded-row exchange when
@@ -1455,7 +1616,17 @@ class Searcher:
         docs whose weight >= (pct/100 - DBL_EPSILON) / percent_scale,
         where percent_scale = (subqueries matched by the greatest-weight
         doc / total subqueries) / greatest weight.  Disables pruning —
-        the cutoff floor can sit below the top-k pruning threshold."""
+        the cutoff floor can sit below the top-k pruning threshold.
+
+        A plan ``_compile_block_spec`` compiles whose posting volume is
+        under ``LOCAL_EVAL_ROWS`` is answered entirely on the driver:
+        pyarrow dictionary probe, pyarrow posting read, the tree
+        kernel's per-block function, tombstone drop and a numpy top-k.
+        The result is an Arrow-backed local DataFrame, so collecting it
+        (or ``fetch``-ing it) runs no Spark job.  ``filters`` and
+        ``percent_cutoff`` still rank in Spark, over the driver-
+        evaluated candidates as a local DataFrame; larger plans,
+        MatchAll and ``prune='always'`` keep the distributed path."""
         node = parse_user_query(query, cjk_ngram=self.cjk_ngram)
         terms: set = set()
         patterns: set = set()
@@ -1464,6 +1635,14 @@ class Searcher:
             "dict": self._dict_lookup(sorted(terms), sorted(patterns)),
             "allowed": None,
         }
+        if filters is None and not percent_cutoff and prune != "always":
+            plan = self._driver_plan(node, ctx)
+            if plan is not None:
+                w = self._driver_eval(*plan, ctx)
+                if w is not None:
+                    # weight cutoff (O5) before ranking, as below
+                    w = _top_k(w[w["weight"] >= min_weight], k)
+                return self._local_df(w, _SCORES_SCHEMA)
         if filters is not None:
             ctx["allowed"] = self.docs.filter(filters).select("doc_id")
         weights = None
@@ -1568,7 +1747,9 @@ class Searcher:
         rows already collected) stays under ``batch_rows_cap``; each
         group still shares one exchange, results are identical by
         construction (specs are independent — grouping only changes
-        which exchange carries them)."""
+        which exchange carries them).  A group under ``LOCAL_EVAL_ROWS``
+        runs its shared pass on the driver instead (``_driver_eval``)
+        and joins the ranking as a local DataFrame."""
         from pyspark.sql import Window
         nodes: dict = {}
         terms: set = set()
@@ -1596,17 +1777,22 @@ class Searcher:
                 self._spec_terms(spec, g_terms, g_pos)
             if not g_terms:
                 continue
-            blocks = self._scan_blocks(sorted(g_terms))
-            cols = ["block", "term", "n", "doc_gaps", "wdfs", "doclens"]
-            if g_pos:
-                cols.append("positions")
-            enc = self._block_grouped(blocks.select(*cols), g_terms, ctx)
-            out = enc.mapInPandas(
-                _tree_kernel(group, sorted(g_terms), self.lf,
-                             frozenset(g_pos)),
-                "query_id string, doc_id bigint, weight double")
-            if self.tombstones is not None:
-                out = out.join(self.tombstones, "doc_id", "left_anti")
+            if self._on_driver(g_terms, ctx):
+                out = self._local_df(
+                    self._driver_eval(group, g_terms, g_pos, ctx),
+                    _TAGGED_SCHEMA)
+            else:
+                blocks = self._scan_blocks(sorted(g_terms))
+                cols = ["block", "term", "n", "doc_gaps", "wdfs",
+                        "doclens"]
+                if g_pos:
+                    cols.append("positions")
+                enc = self._block_exchange(blocks.select(*cols))
+                out = enc.mapInPandas(
+                    _tree_kernel(group, sorted(g_terms), self.lf,
+                                 frozenset(g_pos)), _TAGGED_SCHEMA)
+                if self.tombstones is not None:
+                    out = out.join(self.tombstones, "doc_id", "left_anti")
             if allowed is not None:
                 out = out.join(allowed, "doc_id", "left_semi")
             tagged = out if tagged is None else tagged.unionByName(out)
@@ -1736,11 +1922,44 @@ class Searcher:
     def fetch(self, result_df: DataFrame, columns=("doc_id", "fullpath",
                                                    "title"),
               serialization: Optional[str] = None) -> DataFrame:
-        """S5: materialize winners against the forward store — the k-row
-        side is broadcast so the docs scan is a pruned broadcast join.
-        ``serialization`` selects a reference projection (P3) instead of
-        explicit columns."""
+        """S5: materialize winners against the forward store.  The
+        winner rows are collected (k of them; a driver-evaluated result
+        is a local relation, so this runs no job) and ``docs/`` is
+        probed with pyarrow for exactly those doc_ids under the
+        committed gens — row-group statistics on the doc_id-sorted
+        forward store prune the read — instead of a join that scans
+        all of ``docs/``.  Returns a local DataFrame of the winners
+        found in the forward store, in result order; columns of
+        ``result_df`` win over same-named ``docs`` columns.
+        ``serialization`` selects a reference projection (P3) instead
+        of explicit columns."""
         if serialization is not None:
             columns = self.SERIALIZATIONS[serialization]
-        return F.broadcast(result_df).join(self.docs, "doc_id") \
-            .select(*dict.fromkeys(list(columns) + ["score"]))
+        cols = list(dict.fromkeys(list(columns) + ["score"]))
+        res_fields = {f.name: f for f in result_df.schema.fields}
+        doc_fields = {f.name: f for f in self.docs.schema.fields}
+        unknown = [c for c in cols
+                   if c not in res_fields and c not in doc_fields]
+        if unknown:
+            raise ValueError(f"fetch: unknown columns {unknown}")
+        schema = StructType([res_fields[c] if c in res_fields
+                             else doc_fields[c] for c in cols])
+        rows = result_df.collect()
+        if not rows:
+            return self._local_df(None, schema)
+        ids = np.array([r["doc_id"] for r in rows], dtype=np.int64)
+        from_docs = [c for c in cols if c not in res_fields]
+        probe = self._arrow_read(
+            self._files("docs"), ["doc_id"] + from_docs,
+            pc.field("doc_id").isin(pa.array(np.unique(ids))))
+        pid = probe["doc_id"].to_numpy()
+        order = np.argsort(pid)
+        pos = np.searchsorted(pid[order], ids)
+        hit = pos < len(pid)
+        hit[hit] = pid[order[pos[hit]]] == ids[hit]
+        take = pa.array(order[pos[hit]])
+        kept = [r for r, h in zip(rows, hit) if h]
+        tbl = pa.table({c: probe[c].take(take) if c in from_docs
+                        else pa.array([r[c] for r in kept])
+                        for c in cols})
+        return self.spark.createDataFrame(tbl, schema=schema)

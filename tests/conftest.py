@@ -39,3 +39,19 @@ def assert_results_match(expected, actual, tol=1e-9):
         return out
     assert groups(expected) == groups(actual), \
         f"rank order mismatch:\n{expected}\n{actual}"
+
+
+def count_spark_jobs(spark, fn):
+    """``(fn(), number of Spark jobs fn ran)``, counted through a job
+    group and ``sc.statusTracker()`` once the listener bus has
+    delivered every event."""
+    import uuid
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

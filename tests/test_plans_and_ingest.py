@@ -106,6 +106,7 @@ def test_postings_scan_is_partition_pruned(spark):
     if not os.path.exists(os.path.join(idx, "manifest.json")):
         pytest.skip("sf0.001 cache index not built")
     s = Searcher(spark, idx)
+    s.LOCAL_EVAL_ROWS = 0  # the distributed path, which scans in Spark
     df = s.query_df("sort ", k=10, prune="never")
     plan = df._jdf.queryExecution().executedPlan().toString()
     # bucket partition pruning must reach the postings scan (exact
@@ -145,12 +146,33 @@ def test_dict_scan_is_partition_pruned(spark, code_df, tmp_path_factory):
     assert {r["term"] for r in exact.collect()} == {"merge", "sort"}
 
 
-def test_fetch_is_broadcast_join(spark):
-    import os
-    idx = "/root/repo/_idx_cache/sf0.001_xapian"
-    if not os.path.exists(os.path.join(idx, "manifest.json")):
-        pytest.skip("sf0.001 cache index not built")
-    s = Searcher(spark, idx)
-    df = s.fetch(s.query_df("sort ", k=5))
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
+def test_fetch_returns_forward_store_rows(spark, code_df,
+                                         tmp_path_factory):
+    """fetch is the winners joined with the forward store: the rows of
+    every column projection equal a Spark join of the winners with
+    ``docs``, in rank order, and fetching a driver-evaluated result
+    runs no Spark job."""
+    from conftest import count_spark_jobs
+    from mdq_spark.ingest import docs_from_code_table
+    out = str(tmp_path_factory.mktemp("fetch"))
+    build_index(spark, docs_from_code_table(spark, code_df), out,
+                block_span=4, n_buckets=8)
+    s = Searcher(spark, out)
+    local = s.query_df("merge OR sort", k=3)
+    spark_ranked = s.query_df("merge OR sort", k=3,
+                              filters=F.col("fullpath").isNotNull())
+    for res in (local, spark_ranked):
+        joined = res.join(s.docs, "doc_id")
+        for ser in [None, *Searcher.SERIALIZATIONS]:
+            cols = list(dict.fromkeys(
+                (Searcher.SERIALIZATIONS[ser] if ser else
+                 ["doc_id", "fullpath", "title"]) + ["score"]))
+            got, n = count_spark_jobs(
+                spark, lambda: s.fetch(res, serialization=ser).collect())
+            want = joined.select(*cols).orderBy(
+                F.desc("score"), F.asc("doc_id")).collect()
+            assert len(want) == 3
+            assert [r.asDict() for r in got] == \
+                [r.asDict() for r in want], ser
+            if res is local:
+                assert n == 0, ser

@@ -6,7 +6,7 @@ import os
 
 import pytest
 
-from conftest import assert_results_match
+from conftest import assert_results_match, count_spark_jobs
 from mdq_spark.build import DOCS_SCHEMA, build_index
 from mdq_spark.oracle import OracleIndex
 from mdq_spark.search import Searcher
@@ -191,6 +191,65 @@ def test_fetch_winners(searcher):
     assert all(r["fullpath"] for r in rows)
 
 
+# every shape _compile_block_spec compiles: lone term, free text,
+# phrase, field, prefix, and the boolean / positional operators
+DRIVER_SHAPES = ["spark ", "quick brown", '"quick brown" ', "title:hee ",
+                 "qui", "spark AND NOT query", "quick AND MAYBE lazy",
+                 "planner OR fox", "spark XOR query", "quick FILTER lazy",
+                 "spark NEAR shuffles", "x SCALED 2", "zig "]
+
+
+def test_driver_path_runs_no_spark_job(spark, searcher, oracle):
+    """A compiled plan under the volume check is answered on the
+    driver: dictionary probe, posting read, kernel, top-k and fetch run
+    no Spark job, and the answer equals the oracle's."""
+    _, n = count_spark_jobs(spark, lambda: spark.range(3).count())
+    assert n >= 1  # the counter does see jobs
+    for q in DRIVER_SHAPES:
+        rows, n = count_spark_jobs(
+            spark, lambda: searcher.fetch(searcher.query_df(q, k=5))
+            .collect())
+        assert n == 0, q
+        assert all(r["fullpath"] for r in rows), q
+        assert_results_match(oracle.search(q, k=5),
+                             [(r["doc_id"], r["score"]) for r in rows])
+
+
+def test_top_k_matches_sorted_order():
+    """The driver's numpy top-k equals sorting by (-weight, doc_id),
+    ties at the k-th weight included."""
+    import numpy as np
+    import pandas as pd
+    from mdq_spark.search import _top_k
+    rng = np.random.default_rng(7)
+    for _ in range(200):
+        n, k = int(rng.integers(0, 40)), int(rng.integers(0, 12))
+        ids = rng.permutation(1000)[:n].astype("int64")
+        w = rng.integers(0, 5, n) / 3.0  # many exact ties
+        want = sorted(zip(ids.tolist(), w.tolist()),
+                      key=lambda t: (-t[1], t[0]))[:k]
+        got = _top_k(pd.DataFrame({"doc_id": ids, "weight": w}), k)
+        assert list(zip(got["doc_id"].tolist(),
+                        got["score"].tolist())) == want
+
+
+def test_dict_scan_many_prefixes(searcher):
+    """Hundreds of prefixes (a batch_search log's worth) build a
+    balanced OR: the Spark dictionary scan and the distributed
+    escalation both complete and agree with the pyarrow probe.  A
+    left-deep OR of 1,000 overflows the driver JVM's default stack."""
+    prefixes = ["qu", "sp", "pl"] + [f"zz{i:03d}" for i in range(997)]
+    arrow = searcher._dict_rows_arrow([], prefixes, None)
+    scan = searcher._dict_scan([], prefixes)
+    assert scan.count() == len(arrow)
+    probe = searcher._dict_lookup([], prefixes)
+    dist = searcher._dict_lookup_distributed(scan, [], prefixes)
+    assert dist["expansions"] == probe["expansions"]
+    assert probe["expansions"]["qu"]  # the real prefixes do expand
+    assert {t: (d["df"], d["cf"]) for t, d in dist["all"].items()} == \
+        {t: (d["df"], d["cf"]) for t, d in probe["all"].items()}
+
+
 def test_resume_skips_completed_stages(spark, index):
     out, _ = index
     # re-running build with the same dir must be a fast no-op resume
@@ -327,39 +386,56 @@ def test_wildcard_collect_bounded(spark, index, searcher):
         full["expansions"]["q"]
 
 
+# covers Term children, (WILDCARD x OR Zstem) children (the parsed
+# free-text shape), multi-term PHRASE, flat OR unions, and — via the
+# boolean tree kernel (VERDICT r03 #5) — AND_NOT / AND_MAYBE / FILTER /
+# XOR trees, which previously ran as DataFrame joins
+BLOCK_MERGE_QUERIES = [
+    "spark AND query", "spark AND query ", '"quick brown" ',
+    '"hee hee hee" ', "spark OR quick", "planner OR fox",
+    "spark quick planner",
+    "spark AND NOT query", "quick AND MAYBE lazy",
+    "quick FILTER lazy", "spark XOR query",
+    "spark AND NOT query ", "qui* AND NOT planner",
+    # positional leaves inside boolean trees (VERDICT r04 #5)
+    '"quick brown" AND NOT foxes', 'spark XOR "quick brown" ',
+    '"quick brown" AND MAYBE lazy', "spark NEAR shuffles"]
+
+
 def test_block_merge_single_exchange(searcher, monkeypatch):
     """AND and positional plans use the block-local merge: AT MOST one
     Exchange of ENCODED rows on the block key, no shuffle join of
     decoded streams (VERDICT r01 #8), no per-row Python (VERDICT r01
-    #2).  Round 6: when the dictionary proves the scan volume is tiny,
-    even that exchange is elided (single-task local sort) — both paths
-    are pinned here."""
-    # covers Term children, (WILDCARD x OR Zstem) children (the parsed
-    # free-text shape), multi-term PHRASE, flat OR unions, and — via
-    # the boolean tree kernel (VERDICT r03 #5) — AND_NOT / AND_MAYBE /
-    # FILTER / XOR trees, which previously ran as DataFrame joins
-    queries = ["spark AND query", "spark AND query ", '"quick brown" ',
-               '"hee hee hee" ', "spark OR quick", "planner OR fox",
-               "spark quick planner",
-               "spark AND NOT query", "quick AND MAYBE lazy",
-               "quick FILTER lazy", "spark XOR query",
-               "spark AND NOT query ", "qui* AND NOT planner",
-               # positional leaves inside boolean trees (VERDICT r04 #5)
-               '"quick brown" AND NOT foxes', 'spark XOR "quick brown" ',
-               '"quick brown" AND MAYBE lazy', "spark NEAR shuffles"]
-    for q in queries:
+    #2).  When the dictionary proves the scan volume is tiny the plan
+    is evaluated on the driver and the result is a local relation —
+    both paths are pinned here."""
+    for q in BLOCK_MERGE_QUERIES:
+        df = searcher.query_df(q, k=3, prune="never")
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        # tiny fixture -> evaluated on the driver, no Spark operators
+        assert plan.startswith("LocalTableScan"), (q, plan)
+    # force the at-scale path: plan shape (no joins; one exchange)
+    monkeypatch.setattr(Searcher, "LOCAL_EVAL_ROWS", 0)
+    for i, q in enumerate(BLOCK_MERGE_QUERIES):
         df = searcher.query_df(q, k=3, prune="never")
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "SortMergeJoin" not in plan, q
         assert "ShuffledHashJoin" not in plan, q
-        # tiny fixture -> the volume-driven path removes the exchange
-        assert plan.count("Exchange") == 0, (q, plan)
-    # force the at-scale path: results and plan shape (one exchange)
-    monkeypatch.setenv("MDQ_LOCAL_EVAL_ROWS", "0")
-    for q in queries[:4]:
-        df = searcher.query_df(q, k=3, prune="never")
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert plan.count("Exchange") == 1, (q, plan)
+        if i < 4:
+            assert plan.count("Exchange") == 1, (q, plan)
+
+
+def test_driver_path_equals_exchange_path(searcher, monkeypatch):
+    """The driver evaluation and the block exchange run the same
+    per-block function: identical (doc_id, score) lists, exact."""
+    def run():
+        return {q: [(r["doc_id"], r["score"]) for r in
+                    searcher.query_df(q, k=10, prune="never").collect()]
+                for q in BLOCK_MERGE_QUERIES}
+    local = run()
+    monkeypatch.setattr(Searcher, "LOCAL_EVAL_ROWS", 0)
+    assert run() == local
+    assert any(local.values())
 
 
 @pytest.mark.parametrize("pct", [20, 50, 80])
@@ -503,9 +579,11 @@ def test_batch_search_matches_individual(searcher, oracle):
         assert_results_match(expected, [(d, s) for _, d, s in got])
 
 
-def test_batch_search_single_shared_exchange(searcher):
+def test_batch_search_single_shared_exchange(searcher, monkeypatch):
     """The whole compilable log runs as ONE tree-kernel exchange — not
-    one exchange per query (r5 replay path)."""
+    one exchange per query (r5 replay path).  The fixture's log is under
+    the volume check, so the exchange path is forced."""
+    monkeypatch.setattr(searcher, "LOCAL_EVAL_ROWS", 0)
     queries = {f"q{i}": q for i, q in enumerate(
         ["spark ", "quick brown", "spark AND NOT query",
          '"quick brown" ', "planner OR fox", "qui"])}
@@ -553,6 +631,7 @@ def test_batch_search_volume_cap_grouping(spark, index, oracle):
     queries = {"a": "spark ", "b": "quick brown", "c": "spark query",
                "d": "spark AND NOT query", "e": '"hee hee hee" '}
     s1 = Searcher(spark, index[0], batch_rows_cap=1)  # one query/group
+    s1.LOCAL_EVAL_ROWS = 0  # groups take the exchange, s0's the driver
     # grouping is observable: >1 kernel pass in the plan
     df = s1.batch_search(queries, k=5)
     plan = df._jdf.queryExecution().executedPlan().toString()

@@ -4,7 +4,7 @@ equal a from-scratch oracle build of the final corpus."""
 
 import pytest
 
-from conftest import assert_results_match
+from conftest import assert_results_match, count_spark_jobs
 from mdq_spark.build import DOCS_SCHEMA, build_index
 from mdq_spark.oracle import OracleIndex
 from mdq_spark.search import Searcher
@@ -89,6 +89,22 @@ def test_replaced_doc_not_returned(spark, upserted):
     hits = {d for d, _ in s.search("delta ")}
     assert 2 not in hits and 5 not in hits
     assert 3 not in hits  # old c.md replaced too
+
+
+def test_driver_path_over_tombstones_runs_no_spark_job(
+        spark, upserted, oracle_final):
+    """Over tombstones and dict deltas, a compiled plan under the
+    volume check still runs no Spark job from dictionary probe to
+    fetch, and answers like a rebuild of the live corpus."""
+    s = Searcher(spark, upserted[0])
+    assert s.tombstones is not None and s.dict_delta is not None
+    compiled = [q for q in QUERIES if not q.startswith("NOT ")]  # MatchAll
+    for q in compiled + ['"beta zeta" ', "alpha AND MAYBE zeta"]:
+        rows, n = count_spark_jobs(
+            spark, lambda: s.fetch(s.query_df(q, k=10)).collect())
+        assert n == 0, q
+        assert_results_match(oracle_final.search(q, k=10),
+                             [(r["doc_id"], r["score"]) for r in rows])
 
 
 def test_second_upsert(spark, upserted, oracle_final):
@@ -367,3 +383,29 @@ def test_eset_parity_after_upsert(spark, tmp_path_factory):
     fm = [tuple(r) for r in
           s_fr.get_matching_terms("zeta alpha", 7).collect()]
     assert gm == fm and gm
+
+
+def test_build_manifest_write_is_atomic(spark, tmp_path_factory,
+                                        monkeypatch):
+    """The fresh build commits its manifest by tmp + rename: a write
+    that fails half way through a forced rebuild leaves the previous
+    manifest intact, never a truncated one."""
+    import json
+    import os
+    out = str(tmp_path_factory.mktemp("atomic"))
+    df = spark.createDataFrame(V1, schema=DOCS_SCHEMA)
+    build_index(spark, df, out, block_span=4, n_buckets=8)
+    path = os.path.join(out, "manifest.json")
+    with open(path) as f:
+        before = json.load(f)
+
+    def torn_dump(obj, fp, **kw):
+        fp.write('{"format_version": ')
+        raise OSError("disk full")
+
+    monkeypatch.setattr(json, "dump", torn_dump)
+    with pytest.raises(OSError, match="disk full"):
+        build_index(spark, df, out, block_span=4, n_buckets=8, force=True)
+    monkeypatch.undo()
+    with open(path) as f:
+        assert json.load(f) == before
