@@ -1,19 +1,33 @@
-"""Distributed inverted-index build (SURVEY.md §2.5 A1-A3, §3.1).
+"""Inverted-index build (SURVEY.md §2.5 A1-A3, §3.1).
 
-Spark-first pipeline, every stage a checkpointed parquet write so the
-build is resumable from per-partition checkpoints (north rule).  Since
-round 6 the tokenize pass IS phase 1 of the inversion (VERDICT r05 #1)
-and everything downstream derives from its encoded output concurrently:
+Every stage is a checkpointed parquet write, so the build resumes from
+the last completed stage (north rule).  Since round 6 the tokenize pass
+IS phase 1 of the inversion (VERDICT r05 #1) and everything downstream
+derives from its encoded output:
 
-  docs ──mapInPandas(tokenize+encode)──▶ partials (the checkpoint)
-       ├─ shuffle(term, block) + concat-merge ▶ postings
+  docs ──tokenize+encode──▶ partials (the checkpoint)
+       ├─ group(term, block) + concat-merge ▶ postings
        ├─ decode (vectorized)               ▶ terms (forward termlist)
        ├─ decode (3 narrow cols)            ▶ docstats / globalstats
-       └─ groupBy(term) over run metadata   ▶ dict (df, cf, wdf_max)
+       └─ group(term) over run metadata     ▶ dict (df, cf, wdf_max)
 
-The four consumers are independent (the dead stored block-max bound was
-the only avg_doclen dependency) and run from a small thread pool so the
-tiny stages back-fill the postings stage's straggler tail (guide §2.6).
+One stage graph, two executors, both running the same kernels
+(``_tokenize_encode_batches``, ``_termlist_kernel``,
+``_docstats_kernel``, ``_merge_partial_runs``) and writing the same
+layout; ``IndexBuilder.build`` picks one from the input's Catalyst size
+estimate (``IndexBuilder.DRIVER_BUILD_BYTES``):
+
+  spark   every arrow is a Spark job (mapInPandas / mapInArrow, a
+          shuffle for each group, Spark's parquet writers); the four
+          consumers run concurrently from a small thread pool so the
+          tiny stages back-fill the postings stage's straggler tail
+          (guide §2.6).
+  driver  one ``toArrow`` job collects the input; each kernel then runs
+          in-process over pyarrow batches, pyarrow sorts and
+          ``group_by``s replace the shuffles, and pyarrow writes the
+          hive directories Spark would.  A small build is otherwise all
+          per-job scheduling.
+
 Nothing tokenizes twice and nothing re-reads a row-per-(doc, term)
 staging table — the 68%-of-stage staging re-scan measured at amp1000 in
 round 5 is structurally gone.
@@ -35,8 +49,8 @@ Index layout under ``<out_dir>/``:
                    scoring join-free), positions (block-max score bounds
                    are derived at query time from block_max_wdf +
                    block_min_doclen under the current 1/avgdl)
-* ``manifest.json`` build params, stage lineage, metrics (docs/sec,
-                   postings/sec, skew factor)
+* ``manifest.json`` build params, the executor, stage lineage, metrics
+                   (docs/sec, postings/sec, skew factor)
 
 Skew strategy: blocks are keyed by *doc-id range* (``doc_id //
 block_span``), not by count.  A hot term (df in the billions) therefore
@@ -59,13 +73,23 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
+import threading
 import time
+import uuid
 import zlib
 from typing import Iterable, Iterator, Optional
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as pads
+import pyarrow.parquet as pq
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     ArrayType, BinaryType, DoubleType, IntegerType, LongType, StringType,
     StructField, StructType,
@@ -263,6 +287,10 @@ PARTIALS_SCHEMA = StructType(
     + [StructField("sum_wdf", LongType(), False)])
 
 _POSTINGS_COLS = [f.name for f in POSTINGS_SCHEMA.fields]
+# the forward-store columns the tokenizer reads: sha256/weight/writes/
+# views never reach the tokenize stage (guide §4)
+_TOKENIZE_COLS = ["doc_id", "authors", "date", "fullpath", "title",
+                  "subtitle", "tags", "body"]
 
 
 def _tokenize_encode_batches(n_buckets: int, block_span: int,
@@ -1055,26 +1083,27 @@ def _stage_done(path: str) -> bool:
     return os.path.exists(os.path.join(path, "_SUCCESS"))
 
 
-def _stage_current(spark: SparkSession, path: str,
-                   binary_positions: bool = False,
+def _stage_current(path: str, binary_positions: bool = False,
                    required_cols: tuple = ()) -> bool:
     """A staged output is resumable only if it was written by the
     current format: every v3 artifact carries a ``gen`` column, v2+
     staging carries positions as varint bytes, and v5 partials carry
     ``sum_wdf``.  Resuming an older stage with current code would crash
     or silently corrupt (ADVICE r01), so a stale stage is rebuilt
-    instead."""
+    instead.  The schema comes from a parquet footer (pyarrow), so the
+    check runs no Spark job; a missing or unreadable stage is stale."""
     try:
-        schema = spark.read.parquet(path).schema
-    except Exception:
+        schema = pads.dataset(path, format="parquet").schema
+    except (OSError, pa.ArrowInvalid):
         return False
-    if "gen" not in schema.fieldNames():
+    names = schema.names
+    if "gen" not in names:
         return False
     for c in required_cols:
-        if c not in schema.fieldNames():
+        if c not in names:
             return False
-    if binary_positions and not isinstance(
-            schema["positions"].dataType, BinaryType):
+    if binary_positions and not pa.types.is_binary(
+            schema.field("positions").type):
         return False
     return True
 
@@ -1090,8 +1119,149 @@ def _dir_bytes(path: str) -> int:
     return total
 
 
+# -- driver executor: parquet layout helpers ---------------------------------
+
+# The driver executor's parquet files: Spark's codec and level (zstd 3),
+# no Arrow schema blob in the footer (Spark writes none, and a reader
+# must see the same types whichever executor wrote a file), and min/max
+# statistics only on the sort/key columns readers prune on.  With
+# pyarrow's defaults the index came out 8% larger than Spark's.
+_PARQUET_OPTS = {"compression": "zstd", "compression_level": 3,
+                 "store_schema": False}
+# row groups of about this many in-memory bytes, so pushed-down reads
+# (fetch's doc_id probe, the posting and dictionary term probes) skip
+# row groups by their key statistics
+_ROW_GROUP_BYTES = 1 << 20
+# Arrow batch size fed to the stage kernels, as Spark's
+# ``spark.sql.execution.arrow.maxRecordsPerBatch`` does
+_DRIVER_BATCH_ROWS = 16384
+
+# The ASCII characters Spark's ``ExternalCatalogUtils.escapePathName``
+# writes as ``%XX`` in a hive partition directory name.  Everything
+# else, non-ASCII included, stays raw.
+_HIVE_ESCAPED = frozenset(
+    [chr(c) for c in range(0x01, 0x20)] + list("\"#%'*/:=?[\\]^{")
+    + ["\x7f"])
+
+
+def _hive_dir(col: str, value) -> str:
+    """``col=value`` as Spark's ``partitionBy`` names the directory."""
+    if value is None or value == "":
+        return f"{col}=__HIVE_DEFAULT_PARTITION__"
+    return col + "=" + "".join(
+        f"%{ord(c):02X}" if c in _HIVE_ESCAPED else c for c in str(value))
+
+
+def _hive_parts(tbl: pa.Table, col: str, keys: list) -> dict:
+    """``tbl`` split on ``keys`` (one partition value per row, equal
+    values adjacent) into ``{hive dir: rows}``; ``col`` itself is left
+    out of the rows, as Spark leaves it out of the files."""
+    body = tbl.drop_columns([col]) if col in tbl.column_names else tbl
+    cuts = [0] + [i for i in range(1, len(keys))
+                  if keys[i] != keys[i - 1]] + [len(keys)]
+    return {_hive_dir(col, keys[a]): body.slice(a, b - a)
+            for a, b in zip(cuts, cuts[1:]) if b > a}
+
+
+def _write_stage(path: str, parts: dict, stats: list) -> None:
+    """Replace ``path`` with one parquet file per ``parts`` entry (key:
+    a hive sub-directory, or "" for ``path`` itself) and mark the stage
+    complete with ``_SUCCESS`` last — the layout and the completion rule
+    of Spark's ``write.mode("overwrite").partitionBy(...).parquet``."""
+    if os.path.exists(path):
+        shutil.rmtree(path)
+    os.makedirs(path)
+    for sub, tbl in parts.items():
+        d = os.path.join(path, sub)
+        os.makedirs(d, exist_ok=True)
+        rows = max(1, tbl.num_rows * _ROW_GROUP_BYTES // max(tbl.nbytes, 1))
+        pq.write_table(
+            tbl, os.path.join(d, f"part-00000-{uuid.uuid4()}.c000.parquet"),
+            row_group_size=rows,
+            write_statistics=[c for c in stats if c in tbl.column_names],
+            **_PARQUET_OPTS)
+    open(os.path.join(path, "_SUCCESS"), "w").close()
+
+
+def _with_gen(tbl: pa.Table, gen: int = 0) -> pa.Table:
+    return tbl.append_column(
+        "gen", pa.array(np.full(tbl.num_rows, gen, dtype=np.int32)))
+
+
+def _table(batches: list, schema: StructType) -> pa.Table:
+    """A kernel's output batches as one table; typed from ``schema``
+    when the kernel yielded nothing."""
+    if batches:
+        return pa.Table.from_batches(batches)
+    return to_arrow_schema(schema).empty_table()
+
+
+def _read_table(path: str, columns: Optional[list] = None,
+                gen: Optional[int] = None) -> pa.Table:
+    expr = pc.field("gen") == gen if gen is not None else None
+    return pads.dataset(path, format="parquet").to_table(
+        columns=columns, filter=expr)
+
+
+def _gstats_of(docstats: pa.Table) -> dict:
+    """The collection statistics the docstats stage's Observation
+    records, from a (doc_id, doclen) table."""
+    dl = docstats.column("doclen")
+    n = docstats.num_rows
+    g = {"n_docs": n,
+         "total_doclen": pc.sum(dl).as_py(),
+         "doclen_lb": pc.min(dl).as_py(),
+         "doclen_ub": pc.max(dl).as_py(),
+         "max_doc_id": pc.max(docstats.column("doc_id")).as_py()}
+    g["avg_doclen"] = g["total_doclen"] / n if n else 0.0
+    return g
+
+
+def _dict_stats_of(d: pa.Table) -> dict:
+    """The dictionary stage's Observation aggregates, from its rows."""
+    df = d.column("df")
+    return {"n_postings": pc.sum(df).as_py(), "max_df": pc.max(df).as_py(),
+            "avg_df": pc.mean(df).as_py(), "n_terms": d.num_rows}
+
+
+def _write_globalstats(path: str, gstats: dict) -> None:
+    """The 1-row ``globalstats/`` artifact, written driver-side with
+    pyarrow by both executors — a Spark job for a single row costs
+    ~1.5 s of pure scheduling at any scale (types pinned to match
+    upsert's gen-tagged appends)."""
+    tbl = pa.table({
+        "n_docs": pa.array([gstats.get("n_docs")], pa.int64()),
+        "total_doclen": pa.array([gstats.get("total_doclen")], pa.int64()),
+        "doclen_lb": pa.array([gstats.get("doclen_lb")], pa.int32()),
+        "doclen_ub": pa.array([gstats.get("doclen_ub")], pa.int32()),
+        "max_doc_id": pa.array([gstats.get("max_doc_id")], pa.int64()),
+        "avg_doclen": pa.array([gstats.get("avg_doclen")], pa.float64()),
+        "gen": pa.array([0], pa.int32()),
+    })
+    if os.path.exists(path):
+        shutil.rmtree(path)
+    os.makedirs(path)
+    pq.write_table(tbl, os.path.join(path, "part-00000.parquet"))
+    open(os.path.join(path, "_SUCCESS"), "w").close()
+
+
+# session confs ``_read_staged`` sets while a Spark-executor build runs;
+# ``build`` restores them before it returns or raises
+_SPLIT_CONFS = ("spark.sql.files.maxPartitionBytes",
+                "spark.sql.files.openCostInBytes")
+
+
 class IndexBuilder:
     """Builds (or resumes) an index at ``out_dir`` from a docs DataFrame."""
+
+    # Inputs whose Catalyst size estimate is under this many bytes are
+    # built by the driver executor: the stage kernels run in-process on
+    # pyarrow after one ``toArrow`` job.  The driver tokenizes on one
+    # core, so above about this size a multi-core Spark build wins on
+    # wall time.  An input Catalyst cannot size (an RDD-backed
+    # DataFrame reports ``spark.sql.defaultSizeInBytes``) takes the
+    # Spark stages.
+    DRIVER_BUILD_BYTES = 16 << 20
 
     def __init__(self, spark: SparkSession, out_dir: str,
                  block_span: int = DEFAULT_BLOCK_SPAN,
@@ -1122,10 +1292,18 @@ class IndexBuilder:
     def path(self, name: str) -> str:
         return f"{self.out}/{name}"
 
+    @staticmethod
+    def _size_estimate(docs_df: DataFrame) -> int:
+        """Catalyst's size estimate of ``docs_df`` in bytes, read off
+        the optimized plan's statistics: no Spark job runs."""
+        return int(docs_df._jdf.queryExecution().optimizedPlan()
+                   .stats().sizeInBytes())
+
     def _range_stats(self, docs_df: DataFrame) -> Optional[list]:
         """One cheap column-pruned pass over doc_id: per-partition
         (lo, hi, n) spans of the incoming partitions.  Returns None when
-        the probe itself fails (non-file sources that cannot run it)."""
+        Spark refuses to plan the probe (a non-file source such as a
+        streaming DataFrame); a failure while it runs propagates."""
         try:
             stats = (docs_df
                      .select(F.spark_partition_id().alias("_pid"),
@@ -1135,7 +1313,7 @@ class IndexBuilder:
                           F.max("doc_id").alias("hi"),
                           F.count("doc_id").alias("n"))
                      .collect())
-        except Exception:
+        except AnalysisException:
             return None
         return [(int(r["lo"]), int(r["hi"]), int(r["n"]))
                 for r in stats if int(r["n"])]
@@ -1159,7 +1337,8 @@ class IndexBuilder:
         coalesce into 1-2 file splits (maxPartitionBytes 128MB +
         openCost), serializing every downstream map side on a couple of
         cores; at real scale the computed target saturates back to
-        128MB so task counts stay sane."""
+        128MB so task counts stay sane.  The two confs are session-wide:
+        ``build`` restores them when it ends."""
         par = max(self.spark.sparkContext.defaultParallelism, 1)
         total = _dir_bytes(path)
         tgt = max(1 << 20, min(128 << 20, total // (par * 2) or 1))
@@ -1169,6 +1348,13 @@ class IndexBuilder:
         return self.spark.read.parquet(path)
 
     def build(self, docs_df: DataFrame, force: bool = False) -> dict:
+        missing = [f.name for f in DOCS_SCHEMA.fields
+                   if f.name not in docs_df.columns]
+        if missing:
+            raise ValueError(
+                f"docs DataFrame lacks the DOCS_SCHEMA column(s) "
+                f"{missing}; an index built without them would silently "
+                f"index those fields as empty")
         t_start = time.time()
         stages = []
 
@@ -1189,6 +1375,209 @@ class IndexBuilder:
                     [int(g) for g in old.get("committed_gens", [0])] != [0]:
                 force = True
 
+        # executor choice: the same stage graph runs in-process on the
+        # driver when the input is small, else as Spark jobs
+        est = self._size_estimate(docs_df)
+        executor = "driver" if est < self.DRIVER_BUILD_BYTES else "spark"
+        lock = threading.Lock()
+
+        def record(name: str, sec: float) -> None:
+            with lock:
+                stages.append({"stage": name, "sec": sec,
+                               "executor": executor,
+                               "size_estimate_bytes": est})
+
+        saved = {k: self.spark.conf.get(k, None) for k in _SPLIT_CONFS}
+        try:
+            run = self._driver_stages if executor == "driver" \
+                else self._spark_stages
+            gstats, agg = run(docs_df, force, record)
+        finally:
+            for k, v in saved.items():
+                if v is None:
+                    self.spark.conf.unset(k)
+                else:
+                    self.spark.conf.set(k, v)
+
+        # metrics + manifest (lineage per north rule)
+        wall = time.time() - t_start
+        n_postings = int(agg["n_postings"] or 0)
+        skew = float(agg["max_df"] / agg["avg_df"]) if agg["avg_df"] else 0.0
+        n_docs = int(gstats["n_docs"] or 0)
+        self.metrics = {
+            "n_docs": n_docs,
+            "n_terms": int(agg["n_terms"]),
+            "n_postings": n_postings,
+            "wall_sec": wall,
+            "docs_per_sec": n_docs / wall if wall else 0.0,
+            "postings_per_sec": n_postings / wall if wall else 0.0,
+            "term_df_skew_factor": skew,
+            "avg_doclen": float(gstats["avg_doclen"] or 0.0),
+        }
+        manifest = {
+            "format_version": FORMAT_VERSION,
+            "mode": self.mode,
+            "cjk_ngram": self.cjk_ngram,
+            "block_span": self.block_span,
+            "n_buckets": self.n_buckets,
+            "globalstats": {k: (float(v) if v is not None else None)
+                            for k, v in gstats.items()},
+            # MVCC commit state: rows are visible iff their gen is listed
+            # here (the manifest write IS the commit — ADVICE r01)
+            "generation": 0,
+            "committed_gens": [0],
+            "next_doc_id": int(gstats["max_doc_id"] or 0) + 1,
+            "executor": executor,
+            "size_estimate_bytes": est,
+            "stages": stages,
+            "metrics": self.metrics,
+        }
+        # tmp + rename, like every other commit: a failed write leaves
+        # the previous manifest (or none), never a truncated one
+        from .upsert import _write_manifest
+        _write_manifest(self.out, manifest)
+        if self.spelling:
+            # after the commit: the fragment table derives from the
+            # committed dictionary and publishes via its own atomic
+            # pointer (spell.build_spelling), so a crash here leaves a
+            # fully queryable index whose first suggest() just takes
+            # the fallback path
+            from .search import Searcher
+            from .spell import build_spelling
+            build_spelling(Searcher(self.spark, self.out))
+        return manifest
+
+    def _driver_stages(self, docs_df: DataFrame, force: bool,
+                       record) -> tuple:
+        """The driver executor: the input arrives in one ``toArrow``
+        job, then every stage runs its Spark counterpart's kernel
+        in-process on pyarrow batches.  pyarrow sorts and ``group_by``s
+        stand in for the exchanges, and ``_write_stage`` writes the
+        layout the Spark writers write.  Each stage resumes and records
+        exactly as under the Spark executor.  Returns ``(gstats,
+        dict_stats)``."""
+        # stage 1: forward store, sorted by doc_id, one file
+        p_docs = self.path("docs")
+        docs = None
+        if force or not _stage_done(p_docs) or not _stage_current(p_docs):
+            force = True
+            t0 = time.time()
+            docs = _with_gen(docs_df.toArrow().sort_by("doc_id"))
+            _write_stage(p_docs, {"": docs}, ["doc_id", "gen"])
+            record("docs", time.time() - t0)
+
+        # stage 2: fused tokenize -> phase-1 encode, ONE kernel call
+        # over the id-sorted docs, so every (term, block) is one run
+        p_part = self.path("partials")
+        if force or not _stage_done(p_part) or \
+                not _stage_current(p_part, required_cols=("sum_wdf",)):
+            force = True
+            t0 = time.time()
+            if docs is None:  # resume: the forward store is written
+                docs = _read_table(p_docs, _TOKENIZE_COLS).sort_by("doc_id")
+            kern = _tokenize_encode_batches(self.n_buckets, self.block_span,
+                                            self.mode, self.cjk_ngram)
+            schema = to_arrow_schema(PARTIALS_SCHEMA)
+            part = pa.Table.from_batches(
+                [pa.RecordBatch.from_pandas(pdf, schema=schema,
+                                            preserve_index=False)
+                 for pdf in kern(
+                     b.to_pandas() for b in docs.select(_TOKENIZE_COLS)
+                     .to_batches(max_chunksize=_DRIVER_BATCH_ROWS))],
+                schema=schema)
+            _write_stage(p_part, {"": _with_gen(part)},
+                         ["term", "block", "gen"])
+            record("partials", time.time() - t0)
+        else:
+            part = _read_table(p_part, gen=0).drop_columns(["gen"])
+        del docs
+
+        def batches(cols: list) -> list:
+            return part.select(cols).to_batches(
+                max_chunksize=_DRIVER_BATCH_ROWS)
+
+        p_terms = self.path("terms")
+        if force or not _stage_done(p_terms) or \
+                not _stage_current(p_terms, binary_positions=True):
+            t0 = time.time()
+            terms = _table(list(_termlist_kernel(self.n_buckets)(
+                batches(["term", "bucket", "block", "n", "doc_gaps",
+                         "wdfs", "doclens", "positions"]))), TERMS_SCHEMA)
+            _write_stage(p_terms, {"": _with_gen(terms)},
+                         ["term", "doc_id", "gen"])
+            record("terms", time.time() - t0)
+
+        p_docstats = self.path("docstats")
+        p_global = self.path("globalstats")
+        need_docstats = force or not _stage_done(p_docstats)
+        if need_docstats:
+            t0 = time.time()
+            pairs = _table(list(_docstats_kernel()(
+                batches(["doc_gaps", "doclens", "n"]))),
+                StructType([StructField("doc_id", LongType()),
+                            StructField("doclen", IntegerType())]))
+            ds = (pairs.group_by("doc_id").aggregate([("doclen", "max")])
+                  .select(["doc_id", "doclen_max"])
+                  .rename_columns(["doc_id", "doclen"])
+                  .sort_by("doc_id"))
+            _write_stage(p_docstats, {"": _with_gen(ds)}, ["doc_id", "gen"])
+            gstats = _gstats_of(ds)
+            record("docstats", time.time() - t0)
+        if need_docstats or not _stage_done(p_global) or \
+                not _stage_current(p_global):
+            t0 = time.time()
+            if not need_docstats:  # resume: docstats exists, re-agg
+                gstats = _gstats_of(_read_table(p_docstats, gen=0))
+            _write_globalstats(p_global, gstats)
+            record("globalstats", time.time() - t0)
+        else:
+            gstats = _read_table(p_global, gen=0).drop_columns(
+                ["gen"]).to_pylist()[0]
+
+        # dictionary: df = Σ run lengths, cf = Σ per-run wdf sums,
+        # wdf_max = max per-run max, one file per first-char directory
+        p_dict = self.path("dict")
+        if force or not _stage_done(p_dict):
+            t0 = time.time()
+            g = part.group_by(["term", "bucket"]).aggregate(
+                [("n", "sum"), ("sum_wdf", "sum"), ("block_max_wdf", "max")])
+            d = _with_gen(pa.table({
+                "term": g["term"], "bucket": g["bucket"],
+                "df": g["n_sum"].cast(pa.int64()),
+                "cf": g["sum_wdf_sum"].cast(pa.int64()),
+                "wdf_max": g["block_max_wdf_max"],
+            }).sort_by("term"))
+            tpfx = [t[:1] for t in d.column("term").to_pylist()]
+            _write_stage(p_dict, _hive_parts(d, "tpfx", tpfx),
+                         ["term", "gen"])
+            dict_stats = _dict_stats_of(d)
+            record("dict", time.time() - t0)
+        else:
+            dict_stats = _dict_stats_of(_read_table(p_dict, ["df"], gen=0))
+
+        # postings: phase 2 of the inversion over the sorted partials —
+        # one row per (term, block) passes through, several concatenate
+        p_post = self.path("postings")
+        if force or not _stage_done(p_post):
+            t0 = time.time()
+            order = [("bucket", "ascending"), ("term", "ascending"),
+                     ("block", "ascending")]
+            src = part.select(_POSTINGS_COLS).sort_by(
+                order + [("first_doc", "ascending")])
+            post = _table(list(_merge_partial_runs()(src.to_batches(
+                max_chunksize=_DRIVER_BATCH_ROWS))), POSTINGS_SCHEMA)
+            post = _with_gen(post.sort_by(order))
+            _write_stage(p_post, _hive_parts(
+                post, "bucket", post.column("bucket").to_pylist()),
+                ["term", "block", "gen"])
+            record("postings", time.time() - t0)
+        return gstats, dict_stats
+
+    def _spark_stages(self, docs_df: DataFrame, force: bool,
+                      record) -> tuple:
+        """The Spark executor: every stage is a Spark job over the
+        partitioned input, stages 3-6 concurrently.  Returns ``(gstats,
+        dict_stats)``."""
         # stage 1: forward store, doc_id-clustered + sorted (the fetch
         # join's row-group pruning and the inversion's doc-range
         # invariant both hang off this).  The range exchange is SKIPPED
@@ -1199,8 +1588,7 @@ class IndexBuilder:
         # one column-pruned pass verifies it, the full-row shuffle only
         # runs when the check fails.
         p_docs = self.path("docs")
-        if force or not _stage_done(p_docs) or \
-                not _stage_current(self.spark, p_docs):
+        if force or not _stage_done(p_docs) or not _stage_current(p_docs):
             force = True  # downstream stages derive from this one
             t0 = time.time()
             # The corpus-wide range exchange is skipped whenever the
@@ -1223,7 +1611,7 @@ class IndexBuilder:
             src = None
             try:
                 in_files = docs_df.inputFiles()
-            except Exception:
+            except AnalysisException:
                 in_files = []
             in_bytes = 0
             for fp in in_files:
@@ -1261,7 +1649,7 @@ class IndexBuilder:
              .write.mode("overwrite")
              .option("parquet.block.size", str(blk))
              .parquet(p_docs))
-            stages.append({"stage": "docs", "sec": time.time() - t0})
+            record("docs", time.time() - t0)
         docs = self._read_staged(p_docs)
 
         # stage 2: FUSED tokenize -> phase-1 encode (VERDICT r05 #1).
@@ -1274,16 +1662,11 @@ class IndexBuilder:
         p_part = self.path("partials")
         part_stats: Optional[dict] = None
         if force or not _stage_done(p_part) or \
-                not _stage_current(self.spark, p_part,
-                                   required_cols=("sum_wdf",)):
+                not _stage_current(p_part, required_cols=("sum_wdf",)):
             force = True
             t0 = time.time()
             pobs = Observation("partstats")
-            # ship only the columns the tokenizer reads (guide §4):
-            # sha256/weight/writes/views never cross the Arrow boundary
-            tok_cols = ["doc_id", "authors", "date", "fullpath",
-                        "title", "subtitle", "tags", "body"]
-            (docs.select(*tok_cols)
+            (docs.select(*_TOKENIZE_COLS)
              .mapInPandas(
                  _tokenize_encode_batches(self.n_buckets, self.block_span,
                                           self.mode, self.cjk_ngram),
@@ -1292,7 +1675,7 @@ class IndexBuilder:
              .observe(pobs, F.sum("n").alias("n_postings"))
              .write.mode("overwrite").parquet(p_part))
             part_stats = dict(pobs.get)
-            stages.append({"stage": "partials", "sec": time.time() - t0})
+            record("partials", time.time() - t0)
         partials = self._read_staged(p_part)
         part0 = partials.filter(F.col("gen") == 0)
 
@@ -1310,20 +1693,14 @@ class IndexBuilder:
         p_dict = self.path("dict")
         p_post = self.path("postings")
         need_terms = force or not _stage_done(p_terms) or \
-            not _stage_current(self.spark, p_terms, binary_positions=True)
+            not _stage_current(p_terms, binary_positions=True)
         need_docstats = force or not _stage_done(p_docstats)
         need_global = need_docstats or not _stage_done(p_global) or \
-            not _stage_current(self.spark, p_global)
+            not _stage_current(p_global)
         need_dict = force or not _stage_done(p_dict)
         need_post = force or not _stage_done(p_post)
 
-        import threading
-        _lock = threading.Lock()
         results: dict = {}
-
-        def record(name: str, sec: float) -> None:
-            with _lock:
-                stages.append({"stage": name, "sec": sec})
 
         def run_termlist() -> None:
             # forward termlist (terms/): the row-per-(doc, term) table
@@ -1385,41 +1762,13 @@ class IndexBuilder:
                     g["avg_doclen"] = (g["total_doclen"] / g["n_docs"]
                                        if g["n_docs"] else 0.0)
                     gstats = g
-                # 1-row artifact: write it driver-side with pyarrow — a
-                # Spark job for a single row costs ~1.5 s of pure
-                # scheduling at any scale (types pinned to match
-                # upsert's gen-tagged appends)
-                import pyarrow as pa
-                import pyarrow.parquet as pq
-                import shutil as _sh
-                tbl = pa.table({
-                    "n_docs": pa.array([gstats.get("n_docs")],
-                                       pa.int64()),
-                    "total_doclen": pa.array(
-                        [gstats.get("total_doclen")], pa.int64()),
-                    "doclen_lb": pa.array([gstats.get("doclen_lb")],
-                                          pa.int32()),
-                    "doclen_ub": pa.array([gstats.get("doclen_ub")],
-                                          pa.int32()),
-                    "max_doc_id": pa.array([gstats.get("max_doc_id")],
-                                           pa.int64()),
-                    "avg_doclen": pa.array([gstats.get("avg_doclen")],
-                                           pa.float64()),
-                    "gen": pa.array([0], pa.int32()),
-                })
-                if os.path.exists(p_global):
-                    _sh.rmtree(p_global)
-                os.makedirs(p_global)
-                pq.write_table(tbl, os.path.join(p_global,
-                                                 "part-00000.parquet"))
-                open(os.path.join(p_global, "_SUCCESS"), "w").close()
+                _write_globalstats(p_global, gstats)
                 record("globalstats", time.time() - t0)
             else:
                 gstats = self.spark.read.parquet(p_global) \
                     .filter(F.col("gen") == 0).drop("gen") \
                     .collect()[0].asDict()
-            with _lock:
-                results["gstats"] = gstats
+            results["gstats"] = gstats
 
         def run_dict() -> None:
             # dictionary from the partials' tiny numeric columns:
@@ -1444,8 +1793,7 @@ class IndexBuilder:
                       F.count("term").alias("n_terms"))
              .write.mode("overwrite")
              .partitionBy("tpfx").parquet(p_dict))
-            with _lock:
-                results["dict_stats"] = dict(dobs.get)
+            results["dict_stats"] = dict(dobs.get)
             record("dict", time.time() - t0)
 
         def run_postings() -> None:
@@ -1497,13 +1845,10 @@ class IndexBuilder:
                 for fut in futures:
                     fut.result()  # re-raise the first stage failure
         self.spark.sparkContext.setJobDescription(None)
-        gstats = results["gstats"]
-        dict_stats: Optional[dict] = results.get("dict_stats")
 
-        # metrics + manifest (lineage per north rule); the dict
-        # aggregates come from the write-time Observation on a fresh
-        # build, or one scan on resume
-        wall = time.time() - t_start
+        # the dict aggregates come from the write-time Observation on a
+        # fresh build, or one scan on resume
+        dict_stats = results.get("dict_stats")
         if dict_stats is None:
             dict_stats = (self.spark.read.parquet(p_dict)
                           .filter(F.col("gen") == 0).agg(
@@ -1512,50 +1857,7 @@ class IndexBuilder:
                               F.avg("df").alias("avg_df"),
                               F.count("term").alias("n_terms"))
                           .collect()[0].asDict())
-        agg = dict_stats
-        n_postings = int(agg["n_postings"] or 0)
-        skew = float(agg["max_df"] / agg["avg_df"]) if agg["avg_df"] else 0.0
-        n_docs = int(gstats["n_docs"] or 0)
-        self.metrics = {
-            "n_docs": n_docs,
-            "n_terms": int(agg["n_terms"]),
-            "n_postings": n_postings,
-            "wall_sec": wall,
-            "docs_per_sec": n_docs / wall if wall else 0.0,
-            "postings_per_sec": n_postings / wall if wall else 0.0,
-            "term_df_skew_factor": skew,
-            "avg_doclen": float(gstats["avg_doclen"] or 0.0),
-        }
-        manifest = {
-            "format_version": FORMAT_VERSION,
-            "mode": self.mode,
-            "cjk_ngram": self.cjk_ngram,
-            "block_span": self.block_span,
-            "n_buckets": self.n_buckets,
-            "globalstats": {k: (float(v) if v is not None else None)
-                            for k, v in gstats.items()},
-            # MVCC commit state: rows are visible iff their gen is listed
-            # here (the manifest write IS the commit — ADVICE r01)
-            "generation": 0,
-            "committed_gens": [0],
-            "next_doc_id": int(gstats["max_doc_id"] or 0) + 1,
-            "stages": stages,
-            "metrics": self.metrics,
-        }
-        # tmp + rename, like every other commit: a failed write leaves
-        # the previous manifest (or none), never a truncated one
-        from .upsert import _write_manifest
-        _write_manifest(self.out, manifest)
-        if self.spelling:
-            # after the commit: the fragment table derives from the
-            # committed dictionary and publishes via its own atomic
-            # pointer (spell.build_spelling), so a crash here leaves a
-            # fully queryable index whose first suggest() just takes
-            # the fallback path
-            from .search import Searcher
-            from .spell import build_spelling
-            build_spelling(Searcher(self.spark, self.out))
-        return manifest
+        return results["gstats"], dict_stats
 
 
 def build_index(spark: SparkSession, docs_df: DataFrame, out_dir: str,

@@ -55,3 +55,15 @@ def count_spark_jobs(spark, fn):
         sc.setLocalProperty("spark.jobGroup.id", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def local_docs_df(spark, rows):
+    """``rows`` as an Arrow-backed local DataFrame (a ``LocalRelation``).
+    Catalyst sizes it, so a small one takes the driver build executor;
+    a DataFrame made from a Python list is RDD-backed, has no size
+    estimate and takes the Spark stages."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from mdq_spark.build import DOCS_SCHEMA
+    return spark.createDataFrame(
+        pa.Table.from_pylist(rows, schema=to_arrow_schema(DOCS_SCHEMA)))

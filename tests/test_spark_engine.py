@@ -744,15 +744,16 @@ def test_fused_kernel_repairs_unsorted_partition(spark):
     assert encode(rev) == encode(fwd)
 
 
-def test_docs_stage_range_shuffle_skip(spark, tmp_path):
+def test_docs_stage_range_shuffle_skip(spark, tmp_path, monkeypatch):
     """_ranges_disjoint: dense_ids/documents-table inputs (disjoint
     per-partition doc-id ranges) skip the forward-store range exchange;
     hash-partitioned input falls back to the shuffle.  Either way the
     written forward store is doc-clustered and the built index is
-    identical."""
+    identical.  The exchange belongs to the Spark build executor."""
     from pyspark.sql import functions as F
     from mdq_spark.build import DOCS_SCHEMA, IndexBuilder
 
+    monkeypatch.setattr(IndexBuilder, "DRIVER_BUILD_BYTES", 0)
     rows = [{**d, "sha256": _sha(d["body"])} for d in DOCS]
     df = spark.createDataFrame(rows, schema=DOCS_SCHEMA)
     b = IndexBuilder(spark, str(tmp_path / "i"))
