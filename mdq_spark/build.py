@@ -28,6 +28,10 @@ estimate (``IndexBuilder.DRIVER_BUILD_BYTES``):
           hive directories Spark would.  A small build is otherwise all
           per-job scheduling.
 
+Which stages a build or resume reruns is decided once, for both
+(``IndexBuilder._stale_stages``), and both hand their statistics to the
+same globalstats write and manifest commit.
+
 Nothing tokenizes twice and nothing re-reads a row-per-(doc, term)
 staging table — the 68%-of-stage staging re-scan measured at amp1000 in
 round 5 is structurally gone.
@@ -1136,31 +1140,23 @@ _ROW_GROUP_BYTES = 1 << 20
 # ``spark.sql.execution.arrow.maxRecordsPerBatch`` does
 _DRIVER_BATCH_ROWS = 16384
 
-# The ASCII characters Spark's ``ExternalCatalogUtils.escapePathName``
-# writes as ``%XX`` in a hive partition directory name.  Everything
-# else, non-ASCII included, stays raw.
-_HIVE_ESCAPED = frozenset(
-    [chr(c) for c in range(0x01, 0x20)] + list("\"#%'*/:=?[\\]^{")
-    + ["\x7f"])
-
-
-def _hive_dir(col: str, value) -> str:
-    """``col=value`` as Spark's ``partitionBy`` names the directory."""
-    if value is None or value == "":
-        return f"{col}=__HIVE_DEFAULT_PARTITION__"
-    return col + "=" + "".join(
-        f"%{ord(c):02X}" if c in _HIVE_ESCAPED else c for c in str(value))
-
-
-def _hive_parts(tbl: pa.Table, col: str, keys: list) -> dict:
+def _hive_parts(spark: SparkSession, tbl: pa.Table, col: str,
+                keys: list) -> dict:
     """``tbl`` split on ``keys`` (one partition value per row, equal
     values adjacent) into ``{hive dir: rows}``; ``col`` itself is left
-    out of the rows, as Spark leaves it out of the files."""
+    out of the rows, as Spark leaves it out of the files.  Each
+    directory is named by Spark's own ``partitionBy`` rule
+    (``ExternalCatalogUtils.getPartitionPathString``, called through
+    py4j once per distinct value; no job runs), so Spark scans,
+    upsert's ``partitionBy`` appends and ``fold_dict_deltas`` see the
+    same partitions whichever executor wrote them."""
+    name = (spark._jvm.org.apache.spark.sql.catalyst.catalog
+            .ExternalCatalogUtils.getPartitionPathString)
     body = tbl.drop_columns([col]) if col in tbl.column_names else tbl
     cuts = [0] + [i for i in range(1, len(keys))
                   if keys[i] != keys[i - 1]] + [len(keys)]
-    return {_hive_dir(col, keys[a]): body.slice(a, b - a)
-            for a, b in zip(cuts, cuts[1:]) if b > a}
+    return {name(col, None if keys[a] is None else str(keys[a])):
+            body.slice(a, b - a) for a, b in zip(cuts, cuts[1:]) if b > a}
 
 
 def _write_stage(path: str, parts: dict, stats: list) -> None:
@@ -1245,6 +1241,20 @@ def _write_globalstats(path: str, gstats: dict) -> None:
     open(os.path.join(path, "_SUCCESS"), "w").close()
 
 
+# The stage graph in build order: stage -> the stage it derives from.
+# Both executors write every stage; ``IndexBuilder._stale_stages``
+# decides, in one place, which ones a build (or resume) reruns.
+_STAGES = {"docs": None, "partials": "docs", "terms": "partials",
+           "docstats": "partials", "globalstats": "docstats",
+           "dict": "partials", "postings": "partials"}
+# the stages that read partials/: a resume that reruns none of them
+# does not read it
+_PARTIALS_CONSUMERS = frozenset(["terms", "docstats", "dict", "postings"])
+# the format checks (``_stage_current``) a stage's output must also
+# pass to be resumed; the stages not listed resume on ``_SUCCESS`` alone
+_STAGE_FORMAT = {"docs": {}, "partials": {"required_cols": ("sum_wdf",)},
+                 "terms": {"binary_positions": True}, "globalstats": {}}
+
 # session confs ``_read_staged`` sets while a Spark-executor build runs;
 # ``build`` restores them before it returns or raises
 _SPLIT_CONFS = ("spark.sql.files.maxPartitionBytes",
@@ -1256,12 +1266,19 @@ class IndexBuilder:
 
     # Inputs whose Catalyst size estimate is under this many bytes are
     # built by the driver executor: the stage kernels run in-process on
-    # pyarrow after one ``toArrow`` job.  The driver tokenizes on one
-    # core, so above about this size a multi-core Spark build wins on
-    # wall time.  An input Catalyst cannot size (an RDD-backed
-    # DataFrame reports ``spark.sql.defaultSizeInBytes``) takes the
-    # Spark stages.
-    DRIVER_BUILD_BYTES = 16 << 20
+    # pyarrow after one ``toArrow`` job.  An input Catalyst cannot size
+    # (an RDD-backed DataFrame reports ``spark.sql.defaultSizeInBytes``)
+    # takes the Spark stages.  Measured by scripts/executor_crossover.py
+    # (the benchmark's code corpus at 1k-32k docs, local[4] on a 4-vCPU
+    # VM): the driver build used 2-6x less CPU at every size, and its
+    # wall time, which grows about 1 s per 1k docs on its one core,
+    # ties the Spark build's at about 8k docs (16k docs: 15.8 s driver,
+    # 12.5 s Spark).  Catalyst sizes 8k docs at about 8 MB as ingest
+    # output but 3.1 MB as a docs/ parquet read (compaction's input),
+    # whose estimate is the compressed file size; the limit is the
+    # lower, so neither input shape takes the driver past the wall
+    # crossover.  The driver's peak memory there is about 0.55 GB.
+    DRIVER_BUILD_BYTES = 3 << 20
 
     def __init__(self, spark: SparkSession, out_dir: str,
                  block_span: int = DEFAULT_BLOCK_SPAN,
@@ -1347,6 +1364,20 @@ class IndexBuilder:
                             str(min(4 << 20, max(1, tgt // 8))))
         return self.spark.read.parquet(path)
 
+    def _stale_stages(self, force: bool) -> set:
+        """The stages this build (re)writes, whichever executor runs
+        them.  A stage reruns when its output is missing, unfinished (no
+        ``_SUCCESS``) or written by an older format (ADVICE r01), and so
+        does every stage derived from it."""
+        run: set = set()
+        for name, src in _STAGES.items():
+            p = self.path(name)
+            fmt = _STAGE_FORMAT.get(name)
+            if force or src in run or not _stage_done(p) or (
+                    fmt is not None and not _stage_current(p, **fmt)):
+                run.add(name)
+        return run
+
     def build(self, docs_df: DataFrame, force: bool = False) -> dict:
         missing = [f.name for f in DOCS_SCHEMA.fields
                    if f.name not in docs_df.columns]
@@ -1387,17 +1418,37 @@ class IndexBuilder:
                                "executor": executor,
                                "size_estimate_bytes": est})
 
+        run = self._stale_stages(force)
         saved = {k: self.spark.conf.get(k, None) for k in _SPLIT_CONFS}
         try:
-            run = self._driver_stages if executor == "driver" \
+            stages_fn = self._driver_stages if executor == "driver" \
                 else self._spark_stages
-            gstats, agg = run(docs_df, force, record)
+            gstats, agg = stages_fn(docs_df, run, record)
         finally:
             for k, v in saved.items():
                 if v is None:
                     self.spark.conf.unset(k)
                 else:
                     self.spark.conf.set(k, v)
+
+        # the 1-row globalstats/ artifact is written driver-side by
+        # both executors; on resume the collection statistics come from
+        # docstats/ (globalstats stale) or from globalstats/ itself,
+        # and the dictionary aggregates from dict/
+        p_global = self.path("globalstats")
+        if "globalstats" in run:
+            t0 = time.time()
+            if gstats is None:
+                gstats = _gstats_of(_read_table(
+                    self.path("docstats"), ["doc_id", "doclen"], gen=0))
+            _write_globalstats(p_global, gstats)
+            record("globalstats", time.time() - t0)
+        else:
+            gstats = _read_table(p_global, gen=0).drop_columns(
+                ["gen"]).to_pylist()[0]
+        if agg is None:
+            agg = _dict_stats_of(_read_table(self.path("dict"), ["df"],
+                                             gen=0))
 
         # metrics + manifest (lineage per north rule)
         wall = time.time() - t_start
@@ -1447,31 +1498,30 @@ class IndexBuilder:
             build_spelling(Searcher(self.spark, self.out))
         return manifest
 
-    def _driver_stages(self, docs_df: DataFrame, force: bool,
+    def _driver_stages(self, docs_df: DataFrame, run: set,
                        record) -> tuple:
         """The driver executor: the input arrives in one ``toArrow``
-        job, then every stage runs its Spark counterpart's kernel
-        in-process on pyarrow batches.  pyarrow sorts and ``group_by``s
-        stand in for the exchanges, and ``_write_stage`` writes the
-        layout the Spark writers write.  Each stage resumes and records
-        exactly as under the Spark executor.  Returns ``(gstats,
-        dict_stats)``."""
+        job, then every stage in ``run`` runs its Spark counterpart's
+        kernel in-process on pyarrow batches.  pyarrow sorts and
+        ``group_by``s stand in for the exchanges, and ``_write_stage``
+        writes the layout the Spark writers write.  Returns ``(gstats,
+        dict_stats)``, None for a stage that did not run."""
+        gstats = dict_stats = None
         # stage 1: forward store, sorted by doc_id, one file
         p_docs = self.path("docs")
         docs = None
-        if force or not _stage_done(p_docs) or not _stage_current(p_docs):
-            force = True
+        if "docs" in run:
             t0 = time.time()
             docs = _with_gen(docs_df.toArrow().sort_by("doc_id"))
             _write_stage(p_docs, {"": docs}, ["doc_id", "gen"])
             record("docs", time.time() - t0)
+        if not run & _PARTIALS_CONSUMERS:
+            return gstats, dict_stats
 
         # stage 2: fused tokenize -> phase-1 encode, ONE kernel call
         # over the id-sorted docs, so every (term, block) is one run
         p_part = self.path("partials")
-        if force or not _stage_done(p_part) or \
-                not _stage_current(p_part, required_cols=("sum_wdf",)):
-            force = True
+        if "partials" in run:
             t0 = time.time()
             if docs is None:  # resume: the forward store is written
                 docs = _read_table(p_docs, _TOKENIZE_COLS).sort_by("doc_id")
@@ -1496,21 +1546,17 @@ class IndexBuilder:
             return part.select(cols).to_batches(
                 max_chunksize=_DRIVER_BATCH_ROWS)
 
-        p_terms = self.path("terms")
-        if force or not _stage_done(p_terms) or \
-                not _stage_current(p_terms, binary_positions=True):
+        if "terms" in run:
             t0 = time.time()
             terms = _table(list(_termlist_kernel(self.n_buckets)(
                 batches(["term", "bucket", "block", "n", "doc_gaps",
                          "wdfs", "doclens", "positions"]))), TERMS_SCHEMA)
-            _write_stage(p_terms, {"": _with_gen(terms)},
+            _write_stage(self.path("terms"), {"": _with_gen(terms)},
                          ["term", "doc_id", "gen"])
+            del terms
             record("terms", time.time() - t0)
 
-        p_docstats = self.path("docstats")
-        p_global = self.path("globalstats")
-        need_docstats = force or not _stage_done(p_docstats)
-        if need_docstats:
+        if "docstats" in run:
             t0 = time.time()
             pairs = _table(list(_docstats_kernel()(
                 batches(["doc_gaps", "doclens", "n"]))),
@@ -1520,24 +1566,14 @@ class IndexBuilder:
                   .select(["doc_id", "doclen_max"])
                   .rename_columns(["doc_id", "doclen"])
                   .sort_by("doc_id"))
-            _write_stage(p_docstats, {"": _with_gen(ds)}, ["doc_id", "gen"])
+            _write_stage(self.path("docstats"), {"": _with_gen(ds)},
+                         ["doc_id", "gen"])
             gstats = _gstats_of(ds)
             record("docstats", time.time() - t0)
-        if need_docstats or not _stage_done(p_global) or \
-                not _stage_current(p_global):
-            t0 = time.time()
-            if not need_docstats:  # resume: docstats exists, re-agg
-                gstats = _gstats_of(_read_table(p_docstats, gen=0))
-            _write_globalstats(p_global, gstats)
-            record("globalstats", time.time() - t0)
-        else:
-            gstats = _read_table(p_global, gen=0).drop_columns(
-                ["gen"]).to_pylist()[0]
 
         # dictionary: df = Σ run lengths, cf = Σ per-run wdf sums,
         # wdf_max = max per-run max, one file per first-char directory
-        p_dict = self.path("dict")
-        if force or not _stage_done(p_dict):
+        if "dict" in run:
             t0 = time.time()
             g = part.group_by(["term", "bucket"]).aggregate(
                 [("n", "sum"), ("sum_wdf", "sum"), ("block_max_wdf", "max")])
@@ -1548,17 +1584,15 @@ class IndexBuilder:
                 "wdf_max": g["block_max_wdf_max"],
             }).sort_by("term"))
             tpfx = [t[:1] for t in d.column("term").to_pylist()]
-            _write_stage(p_dict, _hive_parts(d, "tpfx", tpfx),
+            _write_stage(self.path("dict"),
+                         _hive_parts(self.spark, d, "tpfx", tpfx),
                          ["term", "gen"])
             dict_stats = _dict_stats_of(d)
             record("dict", time.time() - t0)
-        else:
-            dict_stats = _dict_stats_of(_read_table(p_dict, ["df"], gen=0))
 
         # postings: phase 2 of the inversion over the sorted partials —
         # one row per (term, block) passes through, several concatenate
-        p_post = self.path("postings")
-        if force or not _stage_done(p_post):
+        if "postings" in run:
             t0 = time.time()
             order = [("bucket", "ascending"), ("term", "ascending"),
                      ("block", "ascending")]
@@ -1567,17 +1601,19 @@ class IndexBuilder:
             post = _table(list(_merge_partial_runs()(src.to_batches(
                 max_chunksize=_DRIVER_BATCH_ROWS))), POSTINGS_SCHEMA)
             post = _with_gen(post.sort_by(order))
-            _write_stage(p_post, _hive_parts(
-                post, "bucket", post.column("bucket").to_pylist()),
+            _write_stage(self.path("postings"), _hive_parts(
+                self.spark, post, "bucket",
+                post.column("bucket").to_pylist()),
                 ["term", "block", "gen"])
             record("postings", time.time() - t0)
         return gstats, dict_stats
 
-    def _spark_stages(self, docs_df: DataFrame, force: bool,
+    def _spark_stages(self, docs_df: DataFrame, run: set,
                       record) -> tuple:
-        """The Spark executor: every stage is a Spark job over the
-        partitioned input, stages 3-6 concurrently.  Returns ``(gstats,
-        dict_stats)``."""
+        """The Spark executor: every stage in ``run`` is a Spark job
+        over the partitioned input, the partials consumers concurrently.
+        Returns ``(gstats, dict_stats)``, None for a stage that did not
+        run."""
         # stage 1: forward store, doc_id-clustered + sorted (the fetch
         # join's row-group pruning and the inversion's doc-range
         # invariant both hang off this).  The range exchange is SKIPPED
@@ -1588,8 +1624,7 @@ class IndexBuilder:
         # one column-pruned pass verifies it, the full-row shuffle only
         # runs when the check fails.
         p_docs = self.path("docs")
-        if force or not _stage_done(p_docs) or not _stage_current(p_docs):
-            force = True  # downstream stages derive from this one
+        if "docs" in run:
             t0 = time.time()
             # The corpus-wide range exchange is skipped whenever the
             # incoming partitions are VERIFIED to hold pairwise-disjoint
@@ -1650,7 +1685,8 @@ class IndexBuilder:
              .option("parquet.block.size", str(blk))
              .parquet(p_docs))
             record("docs", time.time() - t0)
-        docs = self._read_staged(p_docs)
+        if not run & _PARTIALS_CONSUMERS:
+            return None, None
 
         # stage 2: FUSED tokenize -> phase-1 encode (VERDICT r05 #1).
         # One Python pass over the forward store produces the partial
@@ -1661,12 +1697,10 @@ class IndexBuilder:
         from pyspark.sql import Observation
         p_part = self.path("partials")
         part_stats: Optional[dict] = None
-        if force or not _stage_done(p_part) or \
-                not _stage_current(p_part, required_cols=("sum_wdf",)):
-            force = True
+        if "partials" in run:
             t0 = time.time()
             pobs = Observation("partstats")
-            (docs.select(*_TOKENIZE_COLS)
+            (self._read_staged(p_docs).select(*_TOKENIZE_COLS)
              .mapInPandas(
                  _tokenize_encode_batches(self.n_buckets, self.block_span,
                                           self.mode, self.cjk_ngram),
@@ -1687,19 +1721,6 @@ class IndexBuilder:
         # leave idle, and none of them extends the build's critical
         # path.  Job descriptions are thread-local, so each stage stays
         # attributable in the UI.
-        p_terms = self.path("terms")
-        p_docstats = self.path("docstats")
-        p_global = self.path("globalstats")
-        p_dict = self.path("dict")
-        p_post = self.path("postings")
-        need_terms = force or not _stage_done(p_terms) or \
-            not _stage_current(p_terms, binary_positions=True)
-        need_docstats = force or not _stage_done(p_docstats)
-        need_global = need_docstats or not _stage_done(p_global) or \
-            not _stage_current(p_global)
-        need_dict = force or not _stage_done(p_dict)
-        need_post = force or not _stage_done(p_post)
-
         results: dict = {}
 
         def run_termlist() -> None:
@@ -1717,7 +1738,7 @@ class IndexBuilder:
              .mapInArrow(_termlist_kernel(self.n_buckets),
                          schema=TERMS_SCHEMA)
              .withColumn("gen", F.lit(0))
-             .write.mode("overwrite").parquet(p_terms))
+             .write.mode("overwrite").parquet(self.path("terms")))
             record("terms", time.time() - t0)
 
         def run_docstats() -> None:
@@ -1726,49 +1747,25 @@ class IndexBuilder:
             # this stage.  The collection aggregates ride the write as
             # an Observation, exactly as before.
             self.spark.sparkContext.setJobDescription("build: docstats")
-            gstats: Optional[dict] = None
-            if need_docstats:
-                t0 = time.time()
-                obs = Observation("gstats")
-                (part0.select("doc_gaps", "doclens", "n")
-                 .mapInArrow(_docstats_kernel(),
-                             "doc_id bigint, doclen int")
-                 .groupBy("doc_id")
-                 .agg(F.max("doclen").alias("doclen"))
-                 .withColumn("gen", F.lit(0))
-                 .observe(obs,
-                          F.count("doc_id").alias("n_docs"),
-                          F.sum("doclen").alias("total_doclen"),
-                          F.min("doclen").alias("doclen_lb"),
-                          F.max("doclen").alias("doclen_ub"),
-                          F.max("doc_id").alias("max_doc_id"))
-                 .write.mode("overwrite").parquet(p_docstats))
-                gstats = dict(obs.get)
-                gstats["avg_doclen"] = (
-                    gstats["total_doclen"] / gstats["n_docs"]
-                    if gstats.get("n_docs") else 0.0)
-                record("docstats", time.time() - t0)
-            if need_global:
-                t0 = time.time()
-                if gstats is None:  # resume: docstats exists, re-agg
-                    g = (self.spark.read.parquet(p_docstats)
-                         .filter(F.col("gen") == 0).agg(
-                             F.count("doc_id").alias("n_docs"),
-                             F.sum("doclen").alias("total_doclen"),
-                             F.min("doclen").alias("doclen_lb"),
-                             F.max("doclen").alias("doclen_ub"),
-                             F.max("doc_id").alias("max_doc_id"))
-                         .collect()[0].asDict())
-                    g["avg_doclen"] = (g["total_doclen"] / g["n_docs"]
-                                       if g["n_docs"] else 0.0)
-                    gstats = g
-                _write_globalstats(p_global, gstats)
-                record("globalstats", time.time() - t0)
-            else:
-                gstats = self.spark.read.parquet(p_global) \
-                    .filter(F.col("gen") == 0).drop("gen") \
-                    .collect()[0].asDict()
+            t0 = time.time()
+            obs = Observation("gstats")
+            (part0.select("doc_gaps", "doclens", "n")
+             .mapInArrow(_docstats_kernel(), "doc_id bigint, doclen int")
+             .groupBy("doc_id")
+             .agg(F.max("doclen").alias("doclen"))
+             .withColumn("gen", F.lit(0))
+             .observe(obs,
+                      F.count("doc_id").alias("n_docs"),
+                      F.sum("doclen").alias("total_doclen"),
+                      F.min("doclen").alias("doclen_lb"),
+                      F.max("doclen").alias("doclen_ub"),
+                      F.max("doc_id").alias("max_doc_id"))
+             .write.mode("overwrite").parquet(self.path("docstats")))
+            gstats = dict(obs.get)
+            gstats["avg_doclen"] = (gstats["total_doclen"] / gstats["n_docs"]
+                                    if gstats.get("n_docs") else 0.0)
             results["gstats"] = gstats
+            record("docstats", time.time() - t0)
 
         def run_dict() -> None:
             # dictionary from the partials' tiny numeric columns:
@@ -1792,7 +1789,7 @@ class IndexBuilder:
                       F.avg("df").alias("avg_df"),
                       F.count("term").alias("n_terms"))
              .write.mode("overwrite")
-             .partitionBy("tpfx").parquet(p_dict))
+             .partitionBy("tpfx").parquet(self.path("dict")))
             results["dict_stats"] = dict(dobs.get)
             record("dict", time.time() - t0)
 
@@ -1825,17 +1822,14 @@ class IndexBuilder:
             (merge_partials(part0.select(*_POSTINGS_COLS), n_inv)
              .withColumn("gen", F.lit(0))
              .write.mode("overwrite")
-             .partitionBy("bucket").parquet(p_post))
+             .partitionBy("bucket").parquet(self.path("postings")))
             record("postings", time.time() - t0)
 
-        tasks = []
-        if need_terms:
-            tasks.append(run_termlist)
-        tasks.append(run_docstats)  # always: produces results["gstats"]
-        if need_dict:
-            tasks.append(run_dict)
-        if need_post:
-            tasks.append(run_postings)
+        tasks = [fn for name, fn in (("terms", run_termlist),
+                                     ("docstats", run_docstats),
+                                     ("dict", run_dict),
+                                     ("postings", run_postings))
+                 if name in run]
         if len(tasks) == 1:
             tasks[0]()
         else:
@@ -1846,18 +1840,7 @@ class IndexBuilder:
                     fut.result()  # re-raise the first stage failure
         self.spark.sparkContext.setJobDescription(None)
 
-        # the dict aggregates come from the write-time Observation on a
-        # fresh build, or one scan on resume
-        dict_stats = results.get("dict_stats")
-        if dict_stats is None:
-            dict_stats = (self.spark.read.parquet(p_dict)
-                          .filter(F.col("gen") == 0).agg(
-                              F.sum("df").alias("n_postings"),
-                              F.max("df").alias("max_df"),
-                              F.avg("df").alias("avg_df"),
-                              F.count("term").alias("n_terms"))
-                          .collect()[0].asDict())
-        return results["gstats"], dict_stats
+        return results.get("gstats"), results.get("dict_stats")
 
 
 def build_index(spark: SparkSession, docs_df: DataFrame, out_dir: str,

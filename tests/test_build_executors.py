@@ -204,8 +204,13 @@ def test_reserved_and_non_ascii_first_chars_round_trip(spark, pair,
     assert "tpfx=%25" in dirs["driver"] and "tpfx=é" in dirs["driver"]
 
 
+@pytest.mark.parametrize("resume_limit", [IndexBuilder.DRIVER_BUILD_BYTES,
+                                          0])
 def test_driver_build_resumes_after_partials(spark, pair, tmp_path,
-                                             monkeypatch):
+                                             monkeypatch, resume_limit):
+    """A driver build stopped after partials resumes, under either
+    executor (one stage graph, one set of resume rules), to an equal
+    index; a second resume runs no stage."""
     drv0 = pair[0]
     out = str(tmp_path / "idx")
     docs = local_docs_df(spark, ROWS)
@@ -220,15 +225,20 @@ def test_driver_build_resumes_after_partials(spark, pair, tmp_path,
     assert not os.path.exists(os.path.join(out, "manifest.json"))
     assert not os.path.exists(os.path.join(out, "terms"))
     monkeypatch.undo()
+    monkeypatch.setattr(IndexBuilder, "DRIVER_BUILD_BYTES", resume_limit)
     m = build_index(spark, docs, out, **KW)
-    assert m["executor"] == "driver"
-    assert [s["stage"] for s in m["stages"]] == [
-        "terms", "docstats", "globalstats", "dict", "postings"]
+    assert m["executor"] == ("driver" if resume_limit else "spark")
+    assert sorted(s["stage"] for s in m["stages"]) == sorted(
+        ["terms", "docstats", "globalstats", "dict", "postings"])
     assert snapshot(spark, out) == snapshot(spark, drv0)
     again = build_index(spark, docs, out, **KW)
     assert again["stages"] == []
-    assert (again["globalstats"], again["metrics"]["n_terms"]) == \
-        (m["globalstats"], m["metrics"]["n_terms"])
+    # the statistics a resume re-reads equal those the stages produced
+    keys = ("n_docs", "n_terms", "n_postings", "term_df_skew_factor",
+            "avg_doclen")
+    assert again["globalstats"] == m["globalstats"]
+    assert [again["metrics"][k] for k in keys] == \
+        pytest.approx([m["metrics"][k] for k in keys])
 
 
 def test_driver_build_runs_one_spark_job(spark, tmp_path):
