@@ -64,13 +64,16 @@ final posting runs are already docid-sorted and disjoint: no sorted-merge
 pass is needed afterwards, and no Python worker ever materializes more
 than ``block_span`` postings of one term.
 
-Inversion is TWO-PHASE (round 5's ``invert_postings``, kept verbatim
-for the upsert path): phase 1 encodes partial runs map-side over
-doc-disjoint splits, phase 2 shuffles one already-encoded row per
-(term, block, split) — run-length× fewer rows than postings — and
-concatenates each group's disjoint runs with a one-varint bridge patch
-instead of re-sorting a row per posting.  The fresh build emits phase
-1's output straight from the tokenizer.
+Inversion is TWO-PHASE: phase 1 encodes partial runs map-side over
+doc-disjoint splits (the fused tokenizer emits them directly), phase 2
+shuffles one already-encoded row per (term, block, split) — run-length×
+fewer rows than postings — and concatenates each group's disjoint runs
+with a one-varint bridge patch instead of re-sorting a row per posting.
+
+An upsert runs the same stage graph (``IndexBuilder._run_stages``) as a
+new generation ``g``: every stage appends gen-``g`` files beside the
+committed ones instead of replacing its directory, and reads back only
+gen-``g`` rows.
 """
 
 from __future__ import annotations
@@ -82,7 +85,7 @@ import threading
 import time
 import uuid
 import zlib
-from typing import Iterable, Iterator, Optional
+from typing import Iterator, Optional
 
 import numpy as np
 import pandas as pd
@@ -95,11 +98,10 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
-    ArrayType, BinaryType, DoubleType, IntegerType, LongType, StringType,
+    ArrayType, BinaryType, IntegerType, LongType, StringType,
     StructField, StructType,
 )
 
-from . import bm25
 from .codec import EMPTY_POSITIONS
 
 DEFAULT_BLOCK_SPAN = 1 << 16
@@ -135,7 +137,10 @@ DEFAULT_N_BUCKETS = 64
 #       thing everything re-reads; ``block_max_part`` is written as 0.0
 #       (dead since v3 — query-time bounds derive from block_max_wdf +
 #       block_min_doclen under the current 1/avgdl).
-FORMAT_VERSION = 5
+#   v6: ``block_max_part`` is gone from postings and partials, and
+#       upserts write through the build's own stages (gen-tagged
+#       partials/ included).  ``compact()`` migrates a v5 index.
+FORMAT_VERSION = 6
 
 DOCS_SCHEMA = StructType([
     StructField("doc_id", LongType(), False),
@@ -152,9 +157,9 @@ DOCS_SCHEMA = StructType([
     StructField("sha256", StringType(), True),
 ])
 
-# staging carries positions pre-encoded per (doc, term) as varint bytes
-# (count + delta gaps): the shuffle moves small binary blobs instead of
-# Arrow lists, and the block encoder concatenates without re-encoding
+# the forward termlist, a row per (doc, term); positions are the
+# pre-encoded per-(doc, term) varint blob (count + delta gaps), a byte
+# slice of the run's positions buffer
 TERMS_SCHEMA = StructType([
     StructField("term", StringType(), False),
     StructField("bucket", IntegerType(), False),
@@ -177,7 +182,6 @@ POSTINGS_SCHEMA = StructType([
     StructField("doclens", BinaryType(), False),
     StructField("positions", BinaryType(), True),
     StructField("block_max_wdf", IntegerType(), False),
-    StructField("block_max_part", DoubleType(), False),
     StructField("block_min_doclen", IntegerType(), False),
 ])
 
@@ -213,9 +217,8 @@ def _varint(n: int) -> bytes:
 
 
 def _doc_agg(mode: str, cjk_ngram: bool = False):
-    """Per-doc tokenizer shared by the staging and fused-encode kernels:
-    doc dict -> ({term: [wdf, gap-varint posbuf | None, last_pos]},
-    doclen)."""
+    """Per-doc tokenizer of the fused tokenize+encode kernel: doc dict
+    -> ({term: [wdf, gap-varint posbuf | None, last_pos]}, doclen)."""
     from .tokenize import document_term_rows
 
     def agg_doc(doc: dict):
@@ -240,47 +243,6 @@ def _doc_agg(mode: str, cjk_ngram: bool = False):
         return agg, doclen
 
     return agg_doc
-
-
-def _tokenize_batches(n_buckets: int, block_span: int, mode: str = "xapian",
-                      cjk_ngram: bool = False):
-    """mapInPandas kernel: docs rows -> per-(doc, term) rows, map-side
-    pre-aggregated (wdf summed, positions gap-varint-encoded as they
-    arrive) so the shuffle moves one small binary blob per (doc, term),
-    not one row per token and no intermediate Python position lists
-    (VERDICT r01 #5).  Still used by the upsert path; the fresh build
-    uses the fused ``_tokenize_encode_batches`` since round 6."""
-    agg_doc = _doc_agg(mode, cjk_ngram)
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                "term": [], "bucket": [], "block": [], "doc_id": [],
-                "wdf": [], "doclen": [], "positions": [],
-            }
-            for row in pdf.itertuples(index=False):
-                doc = row._asdict()
-                did = int(doc["doc_id"])
-                agg, doclen = agg_doc(doc)
-                blk = did // block_span
-                for term, ent in agg.items():
-                    wdf = ent[0]
-                    buf = ent[1]
-                    out["term"].append(term)
-                    out["bucket"].append(term_bucket(term, n_buckets))
-                    out["block"].append(blk)
-                    out["doc_id"].append(did)
-                    out["wdf"].append(wdf)
-                    out["doclen"].append(doclen)
-                    # blob layout == codec.encode_position_list output:
-                    # varint(count) + gap varints; count == wdf (every
-                    # positional occurrence appended exactly one gap)
-                    out["positions"].append(
-                        _varint(wdf) + bytes(buf)
-                        if buf is not None else None)
-            yield pd.DataFrame(out)
-
-    return fn
 
 
 # the fused tokenize+encode stage's output: partial posting blocks plus
@@ -320,16 +282,13 @@ def _tokenize_encode_batches(n_buckets: int, block_span: int,
     required; ascending order *within* a partition is verified per doc
     and repaired with a per-term argsort at flush if violated.
 
-    Encoding is the same whole-column vectorization as ``_encode_runs``:
-    one LEB128 encode per column per flush, sliced per run by byte
-    offsets; positions blobs are concatenations of the per-(doc, term)
-    blobs the tokenizer already built (layout identical to the v4
-    staging rows).  ``block_max_part`` is written as 0.0: it has been
-    dead weight since format v3 (query-time bounds are derived from
-    ``block_max_wdf`` + ``block_min_doclen`` under the *current*
-    1/avgdl), and dropping it removes both per-posting float work and
-    the stage's dependency on avg_doclen — which is what lets the
-    downstream stages run concurrently."""
+    Encoding is whole-column: one LEB128 encode per column per flush,
+    sliced per run by byte offsets; positions blobs are concatenations
+    of the per-(doc, term) blobs the tokenizer already built.  No score
+    bound is stored (query-time bounds derive from ``block_max_wdf`` +
+    ``block_min_doclen`` under the *current* 1/avgdl), so the stage
+    does not depend on avg_doclen — which is what lets the downstream
+    stages run concurrently."""
     import numpy as np
 
     from .codec import varint_encode_offsets
@@ -400,7 +359,6 @@ def _tokenize_encode_batches(n_buckets: int, block_span: int,
             "positions": pos_out,
             "block_max_wdf": np.maximum.reduceat(
                 wdfs, gstarts).astype(np.int32),
-            "block_max_part": np.zeros(len(terms_sorted)),
             "block_min_doclen": np.minimum.reduceat(
                 dls, gstarts).astype(np.int32),
             "sum_wdf": np.add.reduceat(wdfs, gstarts),
@@ -449,103 +407,10 @@ def _tokenize_encode_batches(n_buckets: int, block_span: int,
     return fn
 
 
-def _termlist_kernel_rows(n_buckets: int):
-    """Row-path termlist derivation (pandas), kept as the FALLBACK for
-    batches the vectorized Arrow kernel cannot prove well-formed (mixed
-    runs whose stored position counts differ from wdf, or >2 GB of
-    positional bytes in one batch): one vectorized decode per batch for
-    doc ids / wdfs / doclens, and per-(doc, term) position blobs
-    recovered as byte SLICES of the run's positions buffer (the
-    per-doc layout ``varint(count) + gaps`` is preserved verbatim by
-    concatenation).
-
-    Row content is identical to what ``_tokenize_batches`` used to
-    stage (order aside): a run with a NULL positions buffer means every
-    member row was non-positional (Z-stems / CJK bigrams), which staged
-    as NULL; in a mixed run the 1-byte empty encoding maps back to
-    NULL the same way."""
-    import numpy as np
-
-    from .codec import varint_decode
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ns = pdf["n"].to_numpy().astype(np.int64)
-            total = int(ns.sum())
-            bounds = np.zeros(len(ns) + 1, dtype=np.int64)
-            np.cumsum(ns, out=bounds[1:])
-            gstarts = bounds[:-1]
-            # whole-batch decode: buffers concatenate at varint
-            # boundaries, so ONE decode per column serves every run
-            gaps = varint_decode(b"".join(pdf["doc_gaps"]), total) \
-                .astype(np.int64)
-            wdfs = varint_decode(b"".join(pdf["wdfs"]), total) \
-                .astype(np.int64)
-            dls = varint_decode(b"".join(pdf["doclens"]), total) \
-                .astype(np.int64)
-            adj = gaps.copy()
-            adj[1:] += 1
-            adj[gstarts] = gaps[gstarts]
-            cs = np.cumsum(adj)
-            base = np.repeat(cs[gstarts] - gaps[gstarts], ns)
-            ids = cs - base
-            pos_col: list = [None] * total
-            for ri, blob in enumerate(pdf["positions"]):
-                if blob is None:
-                    continue
-                s = int(gstarts[ri])
-                n = int(ns[ri])
-                b = np.frombuffer(blob, dtype=np.uint8)
-                ends = np.flatnonzero(b < 128)
-                bnds = np.zeros(n + 1, dtype=np.int64)
-                np.cumsum(wdfs[s:s + n] + 1, out=bnds[1:])
-                vals = varint_decode(blob)
-                if bnds[-1] != len(vals) or \
-                        not (vals[bnds[:-1]] == wdfs[s:s + n]).all():
-                    # count != wdf: walk the stored counts instead
-                    for k in range(n):
-                        bnds[k + 1] = bnds[k] + int(vals[bnds[k]]) + 1
-                byte_start = np.zeros(n, dtype=np.int64)
-                byte_start[0:] = np.where(
-                    bnds[:-1] > 0, ends[np.maximum(bnds[:-1] - 1, 0)] + 1,
-                    0)
-                byte_end = ends[bnds[1:] - 1] + 1
-                for k in range(n):
-                    piece = blob[int(byte_start[k]):int(byte_end[k])]
-                    pos_col[s + k] = None \
-                        if piece == EMPTY_POSITIONS else piece
-            terms = np.repeat(pdf["term"].to_numpy(), ns)
-            buckets = np.repeat(
-                pdf["bucket"].to_numpy().astype(np.int32), ns)
-            blocks = np.repeat(
-                pdf["block"].to_numpy().astype(np.int64), ns)
-            yield pd.DataFrame({
-                "term": terms,
-                "bucket": buckets,
-                "block": blocks,
-                "doc_id": ids,
-                "wdf": wdfs.astype(np.int32),
-                "doclen": dls.astype(np.int32),
-                "positions": pos_col,
-            })
-
-    return fn
-
-
-TERMS_ARROW_SCHEMA = ("term string, bucket int, block long, "
-                      "doc_id long, wdf int, doclen int, positions binary")
-
-
-def _termlist_kernel(n_buckets: int):
+def _termlist_kernel():
     """mapInArrow kernel deriving the forward termlist out of partial
-    posting rows with NO per-posting Python (round-6: the row-path
-    kernel spent ~70 of the 85 s stage wall at amp1000/c8 in a
-    per-positional-run ``varint_decode`` verification plus per-piece
-    byte slicing — 31.6M Python-level calls for 48M postings).
-
-    Everything is whole-batch numpy / Arrow compute:
+    posting rows with no per-posting Python.  Everything is whole-batch
+    numpy / Arrow compute:
 
     * doc ids / wdfs / doclens: one ``varint_decode`` per column over
       the binary column's VALUES BUFFER (non-null binary columns
@@ -559,18 +424,19 @@ def _termlist_kernel(n_buckets: int):
       (``flatnonzero(byte < 128)``) under the piece layout
       ``varint(count=wdf) + wdf gap varints``.
 
-    The layout is VERIFIED before being trusted, with exactly the
-    checks the row path applied per run: each run's total varint count
-    must equal Σ(wdf+1) over its pieces, and each piece's leading count
-    varint must decode to that row's wdf.  Any failure (mixed runs with
-    EMPTY_POSITIONS members) sends the whole batch to the row-path
-    fallback, whose output is byte-identical."""
+    A run is either positional in every member or in none: positional
+    keys are lowercased or carry a field prefix, so they never share a
+    key with a ``Z`` stem, and CJK bigrams never occur positionally.
+    The layout is therefore checked, not assumed: a NULL run spans no
+    bytes, each positional run holds Σ(wdf+1) varints and ends on its
+    last varint's terminator, and each piece's leading count equals its
+    row's wdf.  A batch failing any check is corrupt input and raises
+    ``ValueError`` naming it."""
     import numpy as np
     import pyarrow as pa
 
     from .codec import varint_decode
 
-    rows_fn = _termlist_kernel_rows(n_buckets)
     out_pa_schema = pa.schema([
         ("term", pa.string()), ("bucket", pa.int32()),
         ("block", pa.int64()), ("doc_id", pa.int64()),
@@ -586,118 +452,110 @@ def _termlist_kernel(n_buckets: int):
             offs[0]: offs[-1]]
         return data, offs - offs[0], int(offs[0])
 
-    def _fallback(batch):
-        for pdf in rows_fn(iter([batch.to_pandas()])):
-            yield pa.RecordBatch.from_pandas(
-                pdf, schema=out_pa_schema, preserve_index=False)
-
     def fn(batches) -> "Iterator[pa.RecordBatch]":
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            try:
-                out = _fast(batch)
-            except Exception:
-                out = None
-            if out is None:
-                yield from _fallback(batch)
-            else:
-                yield out
+        for i, batch in enumerate(batches):
+            if batch.num_rows:
+                yield decode(i, batch)
 
-    def _fast(batch):
-        if True:  # keep the body's indentation stable
-            ns = batch.column("n").to_numpy().astype(np.int64)
-            nruns = len(ns)
-            total = int(ns.sum())
-            bounds = np.zeros(nruns + 1, dtype=np.int64)
-            np.cumsum(ns, out=bounds[1:])
-            gstarts = bounds[:-1]
+    def decode(i: int, batch):
+        def corrupt(what: str) -> ValueError:
+            terms = batch.column("term")
+            return ValueError(
+                f"termlist batch {i} ({batch.num_rows} runs, terms "
+                f"{terms[0].as_py()!r}..{terms[-1].as_py()!r}): {what}")
 
-            g_dat, _, _ = _bin_parts(batch.column("doc_gaps"))
-            w_dat, _, _ = _bin_parts(batch.column("wdfs"))
-            d_dat, _, _ = _bin_parts(batch.column("doclens"))
-            gaps = varint_decode(g_dat, total).astype(np.int64)
-            wdfs = varint_decode(w_dat, total).astype(np.int64)
-            dls = varint_decode(d_dat, total).astype(np.int64)
-            adj = gaps.copy()
-            adj[1:] += 1
-            adj[gstarts] = gaps[gstarts]
-            cs = np.cumsum(adj)
-            ids = cs - np.repeat(cs[gstarts] - gaps[gstarts], ns)
+        ns = batch.column("n").to_numpy().astype(np.int64)
+        nruns = len(ns)
+        total = int(ns.sum())
+        bounds = np.zeros(nruns + 1, dtype=np.int64)
+        np.cumsum(ns, out=bounds[1:])
+        gstarts = bounds[:-1]
 
-            pos = batch.column("positions")
-            b_pos, poffs, pbase = _bin_parts(pos)
-            if pos.null_count:
-                run_has = ~pos.is_null().to_numpy(zero_copy_only=False)
-            else:
-                run_has = np.ones(nruns, dtype=bool)
-            # tiling + size preconditions for the zero-copy fast path
-            null_spans = poffs[1:][~run_has] != poffs[:-1][~run_has]
-            if b_pos.size >= (1 << 31) or null_spans.any():
-                return None
-            ends = np.flatnonzero(b_pos < 128)
-            run_wdf_sum = np.add.reduceat(wdfs, gstarts) \
-                if total else np.zeros(nruns, dtype=np.int64)
-            exp_vc = np.where(run_has, run_wdf_sum + ns, 0)
-            vc_start = np.searchsorted(ends, poffs[:-1], side="left")
-            vc_end = np.searchsorted(ends, poffs[1:], side="left")
-            if (vc_end - vc_start != exp_vc).any():
-                return None
-            # per-piece varint spans under the count==wdf layout
-            row_has = np.repeat(run_has, ns)
-            pvc = np.where(row_has, wdfs + 1, 0)
-            cum = np.zeros(total + 1, dtype=np.int64)
-            np.cumsum(pvc, out=cum[1:])
-            vidx_start = np.repeat(vc_start - cum[gstarts], ns) + cum[:-1]
-            vidx_end = vidx_start + pvc
-            pb_start = np.where(vidx_start > 0,
-                                ends[np.maximum(vidx_start - 1, 0)] + 1, 0)
-            pb_end = np.where(pvc > 0,
-                              ends[np.maximum(vidx_end - 1, 0)] + 1, 0)
-            # leading count varint of every positional piece must be wdf
-            if row_has.any():
-                sb = pb_start[row_has]
-                first = b_pos[sb]
-                vals = (first & 0x7F).astype(np.uint64)
-                cont = first >= 128
-                j = 1
-                while cont.any() and j < 10:
-                    nb = b_pos[sb[cont] + j]
-                    vals[cont] |= (nb & np.uint64(0x7F)).astype(
-                        np.uint64) << np.uint64(7 * j)
-                    cont2 = np.zeros_like(cont)
-                    cont2[cont] = nb >= 128
-                    cont = cont2
-                    j += 1
-                if (vals != wdfs[row_has].astype(np.uint64)).any():
-                    return None
-            # output offsets: pieces tile the span, so cumulative piece
-            # lengths ARE the piece byte starts; values buffer reused
-            lens = np.where(row_has, pb_end - pb_start, 0)
-            offsets = np.zeros(total + 1, dtype=np.int32)
-            np.cumsum(lens, out=offsets[1:])
-            validity = np.packbits(row_has, bitorder="little")
-            data_buf = pos.buffers()[2]
-            if data_buf is None:
-                data_buf = pa.py_buffer(b"")
-            else:
-                data_buf = data_buf.slice(pbase, int(b_pos.size))
-            pos_out = pa.Array.from_buffers(
-                pa.binary(), total,
-                [pa.py_buffer(validity.tobytes()),
-                 pa.py_buffer(offsets.tobytes()), data_buf],
-                null_count=int(total - int(row_has.sum())))
+        g_dat, _, _ = _bin_parts(batch.column("doc_gaps"))
+        w_dat, _, _ = _bin_parts(batch.column("wdfs"))
+        d_dat, _, _ = _bin_parts(batch.column("doclens"))
+        gaps = varint_decode(g_dat, total).astype(np.int64)
+        wdfs = varint_decode(w_dat, total).astype(np.int64)
+        dls = varint_decode(d_dat, total).astype(np.int64)
+        adj = gaps.copy()
+        adj[1:] += 1
+        adj[gstarts] = gaps[gstarts]
+        cs = np.cumsum(adj)
+        ids = cs - np.repeat(cs[gstarts] - gaps[gstarts], ns)
 
-            idx = pa.array(np.repeat(np.arange(nruns), ns), pa.int64())
-            return pa.RecordBatch.from_arrays([
-                batch.column("term").take(idx),
-                batch.column("bucket").take(idx),
-                batch.column("block").take(idx),
-                pa.array(ids, pa.int64()),
-                pa.array(wdfs.astype(np.int32)),
-                pa.array(dls.astype(np.int32)),
-                pos_out,
-            ], schema=out_pa_schema)
+        pos = batch.column("positions")
+        b_pos, poffs, pbase = _bin_parts(pos)
+        run_has = ~pos.is_null().to_numpy(zero_copy_only=False)
+        if (poffs[1:] != poffs[:-1])[~run_has].any():
+            raise corrupt("a NULL positions run spans bytes")
+        ends = np.flatnonzero(b_pos < 128)
+        run_wdf_sum = np.add.reduceat(wdfs, gstarts) \
+            if total else np.zeros(nruns, dtype=np.int64)
+        exp_vc = np.where(run_has, run_wdf_sum + ns, 0)
+        vc_start = np.searchsorted(ends, poffs[:-1], side="left")
+        vc_end = np.searchsorted(ends, poffs[1:], side="left")
+        if (vc_end - vc_start != exp_vc).any():
+            raise corrupt("a positions run holds a varint count other "
+                          "than sum(wdf + 1) (a mixed run?)")
+        # tiling: every positional run ends on its last varint's
+        # terminator, so its pieces cover its span exactly
+        if (ends[vc_end[run_has] - 1] + 1 != poffs[1:][run_has]).any():
+            raise corrupt("a positions run does not end on a varint")
+        # per-piece varint spans under the count==wdf layout
+        row_has = np.repeat(run_has, ns)
+        pvc = np.where(row_has, wdfs + 1, 0)
+        cum = np.zeros(total + 1, dtype=np.int64)
+        np.cumsum(pvc, out=cum[1:])
+        vidx_start = np.repeat(vc_start - cum[gstarts], ns) + cum[:-1]
+        vidx_end = vidx_start + pvc
+        pb_start = np.where(vidx_start > 0,
+                            ends[np.maximum(vidx_start - 1, 0)] + 1, 0)
+        pb_end = np.where(pvc > 0,
+                          ends[np.maximum(vidx_end - 1, 0)] + 1, 0)
+        # leading count varint of every positional piece must be wdf
+        if row_has.any():
+            sb = pb_start[row_has]
+            first = b_pos[sb]
+            vals = (first & 0x7F).astype(np.uint64)
+            cont = first >= 128
+            j = 1
+            while cont.any() and j < 10:
+                nb = b_pos[sb[cont] + j]
+                vals[cont] |= (nb & np.uint64(0x7F)).astype(
+                    np.uint64) << np.uint64(7 * j)
+                cont2 = np.zeros_like(cont)
+                cont2[cont] = nb >= 128
+                cont = cont2
+                j += 1
+            if (vals != wdfs[row_has].astype(np.uint64)).any():
+                raise corrupt("a position piece's count is not its wdf")
+        # output offsets: pieces tile the span, so cumulative piece
+        # lengths ARE the piece byte starts; values buffer reused
+        lens = np.where(row_has, pb_end - pb_start, 0)
+        offsets = np.zeros(total + 1, dtype=np.int32)
+        np.cumsum(lens, out=offsets[1:])
+        validity = np.packbits(row_has, bitorder="little")
+        data_buf = pos.buffers()[2]
+        if data_buf is None:
+            data_buf = pa.py_buffer(b"")
+        else:
+            data_buf = data_buf.slice(pbase, int(b_pos.size))
+        pos_out = pa.Array.from_buffers(
+            pa.binary(), total,
+            [pa.py_buffer(validity.tobytes()),
+             pa.py_buffer(offsets.tobytes()), data_buf],
+            null_count=int(total - int(row_has.sum())))
+
+        idx = pa.array(np.repeat(np.arange(nruns), ns), pa.int64())
+        return pa.RecordBatch.from_arrays([
+            batch.column("term").take(idx),
+            batch.column("bucket").take(idx),
+            batch.column("block").take(idx),
+            pa.array(ids, pa.int64()),
+            pa.array(wdfs.astype(np.int32)),
+            pa.array(dls.astype(np.int32)),
+            pos_out,
+        ], schema=out_pa_schema)
 
     return fn
 
@@ -746,153 +604,12 @@ def _docstats_kernel():
     return fn
 
 
-def _encode_runs(lf: float, n_buckets: int = DEFAULT_N_BUCKETS):
-    """mapInArrow kernel over partitions sorted by (term, block,
-    doc_id): encodes every contiguous (term, block) run.  Arrow batches
-    can split a run, so an unfinished tail is carried into the next
-    batch — one pass per partition, no per-group task overhead (the
-    scalable replacement for a per-group applyInPandas).
-
-    Since round 5 this runs MAP-SIDE, before any shuffle (VERDICT r04
-    #1): each tokenize-staging partition covers a contiguous, disjoint
-    doc-id range (ingest assigns ids by range partition and the staging
-    files inherit that clustering; parquet splits are contiguous row
-    groups), so the runs it encodes are *partial* posting blocks —
-    already docid-sorted and disjoint from every other partition's runs
-    for the same (term, block).  The shuffle then moves one row per
-    (term, block, staging-split) instead of one row per posting, and
-    the reduce (``_merge_partial_runs``) concatenates disjoint byte
-    runs instead of re-sorting hundreds of millions of rows.
-
-    (Round-4 A/B note: replacing the JVM ``sortWithinPartitions`` with
-    a kernel-side ``np.lexsort`` + ``Table.take`` was measured SLOWER
-    at amp1000/local[8] — 380 s vs 225-264 s — because the take must
-    gather the fat position-blob column row-by-row; the streaming
-    sorted-input design stays.)
-
-    The ``bucket`` column is NOT shuffled (VERDICT r02 #6: it is
-    derivable from the term) — it is recomputed here per GROUP, one
-    crc32 per (term, block) run instead of 8 bytes per posting row on
-    the wire.
-
-    Fully vectorized — per-ROW Python is gone from the build hot path:
-
-    * group boundaries: dictionary-encoded term codes + block ids, one
-      numpy comparison;
-    * doc gaps / wdfs / doclens: ONE whole-column LEB128 encode each
-      (codec.varint_encode_offsets), sliced per group by byte offsets;
-    * block maxima/minima: np.maximum/minimum.reduceat at group starts;
-    * positions: nulls filled with the 1-byte empty encoding, then each
-      group's blob is a zero-copy slice of the Arrow data buffer (a
-      group whose byte span == row count is all-empty -> stored null).
-
-    ``lf`` is 1/avg_doclen, needed for the block-max score bound
-    (bm25weight.cc:176-201 adapted per-block)."""
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    from .codec import varint_encode_offsets
-
-    def encode_table(tbl: pa.Table, gstarts: np.ndarray,
-                     gends: np.ndarray) -> pa.RecordBatch:
-        ids = tbl.column("doc_id").to_numpy()
-        wdfs = tbl.column("wdf").to_numpy().astype(np.int64)
-        dls = tbl.column("doclen").to_numpy().astype(np.int64)
-        trim = int(gends[-1])
-
-        gaps = ids.copy()
-        gaps[1:] -= ids[:-1] + 1
-        gaps[gstarts] = ids[gstarts]
-        buf_g, off_g = varint_encode_offsets(gaps[:trim])
-        buf_w, off_w = varint_encode_offsets(wdfs[:trim])
-        buf_d, off_d = varint_encode_offsets(dls[:trim])
-
-        normlen = np.maximum(dls[:trim] * lf, bm25.MIN_NORMLEN)
-        w = wdfs[:trim]
-        parts = w / (bm25.K1 * (normlen * bm25.B + (1 - bm25.B)) + w)
-        max_part = np.maximum.reduceat(parts, gstarts)
-        max_wdf = np.maximum.reduceat(w, gstarts)
-        min_dl = np.minimum.reduceat(dls[:trim], gstarts)
-
-        pos = tbl.column("positions").combine_chunks()
-        if pos.null_count:
-            pos = pc.fill_null(pos, EMPTY_POSITIONS)
-        if isinstance(pos, pa.ChunkedArray):
-            pos = pos.combine_chunks()
-        # value offsets: the array's logical offset shifts the INDEX
-        # into the offsets buffer (values in it are absolute)
-        raw_off = np.frombuffer(pos.buffers()[1], dtype=np.int32)
-        pos_off = raw_off[pos.offset:pos.offset + len(pos) + 1]
-        pos_data = np.frombuffer(pos.buffers()[2], dtype=np.uint8)
-        pos_out = []
-        for s, e in zip(gstarts, gends):
-            lo, hi = int(pos_off[s]), int(pos_off[e])
-            # all-empty groups (Z-stem terms) store null: one byte per
-            # doc means every entry is the empty encoding
-            pos_out.append(None if hi - lo == e - s
-                           else pos_data[lo:hi].tobytes())
-
-        sidx = pa.array(gstarts)
-        counts = (gends - gstarts).astype(np.int32)
-        gterms = tbl.column("term").combine_chunks().take(sidx)
-        names = gterms.to_pylist()
-        buckets = pa.array(
-            [term_bucket(t, n_buckets) for t in names], pa.int32())
-        return pa.record_batch([
-            gterms,
-            buckets,
-            tbl.column("block").combine_chunks().take(sidx),
-            pa.array(ids[gstarts]),
-            pa.array(ids[gends - 1]),
-            pa.array(counts),
-            pa.array([bytes(buf_g[off_g[s]:off_g[e]])
-                      for s, e in zip(gstarts, gends)], pa.binary()),
-            pa.array([bytes(buf_w[off_w[s]:off_w[e]])
-                      for s, e in zip(gstarts, gends)], pa.binary()),
-            pa.array([bytes(buf_d[off_d[s]:off_d[e]])
-                      for s, e in zip(gstarts, gends)], pa.binary()),
-            pa.array(pos_out, pa.binary()),
-            pa.array(max_wdf.astype(np.int32)),
-            pa.array(max_part.astype(np.float64)),
-            pa.array(min_dl.astype(np.int32)),
-        ], names=[f.name for f in POSTINGS_SCHEMA.fields])
-
-    def fn(batches) -> "Iterator[pa.RecordBatch]":
-        leftover: Optional[pa.Table] = None
-        for batch in batches:
-            tbl = pa.Table.from_batches([batch])
-            if leftover is not None:
-                tbl = pa.concat_tables([leftover, tbl]).combine_chunks()
-                leftover = None
-            n = tbl.num_rows
-            if n == 0:
-                continue
-            codes = pc.dictionary_encode(
-                tbl.column("term").combine_chunks()).indices.to_numpy()
-            blocks = tbl.column("block").to_numpy()
-            bnd = np.flatnonzero((codes[1:] != codes[:-1])
-                                 | (blocks[1:] != blocks[:-1]))
-            starts = np.concatenate(([0], bnd + 1))
-            # the last run may continue into the next Arrow batch
-            leftover = tbl.slice(int(starts[-1]))
-            if len(starts) > 1:
-                yield encode_table(tbl, starts[:-1], starts[1:])
-        if leftover is not None and leftover.num_rows:
-            leftover = leftover.combine_chunks()
-            yield encode_table(
-                leftover, np.array([0]),
-                np.array([leftover.num_rows]))
-
-    return fn
-
-
 def _merge_partial_runs():
     """mapInArrow kernel over partitions sorted by (term, block,
     first_doc): folds the map-side partial runs of each (term, block)
     group into one posting block row.
 
-    The partials of one group come from distinct staging splits, each
+    The partials of one group come from distinct input splits, each
     covering a disjoint contiguous doc-id range — so sorted by
     first_doc they are disjoint, ordered, already-encoded byte runs and
     the merge is CONCATENATION: wdf/doclen/position buffers join as-is,
@@ -906,9 +623,9 @@ def _merge_partial_runs():
     Single-partial groups (the common case once splits are large) are
     emitted with one vectorized ``Table.take`` per batch — no per-group
     Python for them.  Should two partials of a group ever OVERLAP in
-    doc range (impossible from the build/upsert pipelines, which only
-    feed doc-range-disjoint splits), the group's rows pass through
-    unmerged — the query kernels already merge multiple rows per
+    doc range (the docs stage writes doc-range-disjoint files, but
+    Spark's split planner may pack several into one task), the group's
+    rows pass through unmerged — the query kernels already merge multiple rows per
     (term, block) correctly (they handle gen-interleaved upsert runs
     the same way), so correctness never depends on the disjointness
     invariant."""
@@ -927,8 +644,7 @@ def _merge_partial_runs():
         ("last_doc", pa.int64()), ("n", pa.int32()),
         ("doc_gaps", pa.binary()), ("wdfs", pa.binary()),
         ("doclens", pa.binary()), ("positions", pa.binary()),
-        ("block_max_wdf", pa.int32()), ("block_max_part", pa.float64()),
-        ("block_min_doclen", pa.int32()),
+        ("block_max_wdf", pa.int32()), ("block_min_doclen", pa.int32()),
     ])
 
     def take_batch(tbl, idx):
@@ -958,7 +674,6 @@ def _merge_partial_runs():
         lasts = tbl.column("last_doc").to_numpy()
         ns = tbl.column("n").to_numpy()
         mw = tbl.column("block_max_wdf").to_numpy()
-        mp = tbl.column("block_max_part").to_numpy()
         md = tbl.column("block_min_doclen").to_numpy()
         og, dg = bin_view(tbl, "doc_gaps")
         ow, dw = bin_view(tbl, "wdfs")
@@ -1003,7 +718,6 @@ def _merge_partial_runs():
             cols["doclens"].append(dd[od[s]:od[e]].tobytes())
             cols["positions"].append(pos)
             cols["block_max_wdf"].append(int(mw[s:e].max()))
-            cols["block_max_part"].append(float(mp[s:e].max()))
             cols["block_min_doclen"].append(int(md[s:e].min()))
         if passthrough:
             out_batches.append(take_batch(tbl, passthrough))
@@ -1045,42 +759,11 @@ def merge_partials(partials: DataFrame,
                    num_partitions: Optional[int] = None) -> DataFrame:
     """Phase 2 of the two-phase inversion: shuffle partial posting rows
     on (term, block) and concatenate each group's disjoint runs
-    (``_merge_partial_runs``).  Shared by ``invert_postings`` (raw
-    staging input, the upsert path) and the fresh build's postings
-    stage (which consumes the fused tokenize-encode output directly)."""
+    (``_merge_partial_runs``) — the Spark executor's postings stage."""
     args = [num_partitions] if num_partitions else []
     return (partials.repartition(*args, "term", "block")
             .sortWithinPartitions("term", "block", "first_doc")
             .mapInArrow(_merge_partial_runs(), schema=POSTINGS_SCHEMA))
-
-
-def invert_postings(src: DataFrame, lf: float,
-                    n_buckets: int = DEFAULT_N_BUCKETS,
-                    num_partitions: Optional[int] = None) -> DataFrame:
-    """Two-phase distributed inversion (VERDICT r04 #1).
-
-    Phase 1 (map, no shuffle): sort each staging partition by (term,
-    block, doc_id) in place and encode its contiguous runs into
-    *partial* posting blocks — valid because staging partitions cover
-    disjoint contiguous doc-id ranges (see ``_encode_runs``).
-
-    Phase 2 (reduce): shuffle the partial rows — one per (term, block,
-    staging-split), i.e. ~run-length× fewer rows than postings, with
-    the payload already delta+varint encoded — and concatenate each
-    group's disjoint runs (``_merge_partial_runs``).  The reduce-side
-    row sort that moved/ordered one row per posting (the 0.56-
-    efficiency, memory-bandwidth-bound stage of rounds 2-4) is gone;
-    the only full-width sort left runs map-side over locally resident
-    rows.
-
-    ``src`` must have columns (term, block, doc_id, wdf, doclen,
-    positions) with each partition spanning a doc-id range disjoint
-    from every other partition's (what the build/upsert staging reads
-    provide)."""
-    partials = (src.sortWithinPartitions("term", "block", "doc_id")
-                .mapInArrow(_encode_runs(lf, n_buckets),
-                            schema=POSTINGS_SCHEMA))
-    return merge_partials(partials, num_partitions)
 
 
 def _stage_done(path: str) -> bool:
@@ -1159,14 +842,17 @@ def _hive_parts(spark: SparkSession, tbl: pa.Table, col: str,
             body.slice(a, b - a) for a, b in zip(cuts, cuts[1:]) if b > a}
 
 
-def _write_stage(path: str, parts: dict, stats: list) -> None:
-    """Replace ``path`` with one parquet file per ``parts`` entry (key:
-    a hive sub-directory, or "" for ``path`` itself) and mark the stage
+def _write_stage(path: str, parts: dict, stats: list, gen: int = 0) -> None:
+    """Write one parquet file per ``parts`` entry (key: a hive
+    sub-directory, or "" for ``path`` itself) and mark the stage
     complete with ``_SUCCESS`` last — the layout and the completion rule
-    of Spark's ``write.mode("overwrite").partitionBy(...).parquet``."""
-    if os.path.exists(path):
+    of Spark's ``write.partitionBy(...).parquet``.  Generation 0 (a
+    build) replaces ``path``, as ``mode("overwrite")`` does; a later
+    generation (an upsert) adds uniquely named files beside the
+    committed ones and removes nothing, as ``mode("append")`` does."""
+    if gen == 0 and os.path.exists(path):
         shutil.rmtree(path)
-    os.makedirs(path)
+    os.makedirs(path, exist_ok=True)
     for sub, tbl in parts.items():
         d = os.path.join(path, sub)
         os.makedirs(d, exist_ok=True)
@@ -1193,8 +879,10 @@ def _table(batches: list, schema: StructType) -> pa.Table:
 
 
 def _read_table(path: str, columns: Optional[list] = None,
-                gen: Optional[int] = None) -> pa.Table:
-    expr = pc.field("gen") == gen if gen is not None else None
+                gens: Optional[list] = None) -> pa.Table:
+    """The rows of the parquet files under ``path`` (hive directories
+    included) whose ``gen`` is in ``gens`` (all rows when None)."""
+    expr = pc.field("gen").isin(gens) if gens is not None else None
     return pads.dataset(path, format="parquet").to_table(
         columns=columns, filter=expr)
 
@@ -1220,11 +908,11 @@ def _dict_stats_of(d: pa.Table) -> dict:
             "avg_df": pc.mean(df).as_py(), "n_terms": d.num_rows}
 
 
-def _write_globalstats(path: str, gstats: dict) -> None:
-    """The 1-row ``globalstats/`` artifact, written driver-side with
-    pyarrow by both executors — a Spark job for a single row costs
-    ~1.5 s of pure scheduling at any scale (types pinned to match
-    upsert's gen-tagged appends)."""
+def _write_globalstats(path: str, gstats: dict, gen: int = 0) -> None:
+    """The 1-row ``globalstats/`` file of generation ``gen``, written
+    driver-side with pyarrow by both executors and by upserts — a Spark
+    job for a single row costs ~1.5 s of pure scheduling at any scale.
+    Readers take the row of the highest committed gen."""
     tbl = pa.table({
         "n_docs": pa.array([gstats.get("n_docs")], pa.int64()),
         "total_doclen": pa.array([gstats.get("total_doclen")], pa.int64()),
@@ -1232,13 +920,9 @@ def _write_globalstats(path: str, gstats: dict) -> None:
         "doclen_ub": pa.array([gstats.get("doclen_ub")], pa.int32()),
         "max_doc_id": pa.array([gstats.get("max_doc_id")], pa.int64()),
         "avg_doclen": pa.array([gstats.get("avg_doclen")], pa.float64()),
-        "gen": pa.array([0], pa.int32()),
+        "gen": pa.array([gen], pa.int32()),
     })
-    if os.path.exists(path):
-        shutil.rmtree(path)
-    os.makedirs(path)
-    pq.write_table(tbl, os.path.join(path, "part-00000.parquet"))
-    open(os.path.join(path, "_SUCCESS"), "w").close()
+    _write_stage(path, {"": tbl}, [], gen)
 
 
 # The stage graph in build order: stage -> the stage it derives from.
@@ -1255,14 +939,18 @@ _PARTIALS_CONSUMERS = frozenset(["terms", "docstats", "dict", "postings"])
 _STAGE_FORMAT = {"docs": {}, "partials": {"required_cols": ("sum_wdf",)},
                  "terms": {"binary_positions": True}, "globalstats": {}}
 
-# session confs ``_read_staged`` sets while a Spark-executor build runs;
-# ``build`` restores them before it returns or raises
+# session confs ``_read_staged`` sets while the Spark executor runs;
+# ``_run_stages`` restores them before it returns or raises
 _SPLIT_CONFS = ("spark.sql.files.maxPartitionBytes",
                 "spark.sql.files.openCostInBytes")
+# the Spark postings stage sizes its shuffle so that a reduce partition
+# holds about this many bytes of encoded runs
+_POSTINGS_PART_BYTES = 128 << 20
 
 
 class IndexBuilder:
-    """Builds (or resumes) an index at ``out_dir`` from a docs DataFrame."""
+    """Builds (or resumes) an index at ``out_dir`` from a docs DataFrame;
+    ``upsert`` runs the same stages as a later generation."""
 
     # Inputs whose Catalyst size estimate is under this many bytes are
     # built by the driver executor: the stage kernels run in-process on
@@ -1355,7 +1043,7 @@ class IndexBuilder:
         openCost), serializing every downstream map side on a couple of
         cores; at real scale the computed target saturates back to
         128MB so task counts stay sane.  The two confs are session-wide:
-        ``build`` restores them when it ends."""
+        ``_run_stages`` restores them when it ends."""
         par = max(self.spark.sparkContext.defaultParallelism, 1)
         total = _dir_bytes(path)
         tgt = max(1 << 20, min(128 << 20, total // (par * 2) or 1))
@@ -1387,7 +1075,6 @@ class IndexBuilder:
                 f"{missing}; an index built without them would silently "
                 f"index those fields as empty")
         t_start = time.time()
-        stages = []
 
         # format guard (ADVICE r01): resuming stages written by an older
         # format would mix schemas — force a rebuild instead.
@@ -1406,49 +1093,16 @@ class IndexBuilder:
                     [int(g) for g in old.get("committed_gens", [0])] != [0]:
                 force = True
 
-        # executor choice: the same stage graph runs in-process on the
-        # driver when the input is small, else as Spark jobs
-        est = self._size_estimate(docs_df)
-        executor = "driver" if est < self.DRIVER_BUILD_BYTES else "spark"
-        lock = threading.Lock()
-
-        def record(name: str, sec: float) -> None:
-            with lock:
-                stages.append({"stage": name, "sec": sec,
-                               "executor": executor,
-                               "size_estimate_bytes": est})
-
-        run = self._stale_stages(force)
-        saved = {k: self.spark.conf.get(k, None) for k in _SPLIT_CONFS}
-        try:
-            stages_fn = self._driver_stages if executor == "driver" \
-                else self._spark_stages
-            gstats, agg = stages_fn(docs_df, run, record)
-        finally:
-            for k, v in saved.items():
-                if v is None:
-                    self.spark.conf.unset(k)
-                else:
-                    self.spark.conf.set(k, v)
-
-        # the 1-row globalstats/ artifact is written driver-side by
-        # both executors; on resume the collection statistics come from
-        # docstats/ (globalstats stale) or from globalstats/ itself,
-        # and the dictionary aggregates from dict/
-        p_global = self.path("globalstats")
-        if "globalstats" in run:
-            t0 = time.time()
-            if gstats is None:
-                gstats = _gstats_of(_read_table(
-                    self.path("docstats"), ["doc_id", "doclen"], gen=0))
-            _write_globalstats(p_global, gstats)
-            record("globalstats", time.time() - t0)
-        else:
-            gstats = _read_table(p_global, gen=0).drop_columns(
-                ["gen"]).to_pylist()[0]
+        res = self._run_stages(docs_df, self._stale_stages(force))
+        # on resume the collection statistics come from globalstats/ and
+        # the dictionary aggregates from dict/
+        gstats, agg = res["gstats"], res["dict_stats"]
+        if gstats is None:
+            gstats = _read_table(self.path("globalstats"), gens=[0]) \
+                .drop_columns(["gen"]).to_pylist()[0]
         if agg is None:
             agg = _dict_stats_of(_read_table(self.path("dict"), ["df"],
-                                             gen=0))
+                                             gens=[0]))
 
         # metrics + manifest (lineage per north rule)
         wall = time.time() - t_start
@@ -1478,9 +1132,9 @@ class IndexBuilder:
             "generation": 0,
             "committed_gens": [0],
             "next_doc_id": int(gstats["max_doc_id"] or 0) + 1,
-            "executor": executor,
-            "size_estimate_bytes": est,
-            "stages": stages,
+            "executor": res["executor"],
+            "size_estimate_bytes": res["size_estimate_bytes"],
+            "stages": res["stages"],
             "metrics": self.metrics,
         }
         # tmp + rename, like every other commit: a failed write leaves
@@ -1498,25 +1152,71 @@ class IndexBuilder:
             build_spelling(Searcher(self.spark, self.out))
         return manifest
 
-    def _driver_stages(self, docs_df: DataFrame, run: set,
-                       record) -> tuple:
+    def _run_stages(self, docs_df: DataFrame, run: set, gen: int = 0,
+                    dict_dir: str = "dict") -> dict:
+        """Run the stages in ``run`` over ``docs_df`` as generation
+        ``gen``, on the executor the input's Catalyst size estimate
+        picks: in-process on the driver when it is small, else as Spark
+        jobs.  A build runs generation 0 and replaces each stage's
+        directory; an upsert runs a later one (``dict_dir`` is then the
+        manifest's live dictionary) and appends to them.  Returns the
+        executor, its stage records, the new docs' count and the
+        statistics the stages computed (None where a stage did not
+        run)."""
+        est = self._size_estimate(docs_df)
+        executor = "driver" if est < self.DRIVER_BUILD_BYTES else "spark"
+        stages: list = []
+        lock = threading.Lock()
+
+        def record(name: str, sec: float) -> None:
+            with lock:
+                stages.append({"stage": name, "sec": sec,
+                               "executor": executor,
+                               "size_estimate_bytes": est})
+
+        saved = {k: self.spark.conf.get(k, None) for k in _SPLIT_CONFS}
+        try:
+            stages_fn = self._driver_stages if executor == "driver" \
+                else self._spark_stages
+            res = stages_fn(docs_df, run, record, gen, dict_dir)
+        finally:
+            for k, v in saved.items():
+                if v is None:
+                    self.spark.conf.unset(k)
+                else:
+                    self.spark.conf.set(k, v)
+
+        # the 1-row globalstats/ file is written driver-side by both
+        # executors; a resume that reran no docstats reads docstats/
+        if "globalstats" in run:
+            t0 = time.time()
+            if res["gstats"] is None:
+                res["gstats"] = _gstats_of(_read_table(
+                    self.path("docstats"), ["doc_id", "doclen"], [gen]))
+            _write_globalstats(self.path("globalstats"), res["gstats"], gen)
+            record("globalstats", time.time() - t0)
+        res.update(executor=executor, size_estimate_bytes=est, stages=stages)
+        return res
+
+    def _driver_stages(self, docs_df: DataFrame, run: set, record,
+                       gen: int, dict_dir: str) -> dict:
         """The driver executor: the input arrives in one ``toArrow``
         job, then every stage in ``run`` runs its Spark counterpart's
         kernel in-process on pyarrow batches.  pyarrow sorts and
         ``group_by``s stand in for the exchanges, and ``_write_stage``
-        writes the layout the Spark writers write.  Returns ``(gstats,
-        dict_stats)``, None for a stage that did not run."""
-        gstats = dict_stats = None
+        writes the layout the Spark writers write."""
+        res = {"n_docs": None, "gstats": None, "dict_stats": None}
         # stage 1: forward store, sorted by doc_id, one file
         p_docs = self.path("docs")
         docs = None
         if "docs" in run:
             t0 = time.time()
-            docs = _with_gen(docs_df.toArrow().sort_by("doc_id"))
-            _write_stage(p_docs, {"": docs}, ["doc_id", "gen"])
+            docs = _with_gen(docs_df.toArrow().sort_by("doc_id"), gen)
+            _write_stage(p_docs, {"": docs}, ["doc_id", "gen"], gen)
+            res["n_docs"] = docs.num_rows
             record("docs", time.time() - t0)
         if not run & _PARTIALS_CONSUMERS:
-            return gstats, dict_stats
+            return res
 
         # stage 2: fused tokenize -> phase-1 encode, ONE kernel call
         # over the id-sorted docs, so every (term, block) is one run
@@ -1524,7 +1224,8 @@ class IndexBuilder:
         if "partials" in run:
             t0 = time.time()
             if docs is None:  # resume: the forward store is written
-                docs = _read_table(p_docs, _TOKENIZE_COLS).sort_by("doc_id")
+                docs = _read_table(p_docs, _TOKENIZE_COLS, [gen]) \
+                    .sort_by("doc_id")
             kern = _tokenize_encode_batches(self.n_buckets, self.block_span,
                                             self.mode, self.cjk_ngram)
             schema = to_arrow_schema(PARTIALS_SCHEMA)
@@ -1535,11 +1236,11 @@ class IndexBuilder:
                      b.to_pandas() for b in docs.select(_TOKENIZE_COLS)
                      .to_batches(max_chunksize=_DRIVER_BATCH_ROWS))],
                 schema=schema)
-            _write_stage(p_part, {"": _with_gen(part)},
-                         ["term", "block", "gen"])
+            _write_stage(p_part, {"": _with_gen(part, gen)},
+                         ["term", "block", "gen"], gen)
             record("partials", time.time() - t0)
         else:
-            part = _read_table(p_part, gen=0).drop_columns(["gen"])
+            part = _read_table(p_part, gens=[gen]).drop_columns(["gen"])
         del docs
 
         def batches(cols: list) -> list:
@@ -1548,11 +1249,11 @@ class IndexBuilder:
 
         if "terms" in run:
             t0 = time.time()
-            terms = _table(list(_termlist_kernel(self.n_buckets)(
+            terms = _table(list(_termlist_kernel()(
                 batches(["term", "bucket", "block", "n", "doc_gaps",
                          "wdfs", "doclens", "positions"]))), TERMS_SCHEMA)
-            _write_stage(self.path("terms"), {"": _with_gen(terms)},
-                         ["term", "doc_id", "gen"])
+            _write_stage(self.path("terms"), {"": _with_gen(terms, gen)},
+                         ["term", "doc_id", "gen"], gen)
             del terms
             record("terms", time.time() - t0)
 
@@ -1566,9 +1267,9 @@ class IndexBuilder:
                   .select(["doc_id", "doclen_max"])
                   .rename_columns(["doc_id", "doclen"])
                   .sort_by("doc_id"))
-            _write_stage(self.path("docstats"), {"": _with_gen(ds)},
-                         ["doc_id", "gen"])
-            gstats = _gstats_of(ds)
+            _write_stage(self.path("docstats"), {"": _with_gen(ds, gen)},
+                         ["doc_id", "gen"], gen)
+            res["gstats"] = _gstats_of(ds)
             record("docstats", time.time() - t0)
 
         # dictionary: df = Σ run lengths, cf = Σ per-run wdf sums,
@@ -1582,12 +1283,12 @@ class IndexBuilder:
                 "df": g["n_sum"].cast(pa.int64()),
                 "cf": g["sum_wdf_sum"].cast(pa.int64()),
                 "wdf_max": g["block_max_wdf_max"],
-            }).sort_by("term"))
+            }).sort_by("term"), gen)
             tpfx = [t[:1] for t in d.column("term").to_pylist()]
-            _write_stage(self.path("dict"),
+            _write_stage(self.path(dict_dir),
                          _hive_parts(self.spark, d, "tpfx", tpfx),
-                         ["term", "gen"])
-            dict_stats = _dict_stats_of(d)
+                         ["term", "gen"], gen)
+            res["dict_stats"] = _dict_stats_of(d)
             record("dict", time.time() - t0)
 
         # postings: phase 2 of the inversion over the sorted partials —
@@ -1600,20 +1301,23 @@ class IndexBuilder:
                 order + [("first_doc", "ascending")])
             post = _table(list(_merge_partial_runs()(src.to_batches(
                 max_chunksize=_DRIVER_BATCH_ROWS))), POSTINGS_SCHEMA)
-            post = _with_gen(post.sort_by(order))
+            post = _with_gen(post.sort_by(order), gen)
             _write_stage(self.path("postings"), _hive_parts(
                 self.spark, post, "bucket",
                 post.column("bucket").to_pylist()),
-                ["term", "block", "gen"])
+                ["term", "block", "gen"], gen)
             record("postings", time.time() - t0)
-        return gstats, dict_stats
+        return res
 
-    def _spark_stages(self, docs_df: DataFrame, run: set,
-                      record) -> tuple:
+    def _spark_stages(self, docs_df: DataFrame, run: set, record,
+                      gen: int, dict_dir: str) -> dict:
         """The Spark executor: every stage in ``run`` is a Spark job
         over the partitioned input, the partials consumers concurrently.
-        Returns ``(gstats, dict_stats)``, None for a stage that did not
-        run."""
+        Each write appends when ``gen`` > 0, and each read of a stage
+        output keeps only gen-``gen`` rows."""
+        from pyspark.sql import Observation
+        res = {"n_docs": None, "gstats": None, "dict_stats": None}
+        mode = "append" if gen else "overwrite"
         # stage 1: forward store, doc_id-clustered + sorted (the fetch
         # join's row-group pruning and the inversion's doc-range
         # invariant both hang off this).  The range exchange is SKIPPED
@@ -1679,14 +1383,17 @@ class IndexBuilder:
             blk = 8 << 20
             if in_bytes:
                 blk = max(256 << 10, min(8 << 20, in_bytes // (par * 2)))
+            dobs = Observation("docs")
             (src.sortWithinPartitions("doc_id")
-             .withColumn("gen", F.lit(0))
-             .write.mode("overwrite")
+             .withColumn("gen", F.lit(gen))
+             .observe(dobs, F.count(F.lit(1)).alias("n_docs"))
+             .write.mode(mode)
              .option("parquet.block.size", str(blk))
              .parquet(p_docs))
+            res["n_docs"] = int(dobs.get["n_docs"])
             record("docs", time.time() - t0)
         if not run & _PARTIALS_CONSUMERS:
-            return None, None
+            return res
 
         # stage 2: FUSED tokenize -> phase-1 encode (VERDICT r05 #1).
         # One Python pass over the forward store produces the partial
@@ -1694,51 +1401,45 @@ class IndexBuilder:
         # ONLY pass that ever tokenizes.  The write-time Observation
         # yields n_postings (one sum over the run lengths) so the
         # postings shuffle can be sized without waiting for the dict.
-        from pyspark.sql import Observation
         p_part = self.path("partials")
         part_stats: Optional[dict] = None
         if "partials" in run:
             t0 = time.time()
             pobs = Observation("partstats")
-            (self._read_staged(p_docs).select(*_TOKENIZE_COLS)
+            (self._read_staged(p_docs).filter(F.col("gen") == gen)
+             .select(*_TOKENIZE_COLS)
              .mapInPandas(
                  _tokenize_encode_batches(self.n_buckets, self.block_span,
                                           self.mode, self.cjk_ngram),
                  schema=PARTIALS_SCHEMA)
-             .withColumn("gen", F.lit(0))
+             .withColumn("gen", F.lit(gen))
              .observe(pobs, F.sum("n").alias("n_postings"))
-             .write.mode("overwrite").parquet(p_part))
+             .write.mode(mode).parquet(p_part))
             part_stats = dict(pobs.get)
             record("partials", time.time() - t0)
-        partials = self._read_staged(p_part)
-        part0 = partials.filter(F.col("gen") == 0)
+        part = self._read_staged(p_part).filter(F.col("gen") == gen)
 
         # stages 3-6 all derive from partials/ and nothing else (the
-        # postings stage lost its avg_doclen dependency with the dead
-        # block_max_part), so they run CONCURRENTLY from a small thread
+        # postings stage stores no score bound, so it does not wait for
+        # avg_doclen), so they run CONCURRENTLY from a small thread
         # pool (guide §2.6): the tiny termlist/docstats/dict jobs
         # back-fill executor capacity the postings stage's stragglers
         # leave idle, and none of them extends the build's critical
         # path.  Job descriptions are thread-local, so each stage stays
         # attributable in the UI.
-        results: dict = {}
-
         def run_termlist() -> None:
             # forward termlist (terms/): the row-per-(doc, term) table
-            # eset / upsert / the xq oracle consume — now DERIVED from
-            # the partials by a vectorized decode instead of being the
-            # artifact everything re-reads.  Identical rows to the v4
-            # staging (order aside).
+            # eset / upsert / the xq oracle consume — DERIVED from the
+            # partials by a vectorized decode
             self.spark.sparkContext.setJobDescription(
                 "build: termlist (derive from partials)")
             t0 = time.time()
             cols = ["term", "bucket", "block", "n", "doc_gaps",
                     "wdfs", "doclens", "positions"]
-            (part0.select(*cols)
-             .mapInArrow(_termlist_kernel(self.n_buckets),
-                         schema=TERMS_SCHEMA)
-             .withColumn("gen", F.lit(0))
-             .write.mode("overwrite").parquet(self.path("terms")))
+            (part.select(*cols)
+             .mapInArrow(_termlist_kernel(), schema=TERMS_SCHEMA)
+             .withColumn("gen", F.lit(gen))
+             .write.mode(mode).parquet(self.path("terms")))
             record("terms", time.time() - t0)
 
         def run_docstats() -> None:
@@ -1749,37 +1450,36 @@ class IndexBuilder:
             self.spark.sparkContext.setJobDescription("build: docstats")
             t0 = time.time()
             obs = Observation("gstats")
-            (part0.select("doc_gaps", "doclens", "n")
+            (part.select("doc_gaps", "doclens", "n")
              .mapInArrow(_docstats_kernel(), "doc_id bigint, doclen int")
              .groupBy("doc_id")
              .agg(F.max("doclen").alias("doclen"))
-             .withColumn("gen", F.lit(0))
+             .withColumn("gen", F.lit(gen))
              .observe(obs,
                       F.count("doc_id").alias("n_docs"),
                       F.sum("doclen").alias("total_doclen"),
                       F.min("doclen").alias("doclen_lb"),
                       F.max("doclen").alias("doclen_ub"),
                       F.max("doc_id").alias("max_doc_id"))
-             .write.mode("overwrite").parquet(self.path("docstats")))
+             .write.mode(mode).parquet(self.path("docstats")))
             gstats = dict(obs.get)
             gstats["avg_doclen"] = (gstats["total_doclen"] / gstats["n_docs"]
                                     if gstats.get("n_docs") else 0.0)
-            results["gstats"] = gstats
+            res["gstats"] = gstats
             record("docstats", time.time() - t0)
 
         def run_dict() -> None:
             # dictionary from the partials' tiny numeric columns:
             # df = Σ run lengths, cf = Σ per-run wdf sums, wdf_max =
-            # max per-run max — no string re-scan, no decode.  Same
-            # output rows and types as the v4 staging aggregation.
+            # max per-run max — no string re-scan, no decode.
             self.spark.sparkContext.setJobDescription("build: dict")
             t0 = time.time()
             dobs = Observation("dictstats")
-            (part0.groupBy("term", "bucket")
+            (part.groupBy("term", "bucket")
              .agg(F.sum("n").cast("long").alias("df"),
                   F.sum("sum_wdf").cast("long").alias("cf"),
                   F.max("block_max_wdf").alias("wdf_max"))
-             .withColumn("gen", F.lit(0))
+             .withColumn("gen", F.lit(gen))
              .withColumn("tpfx", F.substring("term", 1, 1))
              .repartition("tpfx", "bucket")
              .sortWithinPartitions("term")
@@ -1788,22 +1488,21 @@ class IndexBuilder:
                       F.max("df").alias("max_df"),
                       F.avg("df").alias("avg_df"),
                       F.count("term").alias("n_terms"))
-             .write.mode("overwrite")
-             .partitionBy("tpfx").parquet(self.path("dict")))
-            results["dict_stats"] = dict(dobs.get)
+             .write.mode(mode)
+             .partitionBy("tpfx").parquet(self.path(dict_dir)))
+            res["dict_stats"] = dict(dobs.get)
             record("dict", time.time() - t0)
 
         def run_postings() -> None:
             # phase 2 of the inversion only: the partials ARE the
             # phase-1 output, so this stage is shuffle + concat-merge +
-            # write — the staging re-scan and the map-side sort that
-            # dominated rounds 2-5 are gone.
+            # write.
             self.spark.sparkContext.setJobDescription("build: postings")
             t0 = time.time()
             if part_stats is not None:
                 n_post = int(part_stats.get("n_postings") or 0)
             else:  # resume: one tiny scan of the run-length column
-                n_post = int(part0.agg(
+                n_post = int(part.agg(
                     F.sum("n")).collect()[0][0] or 0)
             # size the partial-run shuffle by DATA VOLUME when the
             # default is too coarse: the wire carries already-encoded
@@ -1813,15 +1512,14 @@ class IndexBuilder:
             # numPartitions disables AQE partition coalescing, which
             # costs 3-4x on small corpora (measured at sf0.1/local[32]
             # in r4: 2.4-6.4 s implicit vs 8.7-11.6 s forced-32).
-            part_mb = int(os.environ.get("MDQ_INV_PART_MB", "128"))
             sp_default = int(self.spark.conf.get(
                 "spark.sql.shuffle.partitions", "200"))
-            n_by_bytes = n_post * 6 // (part_mb << 20) + 1
+            n_by_bytes = n_post * 6 // _POSTINGS_PART_BYTES + 1
             n_inv = min(10000, n_by_bytes) \
                 if n_by_bytes > sp_default else None
-            (merge_partials(part0.select(*_POSTINGS_COLS), n_inv)
-             .withColumn("gen", F.lit(0))
-             .write.mode("overwrite")
+            (merge_partials(part.select(*_POSTINGS_COLS), n_inv)
+             .withColumn("gen", F.lit(gen))
+             .write.mode(mode)
              .partitionBy("bucket").parquet(self.path("postings")))
             record("postings", time.time() - t0)
 
@@ -1839,8 +1537,7 @@ class IndexBuilder:
                 for fut in futures:
                     fut.result()  # re-raise the first stage failure
         self.spark.sparkContext.setJobDescription(None)
-
-        return results.get("gstats"), results.get("dict_stats")
+        return res
 
 
 def build_index(spark: SparkSession, docs_df: DataFrame, out_dir: str,

@@ -19,13 +19,14 @@ Conventions:
 
 from __future__ import annotations
 
+import json
 import os
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import datapipe
-from .build import build_index
+from .build import FORMAT_VERSION, build_index
 from .ingest import docs_from_documents_table
 from .plan import Bool, Node, Positional, Term, Wildcard
 from .search import Searcher
@@ -34,6 +35,17 @@ IDX_CACHE = os.path.join(os.path.dirname(os.path.dirname(
     os.path.abspath(__file__))), "_idx_cache")
 
 _SEARCHERS: dict = {}
+
+
+def _cached(out: str) -> bool:
+    """Does ``out`` hold a cached index of the current format?  One of
+    another format is rebuilt (``build`` forces that rebuild), so the
+    queries never run over an index that older code wrote."""
+    mpath = os.path.join(out, "manifest.json")
+    if not os.path.exists(mpath):
+        return False
+    with open(mpath) as f:
+        return json.load(f).get("format_version") == FORMAT_VERSION
 
 
 def ensure_index(spark: SparkSession, sf_dir: str, mode: str) -> Searcher:
@@ -45,7 +57,7 @@ def ensure_index(spark: SparkSession, sf_dir: str, mode: str) -> Searcher:
     key = (out,)
     if key in _SEARCHERS:
         return _SEARCHERS[key]
-    if not os.path.exists(os.path.join(out, "manifest.json")):
+    if not _cached(out):
         docs = docs_from_documents_table(spark, sf_dir)
         # spelling=True: ft_spelling answers from the prebuilt bucketed
         # fragment table on a cold index (VERDICT r03 #6); the
@@ -588,7 +600,7 @@ def ensure_cjk_index(spark: SparkSession, sf_dir: str) -> Searcher:
     key = (out,)
     if key in _SEARCHERS:
         return _SEARCHERS[key]
-    if not os.path.exists(os.path.join(out, "manifest.json")):
+    if not _cached(out):
         import pandas as pd
 
         from .corpus import cjk_augment

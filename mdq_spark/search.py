@@ -36,10 +36,11 @@ Physical strategy (SURVEY.md §3.3 lifecycle):
    DataFrame (S5).
 
 Block-max pruning (O3): before decoding, posting *block metadata*
-(first_doc/last_doc/block_max_part — tiny columns, the binary payload is
-never read thanks to parquet column pruning) can bound each doc-range's
-best possible score; blocks whose interval upper bound is below a
-safe threshold θ are dropped before the expensive decode.  θ is obtained
+(first_doc/last_doc/block_max_wdf/block_min_doclen — tiny columns, the
+binary payload is never read thanks to parquet column pruning) can
+bound each doc-range's best possible score; blocks whose interval upper
+bound is below a safe threshold θ are dropped before the expensive
+decode.  θ is obtained
 by fully scoring the best-bounded blocks first (exact), so pruning never
 changes results — verified by tests running both paths.
 """
@@ -1441,7 +1442,8 @@ class Searcher:
 
         Upsert-safe (ADVICE r01): bounds are computed from the stored
         block_max_wdf + block_min_doclen under the CURRENT 1/avgdl —
-        never from the stale build-time block_max_part."""
+        the index stores no score bound that an upsert could leave
+        stale."""
         if not self.prune_capable:
             return None
         all_terms = sorted({t for _, tm in units for t in tm})

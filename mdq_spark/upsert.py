@@ -5,15 +5,18 @@ The reference upserts by identity term ``Q + fullpath``
 (/root/reference/src/document.rs:185-188) with one commit per batch
 (src/main.rs:110).  Here a batch upsert is:
 
-1. docs whose ``fullpath`` matches an incoming row are *tombstoned*
+1. incoming docs get fresh doc_ids past the manifest's ``next_doc_id``,
+   so their posting blocks land in brand-new doc-range blocks — appends
+   only;
+2. the build's own stage graph (``IndexBuilder._run_stages``) runs over
+   them as a new generation, on the executor their size picks: docs,
+   partials, terms, docstats, dict and postings files are appended to
+   the index's directories;
+3. docs whose ``fullpath`` matches an incoming row are *tombstoned*
    (their doc_ids recorded; old posting blocks are never rewritten);
-2. incoming docs get fresh doc_ids past the old maximum, so their
-   posting blocks land in brand-new doc-range blocks — appends only;
-3. the new batch's postings/dict/docstats/docs parquet files are
-   appended to the same directories;
 4. *negative* dictionary deltas for the tombstoned docs (computed
-   exactly from the terms staging — the checkpoint pays off) go to
-   ``dict_delta/`` so df/cf stay exact without rewriting ``dict/``;
+   exactly from their committed ``terms/`` rows) go to ``dict_delta/``
+   so df/cf stay exact without rewriting ``dict/``;
 5. ``globalstats`` is recomputed exactly from docstats minus tombstones;
 6. the manifest records the new generation (the "commit").
 
@@ -42,16 +45,24 @@ import os
 import shutil
 import time
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
-from . import bm25
 from .build import (
-    FORMAT_VERSION, TERMS_SCHEMA, _tokenize_batches, build_index,
-    invert_postings,
+    DOCS_SCHEMA, FORMAT_VERSION, TERMS_SCHEMA, IndexBuilder, _STAGES,
+    _gstats_of, _read_table, _with_gen, _write_globalstats, _write_stage,
+    build_index,
 )
 
 TOMBSTONE_SCHEMA = "doc_id bigint, gen int"
 DICT_DELTA_SCHEMA = "term string, bucket int, ddf bigint, dcf bigint, gen int"
+
+# An upsert runs every build stage except globalstats, which it
+# recomputes over all live docs, and resumes none: a crashed attempt
+# stays invisible, and its retry starts over in a fresh generation.
+_UPSERT_STAGES = frozenset(_STAGES) - {"globalstats"}
 
 
 def _manifest(index_dir: str) -> dict:
@@ -67,6 +78,12 @@ def _write_manifest(index_dir: str, m: dict) -> None:
     os.replace(tmp, path)  # atomic on POSIX — this IS the commit
 
 
+def _with_gen_field(schema: StructType) -> StructType:
+    """``schema`` plus the ``gen`` column every artifact row carries.  A
+    read given its schema skips Spark's schema-inference job."""
+    return StructType(schema.fields + [StructField("gen", IntegerType())])
+
+
 def upsert(spark: SparkSession, index_dir: str,
            new_docs_df: DataFrame,
            auto_compact_ratio: float | None = None,
@@ -78,6 +95,7 @@ def upsert(spark: SparkSession, index_dir: str,
     of total docs.  ``spelling``: rebuild the spelling fragment table
     after the commit (the old table is generation-stale the moment the
     commit lands, so readers fall back until the rebuild publishes)."""
+    from .ingest import _doc_shape, dense_ids
     index_dir = index_dir.rstrip("/")
     m = _manifest(index_dir)
     if int(m.get("format_version", 1)) != FORMAT_VERSION:
@@ -86,124 +104,80 @@ def upsert(spark: SparkSession, index_dir: str,
             f"this build writes v{FORMAT_VERSION}: run compact() (or "
             f"rebuild) before upserting")
     committed = [int(g) for g in m.get("committed_gens", [0])]
-    block_span = int(m["block_span"])
-    n_buckets = int(m["n_buckets"])
-    mode = m.get("mode", "xapian")
-    cjk_ngram = bool(m.get("cjk_ngram", False))
+    docs_path = f"{index_dir}/docs"
+    # fresh gen PAST every gen on disk: orphan appends from crashed
+    # attempts (docs is the first artifact an attempt writes, so orphan
+    # gens appear there) and the tombstones and dict deltas of upserts
+    # that a forced rebuild, which rewrites only the build's stages,
+    # left behind — a reused gen would make them visible again
+    seen = [pc.max(_read_table(f"{index_dir}/{d}", ["gen"])
+                   .column("gen")).as_py()
+            for d in ("docs", "tombstones", "dict_delta")
+            if os.path.exists(f"{index_dir}/{d}")]
+    gen = max(committed + [g for g in seen if g is not None]) + 1
 
-    docs_all = spark.read.parquet(f"{index_dir}/docs")
-    # fresh gen PAST any orphan appends from crashed attempts (docs is
-    # the first artifact an attempt writes, so orphan gens appear there)
-    max_seen = docs_all.agg(F.max("gen")).collect()[0][0] or 0
-    gen = max(max(committed), int(max_seen)) + 1
-
-    docs = docs_all.filter(F.col("gen").isin(committed))
-    terms = spark.read.parquet(f"{index_dir}/terms") \
-        .filter(F.col("gen").isin(committed))
-    tomb_path = f"{index_dir}/tombstones"
-    old_tombs = None
-    if os.path.exists(tomb_path):
-        old_tombs = spark.read.parquet(tomb_path) \
-            .filter(F.col("gen").isin(committed))
-
-    # 1. tombstones for replaced fullpaths (Q+fullpath identity, S3) —
-    # computed now, written after the data appends, visible at commit
-    incoming_paths = new_docs_df.select("fullpath").distinct()
-    live = docs
-    if old_tombs is not None:
-        live = live.join(old_tombs.select("doc_id"), "doc_id", "left_anti")
-    tombs = live.join(incoming_paths, "fullpath", "left_semi") \
-        .select("doc_id").withColumn("gen", F.lit(gen))
-
-    # 2. fresh dense doc_ids past the committed maximum, assigned
+    # 1. fresh dense doc_ids past the committed maximum, assigned
     # DataFrame-native (ingest.dense_ids — no .rdd, no per-row Python;
     # VERDICT r02 #2).  Orphan rows from a crashed attempt may share
     # these ids — harmless, since only one gen holding a given doc_id
     # can ever be committed.
-    from .ingest import dense_ids
-    next_id = int(m.get("next_doc_id", 0))
-    if not next_id:
-        next_id = int(docs.agg(F.max("doc_id")).collect()[0][0] or 0) + 1
-    cols = [c for c in docs.columns if c != "gen"]
-    new_docs = dense_ids(new_docs_df.drop("doc_id"), ["fullpath"],
-                         id_offset=next_id).select(*cols)
-    n_new = new_docs.count()
+    next_id = int(m["next_doc_id"])
+    new_docs = _doc_shape(dense_ids(new_docs_df.drop("doc_id"), ["fullpath"],
+                                    id_offset=next_id))
 
-    # 3. append forward store + tokenized staging + postings + dict,
-    # all tagged with the uncommitted gen
-    new_docs.withColumn("gen", F.lit(gen)) \
-        .write.mode("append").parquet(f"{index_dir}/docs")
-    staged = new_docs.mapInPandas(
-        _tokenize_batches(n_buckets, block_span, mode, cjk_ngram),
-        schema=TERMS_SCHEMA)
-    staged.withColumn("gen", F.lit(gen)) \
-        .write.mode("append").parquet(f"{index_dir}/terms")
-    new_terms = spark.read.parquet(f"{index_dir}/terms") \
-        .filter(F.col("gen") == gen)
-    (new_terms.groupBy("doc_id").agg(F.max("doclen").alias("doclen"))
-     .withColumn("gen", F.lit(gen))
-     .write.mode("append").parquet(f"{index_dir}/docstats"))
-    (new_terms.groupBy("term", "bucket")
-     .agg(F.count("doc_id").alias("df"), F.sum("wdf").alias("cf"),
-          F.max("wdf").alias("wdf_max"))
-     .withColumn("gen", F.lit(gen))
-     .withColumn("tpfx", F.substring("term", 1, 1))
-     .write.mode("append").partitionBy("tpfx")
-     .parquet(f"{index_dir}/{m.get('dict_dir', 'dict')}"))
+    # 2. the build's stages as generation ``gen``, all appends that stay
+    # invisible until the commit; the dictionary goes to the live
+    # dict_dir, which fold_dict_deltas may have moved
+    builder = IndexBuilder(spark, index_dir, block_span=int(m["block_span"]),
+                           n_buckets=int(m["n_buckets"]),
+                           mode=m.get("mode", "xapian"),
+                           cjk_ngram=bool(m.get("cjk_ngram", False)))
+    res = builder._run_stages(new_docs, _UPSERT_STAGES, gen,
+                              m.get("dict_dir", "dict"))
+    n_new = int(res["n_docs"])
 
-    # 4. exact negative dict deltas for tombstoned docs (from committed
-    # staging rows only — orphan doc_id collisions are filtered out)
-    this_tombs = tombs.select("doc_id")
-    neg = (terms.join(this_tombs, "doc_id", "left_semi")
-           .groupBy("term", "bucket")
-           .agg((-F.count("doc_id")).cast("long").alias("ddf"),
-                (-F.sum("wdf")).cast("long").alias("dcf"))
-           .withColumn("gen", F.lit(gen)))
-    neg.write.mode("append").parquet(f"{index_dir}/dict_delta")
+    # 3. tombstones for replaced fullpaths (Q+fullpath identity, S3):
+    # the committed docs sharing a path with the batch, less those
+    # already tombstoned — about as many as the batch has docs, so they
+    # are collected
+    tomb_path = f"{index_dir}/tombstones"
+    old_tombs = pa.array([], pa.int64())
+    if os.path.exists(tomb_path):
+        old_tombs = _read_table(tomb_path, ["doc_id"], committed) \
+            .column("doc_id").combine_chunks()
+    replaced = (spark.read.schema(_with_gen_field(DOCS_SCHEMA))
+                .parquet(docs_path)
+                .filter(F.col("gen").isin(committed))
+                .join(new_docs_df.select("fullpath"), "fullpath", "left_semi")
+                .select("doc_id").collect())
+    replaced = pa.array([r["doc_id"] for r in replaced], pa.int64())
+    tombs = pc.unique(replaced.filter(pc.invert(pc.is_in(replaced,
+                                                         old_tombs))))
+    if len(tombs):
+        # 4. exact negative dict deltas for the tombstoned docs, from
+        # their committed termlist rows (orphan doc_id collisions are
+        # filtered out)
+        ids = spark.createDataFrame(pa.table({"doc_id": tombs}))
+        (spark.read.schema(_with_gen_field(TERMS_SCHEMA))
+         .parquet(f"{index_dir}/terms")
+         .filter(F.col("gen").isin(committed))
+         .join(F.broadcast(ids), "doc_id", "left_semi")
+         .groupBy("term", "bucket")
+         .agg((-F.count("doc_id")).cast("long").alias("ddf"),
+              (-F.sum("wdf")).cast("long").alias("dcf"))
+         .withColumn("gen", F.lit(gen))
+         .write.mode("append").parquet(f"{index_dir}/dict_delta"))
+        _write_stage(tomb_path, {"": _with_gen(pa.table({"doc_id": tombs}),
+                                               gen)}, ["doc_id", "gen"], gen)
 
-    # 5. exact global stats over live docs as of this gen
-    vis = committed + [gen]
-    all_tomb_ids = tombs.select("doc_id")
-    if old_tombs is not None:
-        all_tomb_ids = all_tomb_ids.unionByName(old_tombs.select("doc_id"))
-    live_stats = (spark.read.parquet(f"{index_dir}/docstats")
-                  .filter(F.col("gen").isin(vis))
-                  .join(all_tomb_ids.distinct(), "doc_id", "left_anti"))
-    gs = live_stats.agg(
-        F.count("doc_id").alias("n_docs"),
-        F.sum("doclen").alias("total_doclen"),
-        F.min("doclen").alias("doclen_lb"),
-        F.max("doclen").alias("doclen_ub"),
-        F.max("doc_id").alias("max_doc_id")).collect()[0].asDict()
-    gs["avg_doclen"] = (gs["total_doclen"] / gs["n_docs"]) \
-        if gs["n_docs"] else 0.0
-    # gen-tagged APPEND (format v4, ADVICE r02): the new stats row stays
-    # invisible until the manifest commit lists this gen — a crash here
-    # can no longer leave on-disk stats describing an uncommitted
-    # generation.  Readers take the row of the highest committed gen.
-    # Casts pin the exact column types the build stage wrote (appended
-    # parquet files must agree field-for-field).
-    (spark.createDataFrame([gs]).select(
-        F.col("n_docs").cast("long"),
-        F.col("total_doclen").cast("long"),
-        F.col("doclen_lb").cast("int"),
-        F.col("doclen_ub").cast("int"),
-        F.col("max_doc_id").cast("long"),
-        F.col("avg_doclen").cast("double"),
-        F.lit(gen).cast("int").alias("gen"))
-     .write.mode("append").parquet(f"{index_dir}/globalstats"))
-
-    # postings for the new blocks (after globalstats so lf is current):
-    # same two-phase inversion as the build — the new gen's staging
-    # files are doc-clustered by dense_ids, so splits are doc-disjoint
-    lf = bm25.len_factor(float(gs["avg_doclen"] or 0.0))
-    (invert_postings(new_terms.drop("bucket"), lf, n_buckets)
-     .withColumn("gen", F.lit(gen))
-     .write.mode("append").partitionBy("bucket")
-     .parquet(f"{index_dir}/postings"))
-
-    # tombstones last among the data writes; manifest write = commit
-    tombs.write.mode("append").parquet(tomb_path)
+    # 5. exact global stats over the live docs as of this gen, in a
+    # gen-tagged file that stays invisible until the commit
+    dead = pa.concat_arrays([old_tombs, tombs])
+    stats = _read_table(f"{index_dir}/docstats", ["doc_id", "doclen"],
+                        committed + [gen])
+    gs = _gstats_of(stats.filter(
+        pc.invert(pc.is_in(stats.column("doc_id"), dead))))
+    _write_globalstats(f"{index_dir}/globalstats", gs, gen)
 
     # 6. commit
     m["generation"] = gen
@@ -213,15 +187,13 @@ def upsert(spark: SparkSession, index_dir: str,
                         for k, v in gs.items()}
     m.setdefault("upserts", []).append({
         "gen": gen, "n_new": n_new, "ts": time.time(),
+        "executor": res["executor"],
     })
     _write_manifest(index_dir, m)
 
     if auto_compact_ratio is not None:
         n_live = int(gs["n_docs"] or 0)
-        n_tomb = spark.read.parquet(tomb_path) \
-            .filter(F.col("gen").isin(m["committed_gens"])) \
-            .select("doc_id").distinct().count() \
-            if os.path.exists(tomb_path) else 0
+        n_tomb = len(pc.unique(dead))
         total = n_live + n_tomb
         if total and n_tomb / total >= auto_compact_ratio:
             m = compact_in_place(spark, index_dir)

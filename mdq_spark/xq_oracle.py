@@ -19,10 +19,10 @@ The term-rows export is PURE PYTHON (pyarrow, no Spark): it applies the
 same two deterministic functions the engine's build kernel runs —
 ``corpus.doc_from_documents_row`` (the parity-tested twin of the native
 ingest expressions) and ``tokenize.document_term_rows`` (the exact
-function ``build._tokenize_batches`` calls per document) — so the
-parquet is the engine's own staging data re-derived independently of
-Spark; ``tests/test_xq_oracle.py`` asserts row-for-row identity against
-a real index build's ``terms/`` staging.  Being Spark-free means
+function the fused ``build._tokenize_encode_batches`` kernel calls per
+document) — so the parquet is the engine's own forward termlist
+re-derived independently of Spark; ``tests/test_xq_oracle.py`` asserts
+row-for-row identity against a real index build's ``terms/``.  Being Spark-free means
 ``oracle_sql()`` can (re)generate it at registration time, so the
 DuckDB side never depends on the Spark side having run first.
 

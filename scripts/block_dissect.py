@@ -27,7 +27,7 @@ def main() -> None:
     from pyspark.sql import functions as F
     from mdq_spark.build import (
         TERMS_SCHEMA, _docstats_kernel, _termlist_kernel, merge_partials,
-        _POSTINGS_COLS, DEFAULT_N_BUCKETS,
+        _POSTINGS_COLS,
     )
     from mdq_spark.session import get_spark
 
@@ -58,8 +58,7 @@ def main() -> None:
     cols = ["term", "bucket", "block", "n", "doc_gaps",
             "wdfs", "doclens", "positions"]
     tl = (part0.select(*cols)
-          .mapInArrow(_termlist_kernel(DEFAULT_N_BUCKETS),
-                      schema=TERMS_SCHEMA)
+          .mapInArrow(_termlist_kernel(), schema=TERMS_SCHEMA)
           .withColumn("gen", F.lit(0)))
     t("termlist: kernel noop", lambda: noop(tl))
     t("termlist: kernel + write",

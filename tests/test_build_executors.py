@@ -1,7 +1,9 @@
 """The build's two executors: the driver executor (stage kernels
 in-process on pyarrow) and the Spark executor must write the same index,
-through a fresh build, an upsert, a compaction and a resume."""
+through a fresh build, an upsert (the same stages as a later
+generation), a compaction and a resume."""
 
+import glob
 import json
 import os
 import shutil
@@ -35,6 +37,13 @@ UPSERT = [
 ]
 
 KW = dict(block_span=4, n_buckets=8)
+# the executor limit that picks each executor for the fixture's inputs
+LIMITS = {"driver": IndexBuilder.DRIVER_BUILD_BYTES, "spark": 0}
+# Spark jobs a small driver upsert may run: 11 were counted on the test
+# session — dense_ids' range sampling, checkpoint and counts (5), the
+# stages' one ``toArrow`` (1), the tombstone probe of ``docs/`` (2) and
+# the negative dict-delta write (3).  The staging path it replaced ran 40.
+JOBS_PER_DRIVER_UPSERT = 12
 
 
 def _decoded_postings(rows):
@@ -130,25 +139,91 @@ def test_executors_write_equal_indexes(spark, pair):
 
 
 def test_executors_equal_after_upsert_and_compaction(spark, pair,
-                                                      tmp_path):
+                                                      tmp_path, monkeypatch):
+    """An upsert runs the build's stages on the executor its batch's
+    size picks: the driver for a small Arrow-backed batch, Spark when
+    the limit is 0.  Upserts by either executor into an index built by
+    either write equal indexes with equal answers, and so do the
+    compactions that follow."""
     drv0, _, spk0, _ = pair
-    drv, spk = str(tmp_path / "driver"), str(tmp_path / "spark")
-    shutil.copytree(drv0, drv)
-    shutil.copytree(spk0, spk)
-    for out in (drv, spk):
-        upsert(spark, out, spark.createDataFrame(UPSERT,
-                                                 schema=B.DOCS_SCHEMA))
-    assert snapshot(spark, drv) == snapshot(spark, spk)
-    assert answers(spark, drv) == answers(spark, spk)
+    outs = {}
+    for built, src in (("driver", drv0), ("spark", spk0)):
+        for executor, limit in LIMITS.items():
+            out = str(tmp_path / f"{built}-{executor}")
+            shutil.copytree(src, out)
+            monkeypatch.setattr(IndexBuilder, "DRIVER_BUILD_BYTES", limit)
+            m = upsert(spark, out, local_docs_df(spark, UPSERT))
+            assert m["upserts"][-1]["executor"] == executor
+            outs[built, executor] = out
+    snaps = [snapshot(spark, out) for out in outs.values()]
+    assert snaps[0]["tombstones"] and snaps[0]["dict_delta"]
+    assert all(snap == snaps[0] for snap in snaps[1:])
+    want = answers(spark, outs["driver", "driver"])
+    assert all(answers(spark, out) == want for out in outs.values())
+
+    drv, spk = outs["driver", "spark"], outs["spark", "driver"]
+    monkeypatch.setattr(IndexBuilder, "DRIVER_BUILD_BYTES", LIMITS["driver"])
     m_drv = compact_in_place(spark, drv)
-    with pytest.MonkeyPatch.context() as mp:
-        mp.setattr(IndexBuilder, "DRIVER_BUILD_BYTES", 0)
-        m_spk = compact_in_place(spark, spk)
+    monkeypatch.setattr(IndexBuilder, "DRIVER_BUILD_BYTES", LIMITS["spark"])
+    m_spk = compact_in_place(spark, spk)
     assert (m_drv["executor"], m_spk["executor"]) == ("driver", "spark")
     a, b = snapshot(spark, drv), snapshot(spark, spk)
     assert a["tombstones"] is None and a["docs"]
     assert a == b
-    assert answers(spark, drv) == answers(spark, spk)
+    assert answers(spark, drv) == answers(spark, spk) == want
+
+
+def test_driver_upsert_runs_few_spark_jobs(spark, pair, tmp_path):
+    """A small driver upsert runs its stages in one ``toArrow`` job; the
+    other jobs assign ids and do the tombstone bookkeeping, which reads
+    the committed index through Spark."""
+    out = str(tmp_path / "idx")
+    shutil.copytree(pair[0], out)
+    m, n = count_spark_jobs(
+        spark, lambda: upsert(spark, out, local_docs_df(spark, UPSERT)))
+    assert m["upserts"][-1]["executor"] == "driver"
+    assert n <= JOBS_PER_DRIVER_UPSERT, n
+
+
+def test_v5_index_refuses_upsert_and_compaction_migrates(spark, pair,
+                                                         tmp_path):
+    """Format v6 dropped the dead ``block_max_part`` posting column.  A
+    v5 index — made here from a v6 one by adding the column back as
+    zeros and stamping the manifest v5 — refuses ``upsert()`` and
+    answers as before; ``compact_in_place`` rebuilds it from ``docs/``
+    as a v6 index with the same answers."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    out = str(tmp_path / "v5")
+    shutil.copytree(pair[0], out)
+    want = answers(spark, out)
+    files = glob.glob(os.path.join(out, "postings", "bucket=*", "*.parquet"))
+    assert files
+    for f in files:
+        t = pq.ParquetFile(f).read()
+        t = t.add_column(t.schema.get_field_index("block_min_doclen"),
+                         "block_max_part", pa.array(np.zeros(t.num_rows)))
+        pq.write_table(t, f)
+    mpath = os.path.join(out, "manifest.json")
+    with open(mpath) as f:
+        m = json.load(f)
+    m["format_version"] = 5
+    with open(mpath, "w") as f:
+        json.dump(m, f)
+
+    def postings_cols():
+        return spark.read.parquet(os.path.join(out, "postings")).columns
+
+    assert "block_max_part" in postings_cols()
+    with pytest.raises(ValueError, match=r"v5.*run compact\(\)"):
+        upsert(spark, out, local_docs_df(spark, UPSERT))
+    assert answers(spark, out) == want
+    m6 = compact_in_place(spark, out)
+    assert m6["format_version"] == B.FORMAT_VERSION == 6
+    assert "block_max_part" not in postings_cols()
+    assert answers(spark, out) == want
 
 
 FIRST_CHARS = ["%", "#", "=", "/", ":", "?", "\\", "{", "[", "]", "^", "*",

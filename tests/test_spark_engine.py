@@ -98,6 +98,43 @@ def _sha(body):
     return hashlib.sha256(body.encode()).hexdigest()
 
 
+def _oracle_rows(docs, n_buckets=8, block_span=4):
+    """The (term, bucket, block, doc_id, wdf, doclen, positions) rows an
+    index of ``docs`` must hold, from ``OracleIndex``: its row tokenizer
+    (``document_terms``), not the build kernels under test."""
+    from mdq_spark.build import term_bucket
+    o = OracleIndex.build(docs)
+    return sorted(
+        (t, term_bucket(t, n_buckets), d // block_span, d, wdf,
+         o.doclen[d], tuple(o.positions.get(t, {}).get(d, ())))
+        for t, pl in o.postings.items() for d, wdf in pl.items())
+
+
+def _decoded_postings(rows):
+    """Posting block rows decoded to ``_oracle_rows``' shape; each
+    block's metadata must describe its decoded run exactly."""
+    from mdq_spark.codec import (
+        decode_doc_gaps, decode_positions, varint_decode,
+    )
+    out = []
+    for r in rows:
+        n = int(r["n"])
+        ids = decode_doc_gaps(bytes(r["doc_gaps"]), n)
+        wdfs = varint_decode(bytes(r["wdfs"]), n)
+        dls = varint_decode(bytes(r["doclens"]), n)
+        assert int(r["first_doc"]) == int(ids[0])
+        assert int(r["last_doc"]) == int(ids[-1])
+        assert int(r["block_max_wdf"]) == int(wdfs.max())
+        assert int(r["block_min_doclen"]) == int(dls.min())
+        pls = decode_positions(bytes(r["positions"]), n) \
+            if r["positions"] is not None else [()] * n
+        for i in range(n):
+            out.append((r["term"], int(r["bucket"]), int(r["block"]),
+                        int(ids[i]), int(wdfs[i]), int(dls[i]),
+                        tuple(int(x) for x in pls[i])))
+    return sorted(out)
+
+
 @pytest.fixture(scope="module")
 def index(spark, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("idx"))
@@ -267,51 +304,34 @@ def test_sha256_invariant(spark, index):
 
 
 def test_partial_run_merge_identity(spark, index):
-    """The two-phase inversion (map-side partial runs + reduce-side
-    concat merge, VERDICT r04 #1) must produce identical posting
-    content no matter how the staging is split: one partition (every
-    group one partial — the vectorized pass-through), several doc-range
-    partitions (disjoint merge with bridge-gap varint patches), and a
-    round-robin split that VIOLATES the doc-disjointness invariant
-    (overlapping partials — the pass-through fallback emits multiple
-    rows per group, which the query kernels merge like upsert gens)."""
+    """The two-phase inversion (fused map-side partial runs + reduce-side
+    concat merge) must produce the oracle's posting content no matter
+    how the docs are split: one partition (every group one partial —
+    the vectorized pass-through), several doc-range partitions (disjoint
+    merge with bridge-gap varint patches), and a round-robin split that
+    VIOLATES the doc-disjointness invariant (overlapping partials — the
+    pass-through fallback emits multiple rows per group, which the query
+    kernels merge like upsert gens)."""
     from pyspark.sql import functions as F
-    from mdq_spark import bm25
-    from mdq_spark.build import invert_postings
-    from mdq_spark.codec import (
-        decode_doc_gaps, decode_positions, varint_decode,
+    from mdq_spark.build import (
+        PARTIALS_SCHEMA, _POSTINGS_COLS, _TOKENIZE_COLS,
+        _tokenize_encode_batches, merge_partials,
     )
 
-    out, manifest = index
-    terms = spark.read.parquet(f"{out}/terms") \
-        .filter(F.col("gen") == 0).drop("bucket")
-    lf = bm25.len_factor(manifest["globalstats"]["avg_doclen"])
+    out, _ = index
+    docs = spark.read.parquet(f"{out}/docs").filter(F.col("gen") == 0) \
+        .select(*_TOKENIZE_COLS)
+    kern = _tokenize_encode_batches(8, 4, "xapian", False)
 
-    def decoded(df):
-        rows = []
-        for r in df.collect():
-            n = int(r["n"])
-            ids = decode_doc_gaps(bytes(r["doc_gaps"]), n)
-            wdfs = varint_decode(bytes(r["wdfs"]), n)
-            dls = varint_decode(bytes(r["doclens"]), n)
-            # block metadata must describe the decoded run exactly
-            assert int(r["first_doc"]) == int(ids[0])
-            assert int(r["last_doc"]) == int(ids[-1])
-            assert int(r["block_max_wdf"]) == int(wdfs.max())
-            assert int(r["block_min_doclen"]) == int(dls.min())
-            pls = decode_positions(bytes(r["positions"]), n) \
-                if r["positions"] is not None else [()] * n
-            for i in range(n):
-                rows.append((r["term"], int(r["block"]), int(ids[i]),
-                             int(wdfs[i]), int(dls[i]),
-                             tuple(int(x) for x in pls[i])))
-        return sorted(rows)
+    def merged(split):
+        part = split.mapInPandas(kern, schema=PARTIALS_SCHEMA)
+        return merge_partials(part.select(*_POSTINGS_COLS))
 
-    base = decoded(invert_postings(terms.coalesce(1), lf, 8))
-    ranged = invert_postings(
-        terms.repartitionByRange(4, "doc_id"), lf, 8)
-    assert decoded(ranged) == base
-    assert decoded(invert_postings(terms.repartition(4), lf, 8)) == base
+    want = _oracle_rows(DOCS)
+    assert _decoded_postings(merged(docs.coalesce(1)).collect()) == want
+    ranged = merged(docs.repartitionByRange(4, "doc_id"))
+    assert _decoded_postings(ranged.collect()) == want
+    assert _decoded_postings(merged(docs.repartition(4)).collect()) == want
     # doc-range splits keep the disjointness invariant, so their
     # partials must actually MERGE: one row per (term, block)
     assert int(ranged.groupBy("term", "block").count()
@@ -653,66 +673,29 @@ def test_batch_search_volume_cap_grouping(spark, index, oracle):
         assert_results_match(expected, [(d, s) for _, d, s in got])
 
 
-def test_fused_termlist_matches_v4_staging_kernel(spark, index):
-    """Round-6 fused build: the derived forward termlist (terms/, now
-    decoded back out of the partial posting runs) must be row-identical
-    — including position blobs and buckets — to what the v4
-    row-per-(doc, term) staging kernel produces over the same forward
-    store."""
-    from pyspark.sql import functions as F
-    from mdq_spark.build import TERMS_SCHEMA, _tokenize_batches
+def test_fused_termlist_matches_oracle(spark, index):
+    """The forward termlist (terms/, decoded back out of the partial
+    posting runs) holds one row per (doc, term) with the oracle's wdf,
+    doclen, bucket and block, and a position blob that decodes to the
+    oracle's positions (NULL for non-positional terms)."""
+    from mdq_spark.codec import decode_positions
 
     out, _ = index
-    derived = spark.read.parquet(f"{out}/terms").drop("gen")
-    docs = spark.read.parquet(f"{out}/docs").drop("gen")
-    ref = docs.mapInPandas(_tokenize_batches(8, 4, "xapian", False),
-                           schema=TERMS_SCHEMA)
-
-    def rows(df):
-        picked = df.select(
-            "term", "bucket", "block", "doc_id", "wdf", "doclen",
-            F.coalesce(F.hex(F.col("positions")), F.lit("NULL"))
-            .alias("p"))
-        return sorted(tuple(r) for r in picked.collect())
-
-    assert rows(derived) == rows(ref)
+    rows = spark.read.parquet(f"{out}/terms").collect()
+    got = sorted(
+        (r["term"], r["bucket"], r["block"], r["doc_id"], r["wdf"],
+         r["doclen"], () if r["positions"] is None else tuple(
+             int(x) for x in decode_positions(bytes(r["positions"]), 1)[0]))
+        for r in rows)
+    assert got == _oracle_rows(DOCS)
 
 
 def test_fused_partials_merge_to_same_postings(spark, index):
-    """The postings/ dir written from the fused partials must hold the
-    same decoded posting content as a from-staging invert_postings run
-    (the upsert path's pipeline) over the derived termlist."""
-    from pyspark.sql import functions as F
-    from mdq_spark import bm25
-    from mdq_spark.build import invert_postings
-    from mdq_spark.codec import (
-        decode_doc_gaps, decode_positions, varint_decode,
-    )
-
-    out, manifest = index
-    lf = bm25.len_factor(manifest["globalstats"]["avg_doclen"])
-    terms = spark.read.parquet(f"{out}/terms") \
-        .filter(F.col("gen") == 0).drop("bucket")
-
-    def decoded(df):
-        rows = []
-        for r in df.collect():
-            n = int(r["n"])
-            ids = decode_doc_gaps(bytes(r["doc_gaps"]), n)
-            wdfs = varint_decode(bytes(r["wdfs"]), n)
-            dls = varint_decode(bytes(r["doclens"]), n)
-            pls = decode_positions(bytes(r["positions"]), n) \
-                if r["positions"] is not None else [()] * n
-            for i in range(n):
-                rows.append((r["term"], int(r["block"]), int(ids[i]),
-                             int(wdfs[i]), int(dls[i]),
-                             tuple(int(x) for x in pls[i])))
-        return sorted(rows)
-
-    built = decoded(spark.read.parquet(f"{out}/postings")
-                    .filter(F.col("gen") == 0))
-    ref = decoded(invert_postings(terms.coalesce(1), lf, 8))
-    assert built == ref
+    """The postings/ dir written from the fused partials holds the
+    oracle's posting content."""
+    out, _ = index
+    built = spark.read.parquet(f"{out}/postings").collect()
+    assert _decoded_postings(built) == _oracle_rows(DOCS)
 
 
 def test_fused_kernel_repairs_unsorted_partition(spark):
@@ -804,16 +787,14 @@ def test_partial_resume_reruns_only_missing_stage(spark, index, tmp_path):
     assert m2["metrics"]["n_postings"] == m1["metrics"]["n_postings"]
 
 
-def test_termlist_arrow_kernel_matches_row_kernel():
-    """Round-6: the vectorized Arrow termlist kernel must be
-    byte-identical to the row-path kernel it replaced — including a
-    MIXED run (stored position count != wdf via an EMPTY_POSITIONS
-    member), which must take the verified fallback and map the 1-byte
-    empty encoding back to NULL."""
-    import numpy as np
-    import pandas as pd
+def test_termlist_kernel_decodes_runs():
+    """The vectorized termlist kernel decodes partial posting runs into
+    one row per (doc, term), each position piece a byte slice of its
+    run's blob, and rejects a malformed batch with a ValueError naming
+    it: a MIXED run (an EMPTY_POSITIONS member, count 0 != wdf 5, which
+    the tokenizer never writes) and a run whose blob ends mid-varint."""
     import pyarrow as pa
-    from mdq_spark.build import _termlist_kernel, _termlist_kernel_rows
+    from mdq_spark.build import _termlist_kernel
     from mdq_spark.codec import EMPTY_POSITIONS
 
     def varint(v):
@@ -824,6 +805,9 @@ def test_termlist_arrow_kernel_matches_row_kernel():
         out.append(v)
         return bytes(out)
 
+    def pos_piece(gaps):
+        return varint(len(gaps)) + b"".join(varint(g) for g in gaps)
+
     def run_row(term, bucket, block, ids, wdfs, dls, pieces):
         gaps = [ids[0]] + [b - a - 1 for a, b in zip(ids, ids[1:])]
         return {
@@ -832,39 +816,41 @@ def test_termlist_arrow_kernel_matches_row_kernel():
             "doc_gaps": b"".join(varint(g) for g in gaps),
             "wdfs": b"".join(varint(w) for w in wdfs),
             "doclens": b"".join(varint(d) for d in dls),
-            "positions": pieces,
+            "positions": None if pieces is None else b"".join(pieces),
         }
 
-    def pos_piece(gaps):
-        return varint(len(gaps)) + b"".join(varint(g) for g in gaps)
+    schema = pa.schema([
+        ("term", pa.string()), ("bucket", pa.int32()), ("block", pa.int64()),
+        ("n", pa.int32()), ("doc_gaps", pa.binary()), ("wdfs", pa.binary()),
+        ("doclens", pa.binary()), ("positions", pa.binary())])
 
+    def decode(rows):
+        batch = pa.RecordBatch.from_pylist(rows, schema=schema)
+        return sorted(pa.Table.from_batches(
+            list(_termlist_kernel()(iter([batch])))).to_pylist(),
+            key=lambda r: (r["term"], r["doc_id"]))
+
+    alpha = [pos_piece([0, 3]), pos_piece(list(range(200))),
+             pos_piece([7])]
     rows = [
         # plain positional run, multi-byte wdf varint included
-        run_row("alpha", 3, 0, [1, 5, 9], [2, 200, 1], [10, 12, 9],
-                pos_piece([0, 3]) + pos_piece(list(range(200)))
-                + pos_piece([7])),
+        run_row("alpha", 3, 0, [1, 5, 9], [2, 200, 1], [10, 12, 9], alpha),
         # non-positional run (Z-stems): NULL blob
         run_row("Zbeta", 1, 0, [2, 3], [1, 4], [8, 11], None),
-        # MIXED run: second member is EMPTY_POSITIONS (count 0 != wdf 5)
-        run_row("gamma", 2, 0, [4, 6], [1, 5], [7, 7],
-                pos_piece([2]) + EMPTY_POSITIONS),
     ]
-    pdf = pd.DataFrame(rows)
-    batch = pa.RecordBatch.from_pandas(pdf, preserve_index=False)
+    want = [dict(term="Zbeta", bucket=1, block=0, doc_id=d, wdf=w,
+                 doclen=dl, positions=None)
+            for d, w, dl in ((2, 1, 8), (3, 4, 11))] + \
+        [dict(term="alpha", bucket=3, block=0, doc_id=d, wdf=w, doclen=dl,
+              positions=p)
+         for d, w, dl, p in zip([1, 5, 9], [2, 200, 1], [10, 12, 9],
+                                alpha)]
+    assert decode(rows) == want
 
-    new = pa.Table.from_batches(
-        list(_termlist_kernel(8)(iter([batch])))).to_pandas()
-    old = pd.concat(list(_termlist_kernel_rows(8)(iter([pdf]))),
-                    ignore_index=True)
-    key = ["term", "block", "doc_id"]
-    new = new.sort_values(key).reset_index(drop=True)
-    old = old.sort_values(key).reset_index(drop=True)
-    assert len(new) == len(old) == 7
-    for c in ["term", "bucket", "block", "doc_id", "wdf", "doclen"]:
-        assert list(new[c]) == list(old[c]), c
-    npos = [None if b is None else bytes(b) for b in new["positions"]]
-    opos = [None if b is None else bytes(b) for b in old["positions"]]
-    assert npos == opos
-    # the EMPTY_POSITIONS member must surface as NULL in both
-    g = new[new["term"] == "gamma"].sort_values("doc_id")
-    assert list(g["positions"].map(lambda b: b is None)) == [False, True]
+    mixed = run_row("gamma", 2, 0, [4, 6], [1, 5], [7, 7],
+                    [pos_piece([2]), EMPTY_POSITIONS])
+    with pytest.raises(ValueError, match="termlist batch 0"):
+        decode(rows + [mixed])
+    torn = run_row("delta", 2, 0, [4], [1], [7], [pos_piece([2]), b"\x80"])
+    with pytest.raises(ValueError, match="does not end on a varint"):
+        decode(rows + [torn])

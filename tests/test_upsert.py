@@ -258,6 +258,27 @@ def test_build_resume_on_upserted_index_rebuilds(spark, tmp_path_factory):
     assert int(m["globalstats"]["n_docs"]) == oracle_v1.N
 
 
+def test_upsert_after_forced_rebuild_ignores_stale_artifacts(
+        spark, tmp_path_factory):
+    """A forced rebuild over an upserted index rewrites the build's
+    stages but leaves the upserts' tombstones and dict deltas on disk.
+    The next upsert must take a generation past them, or committing it
+    would make the stale rows visible: they hid docs 2 and 3 of the
+    rebuilt corpus and shifted its document frequencies."""
+    out = str(tmp_path_factory.mktemp("rebuild_upsert"))
+    df = spark.createDataFrame(V1, schema=DOCS_SCHEMA)
+    build_index(spark, df, out, block_span=4, n_buckets=8)
+    upsert(spark, out, spark.createDataFrame(BATCH, schema=DOCS_SCHEMA))
+    build_index(spark, df, out, block_span=4, n_buckets=8)
+    m = upsert(spark, out, spark.createDataFrame(
+        [doc(0, "z.md", "omega beta")], schema=DOCS_SCHEMA))
+    assert m["generation"] == 2 and m["committed_gens"] == [0, 2]
+    oracle = OracleIndex.build(V1 + [doc(5, "z.md", "omega beta")])
+    s = Searcher(spark, out)
+    for q in QUERIES + ["delta ", "omega "]:
+        assert_results_match(oracle.search(q), s.search(q))
+
+
 def test_compact_swap_crash_recovery(spark, tmp_path_factory):
     """ADVICE r02: a crash BETWEEN compact_in_place's two renames leaves
     no index dir — the next open must roll the swap forward from the
