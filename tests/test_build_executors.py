@@ -39,8 +39,8 @@ UPSERT = [
 KW = dict(block_span=4, n_buckets=8)
 # the executor limit that picks each executor for the fixture's inputs
 LIMITS = {"driver": IndexBuilder.DRIVER_BUILD_BYTES, "spark": 0}
-# Spark jobs a small driver upsert may run: 11 were counted on the test
-# session — dense_ids' range sampling, checkpoint and counts (5), the
+# Spark jobs a small driver upsert may run: 11 were counted in the tests'
+# Spark session — dense_ids' range sampling, checkpoint and counts (5), the
 # stages' one ``toArrow`` (1), the tombstone probe of ``docs/`` (2) and
 # the negative dict-delta write (3).  The staging path it replaced ran 40.
 JOBS_PER_DRIVER_UPSERT = 12
