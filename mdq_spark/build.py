@@ -849,7 +849,12 @@ def _write_stage(path: str, parts: dict, stats: list, gen: int = 0) -> None:
     of Spark's ``write.partitionBy(...).parquet``.  Generation 0 (a
     build) replaces ``path``, as ``mode("overwrite")`` does; a later
     generation (an upsert) adds uniquely named files beside the
-    committed ones and removes nothing, as ``mode("append")`` does."""
+    committed ones and removes nothing, as ``mode("append")`` does.
+    Each file is written under a dot-prefixed name, which Spark and
+    pyarrow readers skip, and renamed into place only once complete, so
+    a write cut short in a live directory leaves no truncated file that
+    a reader would fail on — the role ``_temporary/`` plays in Spark's
+    committer."""
     if gen == 0 and os.path.exists(path):
         shutil.rmtree(path)
     os.makedirs(path, exist_ok=True)
@@ -857,11 +862,13 @@ def _write_stage(path: str, parts: dict, stats: list, gen: int = 0) -> None:
         d = os.path.join(path, sub)
         os.makedirs(d, exist_ok=True)
         rows = max(1, tbl.num_rows * _ROW_GROUP_BYTES // max(tbl.nbytes, 1))
+        name = f"part-00000-{uuid.uuid4()}.c000.parquet"
+        tmp = os.path.join(d, f".{name}.tmp")
         pq.write_table(
-            tbl, os.path.join(d, f"part-00000-{uuid.uuid4()}.c000.parquet"),
-            row_group_size=rows,
+            tbl, tmp, row_group_size=rows,
             write_statistics=[c for c in stats if c in tbl.column_names],
             **_PARQUET_OPTS)
+        os.replace(tmp, os.path.join(d, name))
     open(os.path.join(path, "_SUCCESS"), "w").close()
 
 
@@ -1084,16 +1091,27 @@ class IndexBuilder:
         # upserted generation and resurrecting tombstoned docs — a
         # resume can never preserve upsert state, so force a rebuild.
         mpath = self.path("manifest.json")
-        if not force and os.path.exists(mpath):
+        old: dict = {}
+        if os.path.exists(mpath):
             with open(mpath) as f:
                 old = json.load(f)
-            if int(old.get("format_version", 1)) != FORMAT_VERSION:
-                force = True
-            elif int(old.get("generation", 0)) != 0 or \
-                    [int(g) for g in old.get("committed_gens", [0])] != [0]:
-                force = True
+        if old and (
+                int(old.get("format_version", 1)) != FORMAT_VERSION or
+                int(old.get("generation", 0)) != 0 or
+                [int(g) for g in old.get("committed_gens", [0])] != [0]):
+            force = True
+        run = self._stale_stages(force)
+        if "docs" in run:
+            # the upserts' own artifacts — tombstones, dict deltas and a
+            # folded dictionary — are keyed on generations of the docs/
+            # this build replaces (committed ones, or the orphans of a
+            # crashed attempt); left behind, the next upsert would reuse
+            # such a generation and its commit would make them visible
+            for d in {"tombstones", "dict_delta",
+                      old.get("dict_dir", "dict")} - {"dict"}:
+                shutil.rmtree(self.path(d), ignore_errors=True)
 
-        res = self._run_stages(docs_df, self._stale_stages(force))
+        res = self._run_stages(docs_df, run)
         # on resume the collection statistics come from globalstats/ and
         # the dictionary aggregates from dict/
         gstats, agg = res["gstats"], res["dict_stats"]

@@ -27,6 +27,10 @@ write is therefore the commit point — a crash at ANY earlier step
 leaves only rows with an uncommitted gen, which stay invisible forever
 (and are dropped by the next compact()).  A retry allocates a fresh gen
 past any orphans, so partial leftovers can never be double-counted.
+Files land in directories that already hold committed ones, so each is
+written under a name readers skip and renamed into place when complete
+(Spark's committer, or ``build._write_stage`` on the driver): a write
+cut short leaves no truncated file in view.
 In production the appends + manifest write map to an Iceberg MERGE
 INTO + snapshot commit (SURVEY.md §1.4).
 
@@ -105,16 +109,12 @@ def upsert(spark: SparkSession, index_dir: str,
             f"rebuild) before upserting")
     committed = [int(g) for g in m.get("committed_gens", [0])]
     docs_path = f"{index_dir}/docs"
-    # fresh gen PAST every gen on disk: orphan appends from crashed
-    # attempts (docs is the first artifact an attempt writes, so orphan
-    # gens appear there) and the tombstones and dict deltas of upserts
-    # that a forced rebuild, which rewrites only the build's stages,
-    # left behind — a reused gen would make them visible again
-    seen = [pc.max(_read_table(f"{index_dir}/{d}", ["gen"])
-                   .column("gen")).as_py()
-            for d in ("docs", "tombstones", "dict_delta")
-            if os.path.exists(f"{index_dir}/{d}")]
-    gen = max(committed + [g for g in seen if g is not None]) + 1
+    # fresh gen PAST every committed gen and every orphan append from a
+    # crashed attempt: docs is the first artifact an attempt writes, so
+    # orphan gens appear there (a build that rewrites docs/ removes the
+    # upserts' other artifacts with it)
+    on_disk = pc.max(_read_table(docs_path, ["gen"]).column("gen")).as_py()
+    gen = max(committed + [on_disk or 0]) + 1
 
     # 1. fresh dense doc_ids past the committed maximum, assigned
     # DataFrame-native (ingest.dense_ids — no .rdd, no per-row Python;

@@ -185,6 +185,46 @@ def test_driver_upsert_runs_few_spark_jobs(spark, pair, tmp_path):
     assert n <= JOBS_PER_DRIVER_UPSERT, n
 
 
+@pytest.mark.parametrize("stage", ["docs", "postings", "globalstats"])
+def test_driver_upsert_cut_mid_write_stays_invisible(spark, pair, tmp_path,
+                                                     monkeypatch, stage):
+    """A driver upsert writes into directories that already hold
+    committed files.  When one of its parquet writes is cut short — part
+    of the file on disk, then an error, as when the process dies or the
+    disk fills — every visible file stays readable, a Searcher gives the
+    pre-upsert answers, and a retried upsert commits the answers of an
+    upsert that never failed."""
+    import pyarrow.parquet as pq
+
+    out, clean = str(tmp_path / "idx"), str(tmp_path / "clean")
+    shutil.copytree(pair[0], out)
+    shutil.copytree(pair[0], clean)
+    upsert(spark, clean, local_docs_df(spark, UPSERT))
+    want_before, want_after = answers(spark, out), answers(spark, clean)
+
+    write_table = pq.write_table
+
+    def cut_short(tbl, where, **kw):
+        write_table(tbl, where, **kw)
+        if os.sep + stage + os.sep in where:
+            with open(where, "r+b") as f:
+                f.truncate(os.path.getsize(where) // 2)
+            raise OSError(28, "No space left on device")
+
+    with monkeypatch.context() as mp:
+        mp.setattr(pq, "write_table", cut_short)
+        with pytest.raises(OSError, match="No space"):
+            upsert(spark, out, local_docs_df(spark, UPSERT))
+    visible = glob.glob(os.path.join(out, "**", "*.parquet"), recursive=True)
+    assert visible
+    for f in visible:
+        pq.read_metadata(f)
+    assert answers(spark, out) == want_before
+    m = upsert(spark, out, local_docs_df(spark, UPSERT))
+    assert m["upserts"][-1]["executor"] == "driver"
+    assert answers(spark, out) == want_after
+
+
 def test_v5_index_refuses_upsert_and_compaction_migrates(spark, pair,
                                                          tmp_path):
     """Format v6 dropped the dead ``block_max_part`` posting column.  A

@@ -260,19 +260,23 @@ def test_build_resume_on_upserted_index_rebuilds(spark, tmp_path_factory):
 
 def test_upsert_after_forced_rebuild_ignores_stale_artifacts(
         spark, tmp_path_factory):
-    """A forced rebuild over an upserted index rewrites the build's
-    stages but leaves the upserts' tombstones and dict deltas on disk.
-    The next upsert must take a generation past them, or committing it
-    would make the stale rows visible: they hid docs 2 and 3 of the
-    rebuilt corpus and shifted its document frequencies."""
+    """A forced rebuild over an upserted index rewrites docs/ as
+    generation 0, so the next upsert reuses generation 1.  The rebuild
+    must remove the earlier upsert's tombstones and dict deltas with the
+    docs they were keyed on, or that commit would make the stale rows
+    visible: they hid docs 2 and 3 of the rebuilt corpus and shifted its
+    document frequencies."""
+    import os
     out = str(tmp_path_factory.mktemp("rebuild_upsert"))
     df = spark.createDataFrame(V1, schema=DOCS_SCHEMA)
     build_index(spark, df, out, block_span=4, n_buckets=8)
     upsert(spark, out, spark.createDataFrame(BATCH, schema=DOCS_SCHEMA))
     build_index(spark, df, out, block_span=4, n_buckets=8)
+    assert not os.path.exists(os.path.join(out, "tombstones"))
+    assert not os.path.exists(os.path.join(out, "dict_delta"))
     m = upsert(spark, out, spark.createDataFrame(
         [doc(0, "z.md", "omega beta")], schema=DOCS_SCHEMA))
-    assert m["generation"] == 2 and m["committed_gens"] == [0, 2]
+    assert m["generation"] == 1 and m["committed_gens"] == [0, 1]
     oracle = OracleIndex.build(V1 + [doc(5, "z.md", "omega beta")])
     s = Searcher(spark, out)
     for q in QUERIES + ["delta ", "omega "]:
