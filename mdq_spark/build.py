@@ -1106,9 +1106,19 @@ class IndexBuilder:
             # folded dictionary — are keyed on generations of the docs/
             # this build replaces (committed ones, or the orphans of a
             # crashed attempt); left behind, the next upsert would reuse
-            # such a generation and its commit would make them visible
-            for d in {"tombstones", "dict_delta",
-                      old.get("dict_dir", "dict")} - {"dict"}:
+            # such a generation and its commit would make them visible.
+            # The spelling table is keyed on a generation too: the
+            # rebuild is generation 0 again, so the old lexicon's table
+            # would pass for current (spell._current_table).
+            from .spell import _meta_path
+            stale = {"tombstones", "dict_delta",
+                     old.get("dict_dir", "dict")} - {"dict"}
+            if os.path.isdir(self.out):
+                if os.path.exists(_meta_path(self.out)):
+                    os.remove(_meta_path(self.out))
+                stale |= {d for d in os.listdir(self.out) if
+                          d == "spelling" or d.startswith("spelling_g")}
+            for d in stale:
                 shutil.rmtree(self.path(d), ignore_errors=True)
 
         res = self._run_stages(docs_df, run)

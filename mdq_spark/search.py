@@ -9,21 +9,22 @@ Physical strategy (SURVEY.md §3.3 lifecycle):
    way -> termweights computed driver-side.  A Spark scan of the
    dictionary runs only for lookups the probe cannot answer and for
    the distributed escalation of a hot prefix;
-3. the plan compiles into ONE block-local operator-tree spec
-   (``_tree_block_fn``) over the pruned ``postings/bucket=*/`` rows.
-   When the dictionary proves the posting volume small (Σ df <=
-   ``Searcher.LOCAL_EVAL_ROWS``) the driver reads those fragments with
-   pyarrow and runs the per-block function itself — no Spark job.
-   Above it, the rows take one hash exchange on the doc-range block and
-   the same function runs inside a mapInPandas kernel;
+3. every plan compiles into ONE block-local operator-tree spec
+   (``_compile_block_spec``, total over the plan grammar) and ONE
+   evaluator runs it: ``_tree_block_fn`` over Arrow slices of the
+   pruned ``postings/bucket=*/`` rows, one doc-range block per slice.
+   When the dictionary proves the volume small (Σ df, plus N for
+   MatchAll, <= ``Searcher.LOCAL_EVAL_ROWS``) the driver reads those
+   fragments with pyarrow and runs the per-block function itself — no
+   Spark job.  Above it, the rows take one hash exchange on the
+   doc-range block and the same function runs inside a mapInArrow
+   kernel;
 4. BM25 sumparts are computed inside that function (doclen is
-   denormalized into the posting block so scoring needs no join); lone
-   terms above the volume check score as a *native Spark column
-   expression* over an Arrow decode kernel;
-5. plans the spec cannot express (MatchAll, SYNONYM/ELITE under other
-   operators) fall back to boolean algebra as joins (AND=inner,
-   AND_NOT=left_anti, FILTER=left_semi, AND_MAYBE=left+coalesce,
-   XOR=full_outer, OR=union+groupBy) over the evaluated children;
+   denormalized into the posting block so scoring needs no join).
+   SYNONYM and wildcards are ``syn`` members (wdf summed per listed
+   term), ELITE picks its children at compile time, and MatchAll
+   reads the block's live doc_ids from the forward store;
+5. tombstoned docs are dropped after the kernel;
 6. metadata predicates (tag/date/lang...) restrict doc_ids *before*
    ranking via a semi-join (north-rule pushdown);
 7. top-k: a driver-evaluated plan takes the ``(-score, doc_id)`` top-k
@@ -51,6 +52,7 @@ import glob
 import json
 import os
 import urllib.parse
+from collections import Counter
 from typing import Iterator, Optional
 
 import numpy as np
@@ -61,13 +63,12 @@ import pyarrow.dataset as pads
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (
-    ArrayType, DoubleType, IntegerType, LongType, StringType,
-    StructField, StructType,
+    DoubleType, IntegerType, LongType, StringType, StructField, StructType,
 )
 
 from . import bm25
 from .build import term_bucket
-from .codec import decode_doc_gaps, decode_positions, varint_decode
+from .codec import decode_doc_gaps, varint_decode
 from .plan import (
     Bool, MatchAll, MatchNothing, Node, Positional, Scaled, Term,
     ValueRange, Wildcard,
@@ -76,23 +77,21 @@ from .queryparse import parse_user_query
 
 DEFAULT_K = 100
 
-_DECODED_SCHEMA = StructType([
-    StructField("term", StringType(), False),
-    StructField("doc_id", LongType(), False),
-    StructField("wdf", IntegerType(), False),
-    StructField("doclen", IntegerType(), False),
-])
-
-_DECODED_POS_SCHEMA = StructType(
-    _DECODED_SCHEMA.fields + [
-        StructField("positions", ArrayType(IntegerType()), True)])
-
 _WEIGHTS_SCHEMA = StructType([StructField("doc_id", LongType()),
                               StructField("weight", DoubleType())])
 _TAGGED_SCHEMA = StructType([StructField("query_id", StringType())]
                             + _WEIGHTS_SCHEMA.fields)
 _SCORES_SCHEMA = StructType([StructField("doc_id", LongType()),
                              StructField("score", DoubleType())])
+_RANKED_SCHEMA = StructType([StructField("query_id", StringType())]
+                            + _SCORES_SCHEMA.fields
+                            + [StructField("rank", IntegerType())])
+_MATCHING_TERMS_SCHEMA = StructType([StructField("term", StringType()),
+                                     StructField("qindex", LongType())])
+
+# the encoded posting columns the tree kernel reads ("positions" only
+# for positional specs); MatchAll rows carry (block, doc_id) instead
+_KERNEL_COLS = ["block", "term", "n", "doc_gaps", "wdfs", "doclens"]
 
 
 def _any_of(conds: list):
@@ -119,36 +118,6 @@ def _top_k(w: pd.DataFrame, k: int) -> pd.DataFrame:
         ids, weights = ids[keep], weights[keep]
     top = np.lexsort((ids, -weights))[:max(k, 0)]
     return pd.DataFrame({"doc_id": ids[top], "score": weights[top]})
-
-
-def _decode_kernel(with_positions: bool):
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-        for pdf in batches:
-            frames = []
-            for row in pdf.itertuples(index=False):
-                n = int(row.n)
-                ids = decode_doc_gaps(row.doc_gaps, n).astype("int64")
-                wdfs = varint_decode(row.wdfs, n).astype("int32")
-                dls = varint_decode(row.doclens, n).astype("int32")
-                d = {
-                    "term": np.repeat(row.term, n),
-                    "doc_id": ids,
-                    "wdf": wdfs,
-                    "doclen": dls,
-                }
-                f = pd.DataFrame(d)
-                if with_positions:
-                    if row.positions is not None:
-                        pls = decode_positions(row.positions, n)
-                        f["positions"] = [p.astype("int32").tolist()
-                                          for p in pls]
-                    else:
-                        f["positions"] = [None] * n
-                frames.append(f)
-            if frames:
-                yield pd.concat(frames)
-    return fn
 
 
 _POS_SHIFT = 32  # packed positional keys: (survivor_tag << 32) | position
@@ -259,52 +228,77 @@ def _window_hits(op: str, window: int, order_terms: list,
     return hit if hit.size else None
 
 
-def _carry_block_stream(one_block):
-    """mapInPandas wrapper shared by the block kernels: input partitions
-    are sorted by block; Arrow batches can split a block, so the last
-    block of each batch is carried into the next before grouping."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        leftover: Optional[pd.DataFrame] = None
-        for pdf in batches:
-            if leftover is not None:
-                pdf = pd.concat([leftover, pdf], ignore_index=True)
-                leftover = None
-            if pdf.empty:
-                continue
-            last_block = pdf["block"].iloc[-1]
-            tail = pdf["block"] == last_block
-            leftover = pdf[tail]
-            head = pdf[~tail]
-            frames = []
-            for _, grp in head.groupby("block", sort=False):
-                out = one_block(grp.to_dict("records"))
-                if out is not None:
-                    frames.append(out)
-            if frames:
-                yield pd.concat(frames)
-        if leftover is not None and not leftover.empty:
-            out = one_block(leftover.to_dict("records"))
-            if out is not None:
-                yield out
-
-    return fn
+def _block_slices(tbl: pa.Table) -> list:
+    """``tbl`` (sorted by ``block``) cut into one slice per block."""
+    blk = tbl.column("block").to_numpy()
+    cuts = [0, *(np.flatnonzero(np.diff(blk)) + 1), len(blk)]
+    return [tbl.slice(a, b - a) for a, b in zip(cuts[:-1], cuts[1:])]
 
 
 def _tree_kernel(spec_items: list, distinct: list, lf: float,
                  pos_terms: Optional[frozenset] = None):
-    """mapInPandas kernel of the block exchange: ``_tree_block_fn`` over
-    a block-sorted partition stream."""
-    return _carry_block_stream(
-        _tree_block_fn(spec_items, distinct, lf, pos_terms))
+    """mapInArrow kernel of the block exchange: ``_tree_block_fn`` over
+    a block-sorted partition stream.  Arrow batches can split a block,
+    so the last block of each batch is carried into the next as an
+    Arrow slice."""
+    one_block = _tree_block_fn(spec_items, distinct, lf, pos_terms)
+
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        carry: Optional[pa.Table] = None
+        for rb in batches:
+            tbl = pa.Table.from_batches([rb])
+            if carry is not None:
+                tbl = pa.concat_tables([carry, tbl])
+            if tbl.num_rows == 0:
+                continue
+            *done, carry = _block_slices(tbl)
+            for blk in done:
+                out = one_block(blk)
+                if out is not None:
+                    yield pa.RecordBatch.from_pandas(out,
+                                                     preserve_index=False)
+        if carry is not None:
+            out = one_block(carry)
+            if out is not None:
+                yield pa.RecordBatch.from_pandas(out, preserve_index=False)
+
+    return fn
+
+
+def _spec_inputs(spec_items: list) -> tuple:
+    """``(terms, pos_terms, use_all)`` the specs of ``spec_items`` read:
+    every posting term, the terms under positional nodes (whose
+    position blobs the kernel needs), and whether any spec reads
+    MatchAll's docs (an "all" node)."""
+    terms: set = set()
+    pos_terms: set = set()
+    use_all = False
+    stack = [spec for _, spec in spec_items]
+    while stack:
+        sp = stack.pop()
+        if sp[0] == "leaf":
+            for _, ts, _ in sp[1]:
+                terms.update(ts)
+        elif sp[0] == "pos":
+            for _, ts, _ in sp[3]:
+                terms.update(ts)
+                pos_terms.update(ts)
+        elif sp[0] == "all":
+            use_all = True
+        elif sp[0] == "scaled":
+            stack.append(sp[2])
+        elif sp[0] != "empty":
+            stack.extend(sp[1])
+    return terms, pos_terms, use_all
 
 
 def _tree_block_fn(spec_items: list, distinct: list, lf: float,
                    pos_terms: Optional[frozenset] = None):
     """Per-block evaluator of the block-local OPERATOR TREE path
-    (VERDICT r03 #5, r04 #5): ``one_block(rows)`` evaluates a compiled
-    operator tree over one doc-range block's encoded posting rows.  A
-    doc lives in exactly one block, so EVERY boolean function of term
+    (VERDICT r03 #5, r04 #5): ``one_block(blk)`` evaluates a compiled
+    operator tree over an Arrow slice of one doc-range block's encoded
+    posting rows (``_KERNEL_COLS``).  A doc lives in exactly one
+    block, so EVERY boolean function of term
     membership — and every positional predicate, since positions live
     with the postings — is block-locally decidable and the whole tree
     runs per block, replacing per-operator DataFrame joins (the
@@ -316,10 +310,16 @@ def _tree_block_fn(spec_items: list, distinct: list, lf: float,
     ``spec`` grammar (plain picklable tuples):
 
       ("empty",)                      matches nothing
+      ("all",)                        every live doc of the block,
+                                      weight 0 (MatchAll): the slice's
+                                      rows with a ``doc_id`` and no
+                                      ``term``, from the forward store
       ("leaf", [member...])           union of members, weights summed —
                                       member = ("term", [t], tw) |
-                                      ("syn", [t...], tw) (wildcard
-                                      expansion scores as ONE term)
+                                      ("syn", [t...], tw) (SYNONYM or a
+                                      wildcard expansion: scores as ONE
+                                      term, wdf added once per LISTED
+                                      term, so a repeat counts twice)
       ("or"|"and", [spec...])         union / intersection, weights
                                       summed (plan.py semantics)
       ("and_not"|"and_maybe"|"filter"|"xor", [l, r])
@@ -342,34 +342,45 @@ def _tree_block_fn(spec_items: list, distinct: list, lf: float,
     tagged items prepend query_id.
 
     Per block: decode each term's run once, build the doc universe
-    (union of all term runs) with per-doc BM25 denominators, then fold
-    each tree bottom-up over boolean masks + weight vectors — all
-    numpy, no per-row Python.  The weight invariant at every node:
-    w == 0 outside the node's mask."""
+    (union of all term runs and the MatchAll doc_ids) with per-doc BM25
+    denominators, then fold each tree bottom-up over boolean masks +
+    weight vectors — all numpy, no per-row Python.  The weight
+    invariant at every node: w == 0 outside the node's mask."""
     import numpy as np
 
     pos_terms = pos_terms or frozenset()
 
-    def one_block(rows: list) -> Optional[pd.DataFrame]:
-        by_term: dict = {}
-        for r in rows:
-            by_term.setdefault(r["term"], []).append(r)
+    def one_block(blk: pa.Table) -> Optional[pd.DataFrame]:
+        names = blk.column_names
+        rows_of: dict = {}
+        if "term" in names:
+            for i, t in enumerate(blk.column("term").to_pylist()):
+                if t is not None:
+                    rows_of.setdefault(t, []).append(i)
+        all_ids = np.zeros(0, dtype="int64")
+        if "doc_id" in names:
+            all_ids = pc.drop_null(blk.column("doc_id")).to_numpy()
         per_term: dict = {}
         pos_runs: dict = {}
+        if rows_of:
+            ns, gaps, wdfs_b, dls_b = (
+                blk.column(c).to_pylist()
+                for c in ("n", "doc_gaps", "wdfs", "doclens"))
+            blobs = (blk.column("positions").to_pylist()
+                     if pos_terms else None)
         for t in distinct:
-            rl = by_term.get(t)
+            rl = rows_of.get(t)
             if not rl:
                 continue
             ids_l, wdf_l, dl_l, runs = [], [], [], []
-            for r in rl:
-                n = int(r["n"])
-                ids_l.append(decode_doc_gaps(r["doc_gaps"], n)
-                             .astype("int64"))
-                wdf_l.append(varint_decode(r["wdfs"], n).astype("int64"))
-                dl_l.append(varint_decode(r["doclens"], n).astype("int64"))
+            for i in rl:
+                n = int(ns[i])
+                ids_l.append(decode_doc_gaps(gaps[i], n).astype("int64"))
+                wdf_l.append(varint_decode(wdfs_b[i], n).astype("int64"))
+                dl_l.append(varint_decode(dls_b[i], n).astype("int64"))
                 if t in pos_terms:
                     # raw blob kept; decoded lazily for survivors only
-                    runs.append((r.get("positions"), n, wdf_l[-1]))
+                    runs.append((blobs[i], n, wdf_l[-1]))
             ids = np.concatenate(ids_l)
             wdfs = np.concatenate(wdf_l)
             dls = np.concatenate(dl_l)
@@ -380,11 +391,11 @@ def _tree_block_fn(spec_items: list, distinct: list, lf: float,
             per_term[t] = (ids, wdfs, dls)
             if t in pos_terms:
                 pos_runs[t] = (runs, perm)
-        if not per_term:
+        if not per_term and not all_ids.size:
             return None
 
         universe = np.unique(np.concatenate(
-            [v[0] for v in per_term.values()]))
+            [v[0] for v in per_term.values()] + [all_ids]))
         U = universe.size
         dls0 = np.zeros(U, dtype="int64")
         have = np.zeros(U, dtype=bool)
@@ -412,6 +423,8 @@ def _tree_block_fn(spec_items: list, distinct: list, lf: float,
             kind = sp[0]
             if kind == "empty":
                 return np.zeros(U, dtype=bool), np.zeros(U)
+            if kind == "all":
+                return np.isin(universe, all_ids), np.zeros(U)
             if kind == "leaf":
                 m = np.zeros(U, dtype=bool)
                 w = np.zeros(U)
@@ -426,14 +439,15 @@ def _tree_block_fn(spec_items: list, distinct: list, lf: float,
                         m |= f
                     else:  # synonym: wdf summed over constituents
                         ws = np.zeros(U, dtype="int64")
+                        hit = np.zeros(U, dtype=bool)
                         for t in ts:
                             if t not in per_term:
                                 continue
                             f, idx = member(t)
                             ws[f] += per_term[t][1][idx[f]]
-                        f = ws > 0
-                        w[f] += tw * (ws[f] / (cdenom[f] + ws[f]))
-                        m |= f
+                            hit |= f
+                        w[hit] += tw * (ws[hit] / (cdenom[hit] + ws[hit]))
+                        m |= hit
                 return m, w
             if kind == "scaled":
                 m, w = eval_spec(sp[2])
@@ -882,148 +896,21 @@ class Searcher:
         return self.postings.filter(
             F.col("bucket").isin(buckets) & F.col("term").isin(terms))
 
-    def _decoded(self, terms: list[str], with_positions: bool = False,
-                 allowed: Optional[DataFrame] = None,
-                 block_ids=None, blocks_df=None) -> DataFrame:
-        blocks = self._scan_blocks(terms)
-        if block_ids is not None:
-            blocks = blocks.filter(
-                F.col("block").isin([int(b) for b in block_ids]))
-        if blocks_df is not None:
-            # kept-block set too large for a pushed-down IN-list: apply
-            # it as a broadcast semi-join (VERDICT r02 #1 cap)
-            blocks = blocks.join(F.broadcast(blocks_df), "block",
-                                 "left_semi")
-        schema = _DECODED_POS_SCHEMA if with_positions else _DECODED_SCHEMA
-        cols = ["term", "n", "doc_gaps", "wdfs", "doclens"]
-        if with_positions:
-            cols.append("positions")
-        out = blocks.select(*cols).mapInPandas(
-            _decode_kernel(with_positions), schema=schema)
-        if self.tombstones is not None:
-            out = out.join(self.tombstones, "doc_id", "left_anti")
-        if allowed is not None:
-            out = out.join(allowed, "doc_id", "left_semi")
-        return out
-
-    def _weight_col(self, tw) -> Column:
-        """BM25 sumpart as a native column expression (whole-stage
-        codegen; doclen is denormalized in the posting block so no join).
-        ``tw`` may be a float (driver-computed) or a Column."""
-        normlen = F.greatest(F.col("doclen") * F.lit(self.lf),
-                             F.lit(bm25.MIN_NORMLEN))
-        denom = F.lit(bm25.K1) * (normlen * F.lit(bm25.B)
-                                  + F.lit(1.0 - bm25.B)) + F.col("wdf")
-        twc = tw if isinstance(tw, Column) else F.lit(tw)
-        return twc * (F.col("wdf") / denom)
-
-    def _termweight_col(self, df_col: Column, wqf: int = 1) -> Column:
-        """termweight as a column expression of a df column — used when
-        df is computed inside the plan (synonym/wildcard union size) so
-        no blocking .count() job is needed."""
-        tw = (F.lit(float(self.N)) - df_col + 0.5) / (df_col + 0.5)
-        twf = F.when(tw < 2.0, tw * 0.5 + 1.0).otherwise(tw)
-        w = F.log(twf)
-        if bm25.K3 != 0:
-            w = w * F.lit((bm25.K3 + 1.0) * wqf / (bm25.K3 + wqf))
-        return w * F.lit(bm25.K1 + 1.0)
-
     # -- node evaluation -----------------------------------------------------
 
-    def _empty(self) -> DataFrame:
-        return self._local_df(None, _WEIGHTS_SCHEMA)
-
-    def _eval(self, node: Node, ctx: dict) -> DataFrame:
-        if isinstance(node, MatchNothing) or isinstance(node, ValueRange):
-            return self._empty()
-        plan = self._driver_plan(node, ctx)
-        if plan is not None:
-            out = self._local_df(self._driver_eval(*plan, ctx),
-                                 _WEIGHTS_SCHEMA)
-            if ctx["allowed"] is not None:
-                out = out.join(ctx["allowed"], "doc_id", "left_semi")
-            return out
-        if isinstance(node, MatchAll):
-            # the forward store, not docstats: a doc that emitted zero
-            # terms (impossible today — U/D field terms are
-            # unconditional — but allowed by the data model) must still
-            # match <alldocuments> (ADVICE r04)
-            base = self.docs.select("doc_id", F.lit(0.0).alias("weight"))
-            if self.tombstones is not None:
-                base = base.join(self.tombstones, "doc_id", "left_anti")
-            if ctx["allowed"] is not None:
-                base = base.join(ctx["allowed"], "doc_id", "left_semi")
-            return base
-        if isinstance(node, Term):
-            info = ctx["dict"]["exact"].get(node.term)
-            if not info:
-                return self._empty()
-            tw = bm25.termweight(self.N, int(info["df"]), node.wqf)
-            dec = self._decoded([node.term], allowed=ctx["allowed"],
-                                block_ids=ctx.get("blocks"),
-                                blocks_df=ctx.get("blocks_df"))
-            return dec.select("doc_id",
-                              self._weight_col(tw).alias("weight"))
-        if isinstance(node, Wildcard):
-            merged = self._block_eval_tree(node, ctx)
-            if merged is not None:
-                return merged
-            terms = ctx["dict"]["expansions"].get(node.pattern, [])
-            return self._synonym({t: 1 for t in terms}, ctx)
-        if isinstance(node, Scaled):
-            child = self._eval(node.child, ctx)
-            return child.select(
-                "doc_id", (F.col("weight") * F.lit(node.factor)
-                           ).alias("weight"))
-        if isinstance(node, Positional):
-            return self._positional(node, ctx)
-        if isinstance(node, Bool):
-            return self._bool(node, ctx)
-        raise TypeError(f"unknown node {node!r}")
-
-    def _synonym(self, term_mult: dict, ctx: dict) -> DataFrame:
-        """OP_SYNONYM: expansion acts as one term — per-doc wdf summed
-        over subquery occurrences (a term appearing under two children
-        counts twice, like Xapian's SynonymPostList), df = size of the
-        docid union (exact, matching the oracle)."""
-        terms = sorted(term_mult)
-        if not terms:
-            return self._empty()
-        # synonym df is the dict-derivable estimate min(N, Σ df over the
-        # distinct constituent terms) — same convention as the oracle
-        # (Xapian scores OP_SYNONYM from estimated term frequencies too).
-        # This keeps termweight a driver-side constant: no aggregation
-        # over the expansion union just to learn its size, which at
-        # 100 TB would be a full shuffle of the hottest posting lists.
-        known = ctx["dict"]["all"]
-        df_est = min(self.N, sum(int(known[t]["df"])
-                                 for t in terms if t in known))
-        if df_est <= 0:
-            return self._empty()
-        dec = self._decoded(terms, allowed=ctx["allowed"],
-                            block_ids=ctx.get("blocks"),
-                            blocks_df=ctx.get("blocks_df"))
-        mult = F.create_map(
-            *[x for t in terms
-              for x in (F.lit(t), F.lit(int(term_mult[t])))])
-        dec = dec.withColumn(
-            "wdf", (F.col("wdf") * mult[F.col("term")]).cast("int"))
-        syn = dec.groupBy("doc_id").agg(
-            F.sum("wdf").cast("int").alias("wdf"),
-            F.max("doclen").alias("doclen"))
-        tw = bm25.termweight(self.N, df_est, 1)
-        return syn.select("doc_id", self._weight_col(tw).alias("weight"))
-
-    def _synonym_over_children(self, node: Bool, ctx: dict) -> DataFrame:
-        from collections import Counter
+    @staticmethod
+    def _syn_terms(node: Node, ctx: dict) -> Counter:
+        """OP_SYNONYM's constituent terms with multiplicities: Term
+        leaves, wildcard expansions, and the leaves of nested Bool /
+        Positional / Scaled children flattened — a term under two
+        children counts twice, like Xapian's SynonymPostList."""
         counts: Counter = Counter()
 
         def walk(n: Node):
             if isinstance(n, Term):
                 counts[n.term] += 1
             elif isinstance(n, Wildcard):
-                for t in ctx["dict"]["expansions"].get(n.pattern, []):
-                    counts[t] += 1
+                counts.update(ctx["dict"]["expansions"].get(n.pattern, []))
             elif isinstance(n, (Bool, Positional)):
                 for c in n.children:
                     walk(c)
@@ -1031,215 +918,197 @@ class Searcher:
                 walk(n.child)
 
         walk(node)
-        return self._synonym(dict(counts), ctx)
+        return counts
 
-    def _compile_block_spec(self, node: Node, ctx: dict):
-        """Compile a plan tree into a ``_tree_kernel`` spec, or None
-        when the tree isn't block-local — today only MatchAll (docs
-        with no query term in a block aren't in its posting universe).
-        Positional nodes compile to 'pos' specs (VERDICT r04 #5), so
-        ``"a b" AND NOT c`` folds into the same single exchange as pure
-        boolean trees.  OR of pure leaves flattens into one 'leaf' spec
-        — identical weights (union + sum), fewer masks."""
+    def _unit_tw(self, terms, ctx: dict, wqf: int = 1) -> Optional[float]:
+        """Termweight of one scoring unit, or None when it matches
+        nothing.  A unit is one term, or a synonym / wildcard expansion
+        whose df is the dictionary estimate min(N, Σ df over the
+        distinct terms) — the oracle's convention (Xapian scores
+        OP_SYNONYM from estimated frequencies too), which keeps the
+        termweight a driver-side constant: no aggregation over the
+        expansion union just to learn its size."""
         known = ctx["dict"]["all"]
+        df = min(self.N, sum(int(known[t]["df"]) for t in set(terms)
+                             if t in known))
+        return bm25.termweight(self.N, df, wqf) if df > 0 else None
 
-        def leaf_member(leaf):
-            if isinstance(leaf, Term):
-                info = ctx["dict"]["exact"].get(leaf.term)
-                if not info:
-                    return None
-                return ("term", [leaf.term], bm25.termweight(
-                    self.N, int(info["df"]), leaf.wqf))
-            ts = ctx["dict"]["expansions"].get(leaf.pattern, [])
-            df_est = min(self.N, sum(int(known[t]["df"])
-                                     for t in ts if t in known))
-            if df_est <= 0:
-                return None
-            return ("syn", ts, bm25.termweight(self.N, df_est, 1))
+    def _max_leaf_tw(self, node: Node, ctx: dict) -> float:
+        """ELITE's ranking key: the highest leaf termweight under
+        ``node`` (oracle._max_leaf_termweight)."""
+        if isinstance(node, Term):
+            return self._unit_tw([node.term], ctx, node.wqf) or 0.0
+        if isinstance(node, Wildcard):
+            return self._unit_tw(
+                ctx["dict"]["expansions"].get(node.pattern, []), ctx) or 0.0
+        if isinstance(node, (Bool, Positional)):
+            return max((self._max_leaf_tw(c, ctx) for c in node.children),
+                       default=0.0)
+        if isinstance(node, Scaled):
+            return node.factor * self._max_leaf_tw(node.child, ctx)
+        return 0.0
 
-        if isinstance(node, (Term, Wildcard)):
-            m = leaf_member(node)
-            return ("leaf", [m]) if m else ("empty",)
+    def _compile_block_spec(self, node: Node, ctx: dict) -> tuple:
+        """Compile a plan tree into the tree kernel's spec (grammar in
+        ``_tree_block_fn``).  Total: every plan node compiles, so the
+        kernel is the one evaluator.  OR of pure leaves flattens into
+        one 'leaf' spec — identical weights (union + sum), fewer
+        masks."""
+        if isinstance(node, Term):
+            tw = self._unit_tw([node.term], ctx, node.wqf)
+            return ("empty",) if tw is None else \
+                ("leaf", [("term", [node.term], tw)])
+        if isinstance(node, Wildcard):
+            ts = ctx["dict"]["expansions"].get(node.pattern, [])
+            tw = self._unit_tw(ts, ctx)
+            return ("empty",) if tw is None else ("leaf", [("syn", ts, tw)])
+        if isinstance(node, MatchAll):
+            return ("all",)
         if isinstance(node, (MatchNothing, ValueRange)):
             return ("empty",)
         if isinstance(node, Positional):
-            members = []
-            for c in node.children:
-                if not isinstance(c, Term):
-                    return None  # positions live on term leaves only
-                info = ctx["dict"]["exact"].get(c.term)
-                if not info:
-                    return ("empty",)  # child matches nothing
-                members.append(("term", [c.term], bm25.termweight(
-                    self.N, int(info["df"]), c.wqf)))
-            return ("pos", node.op, node.window, members)
+            # positions live on term leaves only: a PHRASE/NEAR over
+            # any other child matches nothing (oracle._positional)
+            members = [self._compile_block_spec(c, ctx)
+                       if isinstance(c, Term) else ("empty",)
+                       for c in node.children]
+            if any(m[0] == "empty" for m in members):
+                return ("empty",)
+            return ("pos", node.op, node.window, [m[1][0] for m in members])
         if isinstance(node, Scaled):
-            sub = self._compile_block_spec(node.child, ctx)
-            if sub is None:
-                return None
-            return ("scaled", node.factor, sub)
-        if isinstance(node, Bool):
-            if node.op in ("OR", "AND"):
-                subs = []
-                for c in node.children:
-                    s = self._compile_block_spec(c, ctx)
-                    if s is None:
-                        return None
-                    subs.append(s)
-                if node.op == "OR":
-                    # flatten leaf children into one union group and
-                    # drop empties (OR identity)
-                    members, rest = [], []
-                    for s in subs:
-                        if s[0] == "leaf":
-                            members.extend(s[1])
-                        elif s[0] != "empty":
-                            rest.append(s)
-                    if members:
-                        rest.insert(0, ("leaf", members))
-                    if not rest:
-                        return ("empty",)
-                    return rest[0] if len(rest) == 1 else ("or", rest)
-                if any(s[0] == "empty" for s in subs):
-                    return ("empty",)  # AND absorbing element
-                return ("and", subs)
-            if node.op in ("AND_NOT", "AND_MAYBE", "FILTER", "XOR") \
-                    and len(node.children) == 2:
-                l = self._compile_block_spec(node.children[0], ctx)
-                r = self._compile_block_spec(node.children[1], ctx)
-                if l is None or r is None:
-                    return None
-                if l[0] == "empty":
-                    return r if node.op == "XOR" else ("empty",)
-                if r[0] == "empty":
-                    # x AND_NOT/AND_MAYBE/XOR nothing = x;
-                    # x FILTER nothing = nothing (plan.combine)
-                    return ("empty",) if node.op == "FILTER" else l
-                return (node.op.lower(), [l, r])
-        return None
+            return ("scaled", node.factor,
+                    self._compile_block_spec(node.child, ctx))
+        if not isinstance(node, Bool):
+            raise TypeError(f"unknown node {node!r}")
+        if node.op == "SYNONYM":
+            counts = self._syn_terms(node, ctx)
+            tw = self._unit_tw(counts, ctx)
+            return ("empty",) if tw is None else \
+                ("leaf", [("syn", sorted(counts.elements()), tw)])
+        if node.op == "ELITE":
+            # the 10 children with the highest leaf termweight, picked
+            # here on the driver; their union (weights summed) is an OR
+            kids = sorted(node.children, reverse=True,
+                          key=lambda c: self._max_leaf_tw(c, ctx))[:10]
+            return self._compile_block_spec(Bool("OR", tuple(kids)), ctx)
+        subs = [self._compile_block_spec(c, ctx) for c in node.children]
+        if node.op == "OR":
+            # flatten leaf children into one union group and drop
+            # empties (OR identity)
+            members, rest = [], []
+            for s in subs:
+                if s[0] == "leaf":
+                    members.extend(s[1])
+                elif s[0] != "empty":
+                    rest.append(s)
+            if members:
+                rest.insert(0, ("leaf", members))
+            if not rest:
+                return ("empty",)
+            return rest[0] if len(rest) == 1 else ("or", rest)
+        if node.op == "AND":
+            if any(s[0] == "empty" for s in subs):
+                return ("empty",)  # AND absorbing element
+            return ("and", subs)
+        if node.op in ("AND_NOT", "AND_MAYBE", "FILTER", "XOR"):
+            l, r = subs[:2]
+            if l[0] == "empty":
+                return r if node.op == "XOR" else ("empty",)
+            if r[0] == "empty":
+                # x AND_NOT/AND_MAYBE/XOR nothing = x;
+                # x FILTER nothing = nothing (plan.combine)
+                return ("empty",) if node.op == "FILTER" else l
+            return (node.op.lower(), [l, r])
+        raise ValueError(f"unknown bool op {node.op}")
 
-    @staticmethod
-    def _spec_terms(spec, out: set, pos_out: Optional[set] = None):
-        if spec[0] == "leaf":
-            for _, ts, _ in spec[1]:
-                out.update(ts)
-        elif spec[0] == "pos":
-            for _, ts, _ in spec[3]:
-                out.update(ts)
-                if pos_out is not None:
-                    pos_out.update(ts)
-        elif spec[0] == "scaled":
-            Searcher._spec_terms(spec[2], out, pos_out)
-        elif spec[0] in ("or", "and", "and_not", "and_maybe",
-                         "filter", "xor"):
-            for s in spec[1]:
-                Searcher._spec_terms(s, out, pos_out)
+    def _eval(self, node: Node, ctx: dict) -> DataFrame:
+        """(doc_id, weight) of a plan: its compiled spec through the
+        tree kernel, then the ``ctx['allowed']`` semi-join."""
+        return self._eval_specs([(None, self._compile_block_spec(node, ctx))],
+                                ctx, _WEIGHTS_SCHEMA)
 
-    def _block_eval_tree(self, node: Node, ctx: dict) \
-            -> Optional[DataFrame]:
-        """Evaluate a block-local boolean tree in ONE exchange: scan the
-        encoded posting rows of every referenced term, shuffle once on
-        the doc-range block key, fold the whole operator tree inside
-        the Arrow kernel.  Returns None when the tree isn't compilable
-        (caller falls back to per-operator joins).  Reached only above
-        the volume check: ``_eval`` runs smaller plans on the driver."""
-        spec = self._compile_block_spec(node, ctx)
-        if spec is None:
-            return None
-        terms: set = set()
-        pos_terms: set = set()
-        self._spec_terms(spec, terms, pos_terms)
-        if spec == ("empty",) or not terms:
-            return self._empty()
-        blocks = self._scan_blocks(sorted(terms))
-        if ctx.get("blocks") is not None:
-            blocks = blocks.filter(
-                F.col("block").isin([int(b) for b in ctx["blocks"]]))
-        if ctx.get("blocks_df") is not None:
-            blocks = blocks.join(F.broadcast(ctx["blocks_df"]), "block",
-                                 "left_semi")
-        cols = ["block", "term", "n", "doc_gaps", "wdfs", "doclens"]
-        if pos_terms:
-            # the binary positions column rides the exchange only when
-            # a positional node needs it (and is decoded only at AND-
-            # survivor indices inside the kernel)
-            cols.append("positions")
-        enc = self._block_exchange(blocks.select(*cols))
-        out = enc.mapInPandas(
-            _tree_kernel([(None, spec)], sorted(terms), self.lf,
-                         frozenset(pos_terms)),
-            "doc_id bigint, weight double")
-        if self.tombstones is not None:
-            out = out.join(self.tombstones, "doc_id", "left_anti")
+    def _eval_specs(self, spec_items: list, ctx: dict,
+                    schema: StructType) -> DataFrame:
+        """The kernel's rows for ``spec_items`` (``(query_id, spec)``
+        pairs): on the driver under the volume check, else through the
+        block exchange — tombstoned docs dropped either way — then
+        semi-joined with ``ctx['allowed']``."""
+        if self._on_driver(spec_items, ctx):
+            out = self._local_df(self._driver_eval(spec_items, ctx), schema)
+        else:
+            out = self._exchange_eval(spec_items, ctx, schema)
         if ctx["allowed"] is not None:
             out = out.join(ctx["allowed"], "doc_id", "left_semi")
         return out
 
-    # below this estimated posting volume (Σ df over the plan's terms,
-    # read off the dictionary rows already in hand) a compiled plan is
-    # evaluated on the DRIVER (``_driver_eval``): pyarrow reads the
-    # pruned posting fragments and the tree kernel's per-block function
-    # runs in-process, so the query runs no Spark job at all — per-job
-    # scheduling and Catalyst planning cost far more than one core's
-    # decode of a few megabytes.  Volume-driven, so it self-disables at
-    # scale: hot terms at 10^9+ docs blow past the bound and keep the
-    # parallel block exchange.
+    # below this estimated volume (Σ df over the plan's terms, read off
+    # the dictionary rows already in hand, plus N when it reads
+    # MatchAll's docs) a compiled plan is evaluated on the DRIVER
+    # (``_driver_eval``): pyarrow reads the pruned posting fragments
+    # and the tree kernel's per-block function runs in-process, so the
+    # query runs no Spark job at all — per-job scheduling and Catalyst
+    # planning cost far more than one core's decode of a few
+    # megabytes.  Volume-driven, so it self-disables at scale: hot
+    # terms at 10^9+ docs blow past the bound and keep the parallel
+    # block exchange.
     LOCAL_EVAL_ROWS = 2_000_000
 
-    def _on_driver(self, terms, ctx: dict) -> bool:
+    def _on_driver(self, spec_items: list, ctx: dict) -> bool:
         """The volume check choosing the driver over the block
         exchange.  A kept-block set too large for the driver
         (``blocks_df``) keeps the exchange."""
         if ctx.get("blocks_df") is not None:
             return False
+        terms, _, use_all = _spec_inputs(spec_items)
         known = ctx["dict"]["all"]
         vol = sum(int(known[t]["df"]) for t in terms if t in known)
-        return vol <= self.LOCAL_EVAL_ROWS
+        return vol + (self.N if use_all else 0) <= self.LOCAL_EVAL_ROWS
 
-    def _driver_plan(self, node: Node, ctx: dict):
-        """``(spec_items, terms, pos_terms)`` for ``_driver_eval`` when
-        ``node`` compiles and passes the volume check, else None."""
-        spec = self._compile_block_spec(node, ctx)
-        if spec is None:
-            return None
-        terms: set = set()
-        pos_terms: set = set()
-        self._spec_terms(spec, terms, pos_terms)
-        if not self._on_driver(terms, ctx):
-            return None
-        return [(None, spec)], terms, pos_terms
-
-    def _driver_eval(self, spec_items: list, terms, pos_terms,
+    def _driver_eval(self, spec_items: list,
                      ctx: dict) -> Optional[pd.DataFrame]:
         """Evaluate compiled specs on the driver with the exchange
         kernel's per-block function: a pyarrow read of the committed
         rows of the terms' ``postings/bucket=*/`` fragments (term IN,
-        and ``ctx['blocks']`` when pruning seeded it), grouped by
-        block, then tombstoned docs dropped.  Returns the kernel's rows
-        ((query_id,) doc_id, weight) — identical to the exchange path's
-        — or None when nothing matches."""
+        and ``ctx['blocks']`` when set) plus, for MatchAll, the live
+        docs' ``(block, doc_id)`` rows, cut into one Arrow slice per
+        block; then tombstoned docs dropped.  Returns the kernel's rows
+        ((query_id,) doc_id, weight) — identical to the exchange
+        path's — or None when nothing matches."""
+        terms, pos_terms, use_all = _spec_inputs(spec_items)
+        blocks = ctx.get("blocks")
+        parts = []
         buckets = sorted({term_bucket(t, self.n_buckets) for t in terms})
         files = [f for b in buckets
                  for f in self._files(f"postings/bucket={b}")]
-        if not files:
+        if files:
+            expr = pc.field("term").isin(sorted(terms))
+            if blocks is not None:
+                expr = expr & pc.field("block").isin(
+                    [int(b) for b in blocks])
+            cols = _KERNEL_COLS + (["positions"] if pos_terms else [])
+            parts.append(self._arrow_read(files, cols, expr))
+        if use_all:
+            # the forward store, not docstats: a doc that emitted zero
+            # terms (allowed by the data model) must still match
+            # <alldocuments> (ADVICE r04)
+            ids = self._arrow_read(self._files("docs"), ["doc_id"],
+                                   None)["doc_id"]
+            docs = pa.table({"block": pc.divide(
+                ids, int(self.manifest["block_span"])), "doc_id": ids})
+            if blocks is not None:
+                docs = docs.filter(pc.field("block").isin(
+                    [int(b) for b in blocks]))
+            parts.append(docs)
+        if not parts:
             return None
-        expr = pc.field("term").isin(sorted(terms))
-        if ctx.get("blocks") is not None:
-            expr = expr & pc.field("block").isin(
-                [int(b) for b in ctx["blocks"]])
-        cols = ["block", "term", "n", "doc_gaps", "wdfs", "doclens"]
-        if pos_terms:
-            cols.append("positions")
-        tbl = self._arrow_read(files, cols, expr).sort_by("block")
+        tbl = pa.concat_tables(parts, promote_options="default")
         if tbl.num_rows == 0:
             return None
         one_block = _tree_block_fn(spec_items, sorted(terms), self.lf,
                                    frozenset(pos_terms))
-        blk = tbl.column("block").to_numpy()
-        cuts = [0, *(np.flatnonzero(np.diff(blk)) + 1), len(blk)]
         frames = []
-        for a, b in zip(cuts[:-1], cuts[1:]):
-            out = one_block(tbl.slice(a, b - a).to_pylist())
+        for blk in _block_slices(tbl.sort_by("block")):
+            out = one_block(blk)
             if out is not None:
                 frames.append(out)
         if not frames:
@@ -1254,127 +1123,65 @@ class Searcher:
                 out = out[~np.isin(ids, dead["doc_id"].to_numpy())]
         return out if len(out) else None
 
+    def _exchange_eval(self, spec_items: list, ctx: dict,
+                       schema: StructType) -> DataFrame:
+        """The kernel's rows through ONE exchange: the encoded posting
+        rows of every referenced term (plus, for MatchAll, the docs'
+        ``(block, doc_id)`` rows) shuffled on the doc-range block key,
+        the tree kernel folded per block inside mapInArrow, tombstoned
+        docs anti-joined."""
+        terms, pos_terms, use_all = _spec_inputs(spec_items)
+        parts = []
+        if terms:
+            # the binary positions column rides the exchange only when
+            # a positional node needs it (and is decoded only at AND-
+            # survivor indices inside the kernel)
+            cols = _KERNEL_COLS + (["positions"] if pos_terms else [])
+            parts.append(self._scan_blocks(sorted(terms)).select(*cols))
+        if use_all:
+            span = int(self.manifest["block_span"])
+            parts.append(self.docs.select(
+                F.expr(f"doc_id div {span}").alias("block"), "doc_id"))
+        enc = parts[0]
+        if len(parts) > 1:
+            enc = enc.unionByName(parts[1], allowMissingColumns=True)
+        if ctx.get("blocks") is not None:
+            enc = enc.filter(
+                F.col("block").isin([int(b) for b in ctx["blocks"]]))
+        if ctx.get("blocks_df") is not None:
+            # kept-block set too large for a pushed-down IN-list: apply
+            # it as a broadcast semi-join (VERDICT r02 #1 cap)
+            enc = enc.join(F.broadcast(ctx["blocks_df"]), "block",
+                           "left_semi")
+        out = self._block_exchange(enc).mapInArrow(
+            _tree_kernel(spec_items, sorted(terms), self.lf,
+                         frozenset(pos_terms)), schema)
+        if self.tombstones is not None:
+            out = out.join(self.tombstones, "doc_id", "left_anti")
+        return out
+
     @staticmethod
     def _block_exchange(enc: DataFrame) -> DataFrame:
         """Group encoded posting rows by doc-range block for the tree
         kernel: one hash exchange on ``block``, sorted within each
-        partition so ``_carry_block_stream`` sees whole blocks."""
+        partition so ``_tree_kernel`` sees whole blocks."""
         return enc.repartition("block").sortWithinPartitions("block")
-
-    def _positional(self, node: Positional, ctx: dict) -> DataFrame:
-        """PHRASE / NEAR via the block-local tree kernel: positions are
-        only decoded for docs that survive the AND intersection, and
-        the window check is vectorized (no per-row Python).  Since r5
-        this is the same kernel boolean trees use, so a positional node
-        anywhere in a tree still evaluates in one exchange."""
-        out = self._block_eval_tree(node, ctx)
-        return out if out is not None else self._empty()
-
-    def _bool(self, node: Bool, ctx: dict) -> DataFrame:
-        op = node.op
-        if op == "SYNONYM":
-            return self._synonym_over_children(node, ctx)
-        if op == "ELITE":
-            # keep the 10 children with the highest leaf termweight
-            # (wildcard leaves rank by their estimated synonym df,
-            # mirroring OracleIndex._max_leaf_termweight)
-            known = ctx["dict"]["all"]
-
-            def leaf_tw(n: Node) -> float:
-                if isinstance(n, Term):
-                    info = ctx["dict"]["exact"].get(n.term)
-                    return bm25.termweight(
-                        self.N, int(info["df"]), n.wqf) if info else 0.0
-                if isinstance(n, Wildcard):
-                    ts = ctx["dict"]["expansions"].get(n.pattern, [])
-                    df_est = min(self.N, sum(
-                        int(known[t]["df"]) for t in ts if t in known))
-                    return bm25.termweight(self.N, df_est, 1) \
-                        if df_est else 0.0
-                if isinstance(n, (Bool, Positional)):
-                    return max((leaf_tw(c) for c in n.children),
-                               default=0.0)
-                if isinstance(n, Scaled):
-                    return n.factor * leaf_tw(n.child)
-                return 0.0
-
-            def key(c):
-                return leaf_tw(c)
-            kids = sorted(node.children, key=key, reverse=True)[:10]
-            if not kids:
-                return self._empty()
-            # the kept-children set is decided driver-side; their union
-            # (weights summed — OR semantics) then evaluates as any
-            # other boolean tree: one tree-kernel pass when it compiles
-            # (VERDICT r05 #6: previously each kept child ran its own
-            # _eval + union, N exchanges for N distinct-shape children)
-            return self._eval(Bool("OR", tuple(kids)), ctx)
-        if op in ("AND", "OR", "AND_NOT", "AND_MAYBE", "FILTER", "XOR"):
-            # block-local operator tree: the WHOLE tree (not just
-            # AND/pure-OR) folds inside one encoded-row exchange when
-            # every leaf is a Term/Wildcard/Positional — a doc lives in
-            # exactly one doc-range block, so any boolean function of
-            # term membership and any positional predicate is block-
-            # locally decidable (VERDICT r03 #5, r04 #5)
-            merged = self._block_eval_tree(node, ctx)
-            if merged is not None:
-                return merged
-        sides = [self._eval(c, ctx) for c in node.children]
-        if op == "OR":
-            out = sides[0]
-            for s in sides[1:]:
-                out = out.unionByName(s)
-            return out.groupBy("doc_id").agg(F.sum("weight").alias("weight"))
-        left = sides[0]
-        right = sides[1]
-        if op == "AND":
-            out = left
-            for s in sides[1:]:
-                out = out.join(s.withColumnRenamed("weight", "w2"),
-                               "doc_id", "inner") \
-                    .select("doc_id", (F.col("weight") + F.col("w2")
-                                       ).alias("weight"))
-            return out
-        if op == "AND_NOT":
-            return left.join(right, "doc_id", "left_anti")
-        if op == "XOR":
-            l2 = left.withColumnRenamed("weight", "lw")
-            r2 = right.withColumnRenamed("weight", "rw")
-            j = l2.join(r2, "doc_id", "full_outer")
-            return j.filter(F.col("lw").isNull() | F.col("rw").isNull()) \
-                .select("doc_id", F.coalesce("lw", "rw").alias("weight"))
-        if op == "AND_MAYBE":
-            r2 = right.withColumnRenamed("weight", "rw")
-            return left.join(r2, "doc_id", "left") \
-                .select("doc_id", (F.col("weight") +
-                                   F.coalesce(F.col("rw"), F.lit(0.0))
-                                   ).alias("weight"))
-        if op == "FILTER":
-            return left.join(right, "doc_id", "left_semi")
-        raise ValueError(f"unknown bool op {op}")
 
     # -- block-max pruning (O3: distributed block-max WAND) --------------------
 
     def _scoring_units(self, node: Node, ctx: dict):
         """Decompose an OR/SYNONYM/Term/Wildcard-only tree into scoring
-        units [(tw, {term: mult})]; returns None when the tree contains
-        any other operator (pruning not applicable)."""
+        units [(tw, {term: mult})], one per leaf postlist; returns None
+        when the tree contains any other operator (pruning not
+        applicable)."""
+        wqf = 1
         if isinstance(node, Term):
-            info = ctx["dict"]["exact"].get(node.term)
-            if not info:
-                return []
-            return [(bm25.termweight(self.N, int(info["df"]), node.wqf),
-                     {node.term: 1})]
-        if isinstance(node, Wildcard):
-            terms = ctx["dict"]["expansions"].get(node.pattern, [])
-            if not terms:
-                return []
-            known = ctx["dict"]["all"]
-            df_est = min(self.N, sum(int(known[t]["df"])
-                                     for t in terms if t in known))
-            return [(bm25.termweight(self.N, df_est, 1),
-                     {t: 1 for t in terms})]
-        if isinstance(node, Bool) and node.op == "OR":
+            terms, wqf = Counter([node.term]), node.wqf
+        elif isinstance(node, Wildcard):
+            terms = Counter(ctx["dict"]["expansions"].get(node.pattern, []))
+        elif isinstance(node, Bool) and node.op == "SYNONYM":
+            terms = self._syn_terms(node, ctx)
+        elif isinstance(node, Bool) and node.op == "OR":
             units = []
             for c in node.children:
                 u = self._scoring_units(c, ctx)
@@ -1382,29 +1189,15 @@ class Searcher:
                     return None
                 units.extend(u)
             return units
-        if isinstance(node, Bool) and node.op == "SYNONYM":
-            from collections import Counter
-            counts: Counter = Counter()
-
-            def walk(n):
-                if isinstance(n, Term):
-                    counts[n.term] += 1
-                elif isinstance(n, Wildcard):
-                    for t in ctx["dict"]["expansions"].get(n.pattern, []):
-                        counts[t] += 1
-                elif isinstance(n, (Bool, Positional)):
-                    for cc in n.children:
-                        walk(cc)
-            walk(node)
-            if not counts:
-                return []
-            known = ctx["dict"]["all"]
-            df_est = min(self.N, sum(int(known[t]["df"])
-                                     for t in counts if t in known))
-            return [(bm25.termweight(self.N, df_est, 1), dict(counts))]
-        if isinstance(node, MatchNothing):
+        elif isinstance(node, MatchNothing):
             return []
-        return None
+        else:
+            return None
+        # a unit even when none of its terms is in the dictionary: it
+        # still counts toward percent-cutoff's total
+        # (oracle._unit_term_sets); its weight bounds nothing
+        return [(self._unit_tw(terms, ctx, wqf) or 0.0, dict(terms))] \
+            if terms else []
 
     # driver-side block-id collects are capped at a CONSTANT: beyond
     # this the IN-list stops paying for itself and the plain path (or a
@@ -1483,7 +1276,7 @@ class Searcher:
                 F.max("ub").alias("ub_hi")).collect()[0]
             n_blocks = int(totals["nb"])
             if n_blocks == 0:
-                return self._empty()
+                return self._local_df(None, _WEIGHTS_SCHEMA)
             # degenerate bound distribution (every block's upper bound
             # identical — uniformly replicated corpora, WAND's worst
             # case): θ ≤ max achievable score ≤ that shared bound, so
@@ -1571,9 +1364,10 @@ class Searcher:
         greatest-weight doc / total subqueries) / greatest weight; keep
         docs with weight >= (pct/100 - DBL_EPSILON) / percent_scale.
         The matched-subquery count is exact for unit-decomposable trees
-        (one tiny pruned scan of the greatest doc's terms); other trees
-        use ratio 1, which equals Xapian whenever the greatest doc
-        matches every leaf (always true for AND-semantics trees)."""
+        (the tree kernel on the driver over the greatest doc's block,
+        one tagged spec per unit); other trees use ratio 1, which
+        equals Xapian whenever the greatest doc matches every leaf
+        (always true for AND-semantics trees)."""
         top = weights.orderBy(F.desc("weight"), F.asc("doc_id")) \
             .limit(1).collect()
         if not top or top[0]["weight"] <= 0:
@@ -1581,16 +1375,15 @@ class Searcher:
         gdoc, gw = top[0]["doc_id"], top[0]["weight"]
         units = self._scoring_units(node, ctx)
         if units:
-            all_terms = sorted({t for _, tm in units for t in tm})
             # the greatest doc lives in exactly one doc-range block, so
-            # only that block of each term needs decoding (a full
-            # posting scan here would read every block at 10^12 docs)
+            # only that block of each term is read (a full posting scan
+            # here would read every block at 10^12 docs)
             gblock = int(gdoc) // int(self.manifest["block_span"])
-            present = {r["term"] for r in
-                       self._decoded(all_terms, block_ids=[gblock])
-                       .filter(F.col("doc_id") == gdoc)
-                       .select("term").distinct().collect()}
-            gn = sum(1 for _, tm in units if any(t in present for t in tm))
+            items = [(str(i), ("leaf", [("term", [t], 1.0) for t in tm]))
+                     for i, (_, tm) in enumerate(units)]
+            hits = self._driver_eval(items, {**ctx, "blocks": {gblock}})
+            gn = 0 if hits is None else \
+                hits.loc[hits["doc_id"] == gdoc, "query_id"].nunique()
             ratio = gn / len(units)
         else:
             ratio = 1.0
@@ -1620,15 +1413,15 @@ class Searcher:
         doc / total subqueries) / greatest weight.  Disables pruning —
         the cutoff floor can sit below the top-k pruning threshold.
 
-        A plan ``_compile_block_spec`` compiles whose posting volume is
-        under ``LOCAL_EVAL_ROWS`` is answered entirely on the driver:
+        A plan whose posting volume is under ``LOCAL_EVAL_ROWS`` is
+        answered entirely on the driver:
         pyarrow dictionary probe, pyarrow posting read, the tree
         kernel's per-block function, tombstone drop and a numpy top-k.
         The result is an Arrow-backed local DataFrame, so collecting it
         (or ``fetch``-ing it) runs no Spark job.  ``filters`` and
         ``percent_cutoff`` still rank in Spark, over the driver-
-        evaluated candidates as a local DataFrame; larger plans,
-        MatchAll and ``prune='always'`` keep the distributed path."""
+        evaluated candidates as a local DataFrame; larger plans and
+        ``prune='always'`` keep the distributed path."""
         node = parse_user_query(query, cjk_ngram=self.cjk_ngram)
         terms: set = set()
         patterns: set = set()
@@ -1638,9 +1431,9 @@ class Searcher:
             "allowed": None,
         }
         if filters is None and not percent_cutoff and prune != "always":
-            plan = self._driver_plan(node, ctx)
-            if plan is not None:
-                w = self._driver_eval(*plan, ctx)
+            items = [(None, self._compile_block_spec(node, ctx))]
+            if self._on_driver(items, ctx):
+                w = self._driver_eval(items, ctx)
                 if w is not None:
                     # weight cutoff (O5) before ranking, as below
                     w = _top_k(w[w["weight"] >= min_weight], k)
@@ -1736,9 +1529,9 @@ class Searcher:
         the posting decode, term membership, and BM25 denominators are
         computed once and reused by every query's spec.  A 10k-query
         log therefore costs one exchange + one decode of the union
-        posting set, not 10k of each.  Queries whose tree isn't
-        block-local (MatchAll shapes) fall back to per-query plans and
-        union in.
+        posting set, not 10k of each.  Every query compiles; MatchAll
+        shapes add the docs' ``(block, doc_id)`` rows to their group's
+        input.
 
         Volume cap (round 5, from the amp10000 measurement): ONE
         exchange is only a win while per-job overhead dominates; once
@@ -1763,49 +1556,17 @@ class Searcher:
         allowed = (self.docs.filter(filters).select("doc_id")
                    if filters is not None else None)
         ctx = {"dict": shared_dict, "allowed": allowed}
-        spec_items: list = []
-        rest: dict = {}
+        spec_items = []
         for qid, node in nodes.items():
             spec = self._compile_block_spec(node, ctx)
-            if spec is None:
-                rest[qid] = node
-            elif spec != ("empty",):
+            if spec != ("empty",):
                 spec_items.append((str(qid), spec))
         tagged = None
         for group in self._batch_groups(spec_items, ctx):
-            g_terms: set = set()
-            g_pos: set = set()
-            for _qid, spec in group:
-                self._spec_terms(spec, g_terms, g_pos)
-            if not g_terms:
-                continue
-            if self._on_driver(g_terms, ctx):
-                out = self._local_df(
-                    self._driver_eval(group, g_terms, g_pos, ctx),
-                    _TAGGED_SCHEMA)
-            else:
-                blocks = self._scan_blocks(sorted(g_terms))
-                cols = ["block", "term", "n", "doc_gaps", "wdfs",
-                        "doclens"]
-                if g_pos:
-                    cols.append("positions")
-                enc = self._block_exchange(blocks.select(*cols))
-                out = enc.mapInPandas(
-                    _tree_kernel(group, sorted(g_terms), self.lf,
-                                 frozenset(g_pos)), _TAGGED_SCHEMA)
-                if self.tombstones is not None:
-                    out = out.join(self.tombstones, "doc_id", "left_anti")
-            if allowed is not None:
-                out = out.join(allowed, "doc_id", "left_semi")
+            out = self._eval_specs(group, ctx, _TAGGED_SCHEMA)
             tagged = out if tagged is None else tagged.unionByName(out)
-        for qid, node in rest.items():
-            w = self._eval(node, ctx) \
-                .withColumn("query_id", F.lit(str(qid)))
-            tagged = w if tagged is None else tagged.unionByName(w)
         if tagged is None:
-            return self.spark.createDataFrame(
-                [], "query_id string, doc_id bigint, score double, "
-                    "rank int")
+            return self._local_df(None, _RANKED_SCHEMA)
         win = Window.partitionBy("query_id").orderBy(
             F.desc("weight"), F.asc("doc_id"))
         return (tagged.withColumn("rank", F.row_number().over(win))
@@ -1836,8 +1597,7 @@ class Searcher:
         cur_terms: set = set()
         cur_cost = 0
         for qid, spec in spec_items:
-            t: set = set()
-            self._spec_terms(spec, t)
+            t = _spec_inputs([(qid, spec)])[0]
             add = added_cost(t, cur_terms)
             if cur and cur_cost + add > cap:
                 groups.append(cur)
@@ -1898,8 +1658,7 @@ class Searcher:
         for t in query_exclude_terms(query):
             order.setdefault(t, len(order) + 1)
         if not order:
-            return self.spark.createDataFrame(
-                [], "term string, qindex long")
+            return self._local_df(None, _MATCHING_TERMS_SCHEMA)
         qmap = F.create_map(*[F.lit(x) for kv in order.items()
                               for x in kv])
         return (_termlist(self)

@@ -216,7 +216,7 @@ class _SqlGen:
 
     Every node becomes a CTE producing at most one ``(doc_id, s)`` row
     per document; node semantics mirror plan.py's table (and
-    search._bool / oracle.py), so the SQL is a third, independent
+    search._tree_block_fn / oracle.py), so the SQL is a third, independent
     implementation of the same operator algebra.
     """
 
@@ -360,7 +360,7 @@ class _SqlGen:
         check is exact).  2-term NEAR: distinct positions, any order,
         |Δ| < window (distinct terms never share a position).  Weight =
         AND of the member term units restricted to hit docs
-        (search._tree_kernel / oracle._phrase_hit semantics)."""
+        (search._tree_block_fn / oracle._phrase_hit semantics)."""
         terms = []
         for c in node.children:
             if not isinstance(c, Term):

@@ -228,12 +228,11 @@ def test_fetch_winners(searcher):
     assert all(r["fullpath"] for r in rows)
 
 
-# every shape _compile_block_spec compiles: lone term, free text,
-# phrase, field, prefix, and the boolean / positional operators
-DRIVER_SHAPES = ["spark ", "quick brown", '"quick brown" ', "title:hee ",
-                 "qui", "spark AND NOT query", "quick AND MAYBE lazy",
-                 "planner OR fox", "spark XOR query", "quick FILTER lazy",
-                 "spark NEAR shuffles", "x SCALED 2", "zig "]
+# every plan shape compiles into the tree kernel: the fixture queries,
+# plus SYNONYM and ELITE nested under other operators
+DRIVER_SHAPES = QUERIES + ["fox SYNONYM foxes AND spark",
+                           "spark AND (fox SYNONYM foxes)",
+                           "quick ELITE lazy AND spark"]
 
 
 def test_driver_path_runs_no_spark_job(spark, searcher, oracle):
@@ -250,6 +249,30 @@ def test_driver_path_runs_no_spark_job(spark, searcher, oracle):
         assert all(r["fullpath"] for r in rows), q
         assert_results_match(oracle.search(q, k=5),
                              [(r["doc_id"], r["score"]) for r in rows])
+
+
+def test_positional_over_non_term_compiles_empty(searcher):
+    """PHRASE/NEAR over a non-Term child matches nothing, as in
+    ``OracleIndex._positional``: it compiles to the empty spec."""
+    from mdq_spark.plan import Positional, Term, Wildcard
+    node = Positional("PHRASE", (Term("quick", 1), Wildcard("bro")), 2)
+    ctx = {"dict": searcher._dict_lookup(["quick"], ["bro"]),
+           "allowed": None}
+    assert ctx["dict"]["expansions"]["bro"]  # the wildcard does expand
+    assert searcher._compile_block_spec(node, ctx) == ("empty",)
+
+
+@pytest.mark.parametrize("local_rows", [None, 0])
+def test_match_all_alone(spark, searcher, oracle, monkeypatch, local_rows):
+    """A plan of MatchAll alone reads no posting term, yet matches every
+    live doc with weight 0 — on the driver and through the exchange."""
+    from mdq_spark.plan import MatchAll
+    if local_rows is not None:
+        monkeypatch.setattr(Searcher, "LOCAL_EVAL_ROWS", local_rows)
+    ctx = {"dict": searcher._dict_lookup([], []), "allowed": None}
+    rows = searcher._eval(MatchAll(), ctx).collect()
+    assert sorted((r["doc_id"], r["weight"]) for r in rows) == \
+        sorted((d, 0.0) for d in oracle.doclen)
 
 
 def test_top_k_matches_sorted_order():
@@ -419,7 +442,10 @@ BLOCK_MERGE_QUERIES = [
     "spark AND NOT query ", "qui* AND NOT planner",
     # positional leaves inside boolean trees (VERDICT r04 #5)
     '"quick brown" AND NOT foxes', 'spark XOR "quick brown" ',
-    '"quick brown" AND MAYBE lazy', "spark NEAR shuffles"]
+    '"quick brown" AND MAYBE lazy', "spark NEAR shuffles",
+    # SYNONYM / ELITE under other operators, and MatchAll
+    "fox SYNONYM foxes AND spark", "spark AND (fox SYNONYM foxes)",
+    "quick ELITE lazy AND spark", "NOT spark AND quick"]
 
 
 def test_block_merge_single_exchange(searcher, monkeypatch):
@@ -463,7 +489,8 @@ def test_percent_cutoff_parity(searcher, oracle, pct):
     """Enquire::set_cutoff(percent) parity (omenquire.cc:872-876):
     unit-decomposable OR trees use the exact matched-subquery ratio;
     AND-shaped trees use ratio 1."""
-    for q in ["spark OR quick", "planner OR fox", "spark AND query "]:
+    for q in ["spark OR quick", "planner OR fox", "spark AND query ",
+              "fox SYNONYM foxes", "qui"]:
         exp = oracle.search(q, percent_cutoff=pct)
         act = [(r["doc_id"], r["score"]) for r in
                searcher.query_df(q, k=100, percent_cutoff=pct).collect()]
@@ -509,6 +536,29 @@ def test_spelling_autobuild_on_build(spark, tmp_path_factory):
     os.remove(_meta_path(out))  # force the on-the-fly fallback
     assert Searcher(spark, out).batch_suggest(words) == prebuilt
     assert prebuilt["spakr"] == "spark"
+
+
+def test_rebuild_drops_stale_spelling_table(spark, tmp_path_factory):
+    """A forced rebuild without ``spelling=True`` removes the fragment
+    table of the index it replaces (the rebuild is generation 0 again,
+    so a kept table would pass for current): suggestions then come
+    from the new lexicon, exactly as on a fresh index of it."""
+    from conftest import local_docs_df
+
+    def corpus(body):
+        return local_docs_df(spark, [{**DOCS[0], "body": body,
+                                      "sha256": _sha(body)}])
+    a = corpus("kubernetes cluster scheduling")
+    b = corpus("pyspark driver memory")
+    out = str(tmp_path_factory.mktemp("spell_rebuild"))
+    build_index(spark, a, out, block_span=4, n_buckets=8, spelling=True)
+    build_index(spark, b, out, block_span=4, n_buckets=8, force=True)
+    fresh = str(tmp_path_factory.mktemp("spell_fresh"))
+    build_index(spark, b, fresh, block_span=4, n_buckets=8)
+    words = ["kubernetis", "pyspork"]
+    want = Searcher(spark, fresh).batch_suggest(words)
+    assert want == {"kubernetis": "", "pyspork": "pyspark"}
+    assert Searcher(spark, out).batch_suggest(words) == want
 
 
 def test_spelling_fragments_and_distance():
@@ -609,7 +659,7 @@ def test_batch_search_single_shared_exchange(searcher, monkeypatch):
          '"quick brown" ', "planner OR fox", "qui"])}
     df = searcher.batch_search(queries, k=3)
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("MapInPandas") == 1, plan
+    assert plan.count("MapInArrow") == 1, plan
     # one exchange for the kernel + one for the per-query rank window
     assert plan.count("Exchange") <= 2, plan
 
@@ -621,7 +671,7 @@ def test_batch_groups_packing(searcher):
     dfs = {"a": {"df": 10}, "b": {"df": 10}, "c": {"df": 50}}
     ctx = {"dict": {"all": dfs}}
 
-    def leaf(t):  # ("leaf", [(wqf?, term-set, ...)]) — _spec_terms shape
+    def leaf(t):  # ("leaf", [(kind, [term...], tw)]) — _spec_inputs shape
         return ("leaf", [(1.0, [t], 1)])
 
     items = [("q1", leaf("a")), ("q2", leaf("a")),
@@ -655,7 +705,7 @@ def test_batch_search_volume_cap_grouping(spark, index, oracle):
     # grouping is observable: >1 kernel pass in the plan
     df = s1.batch_search(queries, k=5)
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("MapInPandas") > 1, plan
+    assert plan.count("MapInArrow") > 1, plan
     out = df.collect()
     by_q = {}
     for r in out:

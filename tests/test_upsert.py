@@ -98,13 +98,24 @@ def test_driver_path_over_tombstones_runs_no_spark_job(
     fetch, and answers like a rebuild of the live corpus."""
     s = Searcher(spark, upserted[0])
     assert s.tombstones is not None and s.dict_delta is not None
-    compiled = [q for q in QUERIES if not q.startswith("NOT ")]  # MatchAll
-    for q in compiled + ['"beta zeta" ', "alpha AND MAYBE zeta"]:
+    for q in QUERIES + ['"beta zeta" ', "alpha AND MAYBE zeta"]:
         rows, n = count_spark_jobs(
             spark, lambda: s.fetch(s.query_df(q, k=10)).collect())
         assert n == 0, q
         assert_results_match(oracle_final.search(q, k=10),
                              [(r["doc_id"], r["score"]) for r in rows])
+
+
+@pytest.mark.parametrize("pct", [30, 70])
+def test_percent_cutoff_after_upsert(spark, upserted, oracle_final, pct):
+    """percent-cutoff's greatest-doc probe reads the live postings of
+    an upserted index: its matched-unit count skips tombstoned rows."""
+    s = Searcher(spark, upserted[0])
+    for q in ["alpha OR zeta OR words", "beta OR gam"]:
+        exp = oracle_final.search(q, percent_cutoff=pct)
+        act = [(r["doc_id"], r["score"]) for r in
+               s.query_df(q, k=100, percent_cutoff=pct).collect()]
+        assert_results_match(exp, act)
 
 
 def test_second_upsert(spark, upserted, oracle_final):
