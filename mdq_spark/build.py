@@ -80,6 +80,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 import threading
 import time
@@ -92,6 +93,7 @@ import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.dataset as pads
+import pyarrow.fs as pafs
 import pyarrow.parquet as pq
 
 from pyspark.errors import AnalysisException
@@ -253,6 +255,15 @@ PARTIALS_SCHEMA = StructType(
     + [StructField("sum_wdf", LongType(), False)])
 
 _POSTINGS_COLS = [f.name for f in POSTINGS_SCHEMA.fields]
+# the schema of each index directory that has one (upsert's tombstones
+# and negative dictionary deltas included), less its ``gen``
+_DIR_SCHEMAS = {
+    "docs": DOCS_SCHEMA, "partials": PARTIALS_SCHEMA, "terms": TERMS_SCHEMA,
+    "postings": POSTINGS_SCHEMA,
+    "tombstones": StructType([StructField("doc_id", LongType())]),
+    "dict_delta": StructType([StructField(c, t) for c, t in (
+        ("term", StringType()), ("bucket", IntegerType()),
+        ("ddf", LongType()), ("dcf", LongType()))])}
 # the forward-store columns the tokenizer reads: sha256/weight/writes/
 # views never reach the tokenize stage (guide §4)
 _TOKENIZE_COLS = ["doc_id", "authors", "date", "fullpath", "title",
@@ -894,6 +905,55 @@ def _read_table(path: str, columns: Optional[list] = None,
         columns=columns, filter=expr)
 
 
+# -- index locations and readers ---------------------------------------------
+
+def _local_path(location: str) -> Optional[str]:
+    """The local path of a plain path or a ``file:`` URI (its path taken
+    literally, as Hadoop takes it); None for a URI of another scheme."""
+    if location.startswith("file:"):
+        return re.sub(r"^file:(//[^/]*)?", "", location)
+    return None if re.match(r"[A-Za-z][A-Za-z0-9+.-]*://", location) \
+        else location
+
+
+def local_dir(location: str) -> str:
+    """The local directory of an index location that is written to.
+    Writers keep the index on the local filesystem, so any scheme but
+    ``file:`` raises ``ValueError`` before anything is written."""
+    path = _local_path(location.rstrip("/"))
+    if path is None:
+        raise ValueError(f"cannot write an index at {location!r}: writers "
+                         f"take a local path or a file: URI")
+    return path
+
+
+def index_fs(location: str) -> tuple:
+    """``(pyarrow filesystem, path)`` of an index location that is read:
+    the local filesystem for a plain path or ``file:`` URI, else the
+    filesystem the URI names."""
+    path = _local_path(location)
+    if path is not None:
+        return pafs.LocalFileSystem(), os.path.abspath(path)
+    return pafs.FileSystem.from_uri(location)
+
+
+def read_index_dir(spark: SparkSession, location: str, rel: str,
+                   gens: Optional[list]) -> DataFrame:
+    """The rows of ``<location>/<rel>`` whose ``gen`` is in ``gens``
+    (every row when None): the one Spark read of an index directory,
+    given the directory's schema where one is defined.  Hadoop globs a
+    read path, so its metacharacters are escaped (Spark then logs a
+    harmless FileNotFoundException from its ``_spark_metadata`` probe
+    of the escaped name)."""
+    path = "".join("\\" + c if c in "\\[]{}*?" else c
+                   for c in f"{location.rstrip('/')}/{rel}")
+    schema = _DIR_SCHEMAS.get(rel)
+    reader = spark.read if schema is None else spark.read.schema(
+        StructType(schema.fields + [StructField("gen", IntegerType())]))
+    df = reader.parquet(path)
+    return df if gens is None else df.filter(F.col("gen").isin(list(gens)))
+
+
 def _gstats_of(docstats: pa.Table) -> dict:
     """The collection statistics the docstats stage's Observation
     records, from a (doc_id, doclen) table."""
@@ -993,7 +1053,7 @@ class IndexBuilder:
         upserts pick the same tokenizer mode.  Off by default — the
         reference never enables the flag."""
         self.spark = spark
-        self.out = out_dir.rstrip("/")
+        self.out = local_dir(out_dir)
         self.block_span = block_span
         self.n_buckets = n_buckets
         self.mode = mode
@@ -1011,53 +1071,49 @@ class IndexBuilder:
         return int(docs_df._jdf.queryExecution().optimizedPlan()
                    .stats().sizeInBytes())
 
-    def _range_stats(self, docs_df: DataFrame) -> Optional[list]:
-        """One cheap column-pruned pass over doc_id: per-partition
-        (lo, hi, n) spans of the incoming partitions.  Returns None when
-        Spark refuses to plan the probe (a non-file source such as a
-        streaming DataFrame); a failure while it runs propagates."""
+    def _ranges_disjoint(self, docs_df: DataFrame,
+                         min_parts: int = 1) -> bool:
+        """Do the incoming partitions already hold pairwise-disjoint
+        doc-id ranges, in at least ``min_parts`` non-empty partitions?
+        Then the forward-store range exchange is redundant and the stage
+        writes with a local sort only.  Dense ids from ingest and the
+        driver documents table both qualify; arbitrary inputs (e.g. a
+        compaction's filtered doc set read off bucketless parquet) fall
+        back to the shuffle when it fails.  The probe is one cheap
+        column-pruned pass over doc_id; when Spark refuses to plan it (a
+        non-file source such as a streaming DataFrame) the answer is
+        no, and a failure while it runs propagates."""
         try:
             stats = (docs_df
                      .select(F.spark_partition_id().alias("_pid"),
                              F.col("doc_id"))
                      .groupBy("_pid")
                      .agg(F.min("doc_id").alias("lo"),
-                          F.max("doc_id").alias("hi"),
-                          F.count("doc_id").alias("n"))
+                          F.max("doc_id").alias("hi"))
                      .collect())
         except AnalysisException:
-            return None
-        return [(int(r["lo"]), int(r["hi"]), int(r["n"]))
-                for r in stats if int(r["n"])]
-
-    def _ranges_disjoint(self, docs_df: DataFrame) -> bool:
-        """Do the incoming partitions already hold pairwise-disjoint
-        doc-id ranges?  Then the forward-store range exchange is
-        redundant and the stage writes with a local sort only.  Dense
-        ids from ingest and the driver documents table both qualify;
-        arbitrary inputs (e.g. a compaction's filtered doc set read off
-        bucketless parquet) fall back to the shuffle when it fails."""
-        stats = self._range_stats(docs_df)
-        if stats is None:
             return False
-        spans = sorted((lo, hi) for lo, hi, _n in stats)
-        return all(a[1] < b[0] for a, b in zip(spans, spans[1:]))
+        spans = sorted((int(r["lo"]), int(r["hi"])) for r in stats
+                       if r["lo"] is not None)
+        return len(spans) >= min_parts and all(
+            a[1] < b[0] for a, b in zip(spans, spans[1:]))
 
-    def _read_staged(self, path: str) -> DataFrame:
-        """Read a stage output with split sizing adapted to its size and
-        the cluster parallelism.  Small staged dirs would otherwise
-        coalesce into 1-2 file splits (maxPartitionBytes 128MB +
-        openCost), serializing every downstream map side on a couple of
-        cores; at real scale the computed target saturates back to
-        128MB so task counts stay sane.  The two confs are session-wide:
-        ``_run_stages`` restores them when it ends."""
+    def _read_staged(self, rel: str, gen: int) -> DataFrame:
+        """Read generation ``gen`` of a stage output with split sizing
+        adapted to its size and the cluster parallelism.  Small staged
+        dirs would otherwise coalesce into 1-2 file splits
+        (maxPartitionBytes 128MB + openCost), serializing every
+        downstream map side on a couple of cores; at real scale the
+        computed target saturates back to 128MB so task counts stay
+        sane.  The two confs are session-wide: ``_run_stages`` restores
+        them when it ends."""
         par = max(self.spark.sparkContext.defaultParallelism, 1)
-        total = _dir_bytes(path)
+        total = _dir_bytes(self.path(rel))
         tgt = max(1 << 20, min(128 << 20, total // (par * 2) or 1))
         self.spark.conf.set("spark.sql.files.maxPartitionBytes", str(tgt))
         self.spark.conf.set("spark.sql.files.openCostInBytes",
                             str(min(4 << 20, max(1, tgt // 8))))
-        return self.spark.read.parquet(path)
+        return read_index_dir(self.spark, self.out, rel, [gen])
 
     def _stale_stages(self, force: bool) -> set:
         """The stages this build (re)writes, whichever executor runs
@@ -1394,12 +1450,9 @@ class IndexBuilder:
             # input pays neither the probe nor the old RDD partition
             # check
             if in_files and (len(in_files) >= par
-                             or in_bytes >= par * (4 << 20)):
-                stats = self._range_stats(docs_df)
-                if stats is not None and len(stats) >= par:
-                    spans = sorted((lo, hi) for lo, hi, _n in stats)
-                    if all(a[1] < b[0] for a, b in zip(spans, spans[1:])):
-                        src = docs_df
+                             or in_bytes >= par * (4 << 20)) \
+                    and self._ranges_disjoint(docs_df, par):
+                src = docs_df
             if src is None:
                 src = docs_df.repartitionByRange(par * 2, "doc_id")
             # row groups sized to the corpus: a large build keeps 8 MB
@@ -1434,8 +1487,7 @@ class IndexBuilder:
         if "partials" in run:
             t0 = time.time()
             pobs = Observation("partstats")
-            (self._read_staged(p_docs).filter(F.col("gen") == gen)
-             .select(*_TOKENIZE_COLS)
+            (self._read_staged("docs", gen).select(*_TOKENIZE_COLS)
              .mapInPandas(
                  _tokenize_encode_batches(self.n_buckets, self.block_span,
                                           self.mode, self.cjk_ngram),
@@ -1445,7 +1497,7 @@ class IndexBuilder:
              .write.mode(mode).parquet(p_part))
             part_stats = dict(pobs.get)
             record("partials", time.time() - t0)
-        part = self._read_staged(p_part).filter(F.col("gen") == gen)
+        part = self._read_staged("partials", gen)
 
         # stages 3-6 all derive from partials/ and nothing else (the
         # postings stage stores no score bound, so it does not wait for

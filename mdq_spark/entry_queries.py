@@ -26,7 +26,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import datapipe
-from .build import FORMAT_VERSION, build_index
+from .build import FORMAT_VERSION, build_index, read_index_dir
 from .ingest import docs_from_documents_table
 from .plan import Bool, Node, Positional, Term, Wildcard
 from .search import Searcher
@@ -87,8 +87,7 @@ def _simple_topk(spark: SparkSession, sf_dir: str, terms: list[str],
     node: Node = Term(terms[0], 1)
     for i, t in enumerate(terms[1:], start=2):
         node = Bool(op, (node, Term(t, i)))
-    ctx = {"dict": s._dict_lookup(terms, []), "allowed": None}
-    w = s._eval(node, ctx)
+    w = s._eval(node, s._context([node]))
     # engine doc_ids are 1-based (Xapian parity); map back to the source
     # table's ids for the oracle comparison
     ranked = w.orderBy(F.desc("weight"), F.asc("doc_id")) \
@@ -167,12 +166,7 @@ def _simple_eval(spark: SparkSession, sf_dir: str, node: Node,
     """Evaluate a plan node on the simple-mode index, top-k, ids mapped
     back to the source table (engine ids are 1-based)."""
     s = ensure_index(spark, sf_dir, "simple")
-    terms: set = set()
-    patterns: set = set()
-    Searcher._walk(node, terms, patterns)
-    ctx = {"dict": s._dict_lookup(sorted(terms), sorted(patterns)),
-           "allowed": None}
-    w = s._eval(node, ctx)
+    w = s._eval(node, s._context([node]))
     return (w.orderBy(F.desc("weight"), F.asc("doc_id")).limit(k)
             .select((F.col("doc_id") - 1).cast("long").alias("doc_id"),
                     F.round("weight", 4).cast("double").alias("score")))
@@ -353,13 +347,9 @@ def _ft_percent_cutoff(spark: SparkSession, sf_dir: str,
     node: Node = Bool("OR", (Bool("OR", (Term("query", 1),
                                          Term("window", 2))),
                              Term("merge", 3)))
-    terms: set = set()
-    patterns: set = set()
-    Searcher._walk(node, terms, patterns)
-    ctx = {"dict": s._dict_lookup(sorted(terms), sorted(patterns)),
-           "allowed": None}
+    ctx = s._context([node])
     w = s._eval(node, ctx)
-    min_wt = s.percent_min_wt(node, ctx, w, pct)
+    min_wt = s.percent_min_wt(node, ctx, s._greatest(w), pct)
     if min_wt is not None:
         w = w.filter(F.col("weight") >= min_wt)
     return (w.orderBy(F.desc("weight"), F.asc("doc_id")).limit(500)
@@ -496,10 +486,8 @@ def q_ft_collection_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # commit-consistent read (format v4): globalstats rows are gen-
     # tagged appends; the live row is the highest committed gen, so a
     # crashed upsert's row stays invisible here too (ADVICE r02)
-    gs = s.spark.read.parquet(f"{s.dir}/globalstats")
-    if s.committed is not None and "gen" in gs.columns:
-        gs = gs.filter(F.col("gen").isin(s.committed)) \
-            .orderBy(F.desc("gen")).limit(1)
+    gs = read_index_dir(spark, s.dir, "globalstats", s.committed) \
+        .orderBy(F.desc("gen")).limit(1)
     return gs.select(F.col("n_docs").cast("long"),
                      F.col("total_doclen").cast("long"),
                      F.col("doclen_lb").cast("long"),

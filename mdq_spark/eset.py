@@ -55,10 +55,11 @@ Nothing scales with corpus size except the two columnar scans.
 
 from __future__ import annotations
 
-import os
 from typing import Iterable, Optional
 
 from pyspark.sql import DataFrame, functions as F
+
+from .build import read_index_dir
 
 SCHEMES = ("trad", "bo1")
 
@@ -84,31 +85,11 @@ def query_exclude_terms(query: str) -> list[str]:
 def _termlist(searcher) -> DataFrame:
     """The forward termlist (terms/ staging) under the searcher's MVCC
     visibility: committed gens only, tombstoned docs removed."""
-    tl = searcher.spark.read.parquet(os.path.join(searcher.dir, "terms"))
-    if searcher.committed is not None and "gen" in tl.columns:
-        tl = tl.filter(F.col("gen").isin(searcher.committed))
+    tl = read_index_dir(searcher.spark, searcher.dir, "terms",
+                        searcher.committed)
     if searcher.tombstones is not None:
         tl = tl.join(searcher.tombstones, "doc_id", "left_anti")
     return tl
-
-
-def _dict_stats(searcher) -> DataFrame:
-    """(term, df, cf) over the whole database: committed dict rows
-    aggregated across generations with tombstone deltas folded in —
-    the same df/cf the query path's _dict_lookup computes, expressed
-    as a DataFrame so it can join distributed candidates."""
-    d = searcher.dict.groupBy("term").agg(
-        F.sum("df").alias("df"), F.sum("cf").alias("cf"))
-    if searcher.dict_delta is not None:
-        dd = searcher.dict_delta.groupBy("term").agg(
-            F.sum("ddf").alias("ddf"), F.sum("dcf").alias("dcf"))
-        d = (d.join(dd, "term", "left")
-             .withColumn("df", F.col("df")
-                         + F.coalesce(F.col("ddf"), F.lit(0)))
-             .withColumn("cf", F.col("cf")
-                         + F.coalesce(F.col("dcf"), F.lit(0)))
-             .drop("ddf", "dcf"))
-    return d.filter(F.col("df") > 0)
 
 
 def eset_df(searcher, rset: Iterable[int], maxitems: int = 20,
@@ -145,7 +126,7 @@ def eset_df(searcher, rset: Iterable[int], maxitems: int = 20,
     r_size = float(len(rset))
     if scheme == "trad":
         # single db: stats.termfreq is exact (expandweight.cc:52-58)
-        stats = _dict_stats(searcher).select("term", "df")
+        stats = searcher._dict_totals().select("term", "df")
         joined = stats.join(F.broadcast(cand), "term")
         rel_wo = r_size - F.col("r")  # reldocs_without_term
         tw = F.log(
@@ -155,7 +136,7 @@ def eset_df(searcher, rset: Iterable[int], maxitems: int = 20,
                * (rel_wo + 0.5)))
         wt = (F.col("mult") * tw).alias("wt")
     else:
-        stats = _dict_stats(searcher).select("term", "cf")
+        stats = searcher._dict_totals().select("term", "cf")
         joined = stats.join(F.broadcast(cand), "term")
         mean = F.col("cf").cast("double") / n_docs
         wt = (F.col("rcf") * F.log2((1.0 + mean) / mean)

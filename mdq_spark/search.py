@@ -4,11 +4,12 @@ Physical strategy (SURVEY.md §3.3 lifecycle):
 
 1. walk the plan for needed terms / wildcard patterns;
 2. one *metadata* lookup against ``dict/``: a driver-side pyarrow read
-   of only the terms' first-byte ``tpfx=`` partitions with ``term IN`` /
-   prefix + committed-gen predicates, ``dict_delta`` folded in the same
-   way -> termweights computed driver-side.  A Spark scan of the
-   dictionary runs only for lookups the probe cannot answer and for
-   the distributed escalation of a hot prefix;
+   through the Searcher's dataset over the dictionary, whose ``tpfx``
+   partition predicate (the terms' first bytes) prunes directories,
+   with ``term IN`` / prefix + committed-gen predicates, ``dict_delta``
+   folded in the same way -> termweights computed driver-side.  A
+   Spark scan of the dictionary runs only for lookups the probe cannot
+   answer and for the distributed escalation of a hot prefix;
 3. every plan compiles into ONE block-local operator-tree spec
    (``_compile_block_spec``, total over the plan grammar) and ONE
    evaluator runs it: ``_tree_block_fn`` over Arrow slices of the
@@ -32,9 +33,14 @@ Physical strategy (SURVEY.md §3.3 lifecycle):
    ``LocalRelation``: collecting it runs no job); everything else uses
    orderBy(score desc, doc_id asc).limit(k), which Spark compiles to
    TakeOrderedAndProject (per-partition heaps + driver merge);
-8. winners -> collected (k rows) and probed in ``docs/`` with pyarrow
-   (``doc_id IN winners``, committed gens only), returned as a local
-   DataFrame (S5).
+8. winners -> collected (k rows) and probed in the ``docs/`` dataset
+   with pyarrow (``doc_id IN winners``, committed gens only), returned
+   as a local DataFrame (S5).
+
+Storage: opening a Searcher runs no Spark job.  Driver reads go through
+one pyarrow dataset per index directory, Spark reads through
+``build.read_index_dir`` (DataFrames built on first use); both keep
+only the committed generations.
 
 Block-max pruning (O3): before decoding, posting *block metadata*
 (first_doc/last_doc/block_max_wdf/block_min_doclen — tiny columns, the
@@ -48,11 +54,9 @@ changes results — verified by tests running both paths.
 
 from __future__ import annotations
 
-import glob
 import json
-import os
-import urllib.parse
 from collections import Counter
+from functools import cached_property
 from typing import Iterator, Optional
 
 import numpy as np
@@ -60,6 +64,7 @@ import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.dataset as pads
+import pyarrow.fs as pafs
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (
@@ -67,7 +72,7 @@ from pyspark.sql.types import (
 )
 
 from . import bm25
-from .build import term_bucket
+from .build import DOCS_SCHEMA, index_fs, read_index_dir, term_bucket
 from .codec import decode_doc_gaps, varint_decode
 from .plan import (
     Bool, MatchAll, MatchNothing, Node, Positional, Scaled, Term,
@@ -88,6 +93,13 @@ _RANKED_SCHEMA = StructType([StructField("query_id", StringType())]
                             + [StructField("rank", IntegerType())])
 _MATCHING_TERMS_SCHEMA = StructType([StructField("term", StringType()),
                                      StructField("qindex", LongType())])
+
+# the hive directories of an index: the dictionary's first-byte
+# ``tpfx=`` and the postings' ``bucket=``.  Other directories read them
+# as null, and the dictionary's data column ``bucket`` reads as itself
+_HIVE = pads.partitioning(pa.schema([("tpfx", pa.string()),
+                                     ("bucket", pa.int32())]),
+                          flavor="hive")
 
 # the encoded posting columns the tree kernel reads ("positions" only
 # for positional specs); MatchAll rows carry (block, doc_id) instead
@@ -564,13 +576,21 @@ class Searcher:
         # observability for tests: rows the last _dict_lookup collected
         # (bounded by len(terms) + wildcard_limit * len(patterns))
         self._last_dict_rows_collected = 0
+        # the location as given, for Spark, and as a pyarrow filesystem
+        # and path, for the driver's reads
         self.dir = index_dir.rstrip("/")
-        # crash recovery: roll a half-finished compact_in_place swap
-        # forward (or back) before opening (ADVICE r02)
-        from .upsert import recover_swap
-        recover_swap(self.dir)
-        with open(os.path.join(self.dir, "manifest.json")) as f:
-            self.manifest = json.load(f)
+        self.fs, self._root = index_fs(self.dir)
+        if isinstance(self.fs, pafs.LocalFileSystem):
+            # crash recovery: roll a half-finished compact_in_place swap
+            # forward (or back) before opening (ADVICE r02); writers
+            # are local, so only a local index can be mid-swap
+            from .upsert import recover_swap
+            recover_swap(self._root)
+        self.manifest = self._read_json("manifest.json")
+        version = int(self.manifest.get("format_version", 1))
+        if version < 5:
+            raise ValueError(f"index at {self.dir} is format v{version}; "
+                             f"this engine reads v5 and later: rebuild it")
         gs = self.manifest["globalstats"]
         self.N = int(gs["n_docs"] or 0)
         self.avg_doclen = float(gs["avg_doclen"] or 0.0)
@@ -583,76 +603,105 @@ class Searcher:
         # MVCC visibility (format v3): only rows whose gen the manifest
         # has committed are readable — a crashed upsert's appends stay
         # invisible (the manifest write is the commit point)
-        self.committed = [int(g) for g in
-                          self.manifest.get("committed_gens", [])] or None
-
-        def vis(df: DataFrame) -> DataFrame:
-            if self.committed is not None and "gen" in df.columns:
-                return df.filter(F.col("gen").isin(self.committed))
-            return df
-        # the manifest's dict_dir pointer is how fold_dict_deltas swaps
-        # in a folded dictionary atomically (upsert.fold_dict_deltas)
-        dict_dir = self.manifest.get("dict_dir", "dict")
-        self.dict = vis(spark.read.parquet(f"{self.dir}/{dict_dir}"))
-        self.postings = vis(spark.read.parquet(f"{self.dir}/postings"))
-        self.docs = vis(spark.read.parquet(f"{self.dir}/docs")).drop("gen")
-        self.docstats = vis(spark.read.parquet(f"{self.dir}/docstats"))
-        # block-max bounds need per-block min doclen (format v3) so they
-        # can be evaluated under the CURRENT 1/avgdl — stored bounds go
-        # stale when an upsert shifts avg_doclen (ADVICE r01)
-        self.prune_capable = "block_min_doclen" in self.postings.columns
-        # parquet file lists for the driver-side pyarrow reads, listed
-        # once per Searcher like Spark's file index (rows of gens
-        # committed later are invisible to this Searcher anyway)
-        self._file_lists: dict = {}
-        # upsert artifacts (mdq_spark.upsert): tombstoned docs are
-        # filtered after decode; dict deltas keep df/cf exact.  Whether
-        # any tombstone is visible is a pyarrow row count (parquet
-        # footers only), not a Spark job.
-        self.tombstones = None
-        tomb_files = self._files("tombstones")
-        if tomb_files and pads.dataset(tomb_files, format="parquet") \
-                .count_rows(filter=self._visible()):
-            self.tombstones = vis(spark.read.parquet(
-                os.path.join(self.dir, "tombstones"))) \
-                .select("doc_id").distinct()
-        delta_path = os.path.join(self.dir, "dict_delta")
-        self.dict_delta = (vis(spark.read.parquet(delta_path))
-                           if os.path.exists(delta_path) else None)
+        self.committed = [int(g) for g in self.manifest["committed_gens"]]
         # deltas already baked into a folded dictionary must not be
         # applied twice (a crash between fold's manifest commit and its
         # delta-dir cleanup leaves them on disk — ADVICE r02)
-        self._delta_folded = [int(g) for g in
-                              self.manifest.get("delta_folded_gens", [])]
-        if self.dict_delta is not None and self._delta_folded:
-            self.dict_delta = self.dict_delta.filter(
-                ~F.col("gen").isin(self._delta_folded))
+        folded = {int(g) for g in self.manifest.get("delta_folded_gens", [])}
+        self._delta_gens = [g for g in self.committed if g not in folded]
+        # the manifest's dict_dir pointer is how fold_dict_deltas swaps
+        # in a folded dictionary atomically (upsert.fold_dict_deltas)
+        self.dict_dir = self.manifest.get("dict_dir", "dict")
+        self._datasets: dict = {}
+        # whether any tombstone is visible: a pyarrow row count (parquet
+        # footers only), not a Spark job
+        tombs = self._dataset("tombstones")
+        self._tombstoned = tombs is not None and tombs.count_rows(
+            filter=pc.field("gen").isin(self.committed)) > 0
+
+    # -- Spark DataFrames, built on first use ----------------------------------
+    # The exchange path, pruning, filters, collapse, eset and spell read
+    # these; a plan answered on the driver never builds one.
+
+    def _spark_read(self, rel: str, gens=None) -> DataFrame:
+        return read_index_dir(self.spark, self.dir, rel,
+                              self.committed if gens is None else gens)
+
+    dict = cached_property(lambda self: self._spark_read(self.dict_dir))
+    postings = cached_property(lambda self: self._spark_read("postings"))
+    docs = cached_property(
+        lambda self: self._spark_read("docs").drop("gen"))
+    docstats = cached_property(lambda self: self._spark_read("docstats"))
+
+    @cached_property
+    def tombstones(self) -> Optional[DataFrame]:
+        """The tombstoned doc_ids (upsert.py), dropped after the
+        kernel; None when no committed tombstone exists."""
+        if not self._tombstoned:
+            return None
+        return self._spark_read("tombstones").select("doc_id").distinct()
+
+    @cached_property
+    def dict_delta(self) -> Optional[DataFrame]:
+        """The unfolded dictionary deltas (upsert.py) that keep df/cf
+        exact; None when the index has none."""
+        if self._dataset("dict_delta") is None:
+            return None
+        return self._spark_read("dict_delta", self._delta_gens)
+
+    def _dict_totals(self) -> DataFrame:
+        """``(term, bucket, tpfx, df, cf, wdf_max)`` over the whole
+        dictionary: each term's committed rows summed across
+        generations, its unfolded deltas applied, terms whose df fell to
+        0 dropped — the statistics ``_dict_lookup`` computes for the
+        terms it looks up.  The distributed lookup, eset, spell's
+        lexicon and ``fold_dict_deltas`` read it."""
+        agg = self.dict.groupBy("term", "bucket", "tpfx").agg(
+            F.sum("df").alias("df"), F.sum("cf").alias("cf"),
+            F.max("wdf_max").alias("wdf_max"))
+        if self.dict_delta is not None:
+            d = self.dict_delta.groupBy("term", "bucket").agg(
+                F.sum("ddf").alias("ddf"), F.sum("dcf").alias("dcf"))
+            agg = agg.join(d, ["term", "bucket"], "left").select(
+                "term", "bucket", "tpfx",
+                (F.col("df") + F.coalesce("ddf", F.lit(0))).alias("df"),
+                (F.col("cf") + F.coalesce("dcf", F.lit(0))).alias("cf"),
+                "wdf_max")
+        return agg.filter(F.col("df") > 0)
 
     # -- driver-side reads (pyarrow) -----------------------------------------
 
-    def _files(self, rel: str) -> list[str]:
-        """The parquet files directly under ``<index>/<rel>``."""
-        files = self._file_lists.get(rel)
-        if files is None:
-            files = sorted(glob.glob(os.path.join(
-                glob.escape(os.path.join(self.dir, rel)), "*.parquet")))
-            self._file_lists[rel] = files
-        return files
+    def _exists(self, rel: str) -> bool:
+        return self.fs.get_file_info(
+            f"{self._root}/{rel}").type != pafs.FileType.NotFound
 
-    def _visible(self, expr=None):
-        """``expr`` restricted to committed gens (MVCC, as ``vis``)."""
-        if self.committed is None:
-            return expr
-        g = pc.field("gen").isin(self.committed)
-        return g if expr is None else expr & g
+    def _read_json(self, name: str) -> dict:
+        with self.fs.open_input_stream(f"{self._root}/{name}") as f:
+            return json.load(f)
 
-    def _arrow_read(self, files: list[str], columns: list[str], expr,
-                    limit: Optional[int] = None) -> pa.Table:
-        """Pushed-down pyarrow read of the committed rows of ``files``
-        matching ``expr``: parquet row-group statistics prune on the
-        sorted key columns, only ``columns`` are decoded."""
-        dset = pads.dataset(files, format="parquet")
-        expr = self._visible(expr)
+    def _dataset(self, rel: str) -> Optional[pads.Dataset]:
+        """The pyarrow dataset over ``<index>/<rel>`` (None when absent),
+        listed once per Searcher like Spark's file index: rows of gens
+        committed later are invisible to this Searcher anyway.  Names
+        starting with ``.`` or ``_`` (in-flight stage files,
+        ``_SUCCESS``) are skipped, as Spark skips them."""
+        if rel not in self._datasets:
+            self._datasets[rel] = pads.dataset(
+                f"{self._root}/{rel}", filesystem=self.fs, format="parquet",
+                partitioning=_HIVE) if self._exists(rel) else None
+        return self._datasets[rel]
+
+    def _read(self, rel: str, columns: list[str], expr=None,
+              gens: Optional[list] = None,
+              limit: Optional[int] = None) -> pa.Table:
+        """Pushed-down pyarrow read of the rows of ``<index>/<rel>``
+        matching ``expr`` whose gen is in ``gens`` (default: the
+        committed ones): hive directories prune on ``tpfx``/``bucket``,
+        parquet row-group statistics on the sorted key columns, and only
+        ``columns`` are decoded."""
+        g = pc.field("gen").isin(self.committed if gens is None else gens)
+        expr = g if expr is None else expr & g
+        dset = self._dataset(rel)
         if limit is not None:
             return dset.head(limit, columns=columns, filter=expr)
         return dset.to_table(columns=columns, filter=expr)
@@ -673,14 +722,15 @@ class Searcher:
 
     def _dict_scan(self, terms: list[str],
                    patterns: list[str]) -> Optional[DataFrame]:
-        """The pruned dictionary scan for exact terms + prefix patterns.
+        """The ``_dict_totals`` rows of exact terms + prefix patterns.
 
         Partition pruning (format v4): the dictionary is partitioned by
         the term's first byte, so BOTH exact lookups and prefix scans
         touch only the directories of the looked-up first chars — a
         wildcard no longer reads the whole dictionary (VERDICT r02 #7).
-        The tpfx restriction is a top-level conjunct so Catalyst can
-        always extract it as a partition filter."""
+        The tpfx restriction is a top-level conjunct on grouping keys,
+        so Catalyst pushes it below the aggregation and extracts it as a
+        partition filter."""
         conds = []
         if terms:
             conds.append(F.col("term").isin(terms))
@@ -691,12 +741,11 @@ class Searcher:
         if not conds:
             return None
         cond = _any_of(conds)
-        if "tpfx" in self.dict.columns:
-            chars = sorted({t[0] for t in terms if t}
-                           | {p[0] for p in patterns if p})
-            if chars and all(t for t in terms) and all(patterns):
-                cond = F.col("tpfx").isin(chars) & cond
-        return self.dict.filter(cond)
+        chars = sorted({t[0] for t in terms if t}
+                       | {p[0] for p in patterns if p})
+        if chars and all(t for t in terms) and all(patterns):
+            cond = F.col("tpfx").isin(chars) & cond
+        return self._dict_totals().filter(cond)
 
     def _dict_rows_arrow(self, terms: list[str], patterns: list[str],
                          margin: Optional[int]):
@@ -708,43 +757,30 @@ class Searcher:
         dominated by fixed cost, not work); the pyarrow path is 3-10 ms
         against the same files with the same term/gen predicates and
         row-group pruning off the sorted term column.  Returns a list
-        of plain row dicts, or None when the lookup names an empty
-        term or pattern (no first byte to partition on) or the
-        dictionary is not first-byte partitioned; the caller then
-        collects the Spark scan.  ``margin`` bounds the rows read, with
-        the caller's overflow semantics."""
-        if any(not t for t in terms) or any(not p for p in patterns):
-            return None
-        dict_rel = self.manifest.get("dict_dir", "dict")
-        parts = [d for d in os.listdir(os.path.join(self.dir, dict_rel))
-                 if d.startswith("tpfx=")]
-        if not parts:
-            return None  # not a v4+ first-byte-partitioned dict
-        want = {t[0] for t in terms} | {p[0] for p in patterns}
-        files = [f for d in parts if urllib.parse.unquote(d[5:]) in want
-                 for f in self._files(os.path.join(dict_rel, d))]
-        if not files:
-            return []
+        of plain row dicts; an empty term or pattern (no first byte to
+        partition on) reads every partition.  ``margin`` bounds the
+        rows read, with the caller's overflow semantics."""
         conds = []
         if terms:
             conds.append(pc.field("term").isin(terms))
         for p in patterns:
             conds.append(pc.starts_with(pc.field("term"), p))
-        tbl = self._arrow_read(files, ["term", "bucket", "df", "cf",
-                                       "wdf_max"], _any_of(conds), margin)
-        return tbl.to_pylist()
+        expr = _any_of(conds)
+        want = {t[:1] for t in terms} | {p[:1] for p in patterns}
+        if "" not in want:
+            expr = pc.field("tpfx").isin(sorted(want)) & expr
+        return self._read(self.dict_dir,
+                          ["term", "bucket", "df", "cf", "wdf_max"],
+                          expr, limit=margin).to_pylist()
 
     def _delta_sums(self, terms: list[str]) -> dict:
         """{term: (Σ ddf, Σ dcf)} over the committed, unfolded
         ``dict_delta`` rows of ``terms`` — a pyarrow read and
         group_by on the driver."""
-        files = self._files("dict_delta")
-        if not files:
+        if self._dataset("dict_delta") is None:
             return {}
-        expr = pc.field("term").isin(terms)
-        if self._delta_folded:
-            expr = expr & ~pc.field("gen").isin(self._delta_folded)
-        g = self._arrow_read(files, ["term", "ddf", "dcf"], expr) \
+        g = self._read("dict_delta", ["term", "ddf", "dcf"],
+                       pc.field("term").isin(terms), self._delta_gens) \
             .group_by("term").aggregate([("ddf", "sum"), ("dcf", "sum")])
         return {t: (int(a), int(c)) for t, a, c in zip(
             g["term"].to_pylist(), g["ddf_sum"].to_pylist(),
@@ -758,10 +794,9 @@ class Searcher:
         wildcard_limit × len(patterns)`` rows (ADVICE r03 medium: the
         previous code collected the full expansion and only then
         truncated).  Adaptive two-phase: the common case reads the
-        pruned fragment driver-side via pyarrow (``_dict_rows_arrow``;
-        the Spark CollectLimit serves the lookups it cannot, with
-        identical semantics) and, when the margin is NOT hit, the
-        result set is complete and the driver-side aggregation applies.
+        pruned fragment driver-side via pyarrow (``_dict_rows_arrow``)
+        and, when the margin is NOT hit, the result set is complete and
+        the driver-side aggregation applies.
         Only when a genuinely hot prefix overflows the bound does the
         lookup escalate to a fully distributed pass where gen
         aggregation, delta folding, and the most-frequent cap all run
@@ -778,14 +813,9 @@ class Searcher:
             # escalation on patterns well under the limit (ADVICE r04).
             # committed_gens is driver-small (bounded by upserts since
             # the last compact), so the collect stays bounded.
-            n_gens = max(1, len(self.committed or [0]))
+            n_gens = len(self.committed)
             margin = (len(terms) + cap * len(patterns)) * n_gens + 1
         raw = self._dict_rows_arrow(terms, patterns, margin)
-        if raw is None:
-            scan = self._dict_scan(terms, patterns)
-            # exact-only, or explicit unlimited expansion, when no margin
-            raw = (scan.limit(margin) if margin is not None
-                   else scan).collect()
         if margin is not None and len(raw) >= margin:
             return self._dict_lookup_distributed(
                 self._dict_scan(terms, patterns), terms, patterns)
@@ -801,7 +831,7 @@ class Searcher:
             d["df"] += int(r["df"])
             d["cf"] += int(r["cf"])
             d["wdf_max"] = max(d["wdf_max"], int(r["wdf_max"]))
-        if self.dict_delta is not None and agg:
+        if agg:
             for t, (ddf, dcf) in self._delta_sums(list(agg)).items():
                 agg[t]["df"] += ddf
                 agg[t]["cf"] += dcf
@@ -820,11 +850,11 @@ class Searcher:
     def _dict_lookup_distributed(self, scan: DataFrame,
                                  terms: list[str],
                                  patterns: list[str]) -> dict:
-        """Escalation path for hot prefixes: tag each dict row with
-        every lookup it serves ('' = exact, or the matching pattern),
-        aggregate gens, fold deltas, and cap each pattern's expansion
-        to the ``wildcard_limit`` highest-df terms — all before the
-        (bounded) collect."""
+        """Escalation path for hot prefixes: tag each term's totals
+        (``scan``, from ``_dict_scan``) with every lookup it serves
+        ('' = exact, or the matching pattern) and cap each pattern's
+        expansion to the ``wildcard_limit`` highest-df terms — all
+        before the (bounded) collect."""
         from pyspark.sql import Window
         tag_whens = []
         if terms:
@@ -833,22 +863,8 @@ class Searcher:
             tag_whens.append(
                 F.when(F.col("term").startswith(p), F.lit(p)))
         tags = F.array_compact(F.array(*tag_whens))
-        rows = scan.select("term", "bucket", "df", "cf", "wdf_max",
-                           F.explode(tags).alias("tag"))
-        agg_df = rows.groupBy("tag", "term").agg(
-            F.sum("df").alias("df"), F.sum("cf").alias("cf"),
-            F.max("wdf_max").alias("wdf_max"),
-            F.first("bucket").alias("bucket"))
-        if self.dict_delta is not None:
-            d = self.dict_delta.groupBy("term").agg(
-                F.sum("ddf").alias("ddf"), F.sum("dcf").alias("dcf"))
-            agg_df = (agg_df.join(d, "term", "left")
-                      .withColumn("df", F.col("df")
-                                  + F.coalesce(F.col("ddf"), F.lit(0)))
-                      .withColumn("cf", F.col("cf")
-                                  + F.coalesce(F.col("dcf"), F.lit(0)))
-                      .drop("ddf", "dcf"))
-        agg_df = agg_df.filter(F.col("df") > 0)
+        agg_df = scan.select("term", "bucket", "df", "cf", "wdf_max",
+                             F.explode(tags).alias("tag"))
         if self.wildcard_limit:
             # WILDCARD_LIMIT_MOST_FREQUENT: per pattern keep the
             # highest-df terms, ties by term — identical ranking to
@@ -888,6 +904,18 @@ class Searcher:
                 Searcher._walk(c, terms, patterns)
         elif isinstance(node, Scaled):
             Searcher._walk(node.child, terms, patterns)
+
+    def _context(self, nodes, filters: Optional[Column] = None) -> dict:
+        """The evaluation context of plans ``nodes``: one dictionary
+        lookup for all their terms and patterns, and the doc_ids
+        ``filters`` allows (None: every doc)."""
+        terms: set = set()
+        patterns: set = set()
+        for node in nodes:
+            self._walk(node, terms, patterns)
+        return {"dict": self._dict_lookup(sorted(terms), sorted(patterns)),
+                "allowed": None if filters is None
+                else self.docs.filter(filters).select("doc_id")}
 
     # -- postings access ----------------------------------------------------
 
@@ -1077,22 +1105,20 @@ class Searcher:
         terms, pos_terms, use_all = _spec_inputs(spec_items)
         blocks = ctx.get("blocks")
         parts = []
-        buckets = sorted({term_bucket(t, self.n_buckets) for t in terms})
-        files = [f for b in buckets
-                 for f in self._files(f"postings/bucket={b}")]
-        if files:
-            expr = pc.field("term").isin(sorted(terms))
+        if terms:
+            buckets = sorted({term_bucket(t, self.n_buckets) for t in terms})
+            expr = pc.field("bucket").isin(buckets) \
+                & pc.field("term").isin(sorted(terms))
             if blocks is not None:
                 expr = expr & pc.field("block").isin(
                     [int(b) for b in blocks])
             cols = _KERNEL_COLS + (["positions"] if pos_terms else [])
-            parts.append(self._arrow_read(files, cols, expr))
+            parts.append(self._read("postings", cols, expr))
         if use_all:
             # the forward store, not docstats: a doc that emitted zero
             # terms (allowed by the data model) must still match
             # <alldocuments> (ADVICE r04)
-            ids = self._arrow_read(self._files("docs"), ["doc_id"],
-                                   None)["doc_id"]
+            ids = self._read("docs", ["doc_id"])["doc_id"]
             docs = pa.table({"block": pc.divide(
                 ids, int(self.manifest["block_span"])), "doc_id": ids})
             if blocks is not None:
@@ -1114,10 +1140,10 @@ class Searcher:
         if not frames:
             return None
         out = pd.concat(frames, ignore_index=True)
-        if self.tombstones is not None:
+        if self._tombstoned:
             ids = out["doc_id"].to_numpy()
-            dead = self._arrow_read(
-                self._files("tombstones"), ["doc_id"],
+            dead = self._read(
+                "tombstones", ["doc_id"],
                 pc.field("doc_id").isin(pa.array(np.unique(ids))))
             if dead.num_rows:
                 out = out[~np.isin(ids, dead["doc_id"].to_numpy())]
@@ -1237,8 +1263,6 @@ class Searcher:
         block_max_wdf + block_min_doclen under the CURRENT 1/avgdl —
         the index stores no score bound that an upsert could leave
         stale."""
-        if not self.prune_capable:
-            return None
         all_terms = sorted({t for _, tm in units for t in tm})
         if not all_terms:
             return None
@@ -1357,22 +1381,30 @@ class Searcher:
         finally:
             per_block.unpersist()
 
-    def percent_min_wt(self, node: Node, ctx: dict, weights: DataFrame,
+    @staticmethod
+    def _greatest(weights: DataFrame) -> Optional[tuple]:
+        """``(doc_id, weight)`` of the greatest-weight doc of kernel
+        rows, ties by lowest doc_id; None when nothing matched."""
+        top = weights.orderBy(F.desc("weight"), F.asc("doc_id")) \
+            .limit(1).collect()
+        return (top[0]["doc_id"], top[0]["weight"]) if top else None
+
+    def percent_min_wt(self, node: Node, ctx: dict,
+                       greatest: Optional[tuple],
                        percent_cutoff: int) -> Optional[float]:
         """Xapian percent-cutoff threshold (multimatch.cc:579-582,
-        903-941): percent_scale = (subqueries matched by the
-        greatest-weight doc / total subqueries) / greatest weight; keep
-        docs with weight >= (pct/100 - DBL_EPSILON) / percent_scale.
-        The matched-subquery count is exact for unit-decomposable trees
+        903-941) given the ``(doc_id, weight)`` of the greatest-weight
+        doc: percent_scale = (subqueries matched by the greatest-weight
+        doc / total subqueries) / greatest weight; keep docs with
+        weight >= (pct/100 - DBL_EPSILON) / percent_scale.  The
+        matched-subquery count is exact for unit-decomposable trees
         (the tree kernel on the driver over the greatest doc's block,
         one tagged spec per unit); other trees use ratio 1, which
         equals Xapian whenever the greatest doc matches every leaf
         (always true for AND-semantics trees)."""
-        top = weights.orderBy(F.desc("weight"), F.asc("doc_id")) \
-            .limit(1).collect()
-        if not top or top[0]["weight"] <= 0:
+        if greatest is None or greatest[1] <= 0:
             return None
-        gdoc, gw = top[0]["doc_id"], top[0]["weight"]
+        gdoc, gw = greatest
         units = self._scoring_units(node, ctx)
         if units:
             # the greatest doc lives in exactly one doc-range block, so
@@ -1416,30 +1448,29 @@ class Searcher:
         A plan whose posting volume is under ``LOCAL_EVAL_ROWS`` is
         answered entirely on the driver:
         pyarrow dictionary probe, pyarrow posting read, the tree
-        kernel's per-block function, tombstone drop and a numpy top-k.
-        The result is an Arrow-backed local DataFrame, so collecting it
-        (or ``fetch``-ing it) runs no Spark job.  ``filters`` and
-        ``percent_cutoff`` still rank in Spark, over the driver-
-        evaluated candidates as a local DataFrame; larger plans and
-        ``prune='always'`` keep the distributed path."""
+        kernel's per-block function, percent-cutoff's greatest-doc
+        probe, tombstone drop and a numpy top-k.  The result is an
+        Arrow-backed local DataFrame, so collecting it (or
+        ``fetch``-ing it) runs no Spark job.  ``filters`` still rank in
+        Spark, over the driver-evaluated candidates as a local
+        DataFrame; larger plans and ``prune='always'`` keep the
+        distributed path."""
         node = parse_user_query(query, cjk_ngram=self.cjk_ngram)
-        terms: set = set()
-        patterns: set = set()
-        self._walk(node, terms, patterns)
-        ctx = {
-            "dict": self._dict_lookup(sorted(terms), sorted(patterns)),
-            "allowed": None,
-        }
-        if filters is None and not percent_cutoff and prune != "always":
+        ctx = self._context([node], filters)
+        if filters is None and prune != "always":
             items = [(None, self._compile_block_spec(node, ctx))]
             if self._on_driver(items, ctx):
                 w = self._driver_eval(items, ctx)
+                if w is not None and percent_cutoff:
+                    g = _top_k(w, 1).iloc[0]
+                    min_wt = self.percent_min_wt(
+                        node, ctx, (g["doc_id"], g["score"]), percent_cutoff)
+                    if min_wt is not None:
+                        w = w[w["weight"] >= min_wt]
                 if w is not None:
                     # weight cutoff (O5) before ranking, as below
                     w = _top_k(w[w["weight"] >= min_weight], k)
                 return self._local_df(w, _SCORES_SCHEMA)
-        if filters is not None:
-            ctx["allowed"] = self.docs.filter(filters).select("doc_id")
         weights = None
         if prune != "never" and filters is None and not percent_cutoff:
             units = self._scoring_units(node, ctx)
@@ -1452,7 +1483,7 @@ class Searcher:
         if weights is None:
             weights = self._eval(node, ctx)
         if percent_cutoff:
-            min_wt = self.percent_min_wt(node, ctx, weights,
+            min_wt = self.percent_min_wt(node, ctx, self._greatest(weights),
                                          percent_cutoff)
             if min_wt is not None:
                 weights = weights.filter(F.col("weight") >= min_wt)
@@ -1480,14 +1511,7 @@ class Searcher:
         upper bounds (omenquire.cc:245-287); counting is cheap for us so
         all three are the exact count."""
         node = parse_user_query(query, cjk_ngram=self.cjk_ngram)
-        terms: set = set()
-        patterns: set = set()
-        self._walk(node, terms, patterns)
-        ctx = {"dict": self._dict_lookup(sorted(terms), sorted(patterns)),
-               "allowed": None}
-        if filters is not None:
-            ctx["allowed"] = self.docs.filter(filters).select("doc_id")
-        n = self._eval(node, ctx).count()
+        n = self._eval(node, self._context([node], filters)).count()
         return {"matches_lower_bound": n, "matches_estimated": n,
                 "matches_upper_bound": n}
 
@@ -1497,14 +1521,7 @@ class Searcher:
         the docs table (Enquire::set_collapse_key), then top-k."""
         from pyspark.sql import Window
         node = parse_user_query(query, cjk_ngram=self.cjk_ngram)
-        terms: set = set()
-        patterns: set = set()
-        self._walk(node, terms, patterns)
-        ctx = {"dict": self._dict_lookup(sorted(terms), sorted(patterns)),
-               "allowed": None}
-        if filters is not None:
-            ctx["allowed"] = self.docs.filter(filters).select("doc_id")
-        weights = self._eval(node, ctx)
+        weights = self._eval(node, self._context([node], filters))
         joined = weights.join(self.docs.select("doc_id", key), "doc_id")
         w = Window.partitionBy(key).orderBy(
             F.desc("weight"), F.asc("doc_id"))
@@ -1546,16 +1563,9 @@ class Searcher:
         runs its shared pass on the driver instead (``_driver_eval``)
         and joins the ranking as a local DataFrame."""
         from pyspark.sql import Window
-        nodes: dict = {}
-        terms: set = set()
-        patterns: set = set()
-        for qid, q in queries.items():
-            nodes[qid] = parse_user_query(q, cjk_ngram=self.cjk_ngram)
-            self._walk(nodes[qid], terms, patterns)
-        shared_dict = self._dict_lookup(sorted(terms), sorted(patterns))
-        allowed = (self.docs.filter(filters).select("doc_id")
-                   if filters is not None else None)
-        ctx = {"dict": shared_dict, "allowed": allowed}
+        nodes = {qid: parse_user_query(q, cjk_ngram=self.cjk_ngram)
+                 for qid, q in queries.items()}
+        ctx = self._context(nodes.values(), filters)
         spec_items = []
         for qid, node in nodes.items():
             spec = self._compile_block_spec(node, ctx)
@@ -1588,23 +1598,25 @@ class Searcher:
             return [spec_items]
         dfs = ctx["dict"]["all"]
 
-        def added_cost(term_set, have):
-            return sum(int(dfs[t]["df"]) for t in term_set - have
-                       if t in dfs)
+        def added_cost(inputs, have):
+            # MatchAll's input, the ("all",) key, reads the N docs
+            return sum(self.N if x == ("all",) else int(dfs[x]["df"])
+                       for x in inputs - have if x == ("all",) or x in dfs)
 
         groups: list = []
         cur: list = []
-        cur_terms: set = set()
+        cur_inputs: set = set()
         cur_cost = 0
         for qid, spec in spec_items:
-            t = _spec_inputs([(qid, spec)])[0]
-            add = added_cost(t, cur_terms)
+            terms, _, use_all = _spec_inputs([(qid, spec)])
+            inputs = (terms | {("all",)}) if use_all else terms
+            add = added_cost(inputs, cur_inputs)
             if cur and cur_cost + add > cap:
                 groups.append(cur)
-                cur, cur_terms, cur_cost = [], set(), 0
-                add = added_cost(t, cur_terms)
+                cur, cur_inputs, cur_cost = [], set(), 0
+                add = added_cost(inputs, cur_inputs)
             cur.append((qid, spec))
-            cur_terms |= t
+            cur_inputs |= inputs
             cur_cost += add
         if cur:
             groups.append(cur)
@@ -1698,7 +1710,7 @@ class Searcher:
             columns = self.SERIALIZATIONS[serialization]
         cols = list(dict.fromkeys(list(columns) + ["score"]))
         res_fields = {f.name: f for f in result_df.schema.fields}
-        doc_fields = {f.name: f for f in self.docs.schema.fields}
+        doc_fields = {f.name: f for f in DOCS_SCHEMA.fields}
         unknown = [c for c in cols
                    if c not in res_fields and c not in doc_fields]
         if unknown:
@@ -1710,8 +1722,8 @@ class Searcher:
             return self._local_df(None, schema)
         ids = np.array([r["doc_id"] for r in rows], dtype=np.int64)
         from_docs = [c for c in cols if c not in res_fields]
-        probe = self._arrow_read(
-            self._files("docs"), ["doc_id"] + from_docs,
+        probe = self._read(
+            "docs", ["doc_id"] + from_docs,
             pc.field("doc_id").isin(pa.array(np.unique(ids))))
         pid = probe["doc_id"].to_numpy()
         order = np.argsort(pid)

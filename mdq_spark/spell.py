@@ -40,6 +40,8 @@ import zlib
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from .build import local_dir, read_index_dir
+
 TRIGRAM_SCORE_THRESHOLD = 2
 N_FRAG_BUCKETS = 16
 
@@ -122,25 +124,21 @@ def pick_suggestion(word: str, candidates: list,
     return best_term
 
 
+_META = "spelling_meta.json"
+
+
 def _meta_path(index_dir: str) -> str:
-    return os.path.join(index_dir, "spelling_meta.json")
+    return os.path.join(index_dir, _META)
 
 
 def _lexicon(searcher) -> DataFrame:
     """(term, freq) over the current committed dictionary: unprefixed
     terms only (field-prefixed and Z-stemmed terms start uppercase and
     are not user-visible words), freq = df with dict deltas applied."""
-    lex = (searcher.dict
-           .filter(~F.col("term").rlike("^[A-Z]"))
-           .groupBy("term").agg(F.sum("df").alias("freq")))
-    if searcher.dict_delta is not None:
-        deltas = searcher.dict_delta.groupBy("term") \
-            .agg(F.sum("ddf").alias("dfreq"))
-        lex = (lex.join(deltas, "term", "left")
-               .select("term", (F.col("freq")
-                                + F.coalesce("dfreq", F.lit(0)))
-                       .alias("freq")))
-    return lex.filter((F.col("freq") > 0) & (F.length("term") >= 2))
+    return (searcher._dict_totals()
+            .filter(~F.col("term").rlike("^[A-Z]")
+                    & (F.length("term") >= 2))
+            .select("term", F.col("df").alias("freq")))
 
 
 def _fragment_rows(lex: DataFrame) -> DataFrame:
@@ -180,39 +178,36 @@ def build_spelling(searcher) -> str:
     per-generation dir and published by an atomic ``os.replace`` of the
     pointer file — readers never see a half-written table, and a crash
     leaves only an unreferenced dir (cleaned on the next build)."""
+    root = local_dir(searcher.dir)
     gen = int(searcher.manifest.get("generation", 0))
     name = f"spelling_g{gen}"
-    out = os.path.join(searcher.dir, name)
+    out = os.path.join(root, name)
     rows = _fragment_rows(_lexicon(searcher))
     (rows.repartition("fbucket").sortWithinPartitions("fragment")
      .write.mode("overwrite").partitionBy("fbucket").parquet(out))
-    meta_tmp = _meta_path(searcher.dir) + ".tmp"
+    meta_tmp = _meta_path(root) + ".tmp"
     with open(meta_tmp, "w") as f:
         json.dump({"generation": gen, "path": name}, f)
-    os.replace(meta_tmp, _meta_path(searcher.dir))  # the publish point
+    os.replace(meta_tmp, _meta_path(root))  # the publish point
     import shutil
-    for d in os.listdir(searcher.dir):
+    for d in os.listdir(root):
         if d != name and (d.startswith("spelling_g") or d == "spelling"):
-            shutil.rmtree(os.path.join(searcher.dir, d),
-                          ignore_errors=True)
+            shutil.rmtree(os.path.join(root, d), ignore_errors=True)
     return out
 
 
 def _current_table(searcher) -> DataFrame | None:
     """The published fragment table, or None when absent or stale
     (built for an older index generation)."""
-    p = _meta_path(searcher.dir)
-    if not os.path.exists(p):
+    if not searcher._exists(_META):
         return None
-    with open(p) as f:
-        meta = json.load(f)
-    if meta.get("generation") != int(searcher.manifest.get(
-            "generation", 0)):
+    meta = searcher._read_json(_META)
+    if meta.get("generation") != int(searcher.manifest.get("generation", 0)):
         return None
-    path = os.path.join(searcher.dir, meta.get("path", "spelling"))
-    if not os.path.exists(path):
+    rel = meta.get("path", "spelling")
+    if not searcher._exists(rel):
         return None
-    return searcher.spark.read.parquet(path)
+    return read_index_dir(searcher.spark, searcher.dir, rel, None)
 
 
 def batch_suggest(searcher, words: list[str],

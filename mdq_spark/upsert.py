@@ -52,26 +52,17 @@ import time
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.types import IntegerType, StructField, StructType
 
 from .build import (
-    DOCS_SCHEMA, FORMAT_VERSION, TERMS_SCHEMA, IndexBuilder, _STAGES,
-    _gstats_of, _read_table, _with_gen, _write_globalstats, _write_stage,
-    build_index,
+    FORMAT_VERSION, IndexBuilder, _STAGES, _gstats_of, _read_table,
+    _with_gen, _write_globalstats, _write_stage, build_index, local_dir,
+    read_index_dir,
 )
-
-TOMBSTONE_SCHEMA = "doc_id bigint, gen int"
-DICT_DELTA_SCHEMA = "term string, bucket int, ddf bigint, dcf bigint, gen int"
 
 # An upsert runs every build stage except globalstats, which it
 # recomputes over all live docs, and resumes none: a crashed attempt
 # stays invisible, and its retry starts over in a fresh generation.
 _UPSERT_STAGES = frozenset(_STAGES) - {"globalstats"}
-
-
-def _manifest(index_dir: str) -> dict:
-    with open(os.path.join(index_dir, "manifest.json")) as f:
-        return json.load(f)
 
 
 def _write_manifest(index_dir: str, m: dict) -> None:
@@ -80,12 +71,6 @@ def _write_manifest(index_dir: str, m: dict) -> None:
     with open(tmp, "w") as f:
         json.dump(m, f, indent=2)
     os.replace(tmp, path)  # atomic on POSIX — this IS the commit
-
-
-def _with_gen_field(schema: StructType) -> StructType:
-    """``schema`` plus the ``gen`` column every artifact row carries.  A
-    read given its schema skips Spark's schema-inference job."""
-    return StructType(schema.fields + [StructField("gen", IntegerType())])
 
 
 def upsert(spark: SparkSession, index_dir: str,
@@ -100,8 +85,9 @@ def upsert(spark: SparkSession, index_dir: str,
     after the commit (the old table is generation-stale the moment the
     commit lands, so readers fall back until the rebuild publishes)."""
     from .ingest import _doc_shape, dense_ids
-    index_dir = index_dir.rstrip("/")
-    m = _manifest(index_dir)
+    index_dir = local_dir(index_dir)
+    with open(os.path.join(index_dir, "manifest.json")) as f:
+        m = json.load(f)
     if int(m.get("format_version", 1)) != FORMAT_VERSION:
         raise ValueError(
             f"index at {index_dir} is format v{m.get('format_version')}, "
@@ -145,9 +131,7 @@ def upsert(spark: SparkSession, index_dir: str,
     if os.path.exists(tomb_path):
         old_tombs = _read_table(tomb_path, ["doc_id"], committed) \
             .column("doc_id").combine_chunks()
-    replaced = (spark.read.schema(_with_gen_field(DOCS_SCHEMA))
-                .parquet(docs_path)
-                .filter(F.col("gen").isin(committed))
+    replaced = (read_index_dir(spark, index_dir, "docs", committed)
                 .join(new_docs_df.select("fullpath"), "fullpath", "left_semi")
                 .select("doc_id").collect())
     replaced = pa.array([r["doc_id"] for r in replaced], pa.int64())
@@ -158,9 +142,7 @@ def upsert(spark: SparkSession, index_dir: str,
         # their committed termlist rows (orphan doc_id collisions are
         # filtered out)
         ids = spark.createDataFrame(pa.table({"doc_id": tombs}))
-        (spark.read.schema(_with_gen_field(TERMS_SCHEMA))
-         .parquet(f"{index_dir}/terms")
-         .filter(F.col("gen").isin(committed))
+        (read_index_dir(spark, index_dir, "terms", committed)
          .join(F.broadcast(ids), "doc_id", "left_semi")
          .groupBy("term", "bucket")
          .agg((-F.count("doc_id")).cast("long").alias("ddf"),
@@ -221,54 +203,32 @@ def fold_dict_deltas(spark: SparkSession, index_dir: str) -> None:
     point leaves either the old state (pointer unmoved) or the new one
     (pointer moved, stale dirs ignored) — never a partial or missing
     dictionary."""
-    index_dir = index_dir.rstrip("/")
-    m = _manifest(index_dir)
-    committed = [int(g) for g in m.get("committed_gens", [0])]
+    from .search import Searcher
+    index_dir = local_dir(index_dir)
+    s = Searcher(spark, index_dir)
+    m, committed, cur_dir = s.manifest, s.committed, s.dict_dir
     gen = max(committed)
-    cur_dir = m.get("dict_dir", "dict")
-    d = spark.read.parquet(f"{index_dir}/{cur_dir}") \
-        .filter(F.col("gen").isin(committed))
-    agg = d.groupBy("term", "bucket").agg(
-        F.sum("df").alias("df"), F.sum("cf").alias("cf"),
-        F.max("wdf_max").alias("wdf_max"))
-    delta_path = f"{index_dir}/dict_delta"
-    folded_gens = [int(g) for g in m.get("delta_folded_gens", [])]
-    live_delta_gens = [g for g in committed if g not in folded_gens]
-    if os.path.exists(delta_path):
-        deltas = (spark.read.parquet(delta_path)
-                  .filter(F.col("gen").isin(live_delta_gens))
-                  .groupBy("term", "bucket")
-                  .agg(F.sum("ddf").alias("ddf"),
-                       F.sum("dcf").alias("dcf")))
-        agg = (agg.join(deltas, ["term", "bucket"], "left")
-               .select("term", "bucket",
-                       (F.col("df") + F.coalesce("ddf", F.lit(0)))
-                       .alias("df"),
-                       (F.col("cf") + F.coalesce("dcf", F.lit(0)))
-                       .alias("cf"),
-                       "wdf_max"))
     # fresh dir per fold; a re-fold at the same gen alternates suffixes
     # so it never overwrites the live dictionary it is reading from
     new_dir = f"dict_fold_g{gen}"
     if new_dir == cur_dir:
         new_dir = f"dict_fold_g{gen}_r"
-    (agg.filter(F.col("df") > 0)
+    (s._dict_totals()
      .withColumn("gen", F.lit(gen))
-     .withColumn("tpfx", F.substring("term", 1, 1))
      .repartition("tpfx", "bucket").sortWithinPartitions("term")
      .write.mode("overwrite").partitionBy("tpfx")
      .parquet(f"{index_dir}/{new_dir}"))
     # atomic commit: point readers at the folded copy and mark every
     # folded delta generation as baked-in
     m["dict_dir"] = new_dir
-    m["delta_folded_gens"] = sorted(set(folded_gens + committed))
+    m["delta_folded_gens"] = sorted(
+        set(m.get("delta_folded_gens", []) + committed))
     _write_manifest(index_dir, m)
     # cleanup (safe at any time after the commit; a crash here only
     # leaves ignored garbage)
     if cur_dir != new_dir:
         shutil.rmtree(f"{index_dir}/{cur_dir}", ignore_errors=True)
-    if os.path.exists(delta_path):
-        shutil.rmtree(delta_path)
+    shutil.rmtree(f"{index_dir}/dict_delta", ignore_errors=True)
 
 
 def compact(spark: SparkSession, index_dir: str, out_dir: str) -> dict:
@@ -276,17 +236,11 @@ def compact(spark: SparkSession, index_dir: str, out_dir: str) -> dict:
     set (the merge step; run when the tombstone ratio grows).  Reads
     only committed, non-tombstoned docs — orphan rows from crashed
     upserts are dropped here."""
-    index_dir = index_dir.rstrip("/")
-    m = _manifest(index_dir)
-    committed = [int(g) for g in m.get("committed_gens", [0])]
-    docs = spark.read.parquet(f"{index_dir}/docs")
-    if "gen" in docs.columns:
-        docs = docs.filter(F.col("gen").isin(committed)).drop("gen")
-    tomb_path = f"{index_dir}/tombstones"
-    if os.path.exists(tomb_path):
-        tombs = spark.read.parquet(tomb_path) \
-            .filter(F.col("gen").isin(committed)).select("doc_id")
-        docs = docs.join(tombs, "doc_id", "left_anti")
+    from .search import Searcher
+    s = Searcher(spark, local_dir(index_dir))
+    m, docs = s.manifest, s.docs
+    if s.tombstones is not None:
+        docs = docs.join(s.tombstones, "doc_id", "left_anti")
     return build_index(spark, docs, out_dir, mode=m.get("mode", "xapian"),
                        cjk_ngram=bool(m.get("cjk_ngram", False)),
                        block_span=int(m["block_span"]),
@@ -320,7 +274,7 @@ def compact_in_place(spark: SparkSession, index_dir: str) -> dict:
     new index — and a crash *between* the renames (no dir at
     ``index_dir``) is rolled forward on the next open by
     ``recover_swap`` (ADVICE r02)."""
-    index_dir = index_dir.rstrip("/")
+    index_dir = local_dir(index_dir)
     recover_swap(index_dir)
     tmp = index_dir + ".compact_tmp"
     old = index_dir + ".compact_old"

@@ -12,9 +12,11 @@ import pytest
 
 from conftest import count_spark_jobs, local_docs_df
 from mdq_spark import build as B
-from mdq_spark.build import IndexBuilder, build_index, term_bucket
+from mdq_spark.build import (
+    IndexBuilder, build_index, read_index_dir, term_bucket,
+)
 from mdq_spark.search import Searcher
-from mdq_spark.upsert import compact_in_place, upsert
+from mdq_spark.upsert import compact_in_place, fold_dict_deltas, upsert
 from test_spark_engine import DOCS, QUERIES, _sha
 
 pytestmark = pytest.mark.spark
@@ -74,7 +76,7 @@ def snapshot(spark, out):
     def rows(rel, *cols):
         if not os.path.exists(os.path.join(out, rel)):
             return None
-        df = spark.read.parquet(os.path.join(out, rel))
+        df = read_index_dir(spark, out, rel, None)
         return sorted(tuple(r) for r in df.select(*cols).collect())
 
     pos = F.coalesce(F.hex("positions"), F.lit("NULL"))
@@ -85,7 +87,7 @@ def snapshot(spark, out):
         "dict": rows(m.get("dict_dir", "dict"), "term", "bucket", "df",
                      "cf", "wdf_max", "gen", "tpfx"),
         "postings": _decoded_postings(
-            spark.read.parquet(os.path.join(out, "postings")).collect()),
+            read_index_dir(spark, out, "postings", None).collect()),
         "docstats": rows("docstats", "doc_id", "doclen", "gen"),
         "terms": rows("terms", "term", "bucket", "block", "doc_id", "wdf",
                       "doclen", pos, "gen"),
@@ -443,7 +445,7 @@ def test_range_probe_propagates_job_failures(spark, tmp_path):
     boom = F.udf(lambda x: x // 0, "long")
     docs = local_docs_df(spark, ROWS).withColumn("doc_id", boom("doc_id"))
     with pytest.raises(PythonException):
-        IndexBuilder(spark, str(tmp_path / "i"))._range_stats(docs)
+        IndexBuilder(spark, str(tmp_path / "i"))._ranges_disjoint(docs)
 
 
 def test_input_files_propagates_unexpected_errors(spark, tmp_path,
@@ -456,3 +458,115 @@ def test_input_files_propagates_unexpected_errors(spark, tmp_path,
     monkeypatch.setattr(type(docs), "inputFiles", broken)
     with pytest.raises(RuntimeError, match="inputFiles broke"):
         build_index(spark, docs, str(tmp_path / "i"), **KW)
+
+
+# a directory name Hadoop would read as a glob pattern
+GLOB_NAME = "i[1]*x"
+
+
+@pytest.mark.parametrize("executor", ["driver", "spark"])
+def test_glob_metacharacter_path_builds_upserts_and_compacts(
+        spark, pair, tmp_path, monkeypatch, executor):
+    """Spark globs every read path.  An index in a directory whose name
+    holds glob metacharacters builds, upserts and compacts on either
+    executor to the same index, with the same answers, as one at a plain
+    path."""
+    monkeypatch.setattr(IndexBuilder, "DRIVER_BUILD_BYTES",
+                        1 << 40 if executor == "driver" else 0)
+    plain = str(tmp_path / "plain")
+    shutil.copytree(pair[0] if executor == "driver" else pair[2], plain)
+    odd = str(tmp_path / executor / GLOB_NAME)
+    m = build_index(spark, local_docs_df(spark, ROWS), odd, **KW)
+    assert m["executor"] == executor
+    for step in ("build", "upsert", "compact"):
+        if step == "upsert":
+            for out in (plain, odd):
+                m = upsert(spark, out, local_docs_df(spark, UPSERT))
+                assert m["upserts"][-1]["executor"] == executor
+        elif step == "compact":
+            for out in (plain, odd):
+                compact_in_place(spark, out)
+        assert snapshot(spark, odd) == snapshot(spark, plain), step
+        assert answers(spark, odd) == answers(spark, plain), step
+
+
+def test_writers_take_file_uris_and_refuse_other_schemes(spark, pair,
+                                                         tmp_path,
+                                                         monkeypatch):
+    """Every writer resolves its location as the Searcher does: a
+    ``file:`` URI names the local path, and any other scheme raises
+    before anything is written."""
+    from mdq_spark.spell import build_spelling
+    plain = str(tmp_path / "plain")
+    shutil.copytree(pair[0], plain)
+    path = str(tmp_path / "via-uri")
+    uri = "file://" + path
+    build_index(spark, local_docs_df(spark, ROWS), uri, **KW)
+    assert snapshot(spark, path) == snapshot(spark, plain)
+    for loc in (plain, uri):
+        upsert(spark, loc, local_docs_df(spark, UPSERT))
+        fold_dict_deltas(spark, loc)
+    assert snapshot(spark, path) == snapshot(spark, plain)
+    assert answers(spark, uri) == answers(spark, plain)
+    compact_in_place(spark, uri)
+    compact_in_place(spark, plain)
+    assert snapshot(spark, path) == snapshot(spark, plain)
+    build_spelling(Searcher(spark, uri))
+    assert os.path.exists(os.path.join(path, "spelling_meta.json"))
+    assert Searcher(spark, uri).suggest("sprak") == "spark"
+
+    cwd = tmp_path / "cwd"
+    cwd.mkdir()
+    monkeypatch.chdir(cwd)
+    elsewhere = "s3://x/idx"
+    for write in (lambda: build_index(spark, local_docs_df(spark, ROWS),
+                                      elsewhere, **KW),
+                  lambda: upsert(spark, elsewhere,
+                                 local_docs_df(spark, UPSERT)),
+                  lambda: fold_dict_deltas(spark, elsewhere),
+                  lambda: compact_in_place(spark, elsewhere)):
+        with pytest.raises(ValueError, match="local path or a file: URI"):
+            write()
+    assert os.listdir(cwd) == []
+
+
+@pytest.mark.parametrize("where", ["file_uri", "glob_name"])
+def test_searcher_at_file_uri_and_glob_path(spark, pair, tmp_path,
+                                            monkeypatch, where):
+    """A Searcher opened through a ``file:`` URI or on a directory whose
+    name holds glob metacharacters answers every read path as the plain
+    path does: a driver query, a filtered query, the exchange, a batch,
+    an expansion set and a spelling suggestion."""
+    from pyspark.sql import functions as F
+    plain = pair[0]
+    if where == "file_uri":
+        loc = "file://" + plain
+    else:
+        loc = str(tmp_path / "a[2]*b]")
+        shutil.copytree(plain, loc)
+
+    def run(location):
+        s, n = count_spark_jobs(spark, lambda: Searcher(spark, location))
+        assert n == 0
+        rows, n = count_spark_jobs(spark, lambda: s.fetch(
+            s.query_df("spark", k=5)).collect())
+        assert n == 0
+        out = {"driver": [tuple(r) for r in rows]}
+        for q in ("spark", "quick brown", "qui"):
+            out[q, "filtered"] = [tuple(r) for r in s.query_df(
+                q, k=5, filters=F.array_contains("tags", "rust")).collect()]
+        with monkeypatch.context() as mp:
+            mp.setattr(Searcher, "LOCAL_EVAL_ROWS", 0)
+            for q in ("spark", '"quick brown" ', "NOT spark AND quick"):
+                out[q, "exchange"] = [
+                    tuple(r) for r in s.query_df(q, k=5).collect()]
+        out["batch"] = sorted(tuple(r) for r in s.batch_search(
+            {"a": "spark", "b": "quick OR fox"}, k=3).collect())
+        out["eset"] = [tuple(r) for r in s.get_eset([1, 2]).collect()]
+        out["suggest"] = s.suggest("sprak")
+        return out
+
+    want = run(plain)
+    assert want["driver"] and want[("spark", "exchange")] and want["eset"]
+    assert want["suggest"] == "spark"
+    assert run(loc) == want

@@ -154,6 +154,30 @@ def searcher(spark, index):
     return Searcher(spark, index[0])
 
 
+def test_searcher_open_runs_no_spark_job(spark, index):
+    """Opening a Searcher reads the manifest and counts tombstones with
+    pyarrow; its Spark DataFrames are built on first use."""
+    s, n = count_spark_jobs(spark, lambda: Searcher(spark, index[0]))
+    assert n == 0
+    assert "dict" not in vars(s) and "postings" not in vars(s)
+    assert s.tombstones is None and s.dict_delta is None
+
+
+def test_pre_v5_index_refused(spark, index, tmp_path):
+    """An index older than format v5 does not open: it must be rebuilt."""
+    import shutil
+    out = str(tmp_path / "v4")
+    shutil.copytree(index[0], out)
+    mpath = os.path.join(out, "manifest.json")
+    with open(mpath) as f:
+        m = json.load(f)
+    m["format_version"] = 4
+    with open(mpath, "w") as f:
+        json.dump(m, f)
+    with pytest.raises(ValueError, match=r"v4.*rebuild"):
+        Searcher(spark, out)
+
+
 def test_manifest_metrics(index):
     _, manifest = index
     m = manifest["metrics"]
@@ -492,9 +516,10 @@ def test_percent_cutoff_parity(searcher, oracle, pct):
     for q in ["spark OR quick", "planner OR fox", "spark AND query ",
               "fox SYNONYM foxes", "qui"]:
         exp = oracle.search(q, percent_cutoff=pct)
-        act = [(r["doc_id"], r["score"]) for r in
-               searcher.query_df(q, k=100, percent_cutoff=pct).collect()]
-        assert_results_match(exp, act)
+        rows, n = count_spark_jobs(searcher.spark, lambda: searcher.query_df(
+            q, k=100, percent_cutoff=pct).collect())
+        assert n == 0, q  # a driver-sized plan: the cutoff runs there too
+        assert_results_match(exp, [(r["doc_id"], r["score"]) for r in rows])
 
 
 def test_percent_cutoff_monotone(searcher, oracle):
@@ -688,6 +713,13 @@ def test_batch_groups_packing(searcher):
         assert searcher._batch_groups(items, ctx) == [items]
         searcher.batch_rows_cap = 1_000_000
         assert searcher._batch_groups(items, ctx) == [items]
+        # MatchAll reads the N docs: charged once per group, like a
+        # shared term (N = 10 here, so q7's 'a' overflows 15)
+        assert searcher.N == 10
+        searcher.batch_rows_cap = 15
+        items = [("q5", ("all",)), ("q6", ("all",)), ("q7", leaf("a"))]
+        assert [[q for q, _ in g] for g in
+                searcher._batch_groups(items, ctx)] == [["q5", "q6"], ["q7"]]
     finally:
         searcher.batch_rows_cap = old
 

@@ -93,10 +93,12 @@ def test_replaced_doc_not_returned(spark, upserted):
 
 def test_driver_path_over_tombstones_runs_no_spark_job(
         spark, upserted, oracle_final):
-    """Over tombstones and dict deltas, a compiled plan under the
-    volume check still runs no Spark job from dictionary probe to
-    fetch, and answers like a rebuild of the live corpus."""
-    s = Searcher(spark, upserted[0])
+    """Over tombstones and dict deltas, opening a Searcher and a
+    compiled plan under the volume check still run no Spark job from
+    dictionary probe to fetch, and answer like a rebuild of the live
+    corpus."""
+    s, n = count_spark_jobs(spark, lambda: Searcher(spark, upserted[0]))
+    assert n == 0
     assert s.tombstones is not None and s.dict_delta is not None
     for q in QUERIES + ['"beta zeta" ', "alpha AND MAYBE zeta"]:
         rows, n = count_spark_jobs(
@@ -113,9 +115,10 @@ def test_percent_cutoff_after_upsert(spark, upserted, oracle_final, pct):
     s = Searcher(spark, upserted[0])
     for q in ["alpha OR zeta OR words", "beta OR gam"]:
         exp = oracle_final.search(q, percent_cutoff=pct)
-        act = [(r["doc_id"], r["score"]) for r in
-               s.query_df(q, k=100, percent_cutoff=pct).collect()]
-        assert_results_match(exp, act)
+        rows, n = count_spark_jobs(spark, lambda: s.query_df(
+            q, k=100, percent_cutoff=pct).collect())
+        assert n == 0, q
+        assert_results_match(exp, [(r["doc_id"], r["score"]) for r in rows])
 
 
 def test_second_upsert(spark, upserted, oracle_final):
