@@ -30,7 +30,9 @@ estimate (``IndexBuilder.DRIVER_BUILD_BYTES``):
 
 Which stages a build or resume reruns is decided once, for both
 (``IndexBuilder._stale_stages``), and both hand their statistics to the
-same globalstats write and manifest commit.
+same globalstats write and manifest commit.  The docs stage is the one
+place documents get ids: an input without a ``doc_id`` column is
+numbered in its row order (``IndexBuilder._run_stages``).
 
 Nothing tokenizes twice and nothing re-reads a row-per-(doc, term)
 staging table — the 68%-of-stage staging re-scan measured at amp1000 in
@@ -519,10 +521,14 @@ def _termlist_kernel():
         np.cumsum(pvc, out=cum[1:])
         vidx_start = np.repeat(vc_start - cum[gstarts], ns) + cum[:-1]
         vidx_end = vidx_start + pvc
-        pb_start = np.where(vidx_start > 0,
-                            ends[np.maximum(vidx_start - 1, 0)] + 1, 0)
-        pb_end = np.where(pvc > 0,
-                          ends[np.maximum(vidx_end - 1, 0)] + 1, 0)
+        # piece byte spans of the positional rows only: a batch of
+        # non-positional runs has no varint ends to index
+        pb_start = np.zeros(total, dtype=np.int64)
+        pb_end = np.zeros(total, dtype=np.int64)
+        vs = vidx_start[row_has]
+        pb_start[row_has] = np.where(vs > 0, ends[np.maximum(vs - 1, 0)] + 1,
+                                     0)
+        pb_end[row_has] = ends[vidx_end[row_has] - 1] + 1
         # leading count varint of every positional piece must be wdf
         if row_has.any():
             sb = pb_start[row_has]
@@ -888,6 +894,58 @@ def _with_gen(tbl: pa.Table, gen: int = 0) -> pa.Table:
         "gen", pa.array(np.full(tbl.num_rows, gen, dtype=np.int32)))
 
 
+# the doc_id a docs stage prepends to an un-numbered input
+_DOC_ID_FIELD = pa.field("doc_id", pa.int64(), nullable=False)
+
+
+def _doc_shape(df: DataFrame) -> DataFrame:
+    """Project ``df`` to DOCS_SCHEMA's column order and types; a frame
+    without ``doc_id`` stays without it, for the docs stage to number."""
+    return df.select(*[F.col(f.name).cast(f.dataType)
+                       for f in DOCS_SCHEMA.fields
+                       if f.name != "doc_id" or "doc_id" in df.columns])
+
+
+def _dense_ids(df: DataFrame, first: int) -> DataFrame:
+    """``df`` with ``doc_id = first, first + 1, ...`` prepended in its
+    row order, without collecting a row:
+
+    1. ``localCheckpoint`` pins the partitions, so the counting job and
+       the consuming job see the same rows in the same places (an
+       ``orderBy``'s sampled range bounds could differ between two runs
+       of its plan);
+    2. one small aggregation collects the per-partition row counts;
+    3. an Arrow kernel prepends ``partition offset + arange`` per batch.
+
+    The output keeps ``df``'s partitions, so an ordered input comes out
+    clustered by id.  On a multi-executor cluster, swap the
+    (non-replicated) ``localCheckpoint`` for ``checkpoint()`` against a
+    reliable directory if executor loss must be survivable."""
+    pinned = df.localCheckpoint().withColumn("_pid", F.spark_partition_id())
+    offsets, acc = {}, int(first)
+    for pid, n in sorted(tuple(r) for r in
+                         pinned.groupBy("_pid").count().collect()):
+        offsets[pid] = acc
+        acc += n
+    out_schema = StructType([DOCS_SCHEMA["doc_id"], *df.schema.fields])
+
+    def assign(batches) -> "Iterator[pa.RecordBatch]":
+        next_id = None
+        for batch in batches:
+            if not batch.num_rows:
+                continue
+            if next_id is None:
+                next_id = offsets[batch.column("_pid")[0].as_py()]
+            ids = np.arange(next_id, next_id + batch.num_rows, dtype=np.int64)
+            next_id += batch.num_rows
+            rest = batch.drop_columns(["_pid"])
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(ids), *rest.columns],
+                schema=rest.schema.insert(0, _DOC_ID_FIELD))
+
+    return pinned.mapInArrow(assign, schema=out_schema)
+
+
 def _table(batches: list, schema: StructType) -> pa.Table:
     """A kernel's output batches as one table; typed from ``schema``
     when the kernel yielded nothing."""
@@ -1076,10 +1134,11 @@ class IndexBuilder:
         """Do the incoming partitions already hold pairwise-disjoint
         doc-id ranges, in at least ``min_parts`` non-empty partitions?
         Then the forward-store range exchange is redundant and the stage
-        writes with a local sort only.  Dense ids from ingest and the
-        driver documents table both qualify; arbitrary inputs (e.g. a
-        compaction's filtered doc set read off bucketless parquet) fall
-        back to the shuffle when it fails.  The probe is one cheap
+        writes with a local sort only.  The driver documents table
+        qualifies; arbitrary inputs (e.g. a compaction's filtered doc set
+        read off bucketless parquet) fall back to the shuffle when it
+        fails.  Only a numbered input is probed: the docs stage numbers
+        an un-numbered one in its own partitions.  The probe is one cheap
         column-pruned pass over doc_id; when Spark refuses to plan it (a
         non-file source such as a streaming DataFrame) the answer is
         no, and a failure while it runs propagates."""
@@ -1131,7 +1190,7 @@ class IndexBuilder:
 
     def build(self, docs_df: DataFrame, force: bool = False) -> dict:
         missing = [f.name for f in DOCS_SCHEMA.fields
-                   if f.name not in docs_df.columns]
+                   if f.name not in docs_df.columns and f.name != "doc_id"]
         if missing:
             raise ValueError(
                 f"docs DataFrame lacks the DOCS_SCHEMA column(s) "
@@ -1237,16 +1296,18 @@ class IndexBuilder:
         return manifest
 
     def _run_stages(self, docs_df: DataFrame, run: set, gen: int = 0,
-                    dict_dir: str = "dict") -> dict:
+                    dict_dir: str = "dict", first_id: int = 1) -> dict:
         """Run the stages in ``run`` over ``docs_df`` as generation
         ``gen``, on the executor the input's Catalyst size estimate
         picks: in-process on the driver when it is small, else as Spark
         jobs.  A build runs generation 0 and replaces each stage's
         directory; an upsert runs a later one (``dict_dir`` is then the
-        manifest's live dictionary) and appends to them.  Returns the
-        executor, its stage records, the new docs' count and the
-        statistics the stages computed (None where a stage did not
-        run)."""
+        manifest's live dictionary) and appends to them.  The docs stage
+        is the one place that numbers documents: an input without a
+        ``doc_id`` column gets ids ``first_id, first_id + 1, ...`` in its
+        row order.  Returns the executor, its stage records, the new
+        docs' count and the statistics the stages computed (None where a
+        stage did not run)."""
         est = self._size_estimate(docs_df)
         executor = "driver" if est < self.DRIVER_BUILD_BYTES else "spark"
         stages: list = []
@@ -1262,7 +1323,7 @@ class IndexBuilder:
         try:
             stages_fn = self._driver_stages if executor == "driver" \
                 else self._spark_stages
-            res = stages_fn(docs_df, run, record, gen, dict_dir)
+            res = stages_fn(docs_df, run, record, gen, dict_dir, first_id)
         finally:
             for k, v in saved.items():
                 if v is None:
@@ -1283,7 +1344,7 @@ class IndexBuilder:
         return res
 
     def _driver_stages(self, docs_df: DataFrame, run: set, record,
-                       gen: int, dict_dir: str) -> dict:
+                       gen: int, dict_dir: str, first_id: int) -> dict:
         """The driver executor: the input arrives in one ``toArrow``
         job, then every stage in ``run`` runs its Spark counterpart's
         kernel in-process on pyarrow batches.  pyarrow sorts and
@@ -1295,7 +1356,11 @@ class IndexBuilder:
         docs = None
         if "docs" in run:
             t0 = time.time()
-            docs = _with_gen(docs_df.toArrow().sort_by("doc_id"), gen)
+            docs = docs_df.toArrow()
+            if "doc_id" not in docs.column_names:
+                docs = docs.add_column(0, _DOC_ID_FIELD, pa.array(np.arange(
+                    first_id, first_id + docs.num_rows, dtype=np.int64)))
+            docs = _with_gen(docs.sort_by("doc_id"), gen)
             _write_stage(p_docs, {"": docs}, ["doc_id", "gen"], gen)
             res["n_docs"] = docs.num_rows
             record("docs", time.time() - t0)
@@ -1394,7 +1459,7 @@ class IndexBuilder:
         return res
 
     def _spark_stages(self, docs_df: DataFrame, run: set, record,
-                      gen: int, dict_dir: str) -> dict:
+                      gen: int, dict_dir: str, first_id: int) -> dict:
         """The Spark executor: every stage in ``run`` is a Spark job
         over the partitioned input, the partials consumers concurrently.
         Each write appends when ``gen`` > 0, and each read of a stage
@@ -1404,13 +1469,14 @@ class IndexBuilder:
         mode = "append" if gen else "overwrite"
         # stage 1: forward store, doc_id-clustered + sorted (the fetch
         # join's row-group pruning and the inversion's doc-range
-        # invariant both hang off this).  The range exchange is SKIPPED
-        # when the incoming partitions already hold pairwise-disjoint
-        # doc-id ranges (guide §2.4: the input is already partitioned
-        # the way the write needs — true for the driver documents table
-        # and for dense_ids output, both id-ordered by construction);
-        # one column-pruned pass verifies it, the full-row shuffle only
-        # runs when the check fails.
+        # invariant both hang off this).  An input without ids is
+        # numbered in its own partitions (``_dense_ids``), each a
+        # contiguous id range, and written without a range exchange: an
+        # ordered one (ingest output, an upsert batch) already crossed
+        # its own.  A numbered input skips the exchange when its
+        # partitions already hold pairwise-disjoint doc-id ranges (guide
+        # §2.4; true for the driver documents table), which one
+        # column-pruned pass verifies.
         p_docs = self.path("docs")
         if "docs" in run:
             t0 = time.time()
@@ -1431,7 +1497,6 @@ class IndexBuilder:
             # AQE would coalesce the range exchange below the core
             # count and starve the sort+write (measured 2.4 s vs 3.5 s).
             par = max(self.spark.sparkContext.defaultParallelism, 1)
-            src = None
             try:
                 in_files = docs_df.inputFiles()
             except AnalysisException:
@@ -1444,16 +1509,18 @@ class IndexBuilder:
                 except OSError:
                     in_bytes = 0
                     break
+            if "doc_id" not in docs_df.columns:
+                src = _dense_ids(docs_df, first_id)
             # free pre-filter: the probe job only runs when the planner
             # can plausibly produce >= par splits (many files, or one
             # big file above par × the 4 MB open-cost floor) — a small
             # input pays neither the probe nor the old RDD partition
             # check
-            if in_files and (len(in_files) >= par
-                             or in_bytes >= par * (4 << 20)) \
+            elif in_files and (len(in_files) >= par
+                               or in_bytes >= par * (4 << 20)) \
                     and self._ranges_disjoint(docs_df, par):
                 src = docs_df
-            if src is None:
+            else:
                 src = docs_df.repartitionByRange(par * 2, "doc_id")
             # row groups sized to the corpus: a large build keeps 8 MB
             # (splittable files, fine fetch-join row-group pruning); a

@@ -8,13 +8,15 @@ parse becomes an Arrow-batched mapInPandas kernel.  A raw-file mode
 (``spark.read.format('text') wholetext``) covers the reference's actual
 on-disk layout for .md corpora.
 
-Dense doc-id assignment (VERDICT r02 #2) is DataFrame-native: range-
-repartition on the ordering key, pin the partitioning with a local
-checkpoint, collect only the per-partition COUNTS (a handful of ints,
-never rows), and add ``offset + arange`` inside an Arrow kernel — no
-``.rdd``, no per-row Python, no full-row rebuild.  The tabular adapters
-(code table, documents table) are pure native column expressions; only
-the markdown frontmatter parser runs Python, Arrow-batched.
+Doc ids are not assigned here.  An adapter over a source without ids
+(the code table, raw markdown files) returns a lazy projection ordered
+by the source's identity key — ``(repo, path)``, ``fullpath`` — with no
+``doc_id`` column, and the build's docs stage numbers it in that order
+from the next free id (``build.IndexBuilder._run_stages``), as Xapian's
+writer numbers a document when it is added.  The documents table
+carries ids and keeps them.  The tabular adapters are pure native
+column expressions; only the markdown frontmatter parser runs Python,
+Arrow-batched.
 """
 
 from __future__ import annotations
@@ -23,72 +25,10 @@ from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.types import LongType, StructField, StructType
+from pyspark.sql.types import StructType
 
-from .build import DOCS_SCHEMA
+from .build import DOCS_SCHEMA, _doc_shape
 from .corpus import FrontmatterError, doc_from_markdown
-
-_DOC_KEYS = [f.name for f in DOCS_SCHEMA.fields]
-
-
-def dense_ids(df: DataFrame, order_cols: list[str],
-              id_offset: int = 1, id_col: str = "doc_id") -> DataFrame:
-    """Assign dense ``id_offset``-based ids in global ``order_cols``
-    order, JVM/Arrow-side end to end (the scale-safe replacement for
-    sort + zipWithIndex + per-row Row rebuild, VERDICT r02 #2):
-
-    1. range-repartition + in-partition sort on the ordering key;
-    2. ``localCheckpoint`` pins the sampled range boundaries so the
-       counting job and the consuming job see the SAME partitions (and
-       the expensive shuffle runs once);
-    3. one tiny aggregation collects per-partition row counts — the
-       only driver-side data is one int per partition;
-    4. an Arrow kernel prepends ``partition_offset + arange`` per
-       batch — vectorized, no per-row Python.
-
-    On a multi-executor cluster, swap the (non-replicated)
-    ``localCheckpoint`` for ``df.checkpoint()`` against a reliable
-    checkpoint dir if executor loss during ingest must be survivable —
-    the partition-pinning requirement is the same either way.
-    """
-    spark = df.sparkSession
-    n = max(spark.sparkContext.defaultParallelism, 1)
-    ordered = (df.repartitionByRange(n, *order_cols)
-               .sortWithinPartitions(*order_cols)
-               .localCheckpoint())
-    with_pid = ordered.withColumn("_pid", F.spark_partition_id())
-    counts = with_pid.groupBy("_pid").count().collect()
-    offsets: dict[int, int] = {}
-    acc = int(id_offset)
-    for r in sorted(counts, key=lambda x: x["_pid"]):
-        offsets[int(r["_pid"])] = acc
-        acc += int(r["count"])
-    b = spark.sparkContext.broadcast(offsets)
-    out_schema = StructType(
-        [StructField(id_col, LongType(), False)] + ordered.schema.fields)
-
-    def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-        start = None
-        used = 0
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            if start is None:
-                start = b.value[int(pdf["_pid"].iloc[0])]
-            pdf = pdf.drop(columns=["_pid"])
-            pdf.insert(0, id_col, np.arange(
-                start + used, start + used + len(pdf), dtype="int64"))
-            used += len(pdf)
-            yield pdf
-
-    return with_pid.mapInPandas(assign, schema=out_schema)
-
-
-def _doc_shape(df: DataFrame) -> DataFrame:
-    """Project to the canonical DOCS_SCHEMA column order + types."""
-    return df.select(*[F.col(f.name).cast(f.dataType)
-                       for f in DOCS_SCHEMA.fields])
 
 
 def docs_from_documents_table(spark: SparkSession, sf_dir: str,
@@ -129,26 +69,26 @@ def docs_from_documents_table(spark: SparkSession, sf_dir: str,
     ))
 
 
-def docs_from_code_table(spark: SparkSession, code_df: DataFrame,
-                         id_offset: int = 1) -> DataFrame:
-    """input_hint shape ``(repo, path, commit, lang, content)`` -> docs,
-    pure native column expressions + DataFrame-native dense ids.
+def docs_from_code_table(spark: SparkSession,
+                         code_df: DataFrame) -> DataFrame:
+    """input_hint shape ``(repo, path, commit, lang, content)`` -> docs
+    without ``doc_id``, pure native column expressions, lazy.
 
-    Dense deterministic doc_ids are assigned by (repo, path) order — the
-    upsert key, mirroring the reference's ``Q`` + fullpath identity term
-    (src/document.rs:185-187).  Semantics of corpus.doc_from_code_row
-    (the pure-Python twin used by the oracle): the commit's first 8 hex
-    chars drive a deterministic pseudo-date so date predicates are
-    testable without external data.
+    The rows come ordered by (repo, path) — the upsert key, mirroring
+    the reference's ``Q`` + fullpath identity term
+    (src/document.rs:185-187) — so a build numbers them in that order.
+    Semantics of corpus.doc_from_code_row (the pure-Python twin used by
+    the oracle): the commit's first 8 hex chars drive a deterministic
+    pseudo-date so date predicates are testable without external data.
     """
     content = F.coalesce(F.col("content"), F.lit(""))
     c8 = F.substring(F.coalesce(F.col("commit"), F.lit("0")), 1, 8)
     commit_num = F.when(c8.rlike("^[0-9a-fA-F]+$"),
                         F.conv(c8, 16, 10).cast("long")).otherwise(0)
-    # ordering keys ride along so dense_ids really orders by
-    # (repo, path) — NOT by the fullpath string, which flips when repo
-    # names share a prefix ('org/alpha-x' vs 'org/alpha': '-' < '/')
-    # (ADVICE r03); _doc_shape projects them away afterwards
+    # ordering keys ride along so the rows really order by (repo,
+    # path) — NOT by the fullpath string, which flips when repo names
+    # share a prefix ('org/alpha-x' vs 'org/alpha': '-' < '/') (ADVICE
+    # r03); _doc_shape projects them away afterwards
     shaped = code_df.select(
         F.col("repo").alias("_ord_repo"),
         F.col("path").alias("_ord_path"),
@@ -170,25 +110,7 @@ def docs_from_code_table(spark: SparkSession, code_df: DataFrame,
         content.alias("body"),
         F.sha2(content, 256).alias("sha256"),
     )
-    return _doc_shape(dense_ids(shaped, ["_ord_repo", "_ord_path"],
-                                id_offset))
-
-
-def code_table_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministically reshape the driver ``documents`` table into the
-    input_hint code-corpus shape (repo, path, commit, lang, content) —
-    used by tests/bench so the input_hint ingest path is exercised
-    without external data."""
-    src = spark.read.parquet(f"{sf_dir.rstrip('/')}/documents.parquet")
-    return src.select(
-        F.col("source").alias("repo"),
-        F.concat(F.lit("docs/"), F.col("doc_id").cast("string"),
-                 F.lit(".md")).alias("path"),
-        F.sha2(F.concat_ws("/", "source", F.col("doc_id").cast("string")),
-               256).substr(1, 40).alias("commit"),
-        F.col("lang"),
-        F.col("text").alias("content"),
-    )
+    return _doc_shape(shaped.orderBy("_ord_repo", "_ord_path"))
 
 
 def docs_from_markdown_files(spark: SparkSession, root: str) -> DataFrame:
@@ -199,8 +121,9 @@ def docs_from_markdown_files(spark: SparkSession, root: str) -> DataFrame:
 
     The YAML-subset frontmatter parse is genuinely per-document Python
     (the one place ingest needs it) and runs Arrow-batched in
-    mapInPandas; id assignment is the shared DataFrame-native helper,
-    run AFTER the parse so ids are dense over the parseable files."""
+    mapInPandas.  The parsed rows come ordered by ``fullpath`` with no
+    ``doc_id``, so a build numbers them densely over the parseable
+    files."""
     files = (spark.read.format("text")
              .option("wholetext", "true")
              .option("recursiveFileLookup", "true")
@@ -209,9 +132,9 @@ def docs_from_markdown_files(spark: SparkSession, root: str) -> DataFrame:
              .withColumn("fullpath", F.input_file_name())
              .filter(~F.col("fullpath").rlike(r"/\.")))
 
-    parse_keys = [k for k in _DOC_KEYS if k != "doc_id"]
     parse_schema = StructType(
         [f for f in DOCS_SCHEMA.fields if f.name != "doc_id"])
+    parse_keys = parse_schema.names
 
     def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -225,4 +148,4 @@ def docs_from_markdown_files(spark: SparkSession, root: str) -> DataFrame:
             yield pd.DataFrame(rows, columns=parse_keys)
 
     parsed = files.mapInPandas(parse, schema=parse_schema)
-    return _doc_shape(dense_ids(parsed, ["fullpath"]))
+    return _doc_shape(parsed.orderBy("fullpath"))

@@ -5,13 +5,14 @@ The reference upserts by identity term ``Q + fullpath``
 (/root/reference/src/document.rs:185-188) with one commit per batch
 (src/main.rs:110).  Here a batch upsert is:
 
-1. incoming docs get fresh doc_ids past the manifest's ``next_doc_id``,
-   so their posting blocks land in brand-new doc-range blocks — appends
-   only;
+1. incoming docs lose any ``doc_id`` they carry and are ordered by
+   ``fullpath``;
 2. the build's own stage graph (``IndexBuilder._run_stages``) runs over
-   them as a new generation, on the executor their size picks: docs,
-   partials, terms, docstats, dict and postings files are appended to
-   the index's directories;
+   them as a new generation, on the executor their size picks.  Its docs
+   stage numbers them in that order from the manifest's
+   ``next_doc_id``, so their posting blocks land in brand-new doc-range
+   blocks — appends only; docs, partials, terms, docstats, dict and
+   postings files are appended to the index's directories;
 3. docs whose ``fullpath`` matches an incoming row are *tombstoned*
    (their doc_ids recorded; old posting blocks are never rewritten);
 4. *negative* dictionary deltas for the tombstoned docs (computed
@@ -54,9 +55,9 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .build import (
-    FORMAT_VERSION, IndexBuilder, _STAGES, _gstats_of, _read_table,
-    _with_gen, _write_globalstats, _write_stage, build_index, local_dir,
-    read_index_dir,
+    FORMAT_VERSION, IndexBuilder, _STAGES, _doc_shape, _gstats_of,
+    _read_table, _with_gen, _write_globalstats, _write_stage, build_index,
+    local_dir, read_index_dir,
 )
 
 # An upsert runs every build stage except globalstats, which it
@@ -78,13 +79,13 @@ def upsert(spark: SparkSession, index_dir: str,
            auto_compact_ratio: float | None = None,
            spelling: bool = False) -> dict:
     """Batch upsert keyed by fullpath.  ``new_docs_df`` must have the
-    DOCS_SCHEMA columns except ``doc_id`` may be arbitrary (fresh ids
-    are assigned here).  ``auto_compact_ratio``: if set, a compaction
+    DOCS_SCHEMA columns; ``doc_id`` is optional and ignored, since the
+    build's docs stage numbers the batch in fullpath order past the
+    committed ids.  ``auto_compact_ratio``: if set, a compaction
     runs in place after the commit when tombstones exceed that fraction
     of total docs.  ``spelling``: rebuild the spelling fragment table
     after the commit (the old table is generation-stale the moment the
     commit lands, so readers fall back until the rebuild publishes)."""
-    from .ingest import _doc_shape, dense_ids
     index_dir = local_dir(index_dir)
     with open(os.path.join(index_dir, "manifest.json")) as f:
         m = json.load(f)
@@ -102,24 +103,20 @@ def upsert(spark: SparkSession, index_dir: str,
     on_disk = pc.max(_read_table(docs_path, ["gen"]).column("gen")).as_py()
     gen = max(committed + [on_disk or 0]) + 1
 
-    # 1. fresh dense doc_ids past the committed maximum, assigned
-    # DataFrame-native (ingest.dense_ids — no .rdd, no per-row Python;
-    # VERDICT r02 #2).  Orphan rows from a crashed attempt may share
-    # these ids — harmless, since only one gen holding a given doc_id
-    # can ever be committed.
+    # 1-2. the build's stages as generation ``gen``, all appends that
+    # stay invisible until the commit.  The docs stage numbers the batch
+    # in fullpath order past the committed maximum; orphan rows from a
+    # crashed attempt may share these ids — harmless, since only one gen
+    # holding a given doc_id can ever be committed.  The dictionary goes
+    # to the live dict_dir, which fold_dict_deltas may have moved.
     next_id = int(m["next_doc_id"])
-    new_docs = _doc_shape(dense_ids(new_docs_df.drop("doc_id"), ["fullpath"],
-                                    id_offset=next_id))
-
-    # 2. the build's stages as generation ``gen``, all appends that stay
-    # invisible until the commit; the dictionary goes to the live
-    # dict_dir, which fold_dict_deltas may have moved
     builder = IndexBuilder(spark, index_dir, block_span=int(m["block_span"]),
                            n_buckets=int(m["n_buckets"]),
                            mode=m.get("mode", "xapian"),
                            cjk_ngram=bool(m.get("cjk_ngram", False)))
-    res = builder._run_stages(new_docs, _UPSERT_STAGES, gen,
-                              m.get("dict_dir", "dict"))
+    res = builder._run_stages(
+        _doc_shape(new_docs_df.drop("doc_id")).orderBy("fullpath"),
+        _UPSERT_STAGES, gen, m.get("dict_dir", "dict"), next_id)
     n_new = int(res["n_docs"])
 
     # 3. tombstones for replaced fullpaths (Q+fullpath identity, S3):

@@ -11,7 +11,10 @@ executor check compares.  Each corpus is built from the two input
 shapes a build gets: ingest output (``docs_from_code_table``, a fresh
 build) and a filtered read of an index's ``docs/`` parquet (what
 ``compact()`` passes).  Catalyst sizes the two differently: the
-second's estimate is the compressed size of its files.
+second's estimate is the compressed size of its files.  Ingest output
+is a lazy projection ordered by (repo, path) and carries no ids, so its
+sort and numbering run inside each timed build (the docs stage numbers
+it); the ``docs/`` read carries its ids.
 
 The corpus is the benchmark's seeded code table (``perfbench.inputs``)
 at ``n`` documents; the runs alternate which executor goes first.

@@ -41,8 +41,8 @@ def assert_results_match(expected, actual, tol=1e-9):
         f"rank order mismatch:\n{expected}\n{actual}"
 
 
-def count_spark_jobs(spark, fn):
-    """``(fn(), number of Spark jobs fn ran)``, counted through a job
+def _spark_job_ids(spark, fn):
+    """``(fn(), ids of the Spark jobs fn ran)``, found through a job
     group and ``sc.statusTracker()`` once the listener bus has
     delivered every event."""
     import uuid
@@ -54,7 +54,32 @@ def count_spark_jobs(spark, fn):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+    return out, sc.statusTracker().getJobIdsForGroup(group)
+
+
+def count_spark_jobs(spark, fn):
+    """``(fn(), number of Spark jobs fn ran)``."""
+    out, jobs = _spark_job_ids(spark, fn)
+    return out, len(jobs)
+
+
+def shuffle_write_records(spark, fn):
+    """``(fn(), the rows each stage of fn's Spark jobs wrote to a
+    shuffle)``, read off the application's status store (a stage a
+    job skipped wrote none)."""
+    sc = spark.sparkContext
+    out, jobs = _spark_job_ids(spark, fn)
+    tracker = sc.statusTracker()
+    stages = {s for j in jobs for s in tracker.getJobInfo(j).stageIds}
+    wrapper = sc._jvm.java.lang.Class.forName(
+        "org.apache.spark.status.StageDataWrapper")
+    it = sc._jsc.sc().statusStore().store().view(wrapper).iterator()
+    records = []
+    while it.hasNext():
+        info = it.next().info()
+        if info.stageId() in stages:
+            records.append(info.shuffleWriteRecords())
+    return out, records
 
 
 def local_docs_df(spark, rows):

@@ -10,7 +10,7 @@ import shutil
 
 import pytest
 
-from conftest import count_spark_jobs, local_docs_df
+from conftest import count_spark_jobs, local_docs_df, shuffle_write_records
 from mdq_spark import build as B
 from mdq_spark.build import (
     IndexBuilder, build_index, read_index_dir, term_bucket,
@@ -41,11 +41,12 @@ UPSERT = [
 KW = dict(block_span=4, n_buckets=8)
 # the executor limit that picks each executor for the fixture's inputs
 LIMITS = {"driver": IndexBuilder.DRIVER_BUILD_BYTES, "spark": 0}
-# Spark jobs a small driver upsert may run: 11 were counted in the tests'
-# Spark session — dense_ids' range sampling, checkpoint and counts (5), the
-# stages' one ``toArrow`` (1), the tombstone probe of ``docs/`` (2) and
+# Spark jobs a small driver upsert may run: 8 were counted in the tests'
+# Spark session — the stages' one ``toArrow`` of the fullpath-ordered
+# batch (3: range sampling, the shuffle and the collect; the docs stage
+# numbers the rows in-process), the tombstone probe of ``docs/`` (2) and
 # the negative dict-delta write (3).  The staging path it replaced ran 40.
-JOBS_PER_DRIVER_UPSERT = 12
+JOBS_PER_DRIVER_UPSERT = 9
 
 
 def _decoded_postings(rows):
@@ -358,23 +359,69 @@ def test_driver_build_resumes_after_partials(spark, pair, tmp_path,
         pytest.approx([m["metrics"][k] for k in keys])
 
 
-def test_driver_build_runs_one_spark_job(spark, tmp_path):
-    """Beyond ingest, a driver build runs one Spark job: the
-    ``toArrow`` that collects its input.  The code table is read from
-    parquet, as a real one is, so Catalyst can size the ingest output."""
-    from mdq_spark.ingest import docs_from_code_table
+def _code_table(spark, tmp_path, n):
+    """An ``n``-row code table written as parquet, as a real one is, so
+    Catalyst can size the ingest output."""
     table = str(tmp_path / "code")
     spark.createDataFrame(
         [("org/a", f"f{i}.py", "c" * 40, "python", f"def f{i}(): spark")
-         for i in range(20)],
+         for i in range(n)],
         "repo string, path string, commit string, lang string, "
         "content string").write.parquet(table)
-    docs = docs_from_code_table(spark, spark.read.parquet(table))
+    return spark.read.parquet(table)
+
+
+def test_ingest_and_driver_build_run_at_most_three_spark_jobs(spark,
+                                                             tmp_path):
+    """Ingest is a lazy projection and runs no Spark job; a driver
+    build of its output runs at most three: the ordered ``toArrow``
+    that collects its input (range sampling, the shuffle and the
+    collect)."""
+    from mdq_spark.ingest import docs_from_code_table
+    code = _code_table(spark, tmp_path, 20)
+    docs, n_ingest = count_spark_jobs(
+        spark, lambda: docs_from_code_table(spark, code))
+    assert n_ingest == 0
     m, n = count_spark_jobs(
         spark, lambda: build_index(spark, docs, str(tmp_path / "i"), **KW))
     assert m["executor"] == "driver"
     assert m["metrics"]["n_docs"] == 20
-    assert n == 1
+    assert n <= 3, n
+
+
+def test_executors_number_unnumbered_docs_equally(spark, tmp_path,
+                                                  monkeypatch):
+    """The docs stage numbers a docs DataFrame that has no ``doc_id``
+    in its row order from 1, and both executors number it, and write
+    and answer from it, the same."""
+    docs = local_docs_df(spark, ROWS).drop("doc_id").orderBy("fullpath")
+    outs = {}
+    for executor, limit in LIMITS.items():
+        monkeypatch.setattr(IndexBuilder, "DRIVER_BUILD_BYTES", limit)
+        outs[executor] = str(tmp_path / executor)
+        m = build_index(spark, docs, outs[executor], **KW)
+        assert m["executor"] == executor
+        assert m["next_doc_id"] == len(ROWS) + 1
+    a, b = snapshot(spark, outs["driver"]), snapshot(spark, outs["spark"])
+    assert [r[:2] for r in a["docs"]] == list(
+        enumerate(sorted(r["fullpath"] for r in ROWS), 1))
+    assert a == b
+    assert answers(spark, outs["driver"]) == answers(spark, outs["spark"])
+
+
+def test_spark_build_of_ingest_output_shuffles_docs_once(spark, tmp_path,
+                                                         monkeypatch):
+    """Ingest output arrives range-partitioned by its ``orderBy``; the
+    Spark docs stage numbers it in those partitions and writes it with
+    no second range exchange, so the docs rows cross one shuffle."""
+    from mdq_spark.ingest import docs_from_code_table
+    monkeypatch.setattr(IndexBuilder, "DRIVER_BUILD_BYTES", 0)
+    docs = docs_from_code_table(spark, _code_table(spark, tmp_path, 40))
+    builder = IndexBuilder(spark, str(tmp_path / "i"), **KW)
+    res, records = shuffle_write_records(
+        spark, lambda: builder._run_stages(docs, {"docs"}))
+    assert (res["executor"], res["n_docs"]) == ("spark", 40)
+    assert sum(n >= 40 for n in records) == 1, records
 
 
 SPLIT_CONFS = ("spark.sql.files.maxPartitionBytes",

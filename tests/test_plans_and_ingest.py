@@ -6,7 +6,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from conftest import assert_results_match
-from mdq_spark.build import DOCS_SCHEMA, build_index
+from mdq_spark.build import (
+    DOCS_SCHEMA, IndexBuilder, _read_table, build_index,
+)
 from mdq_spark.oracle import OracleIndex
 from mdq_spark.search import Searcher
 
@@ -32,45 +34,70 @@ def code_df(spark):
                    "lang string, content string")
 
 
-def test_code_table_ingest(spark, code_df):
+def _index_docs(out):
+    """The ``docs/`` rows of the index at ``out``, every generation, in
+    doc_id order."""
+    return _read_table(f"{out}/docs").sort_by("doc_id").to_pylist()
+
+
+def test_code_table_ingest(spark, code_df, tmp_path_factory):
     from mdq_spark.ingest import docs_from_code_table
-    docs = docs_from_code_table(spark, code_df).collect()
-    assert len(docs) == 4
-    by_path = {r["fullpath"]: r for r in docs}
-    # dense ids in (repo, path) order, 1-based
-    ordered = sorted(by_path)
-    assert [by_path[p]["doc_id"] for p in ordered] == [1, 2, 3, 4]
-    r = by_path["org/alpha/src.rs"] if "org/alpha/src.rs" in by_path \
-        else by_path["org/alpha/src/main.rs"]
+    docs_df = docs_from_code_table(spark, code_df)
+    # no ids at ingest: the rows come in (repo, path) order, and the
+    # build numbers them 1-based in that order
+    assert docs_df.columns == [f.name for f in DOCS_SCHEMA.fields
+                               if f.name != "doc_id"]
+    docs = docs_df.collect()
+    assert [r["fullpath"] for r in docs] == \
+        [f"{repo}/{path}" for repo, path, *_ in sorted(CODE_ROWS)]
+    out = str(tmp_path_factory.mktemp("ingestids"))
+    build_index(spark, docs_df, out, block_span=4, n_buckets=8)
+    assert [(r["doc_id"], r["fullpath"]) for r in _index_docs(out)] == \
+        list(enumerate((r["fullpath"] for r in docs), 1))
+    r = {r["fullpath"]: r for r in docs}["org/alpha/src/main.rs"]
     assert r["tags"] == ["rust"]
     assert r["body"].startswith("fn main")
     assert len(r["sha256"]) == 64
 
 
-def test_code_table_ids_repo_path_order(spark):
-    """ADVICE r03: ids follow (repo, path) column order, NOT fullpath
-    string order — 'org/alpha-x' sorts BEFORE 'org/alpha/' as a string
-    ('-' < '/'), but AFTER it as a (repo, path) tuple."""
+def test_code_table_ids_repo_path_order(spark, tmp_path, monkeypatch):
+    """ADVICE r03: a build numbers in (repo, path) column order, NOT
+    fullpath string order — 'org/alpha-x' sorts BEFORE 'org/alpha/' as
+    a string ('-' < '/'), but AFTER it as a (repo, path) tuple.  An
+    upsert of the same two paths numbers its batch in fullpath order,
+    the upsert key's.  Both executors number alike."""
+    import pyarrow as pa
     from mdq_spark.ingest import docs_from_code_table
-    rows = [
-        ("org/alpha-x", "a.py", "e" * 40, "python", "x"),
-        ("org/alpha", "z.py", "f" * 40, "python", "y"),
-    ]
-    df = spark.createDataFrame(
-        rows, "repo string, path string, commit string, "
-              "lang string, content string")
-    docs = {r["fullpath"]: r["doc_id"]
-            for r in docs_from_code_table(spark, df).collect()}
-    assert docs["org/alpha/z.py"] == 1
-    assert docs["org/alpha-x/a.py"] == 2
+    from mdq_spark.upsert import upsert
+    # Arrow-backed, so Catalyst sizes it and a small input takes the
+    # driver executor at the default limit
+    code = spark.createDataFrame(pa.table({
+        "repo": ["org/alpha-x", "org/alpha"], "path": ["a.py", "z.py"],
+        "commit": ["e" * 40, "f" * 40], "lang": ["python", "python"],
+        "content": ["x", "y"]}))
+    for executor, limit in (("driver", IndexBuilder.DRIVER_BUILD_BYTES),
+                            ("spark", 0)):
+        monkeypatch.setattr(IndexBuilder, "DRIVER_BUILD_BYTES", limit)
+        out = str(tmp_path / executor)
+        m = build_index(spark, docs_from_code_table(spark, code), out,
+                        block_span=4, n_buckets=8)
+        assert m["executor"] == executor
+        m = upsert(spark, out, docs_from_code_table(spark, code))
+        assert m["upserts"][-1]["executor"] == executor
+        assert m["next_doc_id"] == 5
+        assert [(r["doc_id"], r["gen"], r["fullpath"])
+                for r in _index_docs(out)] == [
+            (1, 0, "org/alpha/z.py"), (2, 0, "org/alpha-x/a.py"),
+            (3, 1, "org/alpha-x/a.py"), (4, 1, "org/alpha/z.py")]
 
 
 def test_code_table_end_to_end(spark, code_df, tmp_path_factory):
     from mdq_spark.ingest import docs_from_code_table
     out = str(tmp_path_factory.mktemp("codeidx"))
-    docs_df = docs_from_code_table(spark, code_df)
-    build_index(spark, docs_df, out, block_span=4, n_buckets=8)
-    oracle = OracleIndex.build([r.asDict() for r in docs_df.collect()])
+    build_index(spark, docs_from_code_table(spark, code_df), out,
+                block_span=4, n_buckets=8)
+    # the oracle indexes the rows the build numbered
+    oracle = OracleIndex.build(_index_docs(out))
     s = Searcher(spark, out)
     for q in ["merge ", "sort AND merge", "tag:python merge"]:
         assert_results_match(oracle.search(q), s.search(q))

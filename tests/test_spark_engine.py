@@ -810,8 +810,8 @@ def test_fused_kernel_repairs_unsorted_partition(spark):
 
 
 def test_docs_stage_range_shuffle_skip(spark, tmp_path, monkeypatch):
-    """_ranges_disjoint: dense_ids/documents-table inputs (disjoint
-    per-partition doc-id ranges) skip the forward-store range exchange;
+    """_ranges_disjoint: documents-table inputs (disjoint per-partition
+    doc-id ranges) skip the forward-store range exchange;
     hash-partitioned input falls back to the shuffle.  Either way the
     written forward store is doc-clustered and the built index is
     identical.  The exchange belongs to the Spark build executor."""
@@ -872,7 +872,8 @@ def test_partial_resume_reruns_only_missing_stage(spark, index, tmp_path):
 def test_termlist_kernel_decodes_runs():
     """The vectorized termlist kernel decodes partial posting runs into
     one row per (doc, term), each position piece a byte slice of its
-    run's blob, and rejects a malformed batch with a ValueError naming
+    run's blob, also in a batch with no positional run, and rejects a
+    malformed batch with a ValueError naming
     it: a MIXED run (an EMPTY_POSITIONS member, count 0 != wdf 5, which
     the tokenizer never writes) and a run whose blob ends mid-varint."""
     import pyarrow as pa
@@ -928,6 +929,8 @@ def test_termlist_kernel_decodes_runs():
          for d, w, dl, p in zip([1, 5, 9], [2, 200, 1], [10, 12, 9],
                                 alpha)]
     assert decode(rows) == want
+    # a batch of non-positional runs only (a long stretch of Z-stems)
+    assert decode(rows[1:]) == want[:2]
 
     mixed = run_row("gamma", 2, 0, [4, 6], [1, 5], [7, 7],
                     [pos_piece([2]), EMPTY_POSITIONS])
