@@ -44,7 +44,8 @@ Index layout under ``<out_dir>/``:
                    the reference's ``set_data`` JSON blob, SURVEY.md §1.4)
 * ``partials/``    fused tokenize output: per (term, doc-range block,
                    input split) encoded partial posting runs = the
-                   resume checkpoint
+                   resume checkpoint, removed once terms, docstats,
+                   dict and postings have committed
 * ``terms/``       forward termlist, row per (doc, term) — derived from
                    partials; consumed by eset/upsert/the xq oracle
 * ``docstats/``    doc_id -> doclen (sum of wdf incl. Z-stem rows — A3)
@@ -955,12 +956,16 @@ def _table(batches: list, schema: StructType) -> pa.Table:
 
 
 def _read_table(path: str, columns: Optional[list] = None,
-                gens: Optional[list] = None) -> pa.Table:
+                gens: Optional[list] = None,
+                where: Optional[pc.Expression] = None) -> pa.Table:
     """The rows of the parquet files under ``path`` (hive directories
-    included) whose ``gen`` is in ``gens`` (all rows when None)."""
-    expr = pc.field("gen").isin(gens) if gens is not None else None
+    included) whose ``gen`` is in ``gens`` (all rows when None) and
+    that pass ``where``, a filter pushed into the scan."""
+    if gens is not None:
+        gen_in = pc.field("gen").isin(gens)
+        where = gen_in if where is None else where & gen_in
     return pads.dataset(path, format="parquet").to_table(
-        columns=columns, filter=expr)
+        columns=columns, filter=where)
 
 
 # -- index locations and readers ---------------------------------------------
@@ -1178,14 +1183,20 @@ class IndexBuilder:
         """The stages this build (re)writes, whichever executor runs
         them.  A stage reruns when its output is missing, unfinished (no
         ``_SUCCESS``) or written by an older format (ADVICE r01), and so
-        does every stage derived from it."""
+        does every stage derived from it.  ``partials/`` is only its
+        consumers' checkpoint, removed once they commit: they derive
+        from the docs it encodes, it reruns only when one of them does,
+        and rewriting it alone reruns none that is current."""
         run: set = set()
         for name, src in _STAGES.items():
-            p = self.path(name)
-            fmt = _STAGE_FORMAT.get(name)
+            p, fmt = self.path(name), _STAGE_FORMAT.get(name)
+            if src == "partials":
+                src = "docs"
             if force or src in run or not _stage_done(p) or (
                     fmt is not None and not _stage_current(p, **fmt)):
                 run.add(name)
+        if not run & _PARTIALS_CONSUMERS:
+            run.discard("partials")
         return run
 
     def build(self, docs_df: DataFrame, force: bool = False) -> dict:
@@ -1340,6 +1351,11 @@ class IndexBuilder:
                     self.path("docstats"), ["doc_id", "doclen"], [gen]))
             _write_globalstats(self.path("globalstats"), res["gstats"], gen)
             record("globalstats", time.time() - t0)
+        # partials/ is only its consumers' resume checkpoint: they have
+        # all committed now (this run wrote them, or ``_stale_stages``
+        # found them current), so nothing reads it again.  An upsert
+        # never resumes, so its gen-g partials go the same way.
+        shutil.rmtree(self.path("partials"), ignore_errors=True)
         res.update(executor=executor, size_estimate_bytes=est, stages=stages)
         return res
 

@@ -680,15 +680,20 @@ class Searcher:
             return json.load(f)
 
     def _dataset(self, rel: str) -> Optional[pads.Dataset]:
-        """The pyarrow dataset over ``<index>/<rel>`` (None when absent),
-        listed once per Searcher like Spark's file index: rows of gens
-        committed later are invisible to this Searcher anyway.  Names
-        starting with ``.`` or ``_`` (in-flight stage files,
-        ``_SUCCESS``) are skipped, as Spark skips them."""
+        """The pyarrow dataset over ``<index>/<rel>``, listed once per
+        Searcher like Spark's file index: rows of gens committed later
+        are invisible to this Searcher anyway.  Names starting with
+        ``.`` or ``_`` (in-flight stage files, ``_SUCCESS``) are
+        skipped, as Spark skips them.  None when the directory is absent
+        or holds no other file — as ``tombstones/`` or ``dict_delta/``
+        does after an upsert's first write into it was cut short — so
+        no reader meets a dataset without the directory's columns."""
         if rel not in self._datasets:
-            self._datasets[rel] = pads.dataset(
+            dset = pads.dataset(
                 f"{self._root}/{rel}", filesystem=self.fs, format="parquet",
                 partitioning=_HIVE) if self._exists(rel) else None
+            self._datasets[rel] = dset if dset is not None and dset.files \
+                else None
         return self._datasets[rel]
 
     def _read(self, rel: str, columns: list[str], expr=None,

@@ -2,6 +2,8 @@
 """Dissect the post-partials block stages (termlist / docstats / dict /
 postings) serially on an existing partials/ dir, separating the partials
 scan from each stage's compute and from its sink (noop vs real write).
+A finished build removes partials/, so point it at a build stopped after
+its partials stage.
 
 Usage: python scripts/block_dissect.py <index_dir> [cores]
 """
@@ -24,6 +26,8 @@ def noop(df):
 def main() -> None:
     idx = sys.argv[1]
     cores = int(sys.argv[2]) if len(sys.argv) > 2 else 32
+    if not os.path.isdir(os.path.join(idx, "partials")):
+        sys.exit(f"{idx} has no partials/ (a finished build removes it)")
     from pyspark.sql import functions as F
     from mdq_spark.build import (
         TERMS_SCHEMA, _docstats_kernel, _termlist_kernel, merge_partials,

@@ -41,12 +41,13 @@ UPSERT = [
 KW = dict(block_span=4, n_buckets=8)
 # the executor limit that picks each executor for the fixture's inputs
 LIMITS = {"driver": IndexBuilder.DRIVER_BUILD_BYTES, "spark": 0}
-# Spark jobs a small driver upsert may run: 8 were counted in the tests'
-# Spark session — the stages' one ``toArrow`` of the fullpath-ordered
-# batch (3: range sampling, the shuffle and the collect; the docs stage
-# numbers the rows in-process), the tombstone probe of ``docs/`` (2) and
-# the negative dict-delta write (3).  The staging path it replaced ran 40.
-JOBS_PER_DRIVER_UPSERT = 9
+# Spark jobs a small driver upsert may run: 3 were counted in the tests'
+# Spark session, all of them the stages' one ``toArrow`` of the
+# fullpath-ordered batch (range sampling, the shuffle and the collect);
+# the docs stage numbers the rows in-process, and the tombstones and
+# negative dict deltas of a small index are pyarrow reads and writes.
+# The staging path it replaced ran 40.
+JOBS_PER_DRIVER_UPSERT = 4
 
 
 def _decoded_postings(rows):
@@ -92,7 +93,8 @@ def snapshot(spark, out):
         "docstats": rows("docstats", "doc_id", "doclen", "gen"),
         "terms": rows("terms", "term", "bucket", "block", "doc_id", "wdf",
                       "doclen", pos, "gen"),
-        "dict_delta": rows("dict_delta", "term", "ddf", "dcf", "gen"),
+        "dict_delta": rows("dict_delta", "term", "bucket", "ddf", "dcf",
+                           "gen"),
         "tombstones": rows("tombstones", "doc_id", "gen"),
     }
 
@@ -135,6 +137,8 @@ def test_executor_recorded_in_manifest(pair):
 
 def test_executors_write_equal_indexes(spark, pair):
     drv, _, spk, _ = pair
+    for out in (drv, spk):
+        assert not os.path.exists(os.path.join(out, "partials"))
     a, b = snapshot(spark, drv), snapshot(spark, spk)
     assert a["docs"] and a["dict"] and a["postings"] and a["terms"]
     assert a == b
@@ -145,9 +149,12 @@ def test_executors_equal_after_upsert_and_compaction(spark, pair,
                                                       tmp_path, monkeypatch):
     """An upsert runs the build's stages on the executor its batch's
     size picks: the driver for a small Arrow-backed batch, Spark when
-    the limit is 0.  Upserts by either executor into an index built by
-    either write equal indexes with equal answers, and so do the
-    compactions that follow."""
+    the limit is 0.  Its tombstones and negative dict deltas take the
+    side the committed index's size picks by the same limit: pyarrow
+    for the small fixture, Spark joins when the limit is 0.  Upserts by
+    either executor into an index built by either write equal indexes
+    with equal answers, and so do the compactions that follow; none of
+    them leaves ``partials/`` behind."""
     drv0, _, spk0, _ = pair
     outs = {}
     for built, src in (("driver", drv0), ("spark", spk0)):
@@ -157,6 +164,8 @@ def test_executors_equal_after_upsert_and_compaction(spark, pair,
             monkeypatch.setattr(IndexBuilder, "DRIVER_BUILD_BYTES", limit)
             m = upsert(spark, out, local_docs_df(spark, UPSERT))
             assert m["upserts"][-1]["executor"] == executor
+            assert m["upserts"][-1]["bookkeeping"] == executor
+            assert not os.path.exists(os.path.join(out, "partials"))
             outs[built, executor] = out
     snaps = [snapshot(spark, out) for out in outs.values()]
     assert snaps[0]["tombstones"] and snaps[0]["dict_delta"]
@@ -170,6 +179,8 @@ def test_executors_equal_after_upsert_and_compaction(spark, pair,
     monkeypatch.setattr(IndexBuilder, "DRIVER_BUILD_BYTES", LIMITS["spark"])
     m_spk = compact_in_place(spark, spk)
     assert (m_drv["executor"], m_spk["executor"]) == ("driver", "spark")
+    for out in (drv, spk):
+        assert not os.path.exists(os.path.join(out, "partials"))
     a, b = snapshot(spark, drv), snapshot(spark, spk)
     assert a["tombstones"] is None and a["docs"]
     assert a == b
@@ -177,18 +188,57 @@ def test_executors_equal_after_upsert_and_compaction(spark, pair,
 
 
 def test_driver_upsert_runs_few_spark_jobs(spark, pair, tmp_path):
-    """A small driver upsert runs its stages in one ``toArrow`` job; the
-    other jobs assign ids and do the tombstone bookkeeping, which reads
-    the committed index through Spark."""
+    """A small driver upsert into a small index runs no Spark job but
+    the ``toArrow`` that collects its fullpath-ordered batch: its
+    stages, its tombstones and its negative dict deltas all read and
+    write with pyarrow, so no Spark join or write runs."""
     out = str(tmp_path / "idx")
     shutil.copytree(pair[0], out)
-    m, n = count_spark_jobs(
-        spark, lambda: upsert(spark, out, local_docs_df(spark, UPSERT)))
+    batch = local_docs_df(spark, UPSERT)
+    _, n_collect = count_spark_jobs(spark, lambda: B._doc_shape(
+        batch.drop("doc_id")).orderBy("fullpath").toArrow())
+    m, n = count_spark_jobs(spark, lambda: upsert(spark, out, batch))
     assert m["upserts"][-1]["executor"] == "driver"
+    assert m["upserts"][-1]["bookkeeping"] == "driver"
+    assert os.listdir(os.path.join(out, "tombstones"))
+    assert os.listdir(os.path.join(out, "dict_delta"))
+    assert n == n_collect, (n, n_collect)
     assert n <= JOBS_PER_DRIVER_UPSERT, n
 
 
-@pytest.mark.parametrize("stage", ["docs", "postings", "globalstats"])
+def test_fold_dict_deltas_written_by_either_side(spark, pair, tmp_path,
+                                                 monkeypatch):
+    """Negative dict deltas written by either bookkeeping side carry
+    ``dict_delta/``'s exact parquet types, and folding them into the
+    dictionary leaves the answers of the unfolded index, and equal
+    indexes, whichever side wrote them."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import IntegerType, StructField, StructType
+    from pyspark.sql.pandas.types import to_arrow_schema
+    want = [(f.name, f.type) for f in to_arrow_schema(StructType(
+        B._DIR_SCHEMAS["dict_delta"].fields
+        + [StructField("gen", IntegerType())]))]
+    snaps = {}
+    for side, limit in LIMITS.items():
+        out = str(tmp_path / side)
+        shutil.copytree(pair[0], out)
+        monkeypatch.setattr(IndexBuilder, "DRIVER_BUILD_BYTES", limit)
+        m = upsert(spark, out, local_docs_df(spark, UPSERT))
+        assert m["upserts"][-1]["bookkeeping"] == side
+        files = glob.glob(os.path.join(out, "dict_delta", "*.parquet"))
+        assert files
+        for f in files:
+            assert [(c.name, c.type) for c in pq.read_schema(f)] == want, f
+        unfolded = answers(spark, out)
+        fold_dict_deltas(spark, out)
+        assert not os.path.exists(os.path.join(out, "dict_delta"))
+        assert answers(spark, out) == unfolded, side
+        snaps[side] = snapshot(spark, out)
+    assert snaps["driver"] == snaps["spark"]
+
+
+@pytest.mark.parametrize("stage", ["docs", "postings", "dict_delta",
+                                   "tombstones", "globalstats"])
 def test_driver_upsert_cut_mid_write_stays_invisible(spark, pair, tmp_path,
                                                      monkeypatch, stage):
     """A driver upsert writes into directories that already hold
@@ -224,7 +274,8 @@ def test_driver_upsert_cut_mid_write_stays_invisible(spark, pair, tmp_path,
         pq.read_metadata(f)
     assert answers(spark, out) == want_before
     m = upsert(spark, out, local_docs_df(spark, UPSERT))
-    assert m["upserts"][-1]["executor"] == "driver"
+    assert (m["upserts"][-1]["executor"],
+            m["upserts"][-1]["bookkeeping"]) == ("driver", "driver")
     assert answers(spark, out) == want_after
 
 
@@ -269,6 +320,19 @@ def test_v5_index_refuses_upsert_and_compaction_migrates(spark, pair,
     assert answers(spark, out) == want
 
 
+def _stopped_after_partials(spark, out, monkeypatch):
+    """Build the fixture corpus at ``out`` on the driver and stop it
+    once ``partials/`` has committed, before any of its consumers."""
+    def stop(*a, **k):
+        raise RuntimeError("stopped after partials")
+
+    with monkeypatch.context() as mp:
+        mp.setattr(B, "_termlist_kernel", stop)
+        with pytest.raises(RuntimeError, match="stopped after partials"):
+            build_index(spark, local_docs_df(spark, ROWS), out, **KW)
+    assert os.path.exists(os.path.join(out, "partials", "_SUCCESS"))
+
+
 FIRST_CHARS = ["%", "#", "=", "/", ":", "?", "\\", "{", "[", "]", "^", "*",
                "'", '"', "\x01", "\x1f", "\x7f", " ", "!", "+", "é", "中",
                "😀"]
@@ -282,13 +346,16 @@ def test_reserved_and_non_ascii_first_chars_round_trip(spark, pair,
     escapes or a non-ASCII one are found by both the Spark dictionary
     scan and the pyarrow probe.  The tokenizer never emits the escaped
     characters first, so the terms are planted in a partials checkpoint
-    the build resumes from."""
+    (taken from a build stopped after partials) that the build resumes
+    from."""
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
     drv0 = pair[0]
-    part = B._read_table(os.path.join(drv0, "partials"))
+    stopped = str(tmp_path / "stopped")
+    _stopped_after_partials(spark, stopped, monkeypatch)
+    part = B._read_table(os.path.join(stopped, "partials"))
     runs = part.filter(pc.field("term") == "spark").to_pylist()
     planted = [dict(r, term=c + "spark", bucket=term_bucket(c + "spark", 8))
                for c in FIRST_CHARS for r in runs]
@@ -328,29 +395,30 @@ def test_driver_build_resumes_after_partials(spark, pair, tmp_path,
                                              monkeypatch, resume_limit):
     """A driver build stopped after partials resumes, under either
     executor (one stage graph, one set of resume rules), to an equal
-    index; a second resume runs no stage."""
+    index and removes ``partials/``; a second resume runs no stage, and
+    one that finds a leftover ``partials/`` beside current consumers
+    (a build stopped between their commit and its removal) runs none
+    either and removes it."""
     drv0 = pair[0]
     out = str(tmp_path / "idx")
     docs = local_docs_df(spark, ROWS)
-
-    def stop(*a, **k):
-        raise RuntimeError("stopped after partials")
-
-    monkeypatch.setattr(B, "_termlist_kernel", stop)
-    with pytest.raises(RuntimeError, match="stopped after partials"):
-        build_index(spark, docs, out, **KW)
-    assert os.path.exists(os.path.join(out, "partials", "_SUCCESS"))
+    _stopped_after_partials(spark, out, monkeypatch)
     assert not os.path.exists(os.path.join(out, "manifest.json"))
     assert not os.path.exists(os.path.join(out, "terms"))
-    monkeypatch.undo()
+    leftover = str(tmp_path / "partials")
+    shutil.copytree(os.path.join(out, "partials"), leftover)
     monkeypatch.setattr(IndexBuilder, "DRIVER_BUILD_BYTES", resume_limit)
     m = build_index(spark, docs, out, **KW)
     assert m["executor"] == ("driver" if resume_limit else "spark")
     assert sorted(s["stage"] for s in m["stages"]) == sorted(
         ["terms", "docstats", "globalstats", "dict", "postings"])
+    assert not os.path.exists(os.path.join(out, "partials"))
     assert snapshot(spark, out) == snapshot(spark, drv0)
     again = build_index(spark, docs, out, **KW)
     assert again["stages"] == []
+    shutil.copytree(leftover, os.path.join(out, "partials"))
+    assert build_index(spark, docs, out, **KW)["stages"] == []
+    assert not os.path.exists(os.path.join(out, "partials"))
     # the statistics a resume re-reads equal those the stages produced
     keys = ("n_docs", "n_terms", "n_postings", "term_df_skew_factor",
             "avg_doclen")

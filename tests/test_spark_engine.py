@@ -848,8 +848,10 @@ def test_docs_stage_range_shuffle_skip(spark, tmp_path, monkeypatch):
 
 def test_partial_resume_reruns_only_missing_stage(spark, index, tmp_path):
     """Round-6 parallel stages are independently resumable: wiping one
-    downstream artifact re-runs ONLY that stage (stats reload from the
-    surviving artifacts), and the rebuilt stage's content matches."""
+    downstream artifact re-runs ONLY that stage and the ``partials/``
+    checkpoint it reads, which a finished build removes (stats reload
+    from the surviving artifacts), and the rebuilt stage's content
+    matches."""
     import shutil
 
     out = str(tmp_path / "idx")
@@ -861,7 +863,8 @@ def test_partial_resume_reruns_only_missing_stage(spark, index, tmp_path):
         .select("term", "block", "n").collect())
     shutil.rmtree(f"{out}/postings")
     m2 = build_index(spark, df, out, block_span=4, n_buckets=8)
-    assert [s["stage"] for s in m2["stages"]] == ["postings"]
+    assert [s["stage"] for s in m2["stages"]] == ["partials", "postings"]
+    assert not os.path.exists(f"{out}/partials")
     after = sorted(
         tuple(r) for r in spark.read.parquet(f"{out}/postings")
         .select("term", "block", "n").collect())
