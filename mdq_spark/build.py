@@ -789,16 +789,22 @@ def _stage_done(path: str) -> bool:
 
 
 def _stage_current(path: str, binary_positions: bool = False,
-                   required_cols: tuple = ()) -> bool:
+                   required_cols: tuple = (), build_rows: bool = False
+                   ) -> bool:
     """A staged output is resumable only if it was written by the
     current format: every v3 artifact carries a ``gen`` column, v2+
     staging carries positions as varint bytes, and v5 partials carry
     ``sum_wdf``.  Resuming an older stage with current code would crash
     or silently corrupt (ADVICE r01), so a stale stage is rebuilt
     instead.  The schema comes from a parquet footer (pyarrow), so the
-    check runs no Spark job; a missing or unreadable stage is stale."""
+    check runs no Spark job; a missing or unreadable stage is stale.
+    ``build_rows``: the output must also hold rows of the build's
+    generation 0 — a ``partials/`` that an upsert cut short left behind
+    holds its own generation's rows only, and resuming the build's
+    consumers from it would commit them empty."""
     try:
-        schema = pads.dataset(path, format="parquet").schema
+        dset = pads.dataset(path, format="parquet")
+        schema = dset.schema
     except (OSError, pa.ArrowInvalid):
         return False
     names = schema.names
@@ -809,6 +815,9 @@ def _stage_current(path: str, binary_positions: bool = False,
             return False
     if binary_positions and not pa.types.is_binary(
             schema.field("positions").type):
+        return False
+    if build_rows and not dset.scanner(
+            columns=["gen"], filter=pc.field("gen") == 0).head(1).num_rows:
         return False
     return True
 
@@ -1066,7 +1075,8 @@ _STAGES = {"docs": None, "partials": "docs", "terms": "partials",
 _PARTIALS_CONSUMERS = frozenset(["terms", "docstats", "dict", "postings"])
 # the format checks (``_stage_current``) a stage's output must also
 # pass to be resumed; the stages not listed resume on ``_SUCCESS`` alone
-_STAGE_FORMAT = {"docs": {}, "partials": {"required_cols": ("sum_wdf",)},
+_STAGE_FORMAT = {"docs": {}, "partials": {"required_cols": ("sum_wdf",),
+                                           "build_rows": True},
                  "terms": {"binary_positions": True}, "globalstats": {}}
 
 # session confs ``_read_staged`` sets while the Spark executor runs;
@@ -1354,7 +1364,9 @@ class IndexBuilder:
         # partials/ is only its consumers' resume checkpoint: they have
         # all committed now (this run wrote them, or ``_stale_stages``
         # found them current), so nothing reads it again.  An upsert
-        # never resumes, so its gen-g partials go the same way.
+        # never resumes, so a Spark upsert's gen-g partials go the same
+        # way (one cut short before this line leaves rows the build's
+        # resume check refuses).
         shutil.rmtree(self.path("partials"), ignore_errors=True)
         res.update(executor=executor, size_estimate_bytes=est, stages=stages)
         return res
@@ -1401,8 +1413,11 @@ class IndexBuilder:
                      b.to_pandas() for b in docs.select(_TOKENIZE_COLS)
                      .to_batches(max_chunksize=_DRIVER_BATCH_ROWS))],
                 schema=schema)
-            _write_stage(p_part, {"": _with_gen(part, gen)},
-                         ["term", "block", "gen"], gen)
+            # the build's resume checkpoint: an upsert never resumes,
+            # so its runs go to the consumers from memory only
+            if not gen:
+                _write_stage(p_part, {"": _with_gen(part, gen)},
+                             ["term", "block", "gen"], gen)
             record("partials", time.time() - t0)
         else:
             part = _read_table(p_part, gens=[gen]).drop_columns(["gen"])

@@ -12,24 +12,18 @@ The reference upserts by identity term ``Q + fullpath``
    Its docs stage numbers them in that order from the manifest's
    ``next_doc_id``, so their posting blocks land in brand-new doc-range
    blocks — appends only; docs, terms, docstats, dict and postings
-   files are appended to the index's directories (the gen-``g``
-   ``partials/`` checkpoint is removed once they are written);
+   files are appended to the index's directories (an upsert never
+   resumes, so no ``partials/`` checkpoint outlives it);
 3. committed docs whose ``fullpath`` matches one of the gen-``g``
    ``docs/`` rows the docs stage has just written are *tombstoned*
-   (their doc_ids recorded; old posting blocks are never rewritten);
+   (their doc_ids recorded; old posting blocks are never rewritten):
+   a pyarrow ``is_in`` probe of the committed ``docs/``;
 4. *negative* dictionary deltas for the tombstoned docs (computed
-   exactly from their committed ``terms/`` rows) go to ``dict_delta/``
-   so df/cf stay exact without rewriting ``dict/``.
-
-   Steps 3-4 run on the driver when the committed ``docs/`` and
-   ``terms/`` hold fewer bytes on disk than
-   ``IndexBuilder.DRIVER_BUILD_BYTES``: a pyarrow ``is_in`` probe of
-   ``docs/``, and a filter of ``terms/`` by the tombstoned ids grouped
-   by (term, bucket), written through ``build._write_stage``.  A larger
-   index keeps them in Spark: a semi-join of ``docs/`` with the gen-``g``
-   paths, and a semi-join, ``groupBy`` and append of ``terms/``.  The
-   manifest's ``upserts`` record names the side (``bookkeeping``) next
-   to the stages' executor;
+   exactly from their committed ``terms/`` rows, a pyarrow filter by
+   the tombstoned ids grouped by (term, bucket)) go to ``dict_delta/``
+   so df/cf stay exact without rewriting ``dict/``.  Both scans read
+   one or two columns and keep only rows about as many as the batch's
+   (index writers take local paths only, so pyarrow reads any index);
 5. ``globalstats`` is recomputed exactly from docstats minus tombstones;
 6. the manifest records the new generation (the "commit").
 
@@ -69,9 +63,9 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from .build import (
-    FORMAT_VERSION, IndexBuilder, _DIR_SCHEMAS, _STAGES, _dir_bytes,
-    _doc_shape, _gstats_of, _read_table, _with_gen, _write_globalstats,
-    _write_stage, build_index, local_dir, read_index_dir,
+    FORMAT_VERSION, IndexBuilder, _DIR_SCHEMAS, _STAGES, _doc_shape,
+    _gstats_of, _read_table, _with_gen, _write_globalstats, _write_stage,
+    build_index, local_dir,
 )
 
 # An upsert runs every build stage except globalstats, which it
@@ -88,51 +82,33 @@ def _write_manifest(index_dir: str, m: dict) -> None:
     os.replace(tmp, path)  # atomic on POSIX — this IS the commit
 
 
-def _replaced_ids(spark: SparkSession, index_dir: str, committed: list,
-                  gen: int, side: str) -> pa.Array:
+def _replaced_ids(index_dir: str, committed: list, gen: int) -> pa.Array:
     """The committed doc ids whose ``fullpath`` one of the gen-``gen``
-    ``docs/`` rows holds (the Q+fullpath identity, S3): about as many as
-    the batch has docs, so the Spark side collects them."""
+    ``docs/`` rows holds (the Q+fullpath identity, S3)."""
     docs = f"{index_dir}/docs"
-    if side == "driver":
-        paths = pc.drop_null(_read_table(docs, ["fullpath"], [gen])
-                             .column("fullpath").combine_chunks())
-        return _read_table(docs, ["doc_id"], committed,
-                           pc.field("fullpath").isin(paths)) \
-            .column("doc_id").combine_chunks()
-    rows = (read_index_dir(spark, index_dir, "docs", committed)
-            .join(read_index_dir(spark, index_dir, "docs", [gen])
-                  .select("fullpath"), "fullpath", "left_semi")
-            .select("doc_id").collect())
-    return pa.array([r["doc_id"] for r in rows], pa.int64())
+    paths = pc.drop_null(_read_table(docs, ["fullpath"], [gen])
+                         .column("fullpath").combine_chunks())
+    return _read_table(docs, ["doc_id"], committed,
+                       pc.field("fullpath").isin(paths)) \
+        .column("doc_id").combine_chunks()
 
 
-def _write_deltas(spark: SparkSession, index_dir: str, committed: list,
-                  gen: int, tombs: pa.Array, side: str) -> None:
+def _write_deltas(index_dir: str, committed: list, gen: int,
+                  tombs: pa.Array) -> None:
     """Generation ``gen``'s exact negative dictionary deltas for the
     docs ``tombs`` names, from their committed ``terms/`` rows (so an
     orphan row sharing one of their ids is left out): per (term,
     bucket), ``ddf`` = -(their rows) and ``dcf`` = -(Σ their wdf)."""
-    path = f"{index_dir}/dict_delta"
-    if side == "driver":
-        rows = _read_table(f"{index_dir}/terms", ["term", "bucket", "wdf"],
-                           committed, pc.field("doc_id").isin(tombs))
-        g = rows.group_by(["term", "bucket"]).aggregate(
-            [("wdf", "count"), ("wdf", "sum")])
-        delta = pa.table([g["term"], g["bucket"], pc.negate(g["wdf_count"]),
-                          pc.negate(g["wdf_sum"])],
-                         schema=to_arrow_schema(_DIR_SCHEMAS["dict_delta"]))
-        _write_stage(path, {"": _with_gen(delta.sort_by("term"), gen)},
-                     ["term", "gen"], gen)
-        return
-    ids = spark.createDataFrame(pa.table({"doc_id": tombs}))
-    (read_index_dir(spark, index_dir, "terms", committed)
-     .join(F.broadcast(ids), "doc_id", "left_semi")
-     .groupBy("term", "bucket")
-     .agg((-F.count("doc_id")).cast("long").alias("ddf"),
-          (-F.sum("wdf")).cast("long").alias("dcf"))
-     .withColumn("gen", F.lit(gen))
-     .write.mode("append").parquet(path))
+    rows = _read_table(f"{index_dir}/terms", ["term", "bucket", "wdf"],
+                       committed, pc.field("doc_id").isin(tombs))
+    g = rows.group_by(["term", "bucket"]).aggregate(
+        [("wdf", "count"), ("wdf", "sum")])
+    delta = pa.table([g["term"], g["bucket"], pc.negate(g["wdf_count"]),
+                      pc.negate(g["wdf_sum"])],
+                     schema=to_arrow_schema(_DIR_SCHEMAS["dict_delta"]))
+    _write_stage(f"{index_dir}/dict_delta",
+                 {"": _with_gen(delta.sort_by("term"), gen)},
+                 ["term", "gen"], gen)
 
 
 def upsert(spark: SparkSession, index_dir: str,
@@ -163,12 +139,6 @@ def upsert(spark: SparkSession, index_dir: str,
     # upserts' other artifacts with it)
     on_disk = pc.max(_read_table(docs_path, ["gen"]).column("gen")).as_py()
     gen = max(committed + [on_disk or 0]) + 1
-    # steps 3-4 read the committed docs/ and terms/: under the build's
-    # own limit (their bytes on disk standing in for a size estimate)
-    # they run in-process on pyarrow, above it as Spark jobs
-    side = "driver" if (_dir_bytes(docs_path)
-                        + _dir_bytes(f"{index_dir}/terms")
-                        < IndexBuilder.DRIVER_BUILD_BYTES) else "spark"
 
     # 1-2. the build's stages as generation ``gen``, all appends that
     # stay invisible until the commit.  The docs stage numbers the batch
@@ -195,12 +165,12 @@ def upsert(spark: SparkSession, index_dir: str,
     if os.path.exists(tomb_path) and pads.dataset(tomb_path).files:
         old_tombs = _read_table(tomb_path, ["doc_id"], committed) \
             .column("doc_id").combine_chunks()
-    replaced = _replaced_ids(spark, index_dir, committed, gen, side)
+    replaced = _replaced_ids(index_dir, committed, gen)
     tombs = pc.unique(replaced.filter(pc.invert(pc.is_in(replaced,
                                                          old_tombs))))
     if len(tombs):
         # 4. exact negative dict deltas for the tombstoned docs
-        _write_deltas(spark, index_dir, committed, gen, tombs, side)
+        _write_deltas(index_dir, committed, gen, tombs)
         _write_stage(tomb_path, {"": _with_gen(pa.table({"doc_id": tombs}),
                                                gen)}, ["doc_id", "gen"], gen)
 
@@ -221,7 +191,7 @@ def upsert(spark: SparkSession, index_dir: str,
                         for k, v in gs.items()}
     m.setdefault("upserts", []).append({
         "gen": gen, "n_new": n_new, "ts": time.time(),
-        "executor": res["executor"], "bookkeeping": side,
+        "executor": res["executor"],
     })
     _write_manifest(index_dir, m)
 

@@ -45,8 +45,8 @@ LIMITS = {"driver": IndexBuilder.DRIVER_BUILD_BYTES, "spark": 0}
 # Spark session, all of them the stages' one ``toArrow`` of the
 # fullpath-ordered batch (range sampling, the shuffle and the collect);
 # the docs stage numbers the rows in-process, and the tombstones and
-# negative dict deltas of a small index are pyarrow reads and writes.
-# The staging path it replaced ran 40.
+# negative dict deltas are pyarrow reads and writes.  The staging path
+# it replaced ran 40.
 JOBS_PER_DRIVER_UPSERT = 4
 
 
@@ -149,12 +149,9 @@ def test_executors_equal_after_upsert_and_compaction(spark, pair,
                                                       tmp_path, monkeypatch):
     """An upsert runs the build's stages on the executor its batch's
     size picks: the driver for a small Arrow-backed batch, Spark when
-    the limit is 0.  Its tombstones and negative dict deltas take the
-    side the committed index's size picks by the same limit: pyarrow
-    for the small fixture, Spark joins when the limit is 0.  Upserts by
-    either executor into an index built by either write equal indexes
-    with equal answers, and so do the compactions that follow; none of
-    them leaves ``partials/`` behind."""
+    the limit is 0.  Upserts by either executor into an index built by
+    either write equal indexes with equal answers, and so do the
+    compactions that follow; none of them leaves ``partials/`` behind."""
     drv0, _, spk0, _ = pair
     outs = {}
     for built, src in (("driver", drv0), ("spark", spk0)):
@@ -164,7 +161,6 @@ def test_executors_equal_after_upsert_and_compaction(spark, pair,
             monkeypatch.setattr(IndexBuilder, "DRIVER_BUILD_BYTES", limit)
             m = upsert(spark, out, local_docs_df(spark, UPSERT))
             assert m["upserts"][-1]["executor"] == executor
-            assert m["upserts"][-1]["bookkeeping"] == executor
             assert not os.path.exists(os.path.join(out, "partials"))
             outs[built, executor] = out
     snaps = [snapshot(spark, out) for out in outs.values()]
@@ -188,10 +184,10 @@ def test_executors_equal_after_upsert_and_compaction(spark, pair,
 
 
 def test_driver_upsert_runs_few_spark_jobs(spark, pair, tmp_path):
-    """A small driver upsert into a small index runs no Spark job but
-    the ``toArrow`` that collects its fullpath-ordered batch: its
-    stages, its tombstones and its negative dict deltas all read and
-    write with pyarrow, so no Spark join or write runs."""
+    """A small driver upsert runs no Spark job but the ``toArrow`` that
+    collects its fullpath-ordered batch: its stages, its tombstones and
+    its negative dict deltas all read and write with pyarrow, so no
+    Spark join or write runs."""
     out = str(tmp_path / "idx")
     shutil.copytree(pair[0], out)
     batch = local_docs_df(spark, UPSERT)
@@ -199,19 +195,18 @@ def test_driver_upsert_runs_few_spark_jobs(spark, pair, tmp_path):
         batch.drop("doc_id")).orderBy("fullpath").toArrow())
     m, n = count_spark_jobs(spark, lambda: upsert(spark, out, batch))
     assert m["upserts"][-1]["executor"] == "driver"
-    assert m["upserts"][-1]["bookkeeping"] == "driver"
     assert os.listdir(os.path.join(out, "tombstones"))
     assert os.listdir(os.path.join(out, "dict_delta"))
     assert n == n_collect, (n, n_collect)
     assert n <= JOBS_PER_DRIVER_UPSERT, n
 
 
-def test_fold_dict_deltas_written_by_either_side(spark, pair, tmp_path,
-                                                 monkeypatch):
-    """Negative dict deltas written by either bookkeeping side carry
+def test_fold_dict_deltas_after_either_executor(spark, pair, tmp_path,
+                                                monkeypatch):
+    """The negative dict deltas of an upsert on either executor carry
     ``dict_delta/``'s exact parquet types, and folding them into the
     dictionary leaves the answers of the unfolded index, and equal
-    indexes, whichever side wrote them."""
+    indexes, whichever executor ran the upsert's stages."""
     import pyarrow.parquet as pq
     from pyspark.sql.types import IntegerType, StructField, StructType
     from pyspark.sql.pandas.types import to_arrow_schema
@@ -219,12 +214,12 @@ def test_fold_dict_deltas_written_by_either_side(spark, pair, tmp_path,
         B._DIR_SCHEMAS["dict_delta"].fields
         + [StructField("gen", IntegerType())]))]
     snaps = {}
-    for side, limit in LIMITS.items():
-        out = str(tmp_path / side)
+    for executor, limit in LIMITS.items():
+        out = str(tmp_path / executor)
         shutil.copytree(pair[0], out)
         monkeypatch.setattr(IndexBuilder, "DRIVER_BUILD_BYTES", limit)
         m = upsert(spark, out, local_docs_df(spark, UPSERT))
-        assert m["upserts"][-1]["bookkeeping"] == side
+        assert m["upserts"][-1]["executor"] == executor
         files = glob.glob(os.path.join(out, "dict_delta", "*.parquet"))
         assert files
         for f in files:
@@ -232,8 +227,8 @@ def test_fold_dict_deltas_written_by_either_side(spark, pair, tmp_path,
         unfolded = answers(spark, out)
         fold_dict_deltas(spark, out)
         assert not os.path.exists(os.path.join(out, "dict_delta"))
-        assert answers(spark, out) == unfolded, side
-        snaps[side] = snapshot(spark, out)
+        assert answers(spark, out) == unfolded, executor
+        snaps[executor] = snapshot(spark, out)
     assert snaps["driver"] == snaps["spark"]
 
 
@@ -274,8 +269,7 @@ def test_driver_upsert_cut_mid_write_stays_invisible(spark, pair, tmp_path,
         pq.read_metadata(f)
     assert answers(spark, out) == want_before
     m = upsert(spark, out, local_docs_df(spark, UPSERT))
-    assert (m["upserts"][-1]["executor"],
-            m["upserts"][-1]["bookkeeping"]) == ("driver", "driver")
+    assert m["upserts"][-1]["executor"] == "driver"
     assert answers(spark, out) == want_after
 
 
@@ -425,6 +419,44 @@ def test_driver_build_resumes_after_partials(spark, pair, tmp_path,
     assert again["globalstats"] == m["globalstats"]
     assert [again["metrics"][k] for k in keys] == \
         pytest.approx([m["metrics"][k] for k in keys])
+
+
+@pytest.mark.parametrize("executor", sorted(LIMITS))
+def test_build_resume_after_cut_upsert_ignores_its_partials(
+        spark, pair, tmp_path, monkeypatch, executor):
+    """An upsert stopped after its partials stage, before its consumers,
+    leaves no ``partials/`` on the driver, and on Spark one that holds
+    its own generation's rows only.  A build resume that then finds
+    ``postings/`` wiped rebuilds the checkpoint from ``docs/`` instead
+    of resuming from those rows, so the postings it commits and the
+    answers equal the original index's."""
+    drv0 = pair[0]
+    out = str(tmp_path / "idx")
+    shutil.copytree(drv0, out)
+    want = answers(spark, drv0)
+
+    def stop(*a, **k):
+        raise RuntimeError("stopped after partials")
+
+    with monkeypatch.context() as mp:
+        mp.setattr(IndexBuilder, "DRIVER_BUILD_BYTES", LIMITS[executor])
+        mp.setattr(B, "_termlist_kernel", stop)
+        with pytest.raises(RuntimeError, match="stopped after partials"):
+            upsert(spark, out, local_docs_df(spark, UPSERT))
+    part = os.path.join(out, "partials")
+    if executor == "spark":
+        assert os.path.exists(os.path.join(part, "_SUCCESS"))
+        gens = B._read_table(part, ["gen"]).column("gen").to_pylist()
+        assert gens and set(gens) == {1}
+    else:
+        assert not os.path.exists(part)
+    shutil.rmtree(os.path.join(out, "postings"))
+    m = build_index(spark, local_docs_df(spark, ROWS), out, **KW)
+    assert [s["stage"] for s in m["stages"]] == ["partials", "postings"]
+    assert not os.path.exists(part)
+    assert snapshot(spark, out)["postings"] == \
+        snapshot(spark, drv0)["postings"]
+    assert answers(spark, out) == want
 
 
 def _code_table(spark, tmp_path, n):
