@@ -50,12 +50,16 @@ Index layout under ``<out_dir>/``:
                    partials; consumed by eset/upsert/the xq oracle
 * ``docstats/``    doc_id -> doclen (sum of wdf incl. Z-stem rows — A3)
 * ``globalstats/`` N, total/avg doclen, bounds (A2)
-* ``dict/``        per-term df/cf/wdf_max, hash-bucketed (A2)
+* ``dict/``        per-term df/cf/wdf_max, split by the term's first
+                   char (``tpfx=``) (A2)
 * ``postings/``    per (term, doc-range block): delta-gap+varint docid
                    run, varint wdfs, varint doclens (denormalized to keep
                    scoring join-free), positions (block-max score bounds
                    are derived at query time from block_max_wdf +
-                   block_min_doclen under the current 1/avgdl)
+                   block_min_doclen under the current 1/avgdl); split
+                   into ``bucket=`` directories by the crc32 term bucket,
+                   whose count (``n_buckets``, a power of two up to 64)
+                   a build sizes to its input (``IndexBuilder.n_buckets_for``)
 * ``manifest.json`` build params, the executor, stage lineage, metrics
                    (docs/sec, postings/sec, skew factor)
 
@@ -110,7 +114,6 @@ from pyspark.sql.types import (
 from .codec import EMPTY_POSITIONS
 
 DEFAULT_BLOCK_SPAN = 1 << 16
-DEFAULT_N_BUCKETS = 64
 
 # Index format history:
 #   v2: staging positions ArrayType -> BinaryType (pre-encoded varints)
@@ -191,7 +194,7 @@ POSTINGS_SCHEMA = StructType([
 ])
 
 
-def term_bucket(term: str, n_buckets: int = DEFAULT_N_BUCKETS) -> int:
+def term_bucket(term: str, n_buckets: int) -> int:
     """Stable cross-process term -> bucket hash (partition pruning key)."""
     return zlib.crc32(term.encode("utf-8")) % n_buckets
 
@@ -788,6 +791,27 @@ def _stage_done(path: str) -> bool:
     return os.path.exists(os.path.join(path, "_SUCCESS"))
 
 
+def _stamp(path: str, layout: dict) -> None:
+    """Record beside a finished stage's ``_SUCCESS`` the layout it was
+    written with (``IndexBuilder._layout``), in a ``_LAYOUT`` file that
+    readers skip, as they skip ``_SUCCESS``.  A build's overwrite
+    removes it with the directory; an upsert's append, which rewrites
+    ``_SUCCESS``, leaves it.  A write cut short leaves no JSON object
+    ``_stamp_of`` can parse, so the stage reruns."""
+    with open(os.path.join(path, "_LAYOUT"), "w") as f:
+        json.dump(layout, f)
+
+
+def _stamp_of(path: str) -> Optional[dict]:
+    """The layout ``_stamp`` recorded for the stage at ``path``; None
+    when there is none."""
+    try:
+        with open(os.path.join(path, "_LAYOUT")) as f:
+            return json.load(f)
+    except (OSError, ValueError):
+        return None
+
+
 def _stage_current(path: str, binary_positions: bool = False,
                    required_cols: tuple = (), build_rows: bool = False
                    ) -> bool:
@@ -1073,6 +1097,10 @@ _STAGES = {"docs": None, "partials": "docs", "terms": "partials",
 # the stages that read partials/: a resume that reruns none of them
 # does not read it
 _PARTIALS_CONSUMERS = frozenset(["terms", "docstats", "dict", "postings"])
+# the stages the tokenize+encode kernel's parameters shape (the term
+# bucket, the doc-range block, the tokenizer mode): each records them
+# when it finishes, and resumes only under the same ones
+_LAYOUT_STAGES = _PARTIALS_CONSUMERS | {"partials"}
 # the format checks (``_stage_current``) a stage's output must also
 # pass to be resumed; the stages not listed resume on ``_SUCCESS`` alone
 _STAGE_FORMAT = {"docs": {}, "partials": {"required_cols": ("sum_wdf",),
@@ -1108,9 +1136,26 @@ class IndexBuilder:
     # crossover.  The driver's peak memory there is about 0.55 GB.
     DRIVER_BUILD_BYTES = 3 << 20
 
+    # A build given no ``n_buckets`` splits its term-keyed stages into
+    # one bucket per this many bytes of input (the same Catalyst
+    # estimate), rounded down to a power of two in [1, MAX_BUCKETS];
+    # an input Catalyst cannot size gets MAX_BUCKETS.  Each bucket
+    # directory holds a file per generation with its own footer, and
+    # zstd compresses a larger file better; but the driver's postings
+    # probe (a pyarrow ``isin`` filter, which prunes bucket directories
+    # but no row groups) decodes the whole file of each bucket a query
+    # touches.  Measured on the benchmark's code corpus (local[1],
+    # whole-machine CPU per unfiltered query, against 64 buckets): at
+    # 1k docs (estimate 0.93 MiB) one bucket cut postings from 1.14 to
+    # 0.70 MB for +2% query CPU; at 8k docs (7.4 MiB), 4 buckets cut
+    # them from 6.1 to 5.1 MB and one bucket to 4.3 MB, each for about
+    # +22%, and 8 buckets cost +15%.
+    BUCKET_BYTES = 1 << 20
+    MAX_BUCKETS = 64
+
     def __init__(self, spark: SparkSession, out_dir: str,
                  block_span: int = DEFAULT_BLOCK_SPAN,
-                 n_buckets: int = DEFAULT_N_BUCKETS,
+                 n_buckets: Optional[int] = None,
                  mode: str = "xapian",
                  spelling: bool = False,
                  cjk_ngram: bool = False):
@@ -1124,7 +1169,10 @@ class IndexBuilder:
         ``cjk_ngram``: index with Xapian's FLAG_CJK_NGRAM semantics
         (tokenize.parse_terms); recorded in the manifest so queries and
         upserts pick the same tokenizer mode.  Off by default — the
-        reference never enables the flag."""
+        reference never enables the flag.
+
+        ``n_buckets``: the term-bucket count; None lets ``build`` size
+        it to the input (``n_buckets_for``)."""
         self.spark = spark
         self.out = local_dir(out_dir)
         self.block_span = block_span
@@ -1136,6 +1184,20 @@ class IndexBuilder:
 
     def path(self, name: str) -> str:
         return f"{self.out}/{name}"
+
+    @classmethod
+    def n_buckets_for(cls, size: int) -> int:
+        """The bucket count a build of an input of ``size`` estimated
+        bytes takes: the largest power of two at most ``size /
+        BUCKET_BYTES``, within [1, MAX_BUCKETS]."""
+        return min(cls.MAX_BUCKETS,
+                   1 << max(0, (size // cls.BUCKET_BYTES).bit_length() - 1))
+
+    def _layout(self) -> dict:
+        """The tokenize+encode kernel's parameters, which every stage in
+        ``_LAYOUT_STAGES`` records (``_stamp``)."""
+        return {"n_buckets": self.n_buckets, "block_span": self.block_span,
+                "mode": self.mode, "cjk_ngram": self.cjk_ngram}
 
     @staticmethod
     def _size_estimate(docs_df: DataFrame) -> int:
@@ -1193,17 +1255,23 @@ class IndexBuilder:
         """The stages this build (re)writes, whichever executor runs
         them.  A stage reruns when its output is missing, unfinished (no
         ``_SUCCESS``) or written by an older format (ADVICE r01), and so
-        does every stage derived from it.  ``partials/`` is only its
-        consumers' checkpoint, removed once they commit: they derive
-        from the docs it encodes, it reruns only when one of them does,
-        and rewriting it alone reruns none that is current."""
+        does every stage derived from it.  A stage the kernel's
+        parameters shape also reruns when it recorded other ones (a
+        build resumed with another ``n_buckets``, say, would otherwise
+        commit postings bucketed by the old count under the new one).
+        ``partials/`` is only its consumers' checkpoint, removed once
+        they commit: they derive from the docs it encodes, it reruns
+        only when one of them does, and rewriting it alone reruns none
+        that is current."""
         run: set = set()
+        layout = self._layout()
         for name, src in _STAGES.items():
             p, fmt = self.path(name), _STAGE_FORMAT.get(name)
             if src == "partials":
                 src = "docs"
             if force or src in run or not _stage_done(p) or (
-                    fmt is not None and not _stage_current(p, **fmt)):
+                    fmt is not None and not _stage_current(p, **fmt)) or (
+                    name in _LAYOUT_STAGES and _stamp_of(p) != layout):
                 run.add(name)
         if not run & _PARTIALS_CONSUMERS:
             run.discard("partials")
@@ -1236,6 +1304,8 @@ class IndexBuilder:
                 int(old.get("generation", 0)) != 0 or
                 [int(g) for g in old.get("committed_gens", [0])] != [0]):
             force = True
+        if self.n_buckets is None:
+            self.n_buckets = self.n_buckets_for(self._size_estimate(docs_df))
         run = self._stale_stages(force)
         if "docs" in run:
             # the upserts' own artifacts — tombstones, dict deltas and a
@@ -1335,6 +1405,10 @@ class IndexBuilder:
         lock = threading.Lock()
 
         def record(name: str, sec: float) -> None:
+            # a build's finished stage records its layout for a resume
+            # to check; an upsert never resumes
+            if not gen and name in _LAYOUT_STAGES:
+                _stamp(self.path(name), self._layout())
             with lock:
                 stages.append({"stage": name, "sec": sec,
                                "executor": executor,

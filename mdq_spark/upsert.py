@@ -257,7 +257,9 @@ def compact(spark: SparkSession, index_dir: str, out_dir: str) -> dict:
     """Fold tombstones away: rebuild a fresh index from the live doc
     set (the merge step; run when the tombstone ratio grows).  Reads
     only committed, non-tombstoned docs — orphan rows from crashed
-    upserts are dropped here."""
+    upserts are dropped here.  The rebuild keeps the index's tokenizer
+    settings and ``block_span`` but sizes ``n_buckets`` to the live
+    docs, as a fresh build does."""
     from .search import Searcher
     s = Searcher(spark, local_dir(index_dir))
     m, docs = s.manifest, s.docs
@@ -265,8 +267,7 @@ def compact(spark: SparkSession, index_dir: str, out_dir: str) -> dict:
         docs = docs.join(s.tombstones, "doc_id", "left_anti")
     return build_index(spark, docs, out_dir, mode=m.get("mode", "xapian"),
                        cjk_ngram=bool(m.get("cjk_ngram", False)),
-                       block_span=int(m["block_span"]),
-                       n_buckets=int(m["n_buckets"]), force=True)
+                       block_span=int(m["block_span"]), force=True)
 
 
 def recover_swap(index_dir: str) -> None:

@@ -29,7 +29,8 @@ def main() -> None:
     ap.add_argument("--mode", choices=["xapian", "simple"],
                     default="xapian")
     ap.add_argument("--block-span", type=int, default=1 << 16)
-    ap.add_argument("--n-buckets", type=int, default=64)
+    ap.add_argument("--n-buckets", type=int, default=None,
+                    help="term-bucket count (default: sized to the input)")
     args = ap.parse_args()
 
     spark = SparkSession.builder.appName("mdq-index-build").getOrCreate()

@@ -365,6 +365,9 @@ def test_reserved_and_non_ascii_first_chars_round_trip(spark, pair,
         os.makedirs(os.path.join(out, "partials"))
         pq.write_table(crafted, os.path.join(out, "partials", "p.parquet"))
         open(os.path.join(out, "partials", "_SUCCESS"), "w").close()
+        # the layout the stopped build recorded, which the resume checks
+        shutil.copy(os.path.join(stopped, "partials", "_LAYOUT"),
+                    os.path.join(out, "partials", "_LAYOUT"))
         monkeypatch.setattr(IndexBuilder, "DRIVER_BUILD_BYTES", limit)
         m = build_index(spark, local_docs_df(spark, ROWS), out, **KW)
         assert m["executor"] == executor
@@ -457,6 +460,63 @@ def test_build_resume_after_cut_upsert_ignores_its_partials(
     assert snapshot(spark, out)["postings"] == \
         snapshot(spark, drv0)["postings"]
     assert answers(spark, out) == want
+
+
+@pytest.fixture(scope="module")
+def sized(spark, tmp_path_factory):
+    """The fixture corpus built once by each executor with no
+    ``n_buckets`` given, so the build sizes the count to its input."""
+    base = tmp_path_factory.mktemp("sized")
+    outs = {}
+    for executor, limit in LIMITS.items():
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(IndexBuilder, "DRIVER_BUILD_BYTES", limit)
+            outs[executor] = str(base / executor)
+            build_index(spark, local_docs_df(spark, ROWS), outs[executor],
+                        block_span=4)
+    return outs
+
+
+@pytest.mark.parametrize("executor", sorted(LIMITS))
+def test_sized_bucket_count_answers_like_64_buckets(spark, sized, tmp_path,
+                                                    monkeypatch, executor):
+    """A build given no ``n_buckets`` takes the count its input's size
+    estimate picks (one bucket for the small fixture: one postings
+    directory) and answers every query as a 64-bucket build does."""
+    out = sized[executor]
+    with open(os.path.join(out, "manifest.json")) as f:
+        m = json.load(f)
+    assert m["executor"] == executor
+    assert m["n_buckets"] == 1 == IndexBuilder.n_buckets_for(
+        m["size_estimate_bytes"])
+    assert [d for d in os.listdir(os.path.join(out, "postings"))
+            if d.startswith("bucket=")] == ["bucket=0"]
+    wide = str(tmp_path / "wide")
+    monkeypatch.setattr(IndexBuilder, "DRIVER_BUILD_BYTES", LIMITS[executor])
+    build_index(spark, local_docs_df(spark, ROWS), wide, block_span=4,
+                n_buckets=64)
+    assert answers(spark, out) == answers(spark, wide)
+
+
+@pytest.mark.parametrize("executor", sorted(LIMITS))
+def test_resume_with_other_bucket_count_reruns_bucketed_stages(
+        spark, pair, sized, tmp_path, monkeypatch, executor):
+    """A build cut before its commit (its manifest gone) and resumed
+    with another bucket count, here the one the input's size picks,
+    reruns every stage the count shapes instead of committing the new
+    count over postings bucketed by the old one: the index equals a
+    clean build at the new count and answers as the first build."""
+    monkeypatch.setattr(IndexBuilder, "DRIVER_BUILD_BYTES", LIMITS[executor])
+    out = str(tmp_path / "idx")
+    docs = local_docs_df(spark, ROWS)
+    build_index(spark, docs, out, **KW)
+    os.remove(os.path.join(out, "manifest.json"))
+    m = build_index(spark, docs, out, block_span=4)
+    assert m["n_buckets"] == 1
+    assert sorted(s["stage"] for s in m["stages"]) == sorted(
+        ["partials", "terms", "docstats", "globalstats", "dict", "postings"])
+    assert snapshot(spark, out) == snapshot(spark, sized[executor])
+    assert answers(spark, out) == answers(spark, pair[0])
 
 
 def _code_table(spark, tmp_path, n):
