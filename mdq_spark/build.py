@@ -46,8 +46,10 @@ Index layout under ``<out_dir>/``:
                    input split) encoded partial posting runs = the
                    resume checkpoint, removed once terms, docstats,
                    dict and postings have committed
-* ``terms/``       forward termlist, row per (doc, term) — derived from
-                   partials; consumed by eset/upsert/the xq oracle
+* ``terms/``       forward termlist, (term, bucket, doc_id, wdf) per
+                   (doc, term) — derived from partials; read by eset,
+                   ``get_matching_terms`` and upsert's dict deltas
+                   (doclens live in docstats/, positions in postings/)
 * ``docstats/``    doc_id -> doclen (sum of wdf incl. Z-stem rows — A3)
 * ``globalstats/`` N, total/avg doclen, bounds (A2)
 * ``dict/``        per-term df/cf/wdf_max, split by the term's first
@@ -111,7 +113,7 @@ from pyspark.sql.types import (
     StructField, StructType,
 )
 
-from .codec import EMPTY_POSITIONS
+from .codec import EMPTY_POSITIONS, varint_decode
 
 DEFAULT_BLOCK_SPAN = 1 << 16
 
@@ -148,6 +150,8 @@ DEFAULT_BLOCK_SPAN = 1 << 16
 #   v6: ``block_max_part`` is gone from postings and partials, and
 #       upserts write through the build's own stages (gen-tagged
 #       partials/ included).  ``compact()`` migrates a v5 index.
+#       Later v6 ``terms/`` files drop block/doclen/positions; every
+#       reader projects its columns, so older ones stay readable.
 FORMAT_VERSION = 6
 
 DOCS_SCHEMA = StructType([
@@ -165,17 +169,13 @@ DOCS_SCHEMA = StructType([
     StructField("sha256", StringType(), True),
 ])
 
-# the forward termlist, a row per (doc, term); positions are the
-# pre-encoded per-(doc, term) varint blob (count + delta gaps), a byte
-# slice of the run's positions buffer
+# the forward termlist, a row per (doc, term).  Each fact is stored
+# once: a doc's length is in docstats/, its positions in postings/.
 TERMS_SCHEMA = StructType([
     StructField("term", StringType(), False),
     StructField("bucket", IntegerType(), False),
-    StructField("block", LongType(), False),
     StructField("doc_id", LongType(), False),
     StructField("wdf", IntegerType(), False),
-    StructField("doclen", IntegerType(), False),
-    StructField("positions", BinaryType(), True),
 ])
 
 POSTINGS_SCHEMA = StructType([
@@ -424,159 +424,55 @@ def _tokenize_encode_batches(n_buckets: int, block_span: int,
     return fn
 
 
+def _decode_runs(batch, col: str):
+    """The members of a batch of partial posting runs, decoded whole:
+    ``(n per run, doc ids, values of the varint column col)``.  A
+    binary column's non-null values are contiguous in its values
+    buffer, so each column is one ``varint_decode`` over a view of that
+    buffer, and the doc ids are one cumsum of the gaps, restarted at
+    each run's first (absolute) gap."""
+    def values(arr):
+        offs = np.frombuffer(arr.buffers()[1], dtype=np.int32)[
+            arr.offset: arr.offset + len(arr) + 1]
+        return np.frombuffer(arr.buffers()[2], dtype=np.uint8)[
+            offs[0]: offs[-1]]
+
+    ns = batch.column("n").to_numpy().astype(np.int64)
+    total = int(ns.sum())
+    starts = np.zeros(len(ns), dtype=np.int64)
+    np.cumsum(ns[:-1], out=starts[1:])
+    gaps = varint_decode(values(batch.column("doc_gaps")),
+                         total).astype(np.int64)
+    vals = varint_decode(values(batch.column(col)), total).astype(np.int64)
+    adj = gaps.copy()
+    adj[1:] += 1
+    adj[starts] = gaps[starts]
+    cs = np.cumsum(adj)
+    return ns, cs - np.repeat(cs[starts] - gaps[starts], ns), vals
+
+
 def _termlist_kernel():
     """mapInArrow kernel deriving the forward termlist out of partial
-    posting rows with no per-posting Python.  Everything is whole-batch
-    numpy / Arrow compute:
-
-    * doc ids / wdfs / doclens: one ``varint_decode`` per column over
-      the binary column's VALUES BUFFER (non-null binary columns
-      concatenate contiguously — no per-row join);
-    * term/bucket/block: one ``take`` with repeated indices;
-    * positions: the output per-(doc, term) pieces exactly TILE the
-      input blob bytes (pieces partition each run's blob, runs are
-      contiguous in row order), so the output binary array REUSES the
-      input values buffer zero-copy — only int32 offsets and the
-      validity bitmap are computed, from the global varint-end index
-      (``flatnonzero(byte < 128)``) under the piece layout
-      ``varint(count=wdf) + wdf gap varints``.
-
-    A run is either positional in every member or in none: positional
-    keys are lowercased or carry a field prefix, so they never share a
-    key with a ``Z`` stem, and CJK bigrams never occur positionally.
-    The layout is therefore checked, not assumed: a NULL run spans no
-    bytes, each positional run holds Σ(wdf+1) varints and ends on its
-    last varint's terminator, and each piece's leading count equals its
-    row's wdf.  A batch failing any check is corrupt input and raises
-    ``ValueError`` naming it."""
-    import numpy as np
-    import pyarrow as pa
-
-    from .codec import varint_decode
-
-    out_pa_schema = pa.schema([
+    posting rows with no per-posting Python: ``_decode_runs`` decodes
+    the doc ids and wdfs, and one ``take`` with repeated indices
+    spreads each run's term and bucket over its members."""
+    out_schema = pa.schema([
         ("term", pa.string()), ("bucket", pa.int32()),
-        ("block", pa.int64()), ("doc_id", pa.int64()),
-        ("wdf", pa.int32()), ("doclen", pa.int32()),
-        ("positions", pa.binary()),
+        ("doc_id", pa.int64()), ("wdf", pa.int32()),
     ])
 
-    def _bin_parts(arr):
-        """(byte view, rebased int64 offsets) of a binary array."""
-        offs = np.frombuffer(arr.buffers()[1], dtype=np.int32)[
-            arr.offset: arr.offset + len(arr) + 1].astype(np.int64)
-        data = np.frombuffer(arr.buffers()[2], dtype=np.uint8)[
-            offs[0]: offs[-1]]
-        return data, offs - offs[0], int(offs[0])
-
     def fn(batches) -> "Iterator[pa.RecordBatch]":
-        for i, batch in enumerate(batches):
-            if batch.num_rows:
-                yield decode(i, batch)
-
-    def decode(i: int, batch):
-        def corrupt(what: str) -> ValueError:
-            terms = batch.column("term")
-            return ValueError(
-                f"termlist batch {i} ({batch.num_rows} runs, terms "
-                f"{terms[0].as_py()!r}..{terms[-1].as_py()!r}): {what}")
-
-        ns = batch.column("n").to_numpy().astype(np.int64)
-        nruns = len(ns)
-        total = int(ns.sum())
-        bounds = np.zeros(nruns + 1, dtype=np.int64)
-        np.cumsum(ns, out=bounds[1:])
-        gstarts = bounds[:-1]
-
-        g_dat, _, _ = _bin_parts(batch.column("doc_gaps"))
-        w_dat, _, _ = _bin_parts(batch.column("wdfs"))
-        d_dat, _, _ = _bin_parts(batch.column("doclens"))
-        gaps = varint_decode(g_dat, total).astype(np.int64)
-        wdfs = varint_decode(w_dat, total).astype(np.int64)
-        dls = varint_decode(d_dat, total).astype(np.int64)
-        adj = gaps.copy()
-        adj[1:] += 1
-        adj[gstarts] = gaps[gstarts]
-        cs = np.cumsum(adj)
-        ids = cs - np.repeat(cs[gstarts] - gaps[gstarts], ns)
-
-        pos = batch.column("positions")
-        b_pos, poffs, pbase = _bin_parts(pos)
-        run_has = ~pos.is_null().to_numpy(zero_copy_only=False)
-        if (poffs[1:] != poffs[:-1])[~run_has].any():
-            raise corrupt("a NULL positions run spans bytes")
-        ends = np.flatnonzero(b_pos < 128)
-        run_wdf_sum = np.add.reduceat(wdfs, gstarts) \
-            if total else np.zeros(nruns, dtype=np.int64)
-        exp_vc = np.where(run_has, run_wdf_sum + ns, 0)
-        vc_start = np.searchsorted(ends, poffs[:-1], side="left")
-        vc_end = np.searchsorted(ends, poffs[1:], side="left")
-        if (vc_end - vc_start != exp_vc).any():
-            raise corrupt("a positions run holds a varint count other "
-                          "than sum(wdf + 1) (a mixed run?)")
-        # tiling: every positional run ends on its last varint's
-        # terminator, so its pieces cover its span exactly
-        if (ends[vc_end[run_has] - 1] + 1 != poffs[1:][run_has]).any():
-            raise corrupt("a positions run does not end on a varint")
-        # per-piece varint spans under the count==wdf layout
-        row_has = np.repeat(run_has, ns)
-        pvc = np.where(row_has, wdfs + 1, 0)
-        cum = np.zeros(total + 1, dtype=np.int64)
-        np.cumsum(pvc, out=cum[1:])
-        vidx_start = np.repeat(vc_start - cum[gstarts], ns) + cum[:-1]
-        vidx_end = vidx_start + pvc
-        # piece byte spans of the positional rows only: a batch of
-        # non-positional runs has no varint ends to index
-        pb_start = np.zeros(total, dtype=np.int64)
-        pb_end = np.zeros(total, dtype=np.int64)
-        vs = vidx_start[row_has]
-        pb_start[row_has] = np.where(vs > 0, ends[np.maximum(vs - 1, 0)] + 1,
-                                     0)
-        pb_end[row_has] = ends[vidx_end[row_has] - 1] + 1
-        # leading count varint of every positional piece must be wdf
-        if row_has.any():
-            sb = pb_start[row_has]
-            first = b_pos[sb]
-            vals = (first & 0x7F).astype(np.uint64)
-            cont = first >= 128
-            j = 1
-            while cont.any() and j < 10:
-                nb = b_pos[sb[cont] + j]
-                vals[cont] |= (nb & np.uint64(0x7F)).astype(
-                    np.uint64) << np.uint64(7 * j)
-                cont2 = np.zeros_like(cont)
-                cont2[cont] = nb >= 128
-                cont = cont2
-                j += 1
-            if (vals != wdfs[row_has].astype(np.uint64)).any():
-                raise corrupt("a position piece's count is not its wdf")
-        # output offsets: pieces tile the span, so cumulative piece
-        # lengths ARE the piece byte starts; values buffer reused
-        lens = np.where(row_has, pb_end - pb_start, 0)
-        offsets = np.zeros(total + 1, dtype=np.int32)
-        np.cumsum(lens, out=offsets[1:])
-        validity = np.packbits(row_has, bitorder="little")
-        data_buf = pos.buffers()[2]
-        if data_buf is None:
-            data_buf = pa.py_buffer(b"")
-        else:
-            data_buf = data_buf.slice(pbase, int(b_pos.size))
-        pos_out = pa.Array.from_buffers(
-            pa.binary(), total,
-            [pa.py_buffer(validity.tobytes()),
-             pa.py_buffer(offsets.tobytes()), data_buf],
-            null_count=int(total - int(row_has.sum())))
-
-        idx = pa.array(np.repeat(np.arange(nruns), ns), pa.int64())
-        return pa.RecordBatch.from_arrays([
-            batch.column("term").take(idx),
-            batch.column("bucket").take(idx),
-            batch.column("block").take(idx),
-            pa.array(ids, pa.int64()),
-            pa.array(wdfs.astype(np.int32)),
-            pa.array(dls.astype(np.int32)),
-            pos_out,
-        ], schema=out_pa_schema)
+        for batch in batches:
+            if not batch.num_rows:
+                continue
+            ns, ids, wdfs = _decode_runs(batch, "wdfs")
+            idx = pa.array(np.repeat(np.arange(len(ns)), ns), pa.int64())
+            yield pa.RecordBatch.from_arrays([
+                batch.column("term").take(idx),
+                batch.column("bucket").take(idx),
+                pa.array(ids, pa.int64()),
+                pa.array(wdfs.astype(np.int32)),
+            ], schema=out_schema)
 
     return fn
 
@@ -587,36 +483,11 @@ def _docstats_kernel():
     every posting of a doc, so a batch-local unique is exact input to
     the downstream groupBy-max).  Touches only the 3 narrow columns —
     term strings and position blobs never reach this stage."""
-    import numpy as np
-    import pyarrow as pa
-
-    from .codec import varint_decode
-
     def fn(batches) -> "Iterator[pa.RecordBatch]":
         for batch in batches:
-            if batch.num_rows == 0:
+            if not batch.num_rows:
                 continue
-            ns = batch.column("n").to_numpy().astype(np.int64)
-            total = int(ns.sum())
-            bounds = np.zeros(len(ns) + 1, dtype=np.int64)
-            np.cumsum(ns, out=bounds[1:])
-            gstarts = bounds[:-1]
-            # zero-copy concat: non-null binary columns' values buffers
-            # ARE the concatenation (same trick as _termlist_kernel)
-            def _vals(arr):
-                offs = np.frombuffer(arr.buffers()[1], dtype=np.int32)[
-                    arr.offset: arr.offset + len(arr) + 1]
-                return np.frombuffer(arr.buffers()[2], dtype=np.uint8)[
-                    offs[0]: offs[-1]]
-            gaps = varint_decode(_vals(batch.column("doc_gaps")),
-                                 total).astype(np.int64)
-            dls = varint_decode(_vals(batch.column("doclens")),
-                                total).astype(np.int64)
-            adj = gaps.copy()
-            adj[1:] += 1
-            adj[gstarts] = gaps[gstarts]
-            cs = np.cumsum(adj)
-            ids = cs - np.repeat(cs[gstarts] - gaps[gstarts], ns)
+            _, ids, dls = _decode_runs(batch, "doclens")
             uniq, idx = np.unique(ids, return_index=True)
             yield pa.record_batch(
                 [pa.array(uniq), pa.array(dls[idx].astype(np.int32))],
@@ -812,16 +683,15 @@ def _stamp_of(path: str) -> Optional[dict]:
         return None
 
 
-def _stage_current(path: str, binary_positions: bool = False,
-                   required_cols: tuple = (), build_rows: bool = False
-                   ) -> bool:
+def _stage_current(path: str, required_cols: tuple = (),
+                   build_rows: bool = False) -> bool:
     """A staged output is resumable only if it was written by the
-    current format: every v3 artifact carries a ``gen`` column, v2+
-    staging carries positions as varint bytes, and v5 partials carry
-    ``sum_wdf``.  Resuming an older stage with current code would crash
-    or silently corrupt (ADVICE r01), so a stale stage is rebuilt
-    instead.  The schema comes from a parquet footer (pyarrow), so the
-    check runs no Spark job; a missing or unreadable stage is stale.
+    current format: every v3 artifact carries a ``gen`` column, and v5
+    partials carry ``sum_wdf``.  Resuming an older stage with current
+    code would crash or silently corrupt (ADVICE r01), so a stale stage
+    is rebuilt instead.  The schema comes from a parquet footer
+    (pyarrow), so the check runs no Spark job; a missing or unreadable
+    stage is stale.
     ``build_rows``: the output must also hold rows of the build's
     generation 0 — a ``partials/`` that an upsert cut short left behind
     holds its own generation's rows only, and resuming the build's
@@ -837,9 +707,6 @@ def _stage_current(path: str, binary_positions: bool = False,
     for c in required_cols:
         if c not in names:
             return False
-    if binary_positions and not pa.types.is_binary(
-            schema.field("positions").type):
-        return False
     if build_rows and not dset.scanner(
             columns=["gen"], filter=pc.field("gen") == 0).head(1).num_rows:
         return False
@@ -866,9 +733,11 @@ def _dir_bytes(path: str) -> int:
 # pyarrow's defaults the index came out 8% larger than Spark's.
 _PARQUET_OPTS = {"compression": "zstd", "compression_level": 3,
                  "store_schema": False}
-# row groups of about this many in-memory bytes, so pushed-down reads
-# (fetch's doc_id probe, the posting and dictionary term probes) skip
-# row groups by their key statistics
+# row groups of about this many in-memory bytes, each with min/max
+# statistics on its sorted key columns.  The driver's probes (fetch's
+# doc_id, the posting and dictionary terms) filter with ``isin``, on
+# which pyarrow skips no row group of a key range: they prune hive
+# directories only
 _ROW_GROUP_BYTES = 1 << 20
 # Arrow batch size fed to the stage kernels, as Spark's
 # ``spark.sql.execution.arrow.maxRecordsPerBatch`` does
@@ -1105,7 +974,7 @@ _LAYOUT_STAGES = _PARTIALS_CONSUMERS | {"partials"}
 # pass to be resumed; the stages not listed resume on ``_SUCCESS`` alone
 _STAGE_FORMAT = {"docs": {}, "partials": {"required_cols": ("sum_wdf",),
                                            "build_rows": True},
-                 "terms": {"binary_positions": True}, "globalstats": {}}
+                 "terms": {}, "globalstats": {}}
 
 # session confs ``_read_staged`` sets while the Spark executor runs;
 # ``_run_stages`` restores them before it returns or raises
@@ -1504,8 +1373,8 @@ class IndexBuilder:
         if "terms" in run:
             t0 = time.time()
             terms = _table(list(_termlist_kernel()(
-                batches(["term", "bucket", "block", "n", "doc_gaps",
-                         "wdfs", "doclens", "positions"]))), TERMS_SCHEMA)
+                batches(["term", "bucket", "n", "doc_gaps", "wdfs"]))),
+                TERMS_SCHEMA)
             _write_stage(self.path("terms"), {"": _with_gen(terms, gen)},
                          ["term", "doc_id", "gen"], gen)
             del terms
@@ -1681,14 +1550,12 @@ class IndexBuilder:
         # attributable in the UI.
         def run_termlist() -> None:
             # forward termlist (terms/): the row-per-(doc, term) table
-            # eset / upsert / the xq oracle consume — DERIVED from the
-            # partials by a vectorized decode
+            # eset / get_matching_terms / upsert read — DERIVED from the
+            # partials' doc gaps and wdfs by a vectorized decode
             self.spark.sparkContext.setJobDescription(
                 "build: termlist (derive from partials)")
             t0 = time.time()
-            cols = ["term", "bucket", "block", "n", "doc_gaps",
-                    "wdfs", "doclens", "positions"]
-            (part.select(*cols)
+            (part.select("term", "bucket", "n", "doc_gaps", "wdfs")
              .mapInArrow(_termlist_kernel(), schema=TERMS_SCHEMA)
              .withColumn("gen", F.lit(gen))
              .write.mode(mode).parquet(self.path("terms")))

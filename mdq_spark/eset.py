@@ -12,10 +12,12 @@ so a user of the underlying library keeps the capability.
 Semantics (single database, so the multi-shard termfreq approximation
 in ``expandweight.cc:collect_stats`` collapses to the exact df):
 
-* candidates = every term in any RSet doc's termlist — the ``terms/``
-  staging IS the forward termlist (``db.termlist_begin(did)``) — minus
-  the query's terms unless ``include_query_terms``
-  (``ExpandDeciderFilterTerms``, omenquire.cc:628-638);
+* candidates = every term in any RSet doc's termlist — ``terms/`` IS
+  the forward termlist (``db.termlist_begin(did)``) — minus the query's
+  terms unless ``include_query_terms`` (``ExpandDeciderFilterTerms``,
+  omenquire.cc:628-638);
+* each RSet doc's length comes from ``docstats/`` (the one place an
+  index stores it, as Xapian keeps doclen once per document);
 * per candidate, accumulated over the relevant docs containing it
   (``ExpandStats::accumulate``, expandweight.h:77-100; wdf == 0 is
   treated as 1 so boolean terms get a non-zero weight):
@@ -45,12 +47,14 @@ intent "we prefer the lexically smaller term".  The path is dead code
 in the reference, so this engine implements the stated intent
 deterministically: equal weights rank lexically ascending.
 
-Scale shape: one pushed-down staging scan (doc_id IN rset prunes
-parquet row groups — staging is written in doc-id-range order), one
+Scale shape: one pushed-down ``terms/`` scan (doc_id IN rset), joined
+to the RSet's ``docstats/`` rows as a broadcast build side, one
 partial-aggregated exchange on term, then the whole-dictionary stats
 side joins the SMALL candidate aggregate as a broadcast build side (no
 dictionary shuffle), and TakeOrderedAndProject keeps ``maxitems``.
-Nothing scales with corpus size except the two columnar scans.
+Nothing scales with corpus size except the columnar scans.  An empty
+RSet or ``maxitems <= 0`` answers with a local relation and runs no
+Spark job.
 """
 
 from __future__ import annotations
@@ -58,10 +62,13 @@ from __future__ import annotations
 from typing import Iterable, Optional
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
 from .build import read_index_dir
 
 SCHEMES = ("trad", "bo1")
+_ESET_SCHEMA = StructType([StructField("term", StringType()),
+                           StructField("wt", DoubleType())])
 
 
 def query_exclude_terms(query: str) -> list[str]:
@@ -103,12 +110,13 @@ def eset_df(searcher, rset: Iterable[int], maxitems: int = 20,
     if scheme not in SCHEMES:
         raise ValueError(f"scheme must be one of {SCHEMES}")
     rset = sorted({int(d) for d in rset})
-    spark = searcher.spark
-    out_schema = "term string, wt double"
     if not rset or maxitems <= 0:
-        return spark.createDataFrame([], out_schema)
+        return searcher._local_df(None, _ESET_SCHEMA)
 
-    rel = _termlist(searcher).filter(F.col("doc_id").isin(rset))
+    in_rset = F.col("doc_id").isin(rset)
+    rel = _termlist(searcher).filter(in_rset).join(
+        F.broadcast(searcher.docstats.filter(in_rset)
+                    .select("doc_id", "doclen")), "doc_id")
     # ExpandStats::accumulate treats wdf == 0 as 1 (boolean terms)
     wdf0 = F.greatest(F.col("wdf").cast("double"), F.lit(1.0))
     avlen = float(searcher.avg_doclen) or 1.0

@@ -701,9 +701,11 @@ class Searcher:
               limit: Optional[int] = None) -> pa.Table:
         """Pushed-down pyarrow read of the rows of ``<index>/<rel>``
         matching ``expr`` whose gen is in ``gens`` (default: the
-        committed ones): hive directories prune on ``tpfx``/``bucket``,
-        parquet row-group statistics on the sorted key columns, and only
-        ``columns`` are decoded."""
+        committed ones): hive directories prune on ``tpfx``/``bucket``
+        and only ``columns`` are decoded.  The callers' key filters are
+        ``isin``, on which pyarrow skips no row group of a sorted key
+        range (it skips one only where the statistics pin a column to a
+        single value, as they pin ``gen``)."""
         g = pc.field("gen").isin(self.committed if gens is None else gens)
         expr = g if expr is None else expr & g
         dset = self._dataset(rel)
@@ -760,11 +762,12 @@ class Searcher:
         of rows, and the 100-150 ms Spark job it used to cost was pure
         scheduling overhead (guide §1: per-query latency at sf1.0 was
         dominated by fixed cost, not work); the pyarrow path is 3-10 ms
-        against the same files with the same term/gen predicates and
-        row-group pruning off the sorted term column.  Returns a list
-        of plain row dicts; an empty term or pattern (no first byte to
-        partition on) reads every partition.  ``margin`` bounds the
-        rows read, with the caller's overflow semantics."""
+        against the same files with the same term/gen predicates.  Its
+        term predicates (``isin``, ``starts_with``) skip no row group,
+        so every row group of the directories read is decoded.  Returns
+        a list of plain row dicts; an empty term or pattern (no first
+        byte to partition on) reads every partition.  ``margin`` bounds
+        the rows read, with the caller's overflow semantics."""
         conds = []
         if terms:
             conds.append(pc.field("term").isin(terms))

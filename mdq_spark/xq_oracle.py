@@ -22,7 +22,8 @@ ingest expressions) and ``tokenize.document_term_rows`` (the exact
 function the fused ``build._tokenize_encode_batches`` kernel calls per
 document) — so the parquet is the engine's own forward termlist
 re-derived independently of Spark; ``tests/test_xq_oracle.py`` asserts
-row-for-row identity against a real index build's ``terms/``.  Being Spark-free means
+row-for-row identity (wdf and positions) against a real index build's
+``postings/``.  Being Spark-free means
 ``oracle_sql()`` can (re)generate it at registration time, so the
 DuckDB side never depends on the Spark side having run first.
 

@@ -59,9 +59,7 @@ def main() -> None:
       lambda: noop(part0.select(*_POSTINGS_COLS)))
 
     # termlist
-    cols = ["term", "bucket", "block", "n", "doc_gaps",
-            "wdfs", "doclens", "positions"]
-    tl = (part0.select(*cols)
+    tl = (part0.select("term", "bucket", "n", "doc_gaps", "wdfs")
           .mapInArrow(_termlist_kernel(), schema=TERMS_SCHEMA)
           .withColumn("gen", F.lit(0)))
     t("termlist: kernel noop", lambda: noop(tl))

@@ -71,7 +71,6 @@ def _decoded_postings(rows):
 def snapshot(spark, out):
     """Every artifact of the index at ``out`` as order-free rows, read
     through Spark (so both layouts must also read back through it)."""
-    from pyspark.sql import functions as F
     with open(os.path.join(out, "manifest.json")) as f:
         m = json.load(f)
 
@@ -81,7 +80,6 @@ def snapshot(spark, out):
         df = read_index_dir(spark, out, rel, None)
         return sorted(tuple(r) for r in df.select(*cols).collect())
 
-    pos = F.coalesce(F.hex("positions"), F.lit("NULL"))
     return {
         "globalstats": m["globalstats"],
         "next_doc_id": m["next_doc_id"],
@@ -91,8 +89,7 @@ def snapshot(spark, out):
         "postings": _decoded_postings(
             read_index_dir(spark, out, "postings", None).collect()),
         "docstats": rows("docstats", "doc_id", "doclen", "gen"),
-        "terms": rows("terms", "term", "bucket", "block", "doc_id", "wdf",
-                      "doclen", pos, "gen"),
+        "terms": rows("terms", "term", "bucket", "doc_id", "wdf", "gen"),
         "dict_delta": rows("dict_delta", "term", "bucket", "ddf", "dcf",
                            "gen"),
         "tombstones": rows("tombstones", "doc_id", "gen"),
@@ -312,6 +309,68 @@ def test_v5_index_refuses_upsert_and_compaction_migrates(spark, pair,
     assert m6["format_version"] == B.FORMAT_VERSION == 6
     assert "block_max_part" not in postings_cols()
     assert answers(spark, out) == want
+
+
+def test_terms_with_dropped_columns_read_and_upsert_alike(spark, pair,
+                                                         tmp_path):
+    """Earlier format-v6 builds wrote ``terms/`` with ``block``,
+    ``doclen`` and ``positions`` columns too.  An index whose ``terms/``
+    has them back (rebuilt here from ``docstats/`` and ``postings/``)
+    gives the eset and matching-term answers of the index as built, and
+    an upsert writes the same deltas into it."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from mdq_spark.codec import (
+        decode_doc_gaps, decode_positions, encode_position_list,
+    )
+
+    fresh, old = str(tmp_path / "fresh"), str(tmp_path / "old")
+    shutil.copytree(pair[0], fresh)
+    shutil.copytree(pair[0], old)
+    ds = B._read_table(os.path.join(old, "docstats"), ["doc_id", "doclen"])
+    doclen = dict(zip(ds["doc_id"].to_pylist(), ds["doclen"].to_pylist()))
+    blobs = {}
+    for r in B._read_table(os.path.join(old, "postings"),
+                           ["term", "n", "doc_gaps", "positions"]).to_pylist():
+        if r["positions"] is not None:
+            for d, p in zip(decode_doc_gaps(r["doc_gaps"], r["n"]),
+                            decode_positions(r["positions"], r["n"])):
+                blobs[r["term"], int(d)] = encode_position_list(
+                    [int(x) for x in p])
+    files = glob.glob(os.path.join(old, "terms", "*.parquet"))
+    assert files
+    for f in files:
+        t = pq.read_table(f)
+        ids, terms = t["doc_id"].to_pylist(), t["term"].to_pylist()
+        t = t.add_column(2, "block", pa.array(
+            [d // KW["block_span"] for d in ids], pa.int64()))
+        t = t.add_column(5, "doclen", pa.array(
+            [doclen[d] for d in ids], pa.int32()))
+        t = t.add_column(6, "positions", pa.array(
+            [blobs.get((term, d)) for term, d in zip(terms, ids)],
+            pa.binary()))
+        pq.write_table(t, f)
+    assert spark.read.parquet(os.path.join(old, "terms")).columns == [
+        "term", "bucket", "block", "doc_id", "wdf", "doclen", "positions",
+        "gen"]
+
+    def reads(out):
+        s = Searcher(spark, out)
+        got = {scheme: [(r["term"], round(r["wt"], 9)) for r in s.get_eset(
+            [1, 4, 5, 11], maxitems=10, scheme=scheme).collect()]
+            for scheme in ("trad", "bo1")}
+        got["matching"] = [tuple(r) for r in s.get_matching_terms(
+            "spark quick fox", 4).collect()]
+        return got
+
+    want = reads(fresh)
+    assert want["trad"] and want["bo1"] and want["matching"]
+    assert reads(old) == want
+    for out in (fresh, old):
+        upsert(spark, out, local_docs_df(spark, UPSERT))
+    a, b = snapshot(spark, fresh), snapshot(spark, old)
+    assert a["dict_delta"] and a == b
+    assert reads(old) == reads(fresh)
 
 
 def _stopped_after_partials(spark, out, monkeypatch):

@@ -14,6 +14,8 @@ import os
 import duckdb
 import pytest
 
+from conftest import count_spark_jobs
+
 pytestmark = pytest.mark.spark
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -141,8 +143,11 @@ def test_eset_pure_python_battery(spark, xq_searcher, rset, scheme, k):
 
 
 def test_eset_empty_rset_and_zero_maxitems(spark, xq_searcher):
-    assert xq_searcher.get_eset([], maxitems=10).count() == 0
-    assert xq_searcher.get_eset([1, 2], maxitems=0).count() == 0
+    """No rows, and no Spark job from the call to the collect."""
+    for rset, maxitems in (([], 10), ([1, 2], 0)):
+        rows, jobs = count_spark_jobs(spark, lambda: xq_searcher.get_eset(
+            rset, maxitems=maxitems).collect())
+        assert (rows, jobs) == ([], 0), (rset, maxitems)
 
 
 def test_eset_min_wt_strict(spark, xq_searcher):

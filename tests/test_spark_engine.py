@@ -757,19 +757,14 @@ def test_batch_search_volume_cap_grouping(spark, index, oracle):
 
 def test_fused_termlist_matches_oracle(spark, index):
     """The forward termlist (terms/, decoded back out of the partial
-    posting runs) holds one row per (doc, term) with the oracle's wdf,
-    doclen, bucket and block, and a position blob that decodes to the
-    oracle's positions (NULL for non-positional terms)."""
-    from mdq_spark.codec import decode_positions
-
+    posting runs) holds one row per (doc, term) with the oracle's
+    bucket and wdf, and no other column."""
     out, _ = index
-    rows = spark.read.parquet(f"{out}/terms").collect()
-    got = sorted(
-        (r["term"], r["bucket"], r["block"], r["doc_id"], r["wdf"],
-         r["doclen"], () if r["positions"] is None else tuple(
-             int(x) for x in decode_positions(bytes(r["positions"]), 1)[0]))
-        for r in rows)
-    assert got == _oracle_rows(DOCS)
+    df = spark.read.parquet(f"{out}/terms")
+    assert df.columns == ["term", "bucket", "doc_id", "wdf", "gen"]
+    got = sorted(tuple(r) for r in df.drop("gen").collect())
+    assert got == [(t, b, d, w) for t, b, _, d, w, _, _ in
+                   _oracle_rows(DOCS)]
 
 
 def test_fused_partials_merge_to_same_postings(spark, index):
@@ -874,41 +869,24 @@ def test_partial_resume_reruns_only_missing_stage(spark, index, tmp_path):
 
 def test_termlist_kernel_decodes_runs():
     """The vectorized termlist kernel decodes partial posting runs into
-    one row per (doc, term), each position piece a byte slice of its
-    run's blob, also in a batch with no positional run, and rejects a
-    malformed batch with a ValueError naming
-    it: a MIXED run (an EMPTY_POSITIONS member, count 0 != wdf 5, which
-    the tokenizer never writes) and a run whose blob ends mid-varint."""
+    one row per (doc, term) with its run's term and bucket, also in a
+    batch with no positional run."""
     import pyarrow as pa
     from mdq_spark.build import _termlist_kernel
-    from mdq_spark.codec import EMPTY_POSITIONS
+    from mdq_spark.codec import encode_position_list, varint_encode
 
-    def varint(v):
-        out = bytearray()
-        while v >= 128:
-            out.append((v & 0x7F) | 0x80)
-            v >>= 7
-        out.append(v)
-        return bytes(out)
-
-    def pos_piece(gaps):
-        return varint(len(gaps)) + b"".join(varint(g) for g in gaps)
-
-    def run_row(term, bucket, block, ids, wdfs, dls, pieces):
+    def run_row(term, bucket, ids, wdfs, positions):
         gaps = [ids[0]] + [b - a - 1 for a, b in zip(ids, ids[1:])]
         return {
-            "term": term, "bucket": bucket, "block": block,
-            "n": len(ids),
-            "doc_gaps": b"".join(varint(g) for g in gaps),
-            "wdfs": b"".join(varint(w) for w in wdfs),
-            "doclens": b"".join(varint(d) for d in dls),
-            "positions": None if pieces is None else b"".join(pieces),
+            "term": term, "bucket": bucket, "n": len(ids),
+            "doc_gaps": varint_encode(gaps), "wdfs": varint_encode(wdfs),
+            "positions": positions,
         }
 
     schema = pa.schema([
-        ("term", pa.string()), ("bucket", pa.int32()), ("block", pa.int64()),
-        ("n", pa.int32()), ("doc_gaps", pa.binary()), ("wdfs", pa.binary()),
-        ("doclens", pa.binary()), ("positions", pa.binary())])
+        ("term", pa.string()), ("bucket", pa.int32()), ("n", pa.int32()),
+        ("doc_gaps", pa.binary()), ("wdfs", pa.binary()),
+        ("positions", pa.binary())])
 
     def decode(rows):
         batch = pa.RecordBatch.from_pylist(rows, schema=schema)
@@ -916,29 +894,18 @@ def test_termlist_kernel_decodes_runs():
             list(_termlist_kernel()(iter([batch])))).to_pylist(),
             key=lambda r: (r["term"], r["doc_id"]))
 
-    alpha = [pos_piece([0, 3]), pos_piece(list(range(200))),
-             pos_piece([7])]
     rows = [
-        # plain positional run, multi-byte wdf varint included
-        run_row("alpha", 3, 0, [1, 5, 9], [2, 200, 1], [10, 12, 9], alpha),
+        # positional run, multi-byte wdf varint included
+        run_row("alpha", 3, [1, 5, 9], [2, 200, 1], encode_position_list(
+            [1, 4]) + encode_position_list(range(200))
+            + encode_position_list([7])),
         # non-positional run (Z-stems): NULL blob
-        run_row("Zbeta", 1, 0, [2, 3], [1, 4], [8, 11], None),
+        run_row("Zbeta", 1, [2, 3], [1, 4], None),
     ]
-    want = [dict(term="Zbeta", bucket=1, block=0, doc_id=d, wdf=w,
-                 doclen=dl, positions=None)
-            for d, w, dl in ((2, 1, 8), (3, 4, 11))] + \
-        [dict(term="alpha", bucket=3, block=0, doc_id=d, wdf=w, doclen=dl,
-              positions=p)
-         for d, w, dl, p in zip([1, 5, 9], [2, 200, 1], [10, 12, 9],
-                                alpha)]
+    want = [dict(term="Zbeta", bucket=1, doc_id=d, wdf=w)
+            for d, w in ((2, 1), (3, 4))] + \
+        [dict(term="alpha", bucket=3, doc_id=d, wdf=w)
+         for d, w in zip([1, 5, 9], [2, 200, 1])]
     assert decode(rows) == want
     # a batch of non-positional runs only (a long stretch of Z-stems)
     assert decode(rows[1:]) == want[:2]
-
-    mixed = run_row("gamma", 2, 0, [4, 6], [1, 5], [7, 7],
-                    [pos_piece([2]), EMPTY_POSITIONS])
-    with pytest.raises(ValueError, match="termlist batch 0"):
-        decode(rows + [mixed])
-    torn = run_row("delta", 2, 0, [4], [1], [7], [pos_piece([2]), b"\x80"])
-    with pytest.raises(ValueError, match="does not end on a varint"):
-        decode(rows + [torn])

@@ -3,8 +3,8 @@
 Two guarantees:
 
 1. the pure-Python term-rows export IS the engine's own tokenization —
-   row-for-row identical to the ``terms/`` staging a real Spark index
-   build writes (same doc ids, terms, wdf, decoded positions);
+   row-for-row identical to the postings a real Spark index build
+   writes (same doc ids, terms, wdf, decoded positions);
 2. the plan->SQL compiler re-derives the full query chain downstream of
    tokenization (stats, BM25, wildcards, booleans, positional checks)
    such that DuckDB's answer hash-matches the distributed engine's for
@@ -64,11 +64,14 @@ def con():
 
 
 def test_termrows_match_engine_staging(spark, xq_searcher, termrows_nd):
-    """The exported parquet equals the staging rows the build kernel
-    shuffled: same (doc_id, term, wdf, positions) multiset."""
+    """The exported parquet equals what the build kernel indexed: the
+    same (doc_id, term) -> (wdf, positions) map as the decoded
+    ``postings/`` runs the engine's positional operators read."""
     import pyarrow.parquet as pq
     from pyspark.sql import functions as F
-    from mdq_spark.codec import decode_positions
+    from mdq_spark.codec import (
+        decode_doc_gaps, decode_positions, varint_decode,
+    )
 
     exp_tbl = pq.read_table(_export_part(termrows_nd))
     exported = {}
@@ -80,22 +83,23 @@ def test_termrows_match_engine_staging(spark, xq_searcher, termrows_nd):
         exported[(did, term)] = (wdf, tuple(pos) if pos is not None
                                  else None)
 
-    staged = {}
-    rows = (spark.read.parquet(f"{xq_searcher.dir}/terms")
+    indexed = {}
+    rows = (spark.read.parquet(f"{xq_searcher.dir}/postings")
             .filter(F.col("gen") == 0)
-            .select("doc_id", "term", "wdf", "positions").collect())
+            .select("term", "n", "doc_gaps", "wdfs", "positions")
+            .collect())
     for r in rows:
-        if r["positions"] is None:
-            pos = None
-        else:
-            decoded = decode_positions(bytes(r["positions"]), 1)[0]
-            pos = tuple(int(x) for x in decoded)
-            if not pos:
-                pos = None
-        staged[(r["doc_id"], r["term"])] = (int(r["wdf"]), pos)
+        n = int(r["n"])
+        ids = decode_doc_gaps(bytes(r["doc_gaps"]), n)
+        wdfs = varint_decode(bytes(r["wdfs"]), n)
+        pls = decode_positions(bytes(r["positions"]), n) \
+            if r["positions"] is not None else [()] * n
+        for d, w, p in zip(ids, wdfs, pls):
+            indexed[(int(d), r["term"])] = (
+                int(w), tuple(int(x) for x in p) or None)
 
-    assert len(exported) == len(staged)
-    assert exported == staged
+    assert len(exported) == len(indexed)
+    assert exported == indexed
 
 
 def test_entry_queries_hash_match(spark, con, termrows_nd):
