@@ -82,7 +82,10 @@ with a one-varint bridge patch instead of re-sorting a row per posting.
 An upsert runs the same stage graph (``IndexBuilder._run_stages``) as a
 new generation ``g``: every stage appends gen-``g`` files beside the
 committed ones instead of replacing its directory, and reads back only
-gen-``g`` rows.
+gen-``g`` rows.  A compaction runs it as a fresh build whose partials
+are the index's committed posting runs less the tombstoned docs
+(``PostingRuns``, ``_drop_kernel``): the docs keep their ids, and
+nothing is tokenized.
 """
 
 from __future__ import annotations
@@ -424,31 +427,211 @@ def _tokenize_encode_batches(n_buckets: int, block_span: int,
     return fn
 
 
-def _decode_runs(batch, col: str):
-    """The members of a batch of partial posting runs, decoded whole:
-    ``(n per run, doc ids, values of the varint column col)``.  A
-    binary column's non-null values are contiguous in its values
-    buffer, so each column is one ``varint_decode`` over a view of that
-    buffer, and the doc ids are one cumsum of the gaps, restarted at
-    each run's first (absolute) gap."""
-    def values(arr):
-        offs = np.frombuffer(arr.buffers()[1], dtype=np.int32)[
-            arr.offset: arr.offset + len(arr) + 1]
-        return np.frombuffer(arr.buffers()[2], dtype=np.uint8)[
-            offs[0]: offs[-1]]
+def _offsets(lens: np.ndarray) -> np.ndarray:
+    """``[0, lens[0], lens[0] + lens[1], ...]``: the bounds of
+    consecutive spans of these lengths."""
+    out = np.zeros(len(lens) + 1, dtype=np.int64)
+    np.cumsum(lens, out=out[1:])
+    return out
+
+
+def _binary_view(arr) -> tuple:
+    """``(offsets, data)`` of a binary Arrow array, as numpy views of its
+    buffers: value i is ``data[offsets[i]:offsets[i + 1]]`` (empty when
+    null), and the values of a slice are contiguous in ``data``."""
+    offs = np.frombuffer(arr.buffers()[1], dtype=np.int32)[
+        arr.offset: arr.offset + len(arr) + 1]
+    buf = arr.buffers()[2]
+    data = np.frombuffer(buf, dtype=np.uint8) if buf is not None \
+        else np.empty(0, dtype=np.uint8)
+    return offs, data
+
+
+def _binary(data, offsets: np.ndarray,
+            valid: Optional[np.ndarray] = None) -> pa.Array:
+    """A binary Arrow array over ``data`` whose value i is the span
+    ``offsets[i]:offsets[i + 1]``, null where ``valid`` is False."""
+    bitmap = None if valid is None else pa.py_buffer(
+        np.packbits(valid, bitorder="little"))
+    return pa.Array.from_buffers(
+        pa.binary(), len(offsets) - 1,
+        [bitmap, pa.py_buffer(np.asarray(offsets, dtype=np.int32)),
+         pa.py_buffer(np.ascontiguousarray(data, dtype=np.uint8))])
+
+
+def _gather(data: np.ndarray, starts: np.ndarray,
+            lens: np.ndarray) -> np.ndarray:
+    """The spans ``data[starts[i]: starts[i] + lens[i]]``, concatenated
+    in order, with one fancy index."""
+    idx = np.arange(int(lens.sum()), dtype=np.int64)
+    if len(idx):
+        idx -= np.repeat(_offsets(lens)[:-1] - starts, lens)
+    return data[idx]
+
+
+def _decode_runs(batch, *cols: str):
+    """The members of a batch of posting runs, decoded whole: ``(n per
+    run, doc ids, values of each varint column in cols)``.  A binary
+    column's non-null values are contiguous in its values buffer, so
+    each column is one ``varint_decode`` over a view of that buffer, and
+    the doc ids are one cumsum of the gaps, restarted at each run's
+    first (absolute) gap."""
+    def values(col):
+        offs, data = _binary_view(batch.column(col))
+        return data[offs[0]: offs[-1]]
 
     ns = batch.column("n").to_numpy().astype(np.int64)
     total = int(ns.sum())
-    starts = np.zeros(len(ns), dtype=np.int64)
-    np.cumsum(ns[:-1], out=starts[1:])
-    gaps = varint_decode(values(batch.column("doc_gaps")),
-                         total).astype(np.int64)
-    vals = varint_decode(values(batch.column(col)), total).astype(np.int64)
+    starts = _offsets(ns)[:-1]
+    gaps = varint_decode(values("doc_gaps"), total).astype(np.int64)
     adj = gaps.copy()
     adj[1:] += 1
     adj[starts] = gaps[starts]
     cs = np.cumsum(adj)
-    return ns, cs - np.repeat(cs[starts] - gaps[starts], ns), vals
+    return (ns, cs - np.repeat(cs[starts] - gaps[starts], ns),
+            *(varint_decode(values(c), total).astype(np.int64)
+              for c in cols))
+
+
+def _count_slots(vals: np.ndarray, n: int) -> np.ndarray:
+    """The indices in ``vals`` of the count varints of a positions
+    stream of ``n`` docs, each stored as ``varint(count)`` and then
+    ``count`` gap varints: slot 0 holds a count, and a count c at slot i
+    puts the next one at i + 1 + c.  That chain is followed by pointer
+    doubling, ``log2 n`` vectorized passes over the stream, not a step
+    per doc.  A stream that does not hold exactly ``n`` docs raises
+    ``ValueError``."""
+    size = len(vals)
+    jump = np.arange(1, size + 2, dtype=np.int64)
+    jump[:size] += np.minimum(vals, size).astype(np.int64)
+    np.minimum(jump, size, out=jump)  # slot ``size`` is the end
+    slots = np.zeros(min(n, 1), dtype=np.int64)
+    while len(slots) < n:
+        slots = np.concatenate((slots, jump[slots]))
+        jump = jump[jump]
+    slots = slots[:n]
+    end = int(slots[-1]) + 1 + int(vals[slots[-1]]) \
+        if n and slots[-1] < size else 0
+    if end != size:
+        raise ValueError(f"positions stream of {size} varints does not "
+                         f"hold {n} docs")
+    return slots
+
+
+def _rebucket(terms: pa.Array, n_buckets: int) -> pa.Array:
+    """``term_bucket`` of each term, hashed once per distinct term."""
+    enc = pc.dictionary_encode(terms)
+    per = np.fromiter((term_bucket(t, n_buckets)
+                       for t in enc.dictionary.to_pylist()),
+                      dtype=np.int32, count=len(enc.dictionary))
+    return pa.array(per[enc.indices.to_numpy()])
+
+
+def _drop_positions(parr: pa.Array, ns: np.ndarray, run: np.ndarray,
+                    keep: np.ndarray, live: np.ndarray) -> pa.Array:
+    """The ``positions`` of the runs ``live`` holding only the members
+    ``keep`` marks.  The stream is decoded once; each member's byte span
+    is its count varint and that many gap varints, found from the counts
+    (``_count_slots``), and the kept spans are gathered in one pass.  A
+    run none of whose kept members has a position comes out null, as the
+    tokenizer writes a run none of whose docs has one."""
+    valid = pc.is_valid(parr).to_numpy(zero_copy_only=False)
+    if not valid.any():
+        return pa.nulls(len(live), pa.binary())
+    offs, data = _binary_view(parr)
+    stream = data[offs[0]: offs[-1]]
+    vals = varint_decode(stream)
+    has = np.repeat(valid, ns)
+    slots = _count_slots(vals, int(has.sum()))
+    # the byte where each varint starts, and the stream's end
+    at = np.concatenate(([0], np.flatnonzero(stream < 128) + 1))
+    cnt = np.zeros(len(has), dtype=np.int64)
+    cnt[has] = vals[slots].astype(np.int64)
+    start = np.zeros(len(has), dtype=np.int64)
+    start[has] = at[slots]
+    span = np.zeros(len(has), dtype=np.int64)
+    span[has] = at[slots + 1 + cnt[has]] - start[has]
+    positional = np.bincount(run[keep], weights=cnt[keep],
+                             minlength=len(ns)) > 0
+    use = keep & positional[run]  # a null value spans no byte
+    run_bytes = np.bincount(run[use], weights=span[use],
+                            minlength=len(ns))[live].astype(np.int64)
+    return _binary(_gather(stream, start[use], span[use]),
+                   _offsets(run_bytes), positional[live])
+
+
+def _drop_kernel(dead, n_buckets: Optional[int] = None):
+    """mapInArrow kernel of compaction: committed posting rows (the
+    ``_POSTINGS_COLS``) -> partial runs (PARTIALS_SCHEMA) of the same
+    postings less the docs whose ids ``dead`` holds, so compaction merges
+    the index's own encoded runs and never tokenizes.  Per batch:
+
+    * doc gaps, wdfs and doclens are decoded with one ``varint_decode``
+      per column (``_decode_runs``), dead members masked out, and runs
+      left empty dropped;
+    * each column is re-encoded whole with ``varint_encode_offsets``
+      and sliced per run by offset; positions are sliced by byte span
+      (``_drop_positions``);
+    * ``n``, ``first_doc``, ``last_doc``, ``block_max_wdf``,
+      ``block_min_doclen`` and ``sum_wdf`` are recomputed from the kept
+      members;
+    * given ``n_buckets``, the term bucket is recomputed for that count.
+
+    A batch with no dead member keeps its encoded columns as they are.
+    Doc ids, and so doc-range blocks, are unchanged."""
+    from .codec import varint_encode_offsets
+
+    dead = np.asarray(dead, dtype=np.int64)
+    schema = to_arrow_schema(PARTIALS_SCHEMA)
+
+    def drop(batch) -> pa.RecordBatch:
+        ns, ids, wdfs, dls = _decode_runs(batch, "wdfs", "doclens")
+        keep = ~np.isin(ids, dead)
+        if keep.all():
+            cols = [batch.column(c) for c in _POSTINGS_COLS]
+            cols.append(pa.array(np.add.reduceat(wdfs, _offsets(ns)[:-1])))
+        else:
+            run = np.repeat(np.arange(len(ns)), ns)
+            kept = np.bincount(run[keep], minlength=len(ns))
+            live = np.flatnonzero(kept)
+            ids, wdfs, dls = ids[keep], wdfs[keep], dls[keep]
+            bounds = _offsets(kept[live])
+            first = bounds[:-1]
+            gaps = ids.copy()
+            gaps[1:] -= ids[:-1] + 1
+            gaps[first] = ids[first]
+
+            def encoded(vals):
+                buf, off = varint_encode_offsets(vals)
+                return _binary(np.frombuffer(buf, dtype=np.uint8),
+                               off[bounds])
+
+            take = pa.array(live)
+            cols = [batch.column(c).take(take)
+                    for c in ("term", "bucket", "block")]
+            cols += [
+                pa.array(ids[first]), pa.array(ids[bounds[1:] - 1]),
+                pa.array(kept[live].astype(np.int32)),
+                encoded(gaps), encoded(wdfs), encoded(dls),
+                _drop_positions(batch.column("positions"), ns, run, keep,
+                                live),
+                pa.array(np.maximum.reduceat(wdfs, first).astype(np.int32)),
+                pa.array(np.minimum.reduceat(dls, first).astype(np.int32)),
+                pa.array(np.add.reduceat(wdfs, first)),
+            ]
+        if n_buckets is not None:
+            cols[1] = _rebucket(cols[0], n_buckets)
+        return pa.RecordBatch.from_arrays(
+            [c.cast(f.type) for c, f in zip(cols, schema)], schema=schema)
+
+    def fn(batches) -> "Iterator[pa.RecordBatch]":
+        for batch in batches:
+            if batch.num_rows:
+                out = drop(batch)
+                if out.num_rows:
+                    yield out
+
+    return fn
 
 
 def _termlist_kernel():
@@ -513,17 +696,18 @@ def _merge_partial_runs():
     posting (VERDICT r04 #1).
 
     Single-partial groups (the common case once splits are large) are
-    emitted with one vectorized ``Table.take`` per batch — no per-group
-    Python for them.  Should two partials of a group ever OVERLAP in
+    emitted with one vectorized ``Table.take`` per batch, and groups of
+    several runs (a compaction's generations, a Spark build's splits)
+    are concatenated whole: every column is one gather of byte spans,
+    and the bridge gaps are one ``varint_encode_offsets`` — no
+    per-group Python.  Should two partials of a group ever OVERLAP in
     doc range (the docs stage writes doc-range-disjoint files, but
     Spark's split planner may pack several into one task), the group's
     rows pass through unmerged — the query kernels already merge multiple rows per
     (term, block) correctly (they handle gen-interleaved upsert runs
     the same way), so correctness never depends on the disjointness
     invariant."""
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.compute as pc
+    from .codec import varint_encode_offsets
 
     names = [f.name for f in POSTINGS_SCHEMA.fields]
     # one pinned Arrow schema for BOTH output paths: the take-based
@@ -543,14 +727,72 @@ def _merge_partial_runs():
         return (tbl.select(names).take(pa.array(idx))
                 .cast(out_schema).combine_chunks().to_batches()[0])
 
-    def bin_view(tbl, col):
-        arr = tbl.column(col).combine_chunks()
-        raw_off = np.frombuffer(arr.buffers()[1], dtype=np.int32)
-        off = raw_off[arr.offset:arr.offset + len(arr) + 1]
-        buf = arr.buffers()[2]
-        data = np.frombuffer(buf, dtype=np.uint8) if buf is not None \
-            else np.empty(0, dtype=np.uint8)
-        return off, data
+    def concat(tbl: pa.Table, s: np.ndarray, e: np.ndarray):
+        """One row per group of rows ``[s[g], e[g])``, whose runs are
+        disjoint and ordered by first_doc: their concatenation."""
+        sizes = e - s
+        bounds = _offsets(sizes)  # each group's entries in rows
+        grp = bounds[:-1]
+        rows = np.arange(bounds[-1], dtype=np.int64) + np.repeat(
+            s - grp, sizes)
+        lead = np.zeros(len(rows), dtype=bool)
+        lead[grp] = True
+
+        def col(name):
+            return tbl.column(name).to_numpy()[rows]
+
+        def spans(name):
+            """The column's bytes, each group's rows concatenated."""
+            off, data = _binary_view(tbl.column(name).combine_chunks())
+            return _binary(_gather(data, off[s], off[e] - off[s]),
+                           _offsets(off[e] - off[s]))
+
+        firsts, lasts, ns = col("first_doc"), col("last_doc"), col("n")
+        # doc gaps: a non-leading run's first varint (its absolute
+        # first_doc) gives way to the bridge gap from the previous run's
+        # last_doc.  Pieces, in order: the bridge (empty for a leading
+        # run), then the run's bytes from its second varint (from its
+        # first for a leading run)
+        off, data = _binary_view(tbl.column("doc_gaps").combine_chunks())
+        ends = np.flatnonzero(data < 128)
+        skip = ends[np.searchsorted(ends, off[rows])] + 1 - off[rows]
+        skip[lead] = 0
+        bridge = firsts[1:] - lasts[:-1] - 1
+        bbuf, boff = varint_encode_offsets(bridge[~lead[1:]])
+        blen = np.zeros(len(rows), dtype=np.int64)
+        blen[~lead] = np.diff(boff)
+        bstart = np.zeros(len(rows), dtype=np.int64)
+        bstart[~lead] = len(data) + boff[:-1]
+        pieces = np.stack([bstart, off[rows] + skip], axis=1).ravel()
+        plens = np.stack([blen, off[rows + 1] - off[rows] - skip],
+                         axis=1).ravel()
+        src = np.concatenate((data, np.frombuffer(bbuf, dtype=np.uint8)))
+        row_bytes = plens.reshape(-1, 2).sum(axis=1)
+        gaps = _binary(_gather(src, pieces, plens),
+                       _offsets(np.add.reduceat(row_bytes, grp)))
+        # positions: a null run stands for n empty lists (one zero
+        # count each) beside positional runs; a group of null runs only
+        # stays null
+        parr = tbl.column("positions").combine_chunks()
+        pnull = pc.is_null(parr).to_numpy(zero_copy_only=False)[rows]
+        positional = ~np.logical_and.reduceat(pnull, grp)
+        off, data = _binary_view(parr)
+        plen = np.where(pnull, ns, off[rows + 1] - off[rows])
+        plen[~np.repeat(positional, sizes)] = 0  # nor here
+        pstart = np.where(pnull, len(data), off[rows])
+        src = np.concatenate((data, np.zeros(int(ns.max()), np.uint8)))
+        positions = _binary(_gather(src, pstart, plen),
+                            _offsets(np.add.reduceat(plen, grp)), positional)
+        return pa.RecordBatch.from_arrays([
+            tbl.column("term").take(pa.array(s)).combine_chunks(),
+            pa.array(tbl.column("bucket").to_numpy()[s]),
+            pa.array(tbl.column("block").to_numpy()[s]),
+            pa.array(firsts[grp]), pa.array(lasts[bounds[1:] - 1]),
+            pa.array(np.add.reduceat(ns, grp)),
+            gaps, spans("wdfs"), spans("doclens"), positions,
+            pa.array(np.maximum.reduceat(col("block_max_wdf"), grp)),
+            pa.array(np.minimum.reduceat(col("block_min_doclen"), grp)),
+        ], schema=out_schema)
 
     def merge_table(tbl: pa.Table, gstarts: np.ndarray,
                     gends: np.ndarray):
@@ -562,61 +804,20 @@ def _merge_partial_runs():
         multi = np.flatnonzero(~single)
         if len(multi) == 0:
             return out_batches
-        firsts = tbl.column("first_doc").to_numpy()
-        lasts = tbl.column("last_doc").to_numpy()
-        ns = tbl.column("n").to_numpy()
-        mw = tbl.column("block_max_wdf").to_numpy()
-        md = tbl.column("block_min_doclen").to_numpy()
-        og, dg = bin_view(tbl, "doc_gaps")
-        ow, dw = bin_view(tbl, "wdfs")
-        od, dd = bin_view(tbl, "doclens")
-        parr = tbl.column("positions").combine_chunks()
-        pnull = pc.is_null(parr).to_numpy(zero_copy_only=False)
-        opp, dp = bin_view(tbl, "positions")
-        terms = tbl.column("term").combine_chunks()
-        buckets = tbl.column("bucket").to_numpy()
-        blocks = tbl.column("block").to_numpy()
-
-        cols: dict = {k: [] for k in names}
-        passthrough: list = []
-        for gi in multi:
-            s, e = int(gstarts[gi]), int(gends[gi])
-            if not (firsts[s + 1:e] > lasts[s:e - 1]).all():
-                passthrough.extend(range(s, e))  # overlap: keep rows
-                continue
-            gaps = bytearray(dg[og[s]:og[s + 1]].tobytes())
-            for i in range(s + 1, e):
-                b = dg[og[i]:og[i + 1]]
-                j = 0
-                while b[j] & 0x80:
-                    j += 1
-                gaps += _varint(int(firsts[i]) - int(lasts[i - 1]) - 1)
-                gaps += b[j + 1:].tobytes()
-            if pnull[s:e].all():
-                pos = None
-            else:
-                pos = b"".join(
-                    b"\x00" * int(ns[i]) if pnull[i]
-                    else dp[opp[i]:opp[i + 1]].tobytes()
-                    for i in range(s, e))
-            cols["term"].append(terms[s].as_py())
-            cols["bucket"].append(int(buckets[s]))
-            cols["block"].append(int(blocks[s]))
-            cols["first_doc"].append(int(firsts[s]))
-            cols["last_doc"].append(int(lasts[e - 1]))
-            cols["n"].append(int(ns[s:e].sum()))
-            cols["doc_gaps"].append(bytes(gaps))
-            cols["wdfs"].append(dw[ow[s]:ow[e]].tobytes())
-            cols["doclens"].append(dd[od[s]:od[e]].tobytes())
-            cols["positions"].append(pos)
-            cols["block_max_wdf"].append(int(mw[s:e].max()))
-            cols["block_min_doclen"].append(int(md[s:e].min()))
-        if passthrough:
-            out_batches.append(take_batch(tbl, passthrough))
-        if cols["term"]:
-            out_batches.append(pa.record_batch(
-                [pa.array(cols[f.name], f.type)
-                 for f in out_schema], schema=out_schema))
+        # a group whose runs overlap in doc range passes through
+        grp = np.repeat(np.arange(len(sizes)), sizes)
+        firsts = tbl.column("first_doc").to_numpy()[:len(grp)]
+        lasts = tbl.column("last_doc").to_numpy()[:len(grp)]
+        clash = (firsts[1:] <= lasts[:-1]) & (grp[1:] == grp[:-1])
+        overlap = np.zeros(len(sizes), dtype=bool)
+        overlap[grp[1:][clash]] = True
+        over, merged = multi[overlap[multi]], multi[~overlap[multi]]
+        if len(over):
+            out_batches.append(take_batch(tbl, np.concatenate(
+                [np.arange(gstarts[g], gends[g]) for g in over])))
+        if len(merged):
+            out_batches.append(concat(tbl.select(names),
+                                      gstarts[merged], gends[merged]))
         return out_batches
 
     def fn(batches) -> "Iterator[pa.RecordBatch]":
@@ -857,16 +1058,27 @@ def _table(batches: list, schema: StructType) -> pa.Table:
     return to_arrow_schema(schema).empty_table()
 
 
+# the hive directories of an index: the dictionary's first-byte
+# ``tpfx=`` and the postings' ``bucket=``.  Other directories read them
+# as null, and the dictionary's data column ``bucket`` reads as itself
+_HIVE = pads.partitioning(pa.schema([("tpfx", pa.string()),
+                                     ("bucket", pa.int32())]),
+                          flavor="hive")
+
+
 def _read_table(path: str, columns: Optional[list] = None,
                 gens: Optional[list] = None,
-                where: Optional[pc.Expression] = None) -> pa.Table:
+                where: Optional[pc.Expression] = None,
+                partitioning=None) -> pa.Table:
     """The rows of the parquet files under ``path`` (hive directories
-    included) whose ``gen`` is in ``gens`` (all rows when None) and
-    that pass ``where``, a filter pushed into the scan."""
+    included; their keys are columns only given ``partitioning``) whose
+    ``gen`` is in ``gens`` (all rows when None) and that pass ``where``,
+    a filter pushed into the scan."""
     if gens is not None:
         gen_in = pc.field("gen").isin(gens)
         where = gen_in if where is None else where & gen_in
-    return pads.dataset(path, format="parquet").to_table(
+    return pads.dataset(path, format="parquet",
+                        partitioning=partitioning).to_table(
         columns=columns, filter=where)
 
 
@@ -985,9 +1197,49 @@ _SPLIT_CONFS = ("spark.sql.files.maxPartitionBytes",
 _POSTINGS_PART_BYTES = 128 << 20
 
 
+class PostingRuns:
+    """The committed posting runs of the index at ``index_dir`` (rows
+    of generations ``gens``, written under ``n_buckets`` term buckets),
+    less the docs whose ids ``dead`` holds: what a compaction's partials
+    stage derives from, through ``_drop_kernel``, in place of
+    tokenizing the live docs.  Reads project ``_POSTINGS_COLS``, so the
+    runs of a v5 index read as v6 ones."""
+
+    def __init__(self, index_dir: str, gens: list, dead: pa.Array,
+                 n_buckets: int):
+        self.index_dir = index_dir
+        self.gens = list(gens)
+        self.dead = dead
+        self.n_buckets = n_buckets
+
+    def kernel(self, n_buckets: int):
+        """The drop kernel writing runs bucketed by ``n_buckets``."""
+        return _drop_kernel(self.dead.to_numpy(zero_copy_only=False),
+                            None if n_buckets == self.n_buckets
+                            else n_buckets)
+
+    def live_docs(self) -> pa.Table:
+        """The committed ``docs/`` rows whose ids are not dead."""
+        return _read_table(f"{self.index_dir}/docs",
+                           [f.name for f in DOCS_SCHEMA.fields], self.gens,
+                           ~pc.field("doc_id").isin(self.dead))
+
+    def table(self) -> pa.Table:
+        """The committed runs, read with pyarrow (the driver's input)."""
+        return _read_table(f"{self.index_dir}/postings", _POSTINGS_COLS,
+                           self.gens, partitioning=_HIVE).cast(
+            to_arrow_schema(POSTINGS_SCHEMA))
+
+    def frame(self, spark: SparkSession) -> DataFrame:
+        """The committed runs as a Spark read (the Spark executor's)."""
+        return read_index_dir(spark, self.index_dir, "postings",
+                              self.gens).select(*_POSTINGS_COLS)
+
+
 class IndexBuilder:
     """Builds (or resumes) an index at ``out_dir`` from a docs DataFrame;
-    ``upsert`` runs the same stages as a later generation."""
+    ``upsert`` runs the same stages as a later generation, and a
+    compaction runs them from an index's own posting runs."""
 
     # Inputs whose Catalyst size estimate is under this many bytes are
     # built by the driver executor: the stage kernels run in-process on
@@ -999,10 +1251,14 @@ class IndexBuilder:
     # wall time, which grows about 1 s per 1k docs on its one core,
     # ties the Spark build's at about 8k docs (16k docs: 15.8 s driver,
     # 12.5 s Spark).  Catalyst sizes 8k docs at about 8 MB as ingest
-    # output but 3.1 MB as a docs/ parquet read (compaction's input),
-    # whose estimate is the compressed file size; the limit is the
-    # lower, so neither input shape takes the driver past the wall
-    # crossover.  The driver's peak memory there is about 0.55 GB.
+    # output but 3.1 MB as a docs/ parquet read, whose estimate is the
+    # compressed file size; the limit is the lower, so neither input
+    # shape takes the driver past the wall crossover.  The driver's
+    # peak memory there is about 0.55 GB.  A compaction picks its
+    # executor from the same estimate of its live docs/ rows, though it
+    # tokenizes none of them: it merges the committed posting runs
+    # (``PostingRuns``), which is cheaper than the tokenizing build the
+    # crossover measured, so the limit is conservative for it.
     DRIVER_BUILD_BYTES = 3 << 20
 
     # A build given no ``n_buckets`` splits its term-keyed stages into
@@ -1049,6 +1305,7 @@ class IndexBuilder:
         self.mode = mode
         self.spelling = spelling
         self.cjk_ngram = cjk_ngram
+        self.runs: Optional[PostingRuns] = None
         self.metrics: dict = {}
 
     def path(self, name: str) -> str:
@@ -1146,7 +1403,15 @@ class IndexBuilder:
             run.discard("partials")
         return run
 
-    def build(self, docs_df: DataFrame, force: bool = False) -> dict:
+    def build(self, docs_df: DataFrame, force: bool = False,
+              runs: Optional[PostingRuns] = None) -> dict:
+        """Build the index of ``docs_df``.  Given ``runs``, the partials
+        stage derives from those posting runs instead of tokenizing, and
+        the driver's docs stage reads the live ``docs/`` rows with
+        pyarrow: ``docs_df`` must hold the same rows, and only its size
+        estimate (the executor, ``n_buckets``) and the Spark docs stage
+        read it."""
+        self.runs = runs
         missing = [f.name for f in DOCS_SCHEMA.fields
                    if f.name not in docs_df.columns and f.name != "doc_id"]
         if missing:
@@ -1206,6 +1471,12 @@ class IndexBuilder:
         if agg is None:
             agg = _dict_stats_of(_read_table(self.path("dict"), ["df"],
                                              gens=[0]))
+        # ids continue past every doc, those without a term (and so
+        # without a docstats row) included
+        top = res["max_doc_id"]
+        if top is None:
+            top = pc.max(_read_table(self.path("docs"), ["doc_id"], [0])
+                         .column("doc_id")).as_py()
 
         # metrics + manifest (lineage per north rule)
         wall = time.time() - t_start
@@ -1234,7 +1505,7 @@ class IndexBuilder:
             # here (the manifest write IS the commit — ADVICE r01)
             "generation": 0,
             "committed_gens": [0],
-            "next_doc_id": int(gstats["max_doc_id"] or 0) + 1,
+            "next_doc_id": int(top or 0) + 1,
             "executor": res["executor"],
             "size_estimate_bytes": res["size_estimate_bytes"],
             "stages": res["stages"],
@@ -1273,15 +1544,17 @@ class IndexBuilder:
         stages: list = []
         lock = threading.Lock()
 
-        def record(name: str, sec: float) -> None:
+        def record(name: str, sec: float, **extra) -> None:
             # a build's finished stage records its layout for a resume
-            # to check; an upsert never resumes
-            if not gen and name in _LAYOUT_STAGES:
+            # to check; an upsert never resumes, and a driver compaction
+            # keeps its partials in memory
+            if not gen and name in _LAYOUT_STAGES and \
+                    _stage_done(self.path(name)):
                 _stamp(self.path(name), self._layout())
             with lock:
                 stages.append({"stage": name, "sec": sec,
                                "executor": executor,
-                               "size_estimate_bytes": est})
+                               "size_estimate_bytes": est, **extra})
 
         saved = {k: self.spark.conf.get(k, None) for k in _SPLIT_CONFS}
         try:
@@ -1321,47 +1594,70 @@ class IndexBuilder:
         kernel in-process on pyarrow batches.  pyarrow sorts and
         ``group_by``s stand in for the exchanges, and ``_write_stage``
         writes the layout the Spark writers write."""
-        res = {"n_docs": None, "gstats": None, "dict_stats": None}
+        res = {"n_docs": None, "max_doc_id": None, "gstats": None,
+               "dict_stats": None}
         # stage 1: forward store, sorted by doc_id, one file
         p_docs = self.path("docs")
         docs = None
         if "docs" in run:
             t0 = time.time()
-            docs = docs_df.toArrow()
+            docs = docs_df.toArrow() if self.runs is None \
+                else self.runs.live_docs()
             if "doc_id" not in docs.column_names:
                 docs = docs.add_column(0, _DOC_ID_FIELD, pa.array(np.arange(
                     first_id, first_id + docs.num_rows, dtype=np.int64)))
             docs = _with_gen(docs.sort_by("doc_id"), gen)
             _write_stage(p_docs, {"": docs}, ["doc_id", "gen"], gen)
             res["n_docs"] = docs.num_rows
+            res["max_doc_id"] = pc.max(docs.column("doc_id")).as_py()
             record("docs", time.time() - t0)
         if not run & _PARTIALS_CONSUMERS:
             return res
 
         # stage 2: fused tokenize -> phase-1 encode, ONE kernel call
-        # over the id-sorted docs, so every (term, block) is one run
+        # over the id-sorted docs, so every (term, block) is one run; a
+        # compaction's runs are the committed ones less the dead docs
         p_part = self.path("partials")
         if "partials" in run:
             t0 = time.time()
-            if docs is None:  # resume: the forward store is written
-                docs = _read_table(p_docs, _TOKENIZE_COLS, [gen]) \
-                    .sort_by("doc_id")
-            kern = _tokenize_encode_batches(self.n_buckets, self.block_span,
-                                            self.mode, self.cjk_ngram)
-            schema = to_arrow_schema(PARTIALS_SCHEMA)
-            part = pa.Table.from_batches(
-                [pa.RecordBatch.from_pandas(pdf, schema=schema,
-                                            preserve_index=False)
-                 for pdf in kern(
-                     b.to_pandas() for b in docs.select(_TOKENIZE_COLS)
-                     .to_batches(max_chunksize=_DRIVER_BATCH_ROWS))],
-                schema=schema)
-            # the build's resume checkpoint: an upsert never resumes,
-            # so its runs go to the consumers from memory only
-            if not gen:
-                _write_stage(p_part, {"": _with_gen(part, gen)},
-                             ["term", "block", "gen"], gen)
-            record("partials", time.time() - t0)
+            if self.runs is not None:
+                src = self.runs.table()
+                part = _table(list(self.runs.kernel(self.n_buckets)(
+                    src.to_batches(max_chunksize=_DRIVER_BATCH_ROWS))),
+                    PARTIALS_SCHEMA)
+                # each (term, block)'s runs in doc order, in the order
+                # the tokenize kernel writes runs (by block, then term),
+                # so terms/ comes out as a fresh build writes it.  A
+                # compaction is always forced, so no checkpoint is kept
+                part = part.sort_by([("block", "ascending"),
+                                     ("term", "ascending"),
+                                     ("first_doc", "ascending")])
+                source = {"source": "postings",
+                          "dropped": (pc.sum(src["n"]).as_py() or 0)
+                          - (pc.sum(part["n"]).as_py() or 0)}
+                del src
+            else:
+                if docs is None:  # resume: the forward store is written
+                    docs = _read_table(p_docs, _TOKENIZE_COLS, [gen]) \
+                        .sort_by("doc_id")
+                kern = _tokenize_encode_batches(
+                    self.n_buckets, self.block_span, self.mode,
+                    self.cjk_ngram)
+                schema = to_arrow_schema(PARTIALS_SCHEMA)
+                part = pa.Table.from_batches(
+                    [pa.RecordBatch.from_pandas(pdf, schema=schema,
+                                                preserve_index=False)
+                     for pdf in kern(
+                         b.to_pandas() for b in docs.select(_TOKENIZE_COLS)
+                         .to_batches(max_chunksize=_DRIVER_BATCH_ROWS))],
+                    schema=schema)
+                source = {"source": "tokenize"}
+                # the build's resume checkpoint: an upsert never
+                # resumes, so its runs go to the consumers from memory
+                if not gen:
+                    _write_stage(p_part, {"": _with_gen(part, gen)},
+                                 ["term", "block", "gen"], gen)
+            record("partials", time.time() - t0, **source)
         else:
             part = _read_table(p_part, gens=[gen]).drop_columns(["gen"])
         del docs
@@ -1439,7 +1735,8 @@ class IndexBuilder:
         Each write appends when ``gen`` > 0, and each read of a stage
         output keeps only gen-``gen`` rows."""
         from pyspark.sql import Observation
-        res = {"n_docs": None, "gstats": None, "dict_stats": None}
+        res = {"n_docs": None, "max_doc_id": None, "gstats": None,
+               "dict_stats": None}
         mode = "append" if gen else "overwrite"
         # stage 1: forward store, doc_id-clustered + sorted (the fetch
         # join's row-group pruning and the inversion's doc-range
@@ -1508,11 +1805,13 @@ class IndexBuilder:
             dobs = Observation("docs")
             (src.sortWithinPartitions("doc_id")
              .withColumn("gen", F.lit(gen))
-             .observe(dobs, F.count(F.lit(1)).alias("n_docs"))
+             .observe(dobs, F.count(F.lit(1)).alias("n_docs"),
+                      F.max("doc_id").alias("max_doc_id"))
              .write.mode(mode)
              .option("parquet.block.size", str(blk))
              .parquet(p_docs))
             res["n_docs"] = int(dobs.get["n_docs"])
+            res["max_doc_id"] = dobs.get["max_doc_id"]
             record("docs", time.time() - t0)
         if not run & _PARTIALS_CONSUMERS:
             return res
@@ -1520,24 +1819,37 @@ class IndexBuilder:
         # stage 2: FUSED tokenize -> phase-1 encode (VERDICT r05 #1).
         # One Python pass over the forward store produces the partial
         # posting runs directly; this is the resume checkpoint, and the
-        # ONLY pass that ever tokenizes.  The write-time Observation
-        # yields n_postings (one sum over the run lengths) so the
-        # postings shuffle can be sized without waiting for the dict.
+        # ONLY pass that ever tokenizes.  A compaction's pass instead
+        # drops the dead docs from the committed runs.  The write-time
+        # Observation yields n_postings (one sum over the run lengths)
+        # so the postings shuffle can be sized without waiting for the
+        # dict.
         p_part = self.path("partials")
         part_stats: Optional[dict] = None
         if "partials" in run:
             t0 = time.time()
             pobs = Observation("partstats")
-            (self._read_staged("docs", gen).select(*_TOKENIZE_COLS)
-             .mapInPandas(
-                 _tokenize_encode_batches(self.n_buckets, self.block_span,
-                                          self.mode, self.cjk_ngram),
-                 schema=PARTIALS_SCHEMA)
-             .withColumn("gen", F.lit(gen))
+            if self.runs is not None:
+                iobs = Observation("runstats")
+                runs = (self.runs.frame(self.spark)
+                        .observe(iobs, F.sum("n").alias("n"))
+                        .mapInArrow(self.runs.kernel(self.n_buckets),
+                                    schema=PARTIALS_SCHEMA))
+            else:
+                runs = (self._read_staged("docs", gen)
+                        .select(*_TOKENIZE_COLS)
+                        .mapInPandas(_tokenize_encode_batches(
+                            self.n_buckets, self.block_span, self.mode,
+                            self.cjk_ngram), schema=PARTIALS_SCHEMA))
+            (runs.withColumn("gen", F.lit(gen))
              .observe(pobs, F.sum("n").alias("n_postings"))
              .write.mode(mode).parquet(p_part))
             part_stats = dict(pobs.get)
-            record("partials", time.time() - t0)
+            source = {"source": "tokenize"} if self.runs is None else {
+                "source": "postings",
+                "dropped": int(iobs.get["n"] or 0)
+                - int(part_stats["n_postings"] or 0)}
+            record("partials", time.time() - t0, **source)
         part = self._read_staged("partials", gen)
 
         # stages 3-6 all derive from partials/ and nothing else (the

@@ -72,7 +72,9 @@ from pyspark.sql.types import (
 )
 
 from . import bm25
-from .build import DOCS_SCHEMA, index_fs, read_index_dir, term_bucket
+from .build import (
+    DOCS_SCHEMA, _HIVE, index_fs, read_index_dir, term_bucket,
+)
 from .codec import decode_doc_gaps, varint_decode
 from .plan import (
     Bool, MatchAll, MatchNothing, Node, Positional, Scaled, Term,
@@ -93,13 +95,6 @@ _RANKED_SCHEMA = StructType([StructField("query_id", StringType())]
                             + [StructField("rank", IntegerType())])
 _MATCHING_TERMS_SCHEMA = StructType([StructField("term", StringType()),
                                      StructField("qindex", LongType())])
-
-# the hive directories of an index: the dictionary's first-byte
-# ``tpfx=`` and the postings' ``bucket=``.  Other directories read them
-# as null, and the dictionary's data column ``bucket`` reads as itself
-_HIVE = pads.partitioning(pa.schema([("tpfx", pa.string()),
-                                     ("bucket", pa.int32())]),
-                          flavor="hive")
 
 # the encoded posting columns the tree kernel reads ("positions" only
 # for positional specs); MatchAll rows carry (block, doc_id) instead

@@ -44,9 +44,11 @@ INTO + snapshot commit (SURVEY.md §1.4).
 Query-side (search.py) merges dict rows + deltas per term and anti-joins
 tombstones after decode, so results equal a from-scratch rebuild of the
 current corpus — asserted by tests.  ``compact()`` is the merge step
-that folds tombstones away by rebuilding from the live doc set;
-``upsert(..., auto_compact_ratio=r)`` triggers it automatically when the
-tombstone ratio exceeds ``r``.
+that folds tombstones away: it merges the index's own encoded posting
+runs, less the tombstoned docs, into a fresh generation-0 index and
+never tokenizes (a tokenizer change needs ``build_index`` over the
+docs); ``upsert(..., auto_compact_ratio=r)`` triggers it automatically
+when the tombstone ratio exceeds ``r``.
 """
 
 from __future__ import annotations
@@ -63,9 +65,9 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from .build import (
-    FORMAT_VERSION, IndexBuilder, _DIR_SCHEMAS, _STAGES, _doc_shape,
-    _gstats_of, _read_table, _with_gen, _write_globalstats, _write_stage,
-    build_index, local_dir,
+    FORMAT_VERSION, IndexBuilder, PostingRuns, _DIR_SCHEMAS, _STAGES,
+    _doc_shape, _gstats_of, _read_table, _with_gen, _write_globalstats,
+    _write_stage, local_dir,
 )
 
 # An upsert runs every build stage except globalstats, which it
@@ -80,6 +82,17 @@ def _write_manifest(index_dir: str, m: dict) -> None:
     with open(tmp, "w") as f:
         json.dump(m, f, indent=2)
     os.replace(tmp, path)  # atomic on POSIX — this IS the commit
+
+
+def _tombstoned(index_dir: str, committed: list) -> pa.Array:
+    """The doc ids the committed ``tombstones/`` rows name.  A first
+    tombstone write cut short leaves the directory with only a hidden
+    file in it."""
+    path = f"{index_dir}/tombstones"
+    if not (os.path.exists(path) and pads.dataset(path).files):
+        return pa.array([], pa.int64())
+    return _read_table(path, ["doc_id"], committed) \
+        .column("doc_id").combine_chunks()
 
 
 def _replaced_ids(index_dir: str, committed: list, gen: int) -> pa.Array:
@@ -158,21 +171,16 @@ def upsert(spark: SparkSession, index_dir: str,
 
     # 3. tombstones for replaced fullpaths: the committed docs sharing
     # a path with the batch, less those already tombstoned
-    tomb_path = f"{index_dir}/tombstones"
-    old_tombs = pa.array([], pa.int64())
-    # a first tombstone write cut short leaves the directory with only
-    # a hidden file in it
-    if os.path.exists(tomb_path) and pads.dataset(tomb_path).files:
-        old_tombs = _read_table(tomb_path, ["doc_id"], committed) \
-            .column("doc_id").combine_chunks()
+    old_tombs = _tombstoned(index_dir, committed)
     replaced = _replaced_ids(index_dir, committed, gen)
     tombs = pc.unique(replaced.filter(pc.invert(pc.is_in(replaced,
                                                          old_tombs))))
     if len(tombs):
         # 4. exact negative dict deltas for the tombstoned docs
         _write_deltas(index_dir, committed, gen, tombs)
-        _write_stage(tomb_path, {"": _with_gen(pa.table({"doc_id": tombs}),
-                                               gen)}, ["doc_id", "gen"], gen)
+        _write_stage(f"{index_dir}/tombstones",
+                     {"": _with_gen(pa.table({"doc_id": tombs}), gen)},
+                     ["doc_id", "gen"], gen)
 
     # 5. exact global stats over the live docs as of this gen, in a
     # gen-tagged file that stays invisible until the commit
@@ -254,20 +262,29 @@ def fold_dict_deltas(spark: SparkSession, index_dir: str) -> None:
 
 
 def compact(spark: SparkSession, index_dir: str, out_dir: str) -> dict:
-    """Fold tombstones away: rebuild a fresh index from the live doc
-    set (the merge step; run when the tombstone ratio grows).  Reads
-    only committed, non-tombstoned docs — orphan rows from crashed
-    upserts are dropped here.  The rebuild keeps the index's tokenizer
-    settings and ``block_span`` but sizes ``n_buckets`` to the live
-    docs, as a fresh build does."""
+    """Fold tombstones away: write at ``out_dir`` a fresh generation-0
+    index of the live docs (the merge step; run when the tombstone ratio
+    grows).  It merges the index's own encoded posting runs, less the
+    tombstoned docs (``build.PostingRuns``), and never tokenizes: doc
+    ids, ``block_span`` and the tokenizer settings are kept, so a
+    tokenizer change needs ``build_index`` over the docs instead.  Only
+    committed generations are read, so orphan rows from crashed upserts
+    are dropped here.  The executor and ``n_buckets`` follow the live
+    docs' size estimate, as a fresh build's do; a driver-sized
+    compaction runs no Spark job."""
     from .search import Searcher
-    s = Searcher(spark, local_dir(index_dir))
+    index_dir = local_dir(index_dir)
+    s = Searcher(spark, index_dir)
     m, docs = s.manifest, s.docs
     if s.tombstones is not None:
         docs = docs.join(s.tombstones, "doc_id", "left_anti")
-    return build_index(spark, docs, out_dir, mode=m.get("mode", "xapian"),
-                       cjk_ngram=bool(m.get("cjk_ngram", False)),
-                       block_span=int(m["block_span"]), force=True)
+    runs = PostingRuns(index_dir, s.committed,
+                       _tombstoned(index_dir, s.committed),
+                       int(m["n_buckets"]))
+    builder = IndexBuilder(spark, out_dir, block_span=int(m["block_span"]),
+                           mode=m.get("mode", "xapian"),
+                           cjk_ngram=bool(m.get("cjk_ngram", False)))
+    return builder.build(docs, force=True, runs=runs)
 
 
 def recover_swap(index_dir: str) -> None:

@@ -7,11 +7,13 @@ the input's size estimate), at several corpus sizes, and prints per
 (docs, executor) the median build wall, the build's CPU time (this
 process and every descendant: the JVM and its Python workers) and the
 driver's peak resident memory, with the Catalyst size estimate the
-executor check compares.  Each corpus is built from the two input
-shapes a build gets: ingest output (``docs_from_code_table``, a fresh
-build) and a filtered read of an index's ``docs/`` parquet (what
-``compact()`` passes).  Catalyst sizes the two differently: the
-second's estimate is the compressed size of its files.  Ingest output
+executor check compares.  Each corpus is built from two input shapes:
+ingest output (``docs_from_code_table``, a fresh build) and a filtered
+read of an index's ``docs/`` parquet.  Catalyst sizes the two
+differently: the second's estimate is the compressed size of its files,
+and it is the estimate ``compact()`` picks its executor from, though a
+compaction merges the index's encoded posting runs and tokenizes
+nothing, so its cost is not the one measured here.  Ingest output
 is a lazy projection ordered by (repo, path) and carries no ids, so its
 sort and numbering run inside each timed build (the docs stage numbers
 it); the ``docs/`` read carries its ids.
@@ -142,8 +144,8 @@ def main() -> None:
 
     for n in sizes:
         src = corpus(work, n)
-        # the two input shapes a build gets: ingest output (a fresh
-        # build) and a filtered read of an index's docs/ (compaction)
+        # the two input shapes: ingest output (a fresh build) and a
+        # filtered read of an index's docs/ (sized as compaction's)
         ingest = docs_from_code_table(spark, spark.read.parquet(src))
         kept = os.path.join(work, f"src_{n}")
         build(ingest, "driver", kept)

@@ -16,7 +16,8 @@ def test_amp_scale_and_unknown_sizes_pick_64():
 
 def test_benchmark_sized_inputs_pick_one_bucket():
     # the 1,000-doc benchmark corpus as ingest output (976,018 B), and
-    # its compaction input, a docs/ parquet read (407,988 B)
+    # its live docs/ parquet read (407,988 B), whose estimate sizes a
+    # compaction (which merges posting runs and tokenizes none of it)
     for size in (0, 1, 976_018, 407_988, (2 << 20) - 1):
         assert IndexBuilder.n_buckets_for(size) == 1
 

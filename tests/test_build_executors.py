@@ -180,6 +180,110 @@ def test_executors_equal_after_upsert_and_compaction(spark, pair,
     assert answers(spark, drv) == answers(spark, spk) == want
 
 
+# a second batch: it replaces a path the first replaced, and adds one
+AGAIN = [dict(UPSERT[0], body="spark sorts everything again"),
+         dict(UPSERT[1], fullpath="org/f/newer.md", body="lazy planner")]
+# a doc with an empty body: in ``simple`` mode, which tokenizes bodies
+# only, it has no term
+EMPTY = dict(ROWS[0], doc_id=12, fullpath="org/g/empty.md", body="")
+
+
+def _live_rows(out):
+    """The live docs of the index at ``out``, with their ids."""
+    with open(os.path.join(out, "manifest.json")) as f:
+        gens = json.load(f)["committed_gens"]
+    docs = B._read_table(os.path.join(out, "docs"), None, gens)
+    dead = set()
+    if os.path.exists(os.path.join(out, "tombstones")):
+        dead = set(B._read_table(os.path.join(out, "tombstones"),
+                                 ["doc_id"], gens)["doc_id"].to_pylist())
+    return sorted((r for r in docs.drop_columns(["gen"]).to_pylist()
+                   if r["doc_id"] not in dead), key=lambda r: r["doc_id"])
+
+
+@pytest.mark.parametrize("mode", ["xapian", "simple"])
+@pytest.mark.parametrize("executor", sorted(LIMITS))
+def test_compaction_equals_build_of_live_docs(spark, tmp_path, monkeypatch,
+                                              executor, mode):
+    """Compaction merges the index's own posting runs less the
+    tombstoned docs, re-bucketed to the count the live docs' size picks
+    (1 here, from 8).  After two upserts, the second replacing a path
+    the first already replaced, and again after an upsert of a new path
+    only (generations and no tombstone), the compacted index equals a
+    build of its live ``docs/`` rows with their ids and answers alike: a
+    term only tombstoned docs held leaves the dictionary.  ``xapian``
+    mode writes positional runs and null-position (stem) runs;
+    ``simple`` mode indexes a doc with no term."""
+    monkeypatch.setattr(IndexBuilder, "DRIVER_BUILD_BYTES", LIMITS[executor])
+    out = str(tmp_path / "idx")
+    m = build_index(spark, local_docs_df(spark, ROWS + [EMPTY]), out,
+                    mode=mode, **KW)
+    # upserts number past the last doc, with or without terms
+    assert m["next_doc_id"] == EMPTY["doc_id"] + 1
+    for batch in (UPSERT, AGAIN):
+        upsert(spark, out, local_docs_df(spark, batch))
+    before = snapshot(spark, out)
+    assert len(before["tombstones"]) == 2
+    assert "shuffles" in {r[0] for r in before["dict"]}
+    if mode == "xapian":
+        nulls = [r for r in read_index_dir(spark, out, "postings", None)
+                 .collect() if r["positions"] is None]
+        assert nulls and len(nulls) < len(before["postings"])
+    pre = before
+    for step, batch in (("tombstoned", None),
+                        ("gens only", [dict(UPSERT[1],
+                                            fullpath="org/h/more.md")])):
+        if batch is not None:
+            upsert(spark, out, local_docs_df(spark, batch))
+            pre = snapshot(spark, out)
+            assert pre["tombstones"] is None, step
+        dead = {d for d, _ in pre["tombstones"] or ()}
+        live = _live_rows(out)
+        m = compact_in_place(spark, out)
+        assert m["executor"] == executor and m["n_buckets"] == 1, step
+        (part,) = [st for st in m["stages"] if st["stage"] == "partials"]
+        assert (part["source"], part["dropped"]) == (
+            "postings", sum(p[4] in dead for p in pre["postings"])), step
+        ref = str(tmp_path / f"ref-{len(live)}")
+        build_index(spark, local_docs_df(spark, live), ref, mode=mode,
+                    block_span=KW["block_span"])
+        a = snapshot(spark, out)
+        assert a == snapshot(spark, ref), step
+        if executor == "driver":
+            # the runs reach the termlist kernel in the tokenize
+            # kernel's order, so terms/ is written in a build's order
+            got, want = (B._read_table(os.path.join(d, "terms"),
+                                       ["term", "doc_id"]).to_pylist()
+                         for d in (out, ref))
+            assert got == want, step
+        assert answers(spark, out) == answers(spark, ref), step
+        assert "shuffles" not in {r[0] for r in a["dict"]}
+        assert EMPTY["doc_id"] in {r[0] for r in a["docs"]}
+        if mode == "simple":
+            assert EMPTY["doc_id"] not in {r[0] for r in a["docstats"]}
+
+
+def test_driver_compaction_runs_no_spark_job(spark, pair, tmp_path):
+    """A driver-sized compaction reads and writes with pyarrow only: no
+    Spark job runs.  Its partials stage record names its source, the
+    committed posting runs, and the postings of tombstoned docs it
+    dropped; a build's names the tokenizer."""
+    assert [st.get("source") for st in pair[1]["stages"]
+            if st["stage"] == "partials"] == ["tokenize"]
+    out = str(tmp_path / "idx")
+    shutil.copytree(pair[0], out)
+    upsert(spark, out, local_docs_df(spark, UPSERT))
+    before = snapshot(spark, out)
+    dead = {d for d, _ in before["tombstones"]}
+    m, n = count_spark_jobs(spark, lambda: compact_in_place(spark, out))
+    assert m["executor"] == "driver" and n == 0, n
+    (part,) = [st for st in m["stages"] if st["stage"] == "partials"]
+    assert part["source"] == "postings"
+    assert part["dropped"] == sum(p[4] in dead for p in before["postings"])
+    assert part["dropped"] > 0
+    assert not os.path.exists(os.path.join(out, "partials"))
+
+
 def test_driver_upsert_runs_few_spark_jobs(spark, pair, tmp_path):
     """A small driver upsert runs no Spark job but the ``toArrow`` that
     collects its fullpath-ordered batch: its stages, its tombstones and
