@@ -116,7 +116,7 @@ from pyspark.sql.types import (
     StructField, StructType,
 )
 
-from .codec import EMPTY_POSITIONS, varint_decode
+from .codec import EMPTY_POSITIONS, varint_decode_ends
 
 DEFAULT_BLOCK_SPAN = 1 << 16
 
@@ -469,28 +469,57 @@ def _gather(data: np.ndarray, starts: np.ndarray,
     return data[idx]
 
 
+def _run_varints(arr) -> tuple:
+    """``(stream, vals, at, rel)`` of a binary column of posting runs:
+    the bytes of its non-null values (contiguous in its values buffer),
+    their varints, the byte where each varint starts (and the stream's
+    end), and the byte where each run starts (and the last ends)."""
+    offs, data = _binary_view(arr)
+    stream = data[offs[0]: offs[-1]]
+    vals, ends = varint_decode_ends(stream)
+    return stream, vals, np.concatenate(([0], ends + 1)), offs - offs[0]
+
+
+def _check_runs(at: np.ndarray, rel: np.ndarray, first: np.ndarray,
+                what: str) -> None:
+    """Raise ``ValueError`` unless run r's bytes start where its first
+    varint ``first[r]`` starts (``first[-1]``, past the last run, is the
+    varint count): then no run's bytes split a varint or hold another
+    run's values, which a check of the batch's total cannot tell."""
+    if first[-1] >= len(at) or (at[first] != rel).any():
+        raise ValueError(f"a posting run's {what} do not hold its n "
+                         f"{'docs' if what == 'positions' else 'values'}")
+
+
+def _undelta(gaps: np.ndarray, ns: np.ndarray) -> np.ndarray:
+    """The values of consecutive non-empty runs of ``ns`` values stored
+    as gaps (a run's first value absolute, then ``value - previous -
+    1``): one cumsum, restarted at each run's first value."""
+    starts = _offsets(ns)[:-1]
+    adj = gaps + 1
+    adj[starts] = gaps[starts]
+    cs = np.cumsum(adj)
+    return cs - np.repeat(cs[starts] - gaps[starts], ns)
+
+
 def _decode_runs(batch, *cols: str):
     """The members of a batch of posting runs, decoded whole: ``(n per
     run, doc ids, values of each varint column in cols)``.  A binary
     column's non-null values are contiguous in its values buffer, so
-    each column is one ``varint_decode`` over a view of that buffer, and
-    the doc ids are one cumsum of the gaps, restarted at each run's
-    first (absolute) gap."""
-    def values(col):
-        offs, data = _binary_view(batch.column(col))
-        return data[offs[0]: offs[-1]]
-
+    each column is one varint decode over a view of that buffer, and
+    the doc ids are one cumsum of the gaps (``_undelta``).  A run whose
+    bytes in any column do not hold exactly its ``n`` varints raises
+    ``ValueError``, so no member slips into the next run."""
     ns = batch.column("n").to_numpy().astype(np.int64)
-    total = int(ns.sum())
-    starts = _offsets(ns)[:-1]
-    gaps = varint_decode(values("doc_gaps"), total).astype(np.int64)
-    adj = gaps.copy()
-    adj[1:] += 1
-    adj[starts] = gaps[starts]
-    cs = np.cumsum(adj)
-    return (ns, cs - np.repeat(cs[starts] - gaps[starts], ns),
-            *(varint_decode(values(c), total).astype(np.int64)
-              for c in cols))
+    first = _offsets(ns)
+
+    def values(col):
+        _, vals, at, rel = _run_varints(batch.column(col))
+        _check_runs(at, rel, first, col)
+        return vals.astype(np.int64)
+
+    return (ns, _undelta(values("doc_gaps"), ns),
+            *(values(c) for c in cols))
 
 
 def _count_slots(vals: np.ndarray, n: int) -> np.ndarray:
@@ -518,6 +547,28 @@ def _count_slots(vals: np.ndarray, n: int) -> np.ndarray:
     return slots
 
 
+def _position_slots(parr: pa.Array, ns: np.ndarray) -> tuple:
+    """The ``positions`` of a batch of posting runs, decoded whole:
+    ``(stream, at, vals, cnt, slot)``: the non-null values' bytes, the
+    byte where each varint starts (and the stream's end), the varints,
+    and per member its position count and the index in ``vals`` of its
+    count varint (``_count_slots``); a member of a null run has count 0.
+    A run whose values do not hold exactly its ``n`` docs raises
+    ``ValueError``."""
+    valid = pc.is_valid(parr).to_numpy(zero_copy_only=False)
+    stream, vals, at, rel = _run_varints(parr)
+    has = np.repeat(valid, ns)
+    slots = _count_slots(vals, int(has.sum()))
+    _check_runs(at, np.append(rel[:-1][valid], rel[-1]),
+                np.append(slots[_offsets(ns[valid])[:-1]], len(vals)),
+                "positions")
+    cnt = np.zeros(len(has), dtype=np.int64)
+    cnt[has] = vals[slots].astype(np.int64)
+    slot = np.zeros(len(has), dtype=np.int64)
+    slot[has] = slots
+    return stream, at, vals, cnt, slot
+
+
 def _rebucket(terms: pa.Array, n_buckets: int) -> pa.Array:
     """``term_bucket`` of each term, hashed once per distinct term."""
     enc = pc.dictionary_encode(terms)
@@ -535,22 +586,11 @@ def _drop_positions(parr: pa.Array, ns: np.ndarray, run: np.ndarray,
     (``_count_slots``), and the kept spans are gathered in one pass.  A
     run none of whose kept members has a position comes out null, as the
     tokenizer writes a run none of whose docs has one."""
-    valid = pc.is_valid(parr).to_numpy(zero_copy_only=False)
-    if not valid.any():
+    if parr.null_count == len(parr):
         return pa.nulls(len(live), pa.binary())
-    offs, data = _binary_view(parr)
-    stream = data[offs[0]: offs[-1]]
-    vals = varint_decode(stream)
-    has = np.repeat(valid, ns)
-    slots = _count_slots(vals, int(has.sum()))
-    # the byte where each varint starts, and the stream's end
-    at = np.concatenate(([0], np.flatnonzero(stream < 128) + 1))
-    cnt = np.zeros(len(has), dtype=np.int64)
-    cnt[has] = vals[slots].astype(np.int64)
-    start = np.zeros(len(has), dtype=np.int64)
-    start[has] = at[slots]
-    span = np.zeros(len(has), dtype=np.int64)
-    span[has] = at[slots + 1 + cnt[has]] - start[has]
+    stream, at, _, cnt, slot = _position_slots(parr, ns)
+    start = at[slot]
+    span = at[slot + 1 + cnt] - start
     positional = np.bincount(run[keep], weights=cnt[keep],
                              minlength=len(ns)) > 0
     use = keep & positional[run]  # a null value spans no byte
@@ -566,12 +606,12 @@ def _drop_kernel(dead, n_buckets: Optional[int] = None):
     postings less the docs whose ids ``dead`` holds, so compaction merges
     the index's own encoded runs and never tokenizes.  Per batch:
 
-    * doc gaps, wdfs and doclens are decoded with one ``varint_decode``
+    * doc gaps, wdfs and doclens are decoded with one varint decode
       per column (``_decode_runs``), dead members masked out, and runs
       left empty dropped;
     * each column is re-encoded whole with ``varint_encode_offsets``
       and sliced per run by offset; positions are sliced by byte span
-      (``_drop_positions``);
+      (``_drop_positions``, from ``_position_slots``);
     * ``n``, ``first_doc``, ``last_doc``, ``block_max_wdf``,
       ``block_min_doclen`` and ``sum_wdf`` are recomputed from the kept
       members;

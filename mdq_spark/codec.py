@@ -21,27 +21,7 @@ _MAX_BYTES = 10  # 64-bit value -> at most 10 LEB128 bytes
 
 def varint_encode(values) -> bytes:
     """LEB128-encode a sequence of non-negative ints."""
-    arr = np.asarray(values, dtype=np.uint64)
-    n = len(arr)
-    if n == 0:
-        return b""
-    out = np.zeros((n, _MAX_BYTES), dtype=np.uint8)
-    lens = np.zeros(n, dtype=np.int64)
-    v = arr.copy()
-    active = np.ones(n, dtype=bool)
-    for i in range(_MAX_BYTES):
-        if not active.any():
-            break
-        byte = (v & np.uint64(0x7F)).astype(np.uint8)
-        v = v >> np.uint64(7)
-        more = v > 0
-        out[active, i] = (byte | (more.astype(np.uint8) << 7))[active]
-        lens[active] = i + 1
-        active = active & more
-    # row-major flatten keeping only the first lens[r] bytes of row r
-    col = np.arange(_MAX_BYTES)
-    mask = col[None, :] < lens[:, None]
-    return out[mask].tobytes()
+    return varint_encode_offsets(values)[0]
 
 
 def varint_encode_offsets(values) -> tuple[bytes, np.ndarray]:
@@ -76,11 +56,23 @@ def varint_encode_offsets(values) -> tuple[bytes, np.ndarray]:
 def varint_decode(buf, count: int | None = None) -> np.ndarray:
     """Decode LEB128 buffer (bytes-like or uint8 ndarray) -> uint64
     array."""
+    vals = varint_decode_ends(buf)[0]
+    if count is not None and len(vals) != count:
+        raise ValueError(f"decoded {len(vals)} values, expected {count}")
+    return vals
+
+
+def varint_decode_ends(buf) -> tuple[np.ndarray, np.ndarray]:
+    """Decode a LEB128 buffer and return (values, ends), where
+    ``ends[i]`` is the index of value i's last byte — lets a caller
+    check which bytes each value came from (the posting-run decoders
+    check that every run's bytes hold whole values).  Bytes after the
+    last complete value are not decoded."""
     b = buf if isinstance(buf, np.ndarray) \
         else np.frombuffer(buf, dtype=np.uint8)
-    if b.size == 0:
-        return np.zeros(0, dtype=np.uint64)
     ends = np.flatnonzero(b < 128)
+    if ends.size == 0:
+        return np.zeros(0, dtype=np.uint64), ends
     starts = np.empty_like(ends)
     starts[0] = 0
     starts[1:] = ends[:-1] + 1
@@ -91,9 +83,7 @@ def varint_decode(buf, count: int | None = None) -> np.ndarray:
         sel = idx <= ends
         vals[sel] |= (b[idx[sel]].astype(np.uint64) & np.uint64(0x7F)) \
             << np.uint64(7 * j)
-    if count is not None and len(vals) != count:
-        raise ValueError(f"decoded {len(vals)} values, expected {count}")
-    return vals
+    return vals, ends
 
 
 def encode_doc_gaps(doc_ids) -> bytes:

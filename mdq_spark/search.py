@@ -13,7 +13,10 @@ Physical strategy (SURVEY.md §3.3 lifecycle):
 3. every plan compiles into ONE block-local operator-tree spec
    (``_compile_block_spec``, total over the plan grammar) and ONE
    evaluator runs it: ``_tree_block_fn`` over Arrow slices of the
-   pruned ``postings/bucket=*/`` rows, one doc-range block per slice.
+   pruned ``postings/bucket=*/`` rows, one doc-range block per slice,
+   each decoded whole by the build's run decoders (one varint decode
+   per column of the slice, never one per run, and positions only for
+   the positional terms).
    When the dictionary proves the volume small (Σ df, plus N for
    MatchAll, <= ``Searcher.LOCAL_EVAL_ROWS``) the driver reads those
    fragments with pyarrow and runs the per-block function itself — no
@@ -73,9 +76,9 @@ from pyspark.sql.types import (
 
 from . import bm25
 from .build import (
-    DOCS_SCHEMA, _HIVE, index_fs, read_index_dir, term_bucket,
+    DOCS_SCHEMA, _HIVE, _decode_runs, _gather, _offsets, _position_slots,
+    _undelta, index_fs, read_index_dir, term_bucket,
 )
-from .codec import decode_doc_gaps, varint_decode
 from .plan import (
     Bool, MatchAll, MatchNothing, Node, Positional, Scaled, Term,
     ValueRange, Wildcard,
@@ -130,67 +133,6 @@ def _top_k(w: pd.DataFrame, k: int) -> pd.DataFrame:
 _POS_SHIFT = 32  # packed positional keys: (survivor_tag << 32) | position
 
 
-def _survivor_keys(runs, perm, idx):
-    """(survivor_tag << 32 | position) keys for the survivor rows
-    ``idx`` (indices into the term's sorted order; idx[j] is survivor
-    doc j) — positions are decoded ONLY here, after the boolean/AND
-    intersection, and only at survivor indices (VERDICT r02 #3).  One
-    vectorized pass per run: whole-blob varint decode, boundaries =
-    cumsum(1 + wdf) (count == wdf by the tokenizer's blob layout,
-    verified with a sequential fallback), then a repeat/gather +
-    segmented cumsum — no per-doc array materialization for
-    non-survivors."""
-    import numpy as np
-    SHIFT = np.int64(_POS_SHIFT)
-    orig = perm[idx] if perm is not None else idx
-    order2 = np.argsort(orig, kind="stable")
-    sorted_orig = orig[order2]
-    starts = np.zeros(len(runs) + 1, dtype=np.int64)
-    np.cumsum([n for _, n, _ in runs], out=starts[1:])
-    parts = []
-    for ri, (blob, n, wdf_run) in enumerate(runs):
-        a, b2 = np.searchsorted(sorted_orig, [starts[ri],
-                                              starts[ri + 1]])
-        if a == b2 or blob is None:
-            continue
-        local = (sorted_orig[a:b2] - starts[ri]).astype(np.int64)
-        vals = varint_decode(blob).astype(np.int64)
-        bnds = np.zeros(n + 1, dtype=np.int64)
-        np.cumsum(wdf_run + 1, out=bnds[1:])
-        # per-doc check, not just the total: offsetting count!=wdf
-        # mismatches could make the totals coincide and silently
-        # decode wrong positions (ADVICE r03) — every stored count
-        # varint must equal that doc's wdf
-        if bnds[-1] != len(vals) or \
-                not (vals[bnds[:-1]] == wdf_run).all():
-            # count != wdf for this run: walk the counts instead
-            bnds[0] = 0
-            for k in range(n):
-                bnds[k + 1] = bnds[k] + int(vals[bnds[k]]) + 1
-        cnts = vals[bnds[local]]
-        total = int(cnts.sum())
-        if total == 0:
-            continue
-        seg_off = np.zeros(len(cnts), dtype=np.int64)
-        np.cumsum(cnts[:-1], out=seg_off[1:])
-        gather = (np.repeat(bnds[local] + 1, cnts)
-                  + np.arange(total) - np.repeat(seg_off, cnts))
-        g = vals[gather] + 1  # gap-1 encoding: +1 everywhere,
-        g[seg_off] -= 1       # first value of a doc is absolute
-        cs = np.cumsum(g)
-        prev = np.repeat(cs[seg_off] - g[seg_off], cnts)
-        pos = cs - prev
-        tags = np.repeat(order2[a:b2].astype(np.int64), cnts)
-        parts.append(pos + (tags << SHIFT))
-    if not parts:
-        return None
-    # fast path: one run, no reorder -> tags (and so keys) are
-    # already ascending; otherwise sort the packed keys
-    if len(parts) == 1 and perm is None:
-        return parts[0]
-    return np.sort(np.concatenate(parts))
-
-
 def _window_hits(op: str, window: int, order_terms: list,
                  mult: dict, keys: dict):
     """PHRASE / NEAR window check over packed survivor keys; returns
@@ -242,13 +184,12 @@ def _block_slices(tbl: pa.Table) -> list:
     return [tbl.slice(a, b - a) for a, b in zip(cuts[:-1], cuts[1:])]
 
 
-def _tree_kernel(spec_items: list, distinct: list, lf: float,
-                 pos_terms: Optional[frozenset] = None):
+def _tree_kernel(spec_items: list, lf: float):
     """mapInArrow kernel of the block exchange: ``_tree_block_fn`` over
     a block-sorted partition stream.  Arrow batches can split a block,
     so the last block of each batch is carried into the next as an
     Arrow slice."""
-    one_block = _tree_block_fn(spec_items, distinct, lf, pos_terms)
+    one_block = _tree_block_fn(spec_items, lf)
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         carry: Optional[pa.Table] = None
@@ -299,8 +240,7 @@ def _spec_inputs(spec_items: list) -> tuple:
     return terms, pos_terms, use_all
 
 
-def _tree_block_fn(spec_items: list, distinct: list, lf: float,
-                   pos_terms: Optional[frozenset] = None):
+def _tree_block_fn(spec_items: list, lf: float):
     """Per-block evaluator of the block-local OPERATOR TREE path
     (VERDICT r03 #5, r04 #5): ``one_block(blk)`` evaluates a compiled
     operator tree over an Arrow slice of one doc-range block's encoded
@@ -334,12 +274,7 @@ def _tree_block_fn(spec_items: list, distinct: list, lf: float,
       ("pos", op, window, [("term", [t], tw)...])
                                       PHRASE/NEAR: AND of the members
                                       plus the vectorized position-
-                                      window check, positions decoded
-                                      lazily for AND survivors only
-
-    ``pos_terms``: terms under positional nodes — only their raw
-    position blobs are retained per block (decoded only at survivor
-    indices by ``_survivor_keys``).
+                                      window check
 
     ``spec_items`` is a list of ``(query_id, spec)``: a WHOLE QUERY LOG
     evaluates in one pass over the postings — posting decode, term
@@ -348,113 +283,117 @@ def _tree_block_fn(spec_items: list, distinct: list, lf: float,
     single ``(None, spec)`` item emits plain (doc_id, weight) rows;
     tagged items prepend query_id.
 
-    Per block: decode each term's run once, build the doc universe
-    (union of all term runs and the MatchAll doc_ids) with per-doc BM25
-    denominators, then fold each tree bottom-up over boolean masks +
-    weight vectors — all numpy, no per-row Python.  The weight
-    invariant at every node: w == 0 outside the node's mask."""
-    import numpy as np
-
-    pos_terms = pos_terms or frozenset()
+    Per block, the slice is decoded whole, never run by run: the term
+    rows' doc ids, wdfs and doclens with one varint decode per
+    column (``build._decode_runs``).  One ``np.unique`` over those ids
+    and the MatchAll doc_ids gives the doc universe and each member's
+    place in it, and the members, ordered by (term, universe index),
+    hold each term's postings as one contiguous segment however many
+    runs (upsert generations) it spans.  The positions of the
+    positional terms' rows are decoded once, when a PHRASE/NEAR node
+    first has AND survivors (``build._position_slots``), and only the
+    survivors' gaps are gathered.  Each tree then folds bottom-up over
+    boolean masks + weight vectors — all numpy, no per-row Python.  The
+    weight invariant at every node: w == 0 outside the node's mask."""
+    _, pos_terms, _ = _spec_inputs(spec_items)
+    no_ids = np.zeros(0, dtype=np.int64)
 
     def one_block(blk: pa.Table) -> Optional[pd.DataFrame]:
-        names = blk.column_names
-        rows_of: dict = {}
-        if "term" in names:
-            for i, t in enumerate(blk.column("term").to_pylist()):
-                if t is not None:
-                    rows_of.setdefault(t, []).append(i)
-        all_ids = np.zeros(0, dtype="int64")
+        batch = blk.combine_chunks().to_batches()[0]
+        names = batch.schema.names
+        all_ids = no_ids
         if "doc_id" in names:
-            all_ids = pc.drop_null(blk.column("doc_id")).to_numpy()
-        per_term: dict = {}
-        pos_runs: dict = {}
-        if rows_of:
-            ns, gaps, wdfs_b, dls_b = (
-                blk.column(c).to_pylist()
-                for c in ("n", "doc_gaps", "wdfs", "doclens"))
-            blobs = (blk.column("positions").to_pylist()
-                     if pos_terms else None)
-        for t in distinct:
-            rl = rows_of.get(t)
-            if not rl:
-                continue
-            ids_l, wdf_l, dl_l, runs = [], [], [], []
-            for i in rl:
-                n = int(ns[i])
-                ids_l.append(decode_doc_gaps(gaps[i], n).astype("int64"))
-                wdf_l.append(varint_decode(wdfs_b[i], n).astype("int64"))
-                dl_l.append(varint_decode(dls_b[i], n).astype("int64"))
-                if t in pos_terms:
-                    # raw blob kept; decoded lazily for survivors only
-                    runs.append((blobs[i], n, wdf_l[-1]))
-            ids = np.concatenate(ids_l)
-            wdfs = np.concatenate(wdf_l)
-            dls = np.concatenate(dl_l)
-            perm = None
-            if len(ids_l) > 1:  # upsert appends can interleave id ranges
-                perm = np.argsort(ids, kind="stable")
-                ids, wdfs, dls = ids[perm], wdfs[perm], dls[perm]
-            per_term[t] = (ids, wdfs, dls)
-            if t in pos_terms:
-                pos_runs[t] = (runs, perm)
-        if not per_term and not all_ids.size:
+            all_ids = pc.drop_null(batch.column("doc_id")).to_numpy()
+        runs = batch.slice(0, 0)
+        if "term" in names:  # rows with no term are MatchAll's
+            term = batch.column("term")
+            runs = batch.filter(pc.is_valid(term)) if term.null_count \
+                else batch
+        if not runs.num_rows and not all_ids.size:
             return None
-
-        universe = np.unique(np.concatenate(
-            [v[0] for v in per_term.values()] + [all_ids]))
+        ns = ids = wdfs = dls = codes = no_ids
+        code_of: dict = {}
+        if runs.num_rows:
+            ns, ids, wdfs, dls = _decode_runs(runs, "wdfs", "doclens")
+            enc = pc.dictionary_encode(runs.column("term"))
+            codes = enc.indices.to_numpy()
+            code_of = {t: c for c, t in
+                       enumerate(enc.dictionary.to_pylist())}
+        every = np.concatenate((ids, all_ids))
+        if (every[1:] > every[:-1]).all():  # one run and no MatchAll
+            universe, inv = every, np.arange(every.size)
+        else:
+            universe, inv = np.unique(every, return_inverse=True)
         U = universe.size
-        dls0 = np.zeros(U, dtype="int64")
-        have = np.zeros(U, dtype=bool)
-        members: dict = {}
-
-        def member(t):
-            m = members.get(t)
-            if m is None:
-                ids = per_term[t][0]
-                idx = np.searchsorted(ids, universe)
-                idx_c = np.minimum(idx, len(ids) - 1)
-                m = ((idx < len(ids)) & (ids[idx_c] == universe), idx_c)
-                members[t] = m
-            return m
-
-        for t in per_term:
-            f, idx = member(t)
-            fill = f & ~have
-            dls0[fill] = per_term[t][2][idx[fill]]
-            have |= fill
+        uidx = inv[:ids.size]
+        # members by (term, universe index): term c's are order[seg[c]:
+        # seg[c + 1]].  Each run is already in order, which a stable
+        # sort (timsort) merges rather than re-sorts
+        order = np.argsort(np.repeat(codes.astype(np.int64), ns) * U + uidx,
+                           kind="stable")
+        seg = _offsets(np.bincount(codes, weights=ns,
+                                   minlength=len(code_of)).astype(np.int64))
+        dls0 = np.zeros(U, dtype=np.int64)
+        dls0[uidx] = dls
         cdenom = bm25.K1 * (np.maximum(dls0 * lf, bm25.MIN_NORMLEN)
                             * bm25.B + (1.0 - bm25.B))
+
+        def rows_of(t):
+            """The members of term t, in universe order."""
+            c = code_of.get(t)
+            return no_ids if c is None else order[seg[c]: seg[c + 1]]
+
+        def wdf_of(ts):
+            """(docs holding any of ts, their wdf summed over ts): a
+            term listed twice counts twice."""
+            rows = np.concatenate([rows_of(t) for t in ts])
+            hit = np.zeros(U, dtype=bool)
+            hit[uidx[rows]] = True
+            return hit, np.bincount(uidx[rows], weights=wdfs[rows],
+                                    minlength=U)
+
+        positions: list = []
+
+        def survivor_keys(t, m):
+            """(survivor tag << 32 | position) of t's positions in the
+            docs m marks, ascending; the tag of a doc is its rank in m.
+            Positions are decoded here, once per slice and only for the
+            positional terms' rows."""
+            if not positions:
+                pos_row = np.isin(codes, [code_of[p] for p in pos_terms
+                                          if p in code_of])
+                vals, pcnt, pslot = _position_slots(
+                    runs.column("positions").filter(pa.array(pos_row)),
+                    ns[pos_row])[2:]
+                cnt = np.zeros(ids.size, dtype=np.int64)
+                slot = np.zeros(ids.size, dtype=np.int64)
+                at = np.repeat(pos_row, ns)
+                cnt[at], slot[at] = pcnt, pslot
+                positions.extend((vals, cnt, slot))
+            vals, cnt, slot = positions
+            rows = rows_of(t)
+            rows = rows[m[uidx[rows]] & (cnt[rows] > 0)]
+            c = cnt[rows]
+            pos = _undelta(_gather(vals, slot[rows] + 1, c)
+                           .astype(np.int64), c)
+            tags = np.cumsum(m)[uidx[rows]] - 1
+            return pos + (np.repeat(tags, c) << np.int64(_POS_SHIFT))
 
         def eval_spec(sp):
             kind = sp[0]
             if kind == "empty":
                 return np.zeros(U, dtype=bool), np.zeros(U)
             if kind == "all":
-                return np.isin(universe, all_ids), np.zeros(U)
+                m = np.zeros(U, dtype=bool)
+                m[inv[ids.size:]] = True
+                return m, np.zeros(U)
             if kind == "leaf":
                 m = np.zeros(U, dtype=bool)
                 w = np.zeros(U)
-                for mk, ts, tw in sp[1]:
-                    if mk == "term":
-                        t = ts[0]
-                        if t not in per_term:
-                            continue
-                        f, idx = member(t)
-                        wd = per_term[t][1][idx[f]]
-                        w[f] += tw * (wd / (cdenom[f] + wd))
-                        m |= f
-                    else:  # synonym: wdf summed over constituents
-                        ws = np.zeros(U, dtype="int64")
-                        hit = np.zeros(U, dtype=bool)
-                        for t in ts:
-                            if t not in per_term:
-                                continue
-                            f, idx = member(t)
-                            ws[f] += per_term[t][1][idx[f]]
-                            hit |= f
-                        w[hit] += tw * (ws[hit] / (cdenom[hit] + ws[hit]))
-                        m |= hit
+                for _, ts, tw in sp[1]:
+                    hit, ws = wdf_of(ts)
+                    w[hit] += tw * (ws[hit] / (cdenom[hit] + ws[hit]))
+                    m |= hit
                 return m, w
             if kind == "scaled":
                 m, w = eval_spec(sp[2])
@@ -463,35 +402,28 @@ def _tree_block_fn(spec_items: list, distinct: list, lf: float,
                 op, window, ms = sp[1], sp[2], sp[3]
                 empty = (np.zeros(U, dtype=bool), np.zeros(U))
                 m = np.ones(U, dtype=bool)
-                for _, ts, _ in ms:
-                    if ts[0] not in per_term:
-                        return empty
-                    m &= member(ts[0])[0]
+                sums = []
+                for _, ts, tw in ms:
+                    hit, ws = wdf_of(ts)
+                    m &= hit
+                    sums.append((tw, ws))
                 if not m.any():
                     return empty
                 w = np.zeros(U)
-                for _, ts, tw in ms:
-                    _, idx = member(ts[0])
-                    wd = per_term[ts[0]][1][idx[m]]
-                    w[m] += tw * (wd / (cdenom[m] + wd))
-                surv = np.flatnonzero(m)
+                for tw, ws in sums:
+                    w[m] += tw * (ws[m] / (cdenom[m] + ws[m]))
                 order_terms = [ts[0] for _, ts, _ in ms]
-                mult: dict = {}
-                for t in order_terms:
-                    mult[t] = mult.get(t, 0) + 1
+                mult = Counter(order_terms)
                 keys = {}
-                for t in dict.fromkeys(order_terms):
-                    _, idx = member(t)
-                    runs, perm = pos_runs[t]
-                    k = _survivor_keys(runs, perm, idx[surv])
-                    if k is None:
+                for t in mult:
+                    keys[t] = survivor_keys(t, m)
+                    if not keys[t].size:
                         return empty
-                    keys[t] = k
                 hit = _window_hits(op, window, order_terms, mult, keys)
                 if hit is None:
                     return empty
                 m2 = np.zeros(U, dtype=bool)
-                m2[surv[hit]] = True
+                m2[np.flatnonzero(m)[hit]] = True
                 return m2, np.where(m2, w, 0.0)
             subs = [eval_spec(s) for s in sp[1]]
             if kind == "or":
@@ -1133,8 +1065,7 @@ class Searcher:
         tbl = pa.concat_tables(parts, promote_options="default")
         if tbl.num_rows == 0:
             return None
-        one_block = _tree_block_fn(spec_items, sorted(terms), self.lf,
-                                   frozenset(pos_terms))
+        one_block = _tree_block_fn(spec_items, self.lf)
         frames = []
         for blk in _block_slices(tbl.sort_by("block")):
             out = one_block(blk)
@@ -1183,8 +1114,7 @@ class Searcher:
             enc = enc.join(F.broadcast(ctx["blocks_df"]), "block",
                            "left_semi")
         out = self._block_exchange(enc).mapInArrow(
-            _tree_kernel(spec_items, sorted(terms), self.lf,
-                         frozenset(pos_terms)), schema)
+            _tree_kernel(spec_items, self.lf), schema)
         if self.tombstones is not None:
             out = out.join(self.tombstones, "doc_id", "left_anti")
         return out

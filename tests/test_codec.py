@@ -85,12 +85,15 @@ def test_position_list_roundtrip(vals):
 def test_varint_offsets_slicing(vals, a, b):
     """Whole-column encode + offset slicing must equal encoding the
     slice directly (the arrow postings kernel relies on this)."""
-    from mdq_spark.codec import varint_encode_offsets
+    from mdq_spark.codec import varint_decode_ends, varint_encode_offsets
     buf, off = varint_encode_offsets(vals)
     assert buf == varint_encode(vals)
     lo, hi = sorted((min(a, len(vals)), min(b, len(vals))))
     assert buf[off[lo]:off[hi]] == varint_encode(vals[lo:hi])
     assert list(varint_decode(buf, len(vals))) == vals
+    # each value's last byte, and a cut-off last value left undecoded
+    out, ends = varint_decode_ends(buf + b"\x80")
+    assert list(out) == vals and list(ends + 1) == list(off[1:])
 
 
 @given(st.lists(st.integers(min_value=1, max_value=1000), max_size=20))

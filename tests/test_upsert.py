@@ -48,6 +48,16 @@ QUERIES = ["alpha ", "beta ", "gamma ", "zeta ", "alpha OR zeta",
            "beta AND NOT gamma", "gam", "NOT beta AND words"]
 
 
+def _both_paths(queries):
+    """Parametrize (q, rows) over both query evaluators: the driver at
+    the default ``Searcher.LOCAL_EVAL_ROWS`` (the query's own id) and
+    the block exchange's mapInArrow kernel at 0."""
+    rows = Searcher.LOCAL_EVAL_ROWS
+    return pytest.mark.parametrize(
+        "q,rows", [(q, rows) for q in queries] + [(q, 0) for q in queries],
+        ids=[*queries, *(f"exchange-{q}" for q in queries)])
+
+
 @pytest.fixture(scope="module")
 def upserted(spark, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("ups"))
@@ -77,8 +87,10 @@ def test_globalstats_exact(upserted, oracle_final):
         oracle_final.avg_doclen)
 
 
-@pytest.mark.parametrize("q", QUERIES)
-def test_upsert_query_parity(spark, upserted, oracle_final, q):
+@_both_paths(QUERIES)
+def test_upsert_query_parity(spark, upserted, oracle_final, q, rows,
+                             monkeypatch):
+    monkeypatch.setattr(Searcher, "LOCAL_EVAL_ROWS", rows)
     s = Searcher(spark, upserted[0])
     assert_results_match(oracle_final.search(q), s.search(q))
 
@@ -239,13 +251,15 @@ def test_fold_dict_deltas(spark, tmp_path_factory):
         assert_results_match(oracle2.search(q), s2.search(q))
 
 
-@pytest.mark.parametrize("q", ['"beta gamma" ', '"beta beta" ',
-                               "beta NEAR gamma", '"gamma delta" '])
-def test_positional_parity_after_upsert(spark, upserted, oracle_final, q):
-    """VERDICT r02 #3 (lazy survivor-only positions decode): the
-    multi-run path — upsert appends interleave doc-id ranges, so the
-    merge kernel concatenates + reorders runs (perm != None) before the
-    position-window check."""
+@_both_paths(['"beta gamma" ', '"beta beta" ', "beta NEAR gamma",
+             '"gamma delta" '])
+def test_positional_parity_after_upsert(spark, upserted, oracle_final, q,
+                                        rows, monkeypatch):
+    """Positions over several generations: a term's runs from the build
+    and the upsert interleave doc-id ranges in one block, and the tree
+    kernel orders their members by doc before the position-window
+    check, on the driver and in the block exchange."""
+    monkeypatch.setattr(Searcher, "LOCAL_EVAL_ROWS", rows)
     s = Searcher(spark, upserted[0])
     assert_results_match(oracle_final.search(q), s.search(q))
 
